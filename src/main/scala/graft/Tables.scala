@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.Artifacts
 
 /** Loaders for the driver's TPC-H-ish parquet testdata (TESTDATA.md).
   *
@@ -14,29 +15,15 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Loaded-frame memo per (session, dir, table, mtime): `spark.read
-  // .parquet` pays a driver-side footer read + file-index build on EVERY
-  // call (~40-70 ms each, single-threaded), and the bench re-builds each
-  // query's frame per rep — multi-table queries were spending more wall
-  // time re-inferring schemas than executing (PhaseProbe r18: TPC-H
-  // builds 0.6-0.75 s of ~1 s totals). A DataFrame is an immutable plan,
-  // so handing the same one back is pure plan reuse — every action still
-  // scans the parquet; nothing is cached. mtime in the key keeps the
-  // ScaleSweep rebuild / driver-regen cases correct (stagedDirs
-  // discipline), and the session in the key isolates concurrent
-  // sessions (specs vs mains).
-  private val tMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String, Long), DataFrame]
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
-  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val mtime =
-      try java.nio.file.Files
-        .getLastModifiedTime(java.nio.file.Paths.get(path)).toMillis
-      catch { case _: java.io.IOException => -1L }
-    tMemo.getOrElseUpdate((spark, dir, name, mtime),
-      spark.read.parquet(path))
-  }
+  // A DataFrame is an immutable plan, so handing the same one back is
+  // pure plan reuse: `spark.read.parquet` pays a driver-side footer read
+  // and file-index build on every call (~40-70 ms each), and multi-table
+  // queries spent more time re-inferring schemas than executing. Every
+  // action still scans the parquet; nothing is cached.
+  def t(spark: SparkSession, dir: String, name: String): DataFrame =
+    Artifacts.read(spark, path(dir, name))
 
   def region(s: SparkSession, d: String): DataFrame   = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = t(s, d, "nation")

@@ -26,9 +26,7 @@ object BalanceQueries {
     val df = features(s, d)
     val before = df.groupBy(col("cls")).agg(count(lit(1)).as("n_before"))
     val balanced = Smote.balance(s, df, "vec_id", "features", "cls",
-      lit(0), Smote.Params(k = 5, percentOver = 200, percentUnder = 100),
-      landKey =
-        Some(graft.util.Landing.mtimeKey(d, "embeddings") + "|b1_nn"))
+      lit(0), Smote.Params(k = 5, percentOver = 200, percentUnder = 100))
     val after = balanced.groupBy(col("cls")).agg(count(lit(1)).as("n_after"))
     before.join(after, Seq("cls"), "outer").orderBy(col("cls"))
   }
@@ -81,9 +79,7 @@ object BalanceQueries {
     val before = df.groupBy(col("cls")).agg(count(lit(1)).as("n_before"))
     val balanced = Smote.balance(s, df, "vec_id", "features", "cls",
       lit(0), Smote.Params(k = 5, percentOver = 200, percentUnder = 100),
-      Smote.LshKnn(bucketLength = 2.0, numHashTables = 3),
-      landKey =
-        Some(graft.util.Landing.mtimeKey(d, "embeddings") + "|b3_nn"))
+      Smote.LshKnn(bucketLength = 2.0, numHashTables = 3))
     val after = balanced.groupBy(col("cls")).agg(count(lit(1)).as("n_after"))
     before.join(after, Seq("cls"), "outer").orderBy(col("cls"))
   }
@@ -171,13 +167,7 @@ object BalanceQueries {
   }
 
   private def b4Tomek(s: SparkSession, d: String): DataFrame =
-    // the link table is slim source-derived state (≤ ~100 rows here) —
-    // landed once per embeddings version (the pr4/fm4 accounting);
-    // undersampling consumers read the landing, the 1-NN join runs once
-    graft.util.Landing.frameLanding(
-      s, graft.util.Landing.mtimeKey(d, "embeddings") + "|b4_links")(
-      tomekLinks(features(s, d)))
-      .orderBy(col("minority_id"))
+    tomekLinks(features(s, d))
 
   private val b4Sql =
     """WITH f AS (

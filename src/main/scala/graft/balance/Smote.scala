@@ -78,8 +78,7 @@ object Smote {
   def balance(spark: SparkSession, df: DataFrame, idCol: String,
       featCol: String, labelCol: String, minority: Column,
       p: Params = Params(),
-      strategy: NeighborStrategy = ExactKnn,
-      landKey: Option[String] = None): DataFrame = {
+      strategy: NeighborStrategy = ExactKnn): DataFrame = {
     // Fail fast — distributed, zero extra actions — if a source id
     // intrudes into the reserved synthetic namespace. The clearest way
     // to hit this is re-balancing a frame that already contains
@@ -107,7 +106,7 @@ object Smote {
     // with zero extra actions; see [[SyntheticIdBase]].
     val synth =
       synthesize(spark, minorityDf, idCol, featCol, labelCol, p,
-        Some(SyntheticIdBase), strategy, landKey)
+        Some(SyntheticIdBase), strategy)
     val underMajority =
       majorityDf.sample(withReplacement = false, p.underFraction, p.seed)
     minorityDf.union(synth).union(underMajority)
@@ -126,23 +125,14 @@ object Smote {
   def synthesize(spark: SparkSession, minorityDf: DataFrame, idCol: String,
       featCol: String, labelCol: String, p: Params,
       idStart: Option[Long] = None,
-      strategy: NeighborStrategy = ExactKnn,
-      landKey: Option[String] = None): DataFrame = {
+      strategy: NeighborStrategy = ExactKnn): DataFrame = {
     val offset = idStart.getOrElse(SyntheticIdBase)
-    val nnRaw = strategy match {
+    val nn = strategy match {
       case ExactKnn =>
         Knn.exactNeighbors(minorityDf, idCol, featCol, p.k)
       case LshKnn(bucketLength, numHashTables) =>
         Knn.approxNeighbors(spark, minorityDf, idCol, featCol, p.k,
           bucketLength, numHashTables)
-    }
-    // the neighbour-list table is slim source-derived state (minority
-    // rows × k vectors) — callers with a stable source version pass a
-    // landKey so the O(pairs) k-NN builds once per corpus version (the
-    // b4/d4 accounting) while synthesis + counts still run per execution
-    val nn = landKey match {
-      case Some(k) => graft.util.Landing.frameLanding(spark, k)(nnRaw)
-      case None    => nnRaw
     }
     // LEFT join + self-fallback: LSH gives no recall guarantee, so a
     // minority row may share a bucket with nobody and come back

@@ -67,23 +67,11 @@ object Curation {
       .agg(min(col("doc_id")).as("doc_id"),
         min(col("lang")).as("lang"),
         min(col("n_chars")).as("n_chars"))
-    // The dup-cluster loser set is slim source-derived state (the
-    // b4/d16/pr5 result-table class): the jaccard-pair banding and the
-    // union-find fold behind it re-ran per execution (~1.3 s of pipe2's
-    // 1.9 s steady build, PhaseProbe r18), while the table itself is a
-    // bounded list of doc_ids. Land it once per documents version; the
-    // serving anti-join + projection still run per execution.
-    // connectedComponents checkpoints internally, so its output plan is
-    // checkpoint-derived and planVersionKey would never memo-hit — key
-    // on the source mtime instead (the d7/pr1 discipline).
-    val losers = graft.util.Landing.frameLanding(s,
-      graft.util.Landing.mtimeKey(d, "documents") + "|pipe2_losers") {
-      val pairs = DedupOps.jaccardPairs(
-        exact.select(col("doc_id"), col("text")), 3, 0.5)
-      DedupOps.connectedComponents(pairs)
-        .filter(col("label") =!= col("id"))
-        .select(col("id").as("doc_id"))
-    }
+    val pairs = DedupOps.jaccardPairs(
+      exact.select(col("doc_id"), col("text")), 3, 0.5)
+    val losers = DedupOps.connectedComponents(pairs)
+      .filter(col("label") =!= col("id"))
+      .select(col("id").as("doc_id"))
     exact.join(losers, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .orderBy(col("doc_id"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.util.Artifacts
 
 /** Deduplication operators for LLM training-data pipelines.
   *
@@ -123,13 +124,7 @@ object DedupOps {
     * banding algebra.
     */
   private def d2Minhash(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    // verified pair table = slim source-derived state (the d9/d16 landing
-    // class): the shingle→sketch→band→verify pipeline runs once per
-    // documents version, every later call serves the landed pairs
-    val pairs = graft.util.Landing.frameLanding(s,
-      graft.util.Landing.mtimeKey(d, "documents") + "|d2_pairs")(
-      minhashPairs(docs))
+    val pairs = minhashPairs(Tables.documents(s, d))
     graft.util.OracleFixtures.withCorpusKey(pairs, s, d)
       .orderBy(col("id_a"), col("id_b"))
   }
@@ -230,11 +225,7 @@ object DedupOps {
   }
 
   private def d2bMinhashPortable(s: SparkSession, d: String): DataFrame =
-    // same landing class as d2 above — the portable twin's pair table
-    // lands once per documents version
-    graft.util.Landing.frameLanding(s,
-      graft.util.Landing.mtimeKey(d, "documents") + "|d2b_pairs")(
-      minhashPortablePairs(Tables.documents(s, d)))
+    minhashPortablePairs(Tables.documents(s, d))
       .orderBy(col("id_a"), col("id_b"))
 
   /** Oracle replicating [[minhashPortablePairs]] exactly: same shingling
@@ -465,15 +456,15 @@ object DedupOps {
   }
 
   /** The (w=3, minJ=0.5) candidate-pair frame d4 AND d7 both consume,
-    * landed once per documents version (Landing.frameLanding): the pair
+    * landed once per documents version: the pair
     * index is source-derived dedup state — production computes it once
     * per corpus version and both the pair report and the cluster
     * resolution read the landing. Small by construction (pairs above the
     * Jaccard threshold).
     */
   private def landedJaccardPairs(s: SparkSession, d: String): DataFrame =
-    graft.util.Landing.frameLanding(
-      s, graft.util.Landing.mtimeKey(d, "documents") + "|jacc_pairs_3_05")(
+    Artifacts.frame(s,
+      Artifacts.key("jacc_pairs_3_05", Tables.path(d, "documents")))(
       jaccardPairs(Tables.documents(s, d), 3, 0.5))
 
   private def d4Jaccard(s: SparkSession, d: String): DataFrame =
@@ -535,17 +526,13 @@ object DedupOps {
     * — so the CORRECTNESS row cannot pass with a shuffling plan. Result
     * is identical to [[incrementalDedup]] (same oracle SQL).
     */
-  private val digestIndex =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Memo key includes the source mtime (util.Landing) — without it a
-    * regenerated source dir would anti-join today's batches against
-    * yesterday's landed digests for the rest of the JVM (the staleness
-    * class Bucketed/s9/s10/s11 already guard; spec-pinned here too).
+  /** Keyed on the documents version: a regenerated source dir must not
+    * anti-join today's batches against yesterday's landed digests (the
+    * staleness class Bucketed/s9/s10/s11 guard too; spec-pinned here).
     */
   private[graft] def digestIndexName(s: SparkSession, d: String): String = {
-    val key = graft.util.Landing.mtimeKey(d, "documents")
-    digestIndex.getOrElseUpdate(key, {
+    val key = Artifacts.key("d8digests", Tables.path(d, "documents"))
+    Artifacts.value(key) {
       val name =
         s"graft_d8_digests_${(key.hashCode & Int.MaxValue).toHexString}"
       graft.relational.Bucketed.writeBucketed(
@@ -553,7 +540,7 @@ object DedupOps {
           .select(sha2(col("text"), 256).as("digest")).distinct(),
         name, "digest")
       name
-    })
+    }
   }
 
   private def d8bIncrementalIndexed(s: SparkSession, d: String): DataFrame = {
@@ -636,17 +623,13 @@ object DedupOps {
   }
 
   /** D9 query: even doc_ids play the training corpus, odd the eval set. */
-  private def d9Decontaminate(s: SparkSession, d: String): DataFrame =
-    // slim source-derived pair list (the d16/b4 accounting): the bucket
-    // checkpoint + containment join run once per documents version, every
-    // later build serves the landing
-    graft.util.Landing.frameLanding(
-      s, graft.util.Landing.mtimeKey(d, "documents") + "|d9_pairs") {
-      val docs = Tables.documents(s, d)
-      contaminationPairs(
-        docs.filter(col("doc_id") % 2 === 0),
-        docs.filter(col("doc_id") % 2 === 1))
-    }.orderBy(col("train_id"), col("eval_id"))
+  private def d9Decontaminate(s: SparkSession, d: String): DataFrame = {
+    val docs = Tables.documents(s, d)
+    contaminationPairs(
+      docs.filter(col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") % 2 === 1))
+      .orderBy(col("train_id"), col("eval_id"))
+  }
 
   /** Oracle replicates the shingling of [[shingles]] on strings (vs Spark's
     * xxhash64 of them — identical modulo collisions, none in testdata),
@@ -746,18 +729,13 @@ object DedupOps {
     survivors
   }
 
-  private def d16BloomDecon(s: SparkSession, d: String): DataFrame =
-    // the pair list is slim source-derived state (12/120 rows at the
-    // driver SFs) — landed once per documents version (the b4
-    // accounting): the bloom build + bucket checkpoint run once, every
-    // later build serves the landing (PhaseProbe: 1.3 s → ~0.05 s fresh)
-    graft.util.Landing.frameLanding(
-      s, graft.util.Landing.mtimeKey(d, "documents") + "|d16_pairs") {
-      val docs = Tables.documents(s, d)
-      val train = docs.filter(col("doc_id") % 2 === 0)
-      val eval_ = docs.filter(col("doc_id") % 2 === 1)
-      contaminationPairs(bloomSurvivors(train, eval_, 8), eval_, w = 8)
-    }.orderBy(col("train_id"), col("eval_id"))
+  private def d16BloomDecon(s: SparkSession, d: String): DataFrame = {
+    val docs = Tables.documents(s, d)
+    val train = docs.filter(col("doc_id") % 2 === 0)
+    val eval_ = docs.filter(col("doc_id") % 2 === 1)
+    contaminationPairs(bloomSurvivors(train, eval_, 8), eval_, w = 8)
+      .orderBy(col("train_id"), col("eval_id"))
+  }
 
   // ---- D7: duplicate-cluster resolution ----------------------------------
   /** Connected components over an undirected pair list: every node's
@@ -920,23 +898,22 @@ object DedupOps {
     * the cardinality). The shared jaccard-pair index is landed per
     * source version, so the marginal cost over d7 is the argmax.
     */
-  private def d19ClusterReps(s: SparkSession, d: String): DataFrame =
-    graft.util.Landing.frameLanding(
-      s, graft.util.Landing.mtimeKey(d, "documents") + "|d19_reps") {
-      val labels = connectedComponents(landedJaccardPairs(s, d))
-      val sized = labels.join(
-        Tables.documents(s, d).select(col("doc_id").as("id"),
-          col("n_chars").cast("long").as("n_chars")), "id")
-      val wRank = Window.partitionBy(col("label"))
-        .orderBy(col("n_chars").desc, col("id"))
-      val wSize = Window.partitionBy(col("label"))
-      sized
-        .withColumn("rn", row_number().over(wRank))
-        .withColumn("n_docs", count(lit(1)).over(wSize))
-        .filter(col("rn") === 1 && col("n_docs") >= 2)
-        .select(col("label").as("cluster_id"), col("id").as("keeper_id"),
-          col("n_docs"), col("n_chars").as("keeper_chars"))
-    }.orderBy(col("cluster_id"))
+  private def d19ClusterReps(s: SparkSession, d: String): DataFrame = {
+    val labels = connectedComponents(landedJaccardPairs(s, d))
+    val sized = labels.join(
+      Tables.documents(s, d).select(col("doc_id").as("id"),
+        col("n_chars").cast("long").as("n_chars")), "id")
+    val wRank = Window.partitionBy(col("label"))
+      .orderBy(col("n_chars").desc, col("id"))
+    val wSize = Window.partitionBy(col("label"))
+    sized
+      .withColumn("rn", row_number().over(wRank))
+      .withColumn("n_docs", count(lit(1)).over(wSize))
+      .filter(col("rn") === 1 && col("n_docs") >= 2)
+      .select(col("label").as("cluster_id"), col("id").as("keeper_id"),
+        col("n_docs"), col("n_chars").as("keeper_chars"))
+      .orderBy(col("cluster_id"))
+  }
 
   private lazy val d19Sql =
     s"""WITH RECURSIVE ${dupPairsCteFrom("documents")},
@@ -1138,16 +1115,8 @@ object DedupOps {
     // exploded-gram lineage inside the serving query, and a fresh
     // execution paid a ~10 s DATA-SIZE-INDEPENDENT cost (measured ~10 s
     // at sf0.1 AND the 10× sweep dir; ~2.5 s once the lineage was cut
-    // with a bare localCheckpoint). r18: the checkpoint is now LANDED
-    // per input version (planVersionKey: source paths + plan hash +
-    // mtime — d13's full corpus and pipe4's gated corpus key
-    // separately), because the gram-count pass is slim source-derived
-    // state in the b4/d16/fm4 class: each fresh build was re-paying
-    // ~2 s of exploded-gram shuffle per execution (PhaseProbe r18
-    // steady build 2.06 s → 0.02 s). Blocks are small (≤1 int-array
-    // row per affected doc) and family-evict on regen.
-    val covered = graft.util.Landing.frameLanding(docs.sparkSession,
-      graft.util.Landing.planVersionKey(covered0) + "|d13cov")(covered0)
+    // with a bare localCheckpoint).
+    val covered = covered0.localCheckpoint(true)
     val joined = docToks.join(broadcast(covered), Seq("doc_id"), "left")
       .withColumn("ss", coalesce(col("starts"), array().cast("array<int>")))
     val keptPos = filter(
@@ -1224,8 +1193,7 @@ object DedupOps {
     * corpus scan.
     */
   private[graft] def neardupIndexDir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "documents") + "|nddx",
+    Artifacts.dir(Artifacts.key("nddx", Tables.path(d, "documents")),
       "graft_nddx") { dir =>
       val banded = md5BandedSig(Tables.documents(s, d), 3, 8, 4)
       val ok = banded.groupBy(col("band"), col("bucket"))
@@ -1253,7 +1221,7 @@ object DedupOps {
     // bounded driver fetch: at most 64 distinct partition ids
     val bkts = qb.select(col("bkt")).distinct().limit(65).collect()
       .map(_.getLong(0))
-    val idx = graft.util.Landing.readLayout(s, dir)
+    val idx = Artifacts.read(s, dir)
       .filter(col("bkt").isin(bkts.toIndexedSeq: _*))
     val agree = (0 until 8).map { k =>
       when(col("q_sig").getItem(k) === col("sig").getItem(k), 1).otherwise(0)
@@ -1300,11 +1268,10 @@ object DedupOps {
     * decoupled from the ingest stream.
     */
   private[graft] def e21ResultDir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "documents") + "|ndstrm",
+    Artifacts.dir(Artifacts.key("ndstrm", Tables.path(d, "documents")),
       "graft_ndstrm") { dir =>
-      val stage = graft.util.Landing.tempDirOnce("graft_ndstrm_stage")
-      val ckpt = graft.util.Landing.tempDirOnce("graft_ndstrm_ckpt")
+      val stage = Artifacts.scratchDir("graft_ndstrm_stage")
+      val ckpt = Artifacts.scratchDir("graft_ndstrm_ckpt")
       d15Incoming(s, d).repartition(3)
         .write.mode("overwrite").parquet(stage.toString)
       val schema = s.read.parquet(stage.toString).schema
@@ -1320,6 +1287,8 @@ object DedupOps {
         }
         .start()
       q.awaitTermination()
+      Artifacts.delete(stage)
+      Artifacts.delete(ckpt)
     }
 
   private def e21StreamNeardup(s: SparkSession, d: String): DataFrame =

@@ -9,6 +9,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.{Q, Tables}
+import graft.util.Artifacts
 
 /** Multimodal-column plumbing: treat media as opaque `binary` columns with
   * typed metadata, and run decode / feature-extraction as a partition-wise
@@ -634,7 +635,7 @@ object MultimodalOps {
     */
   def phashNearDups(spark: SparkSession, media: DataFrame,
       hammingMax: Int = 12,
-      landKey: Option[(SparkSession, String)] = None): DataFrame = {
+      landKey: Option[Artifacts.Key] = None): DataFrame = {
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
       .encoderFor(hashSchema)
     val hashes0 = media.select(col("doc_id"), col("payload"))
@@ -644,12 +645,13 @@ object MultimodalOps {
           Row(r.getAs[Long]("doc_id"), k, h)
         }
       }(enc)
-    // the (id, kind, hash) table is slim source-derived state — a
-    // production pipeline lands perceptual hashes once per corpus
-    // version and every dedup pass reads the landing, not the pixels
+    // the (id, kind, hash) table is slim source-derived state read by
+    // both sides of the band self-join — a production pipeline lands
+    // perceptual hashes once per corpus version and every dedup pass
+    // reads the landing, not the pixels
     val hashes = landKey match {
-      case Some((s, k)) => graft.util.Landing.frameLanding(s, k)(hashes0)
-      case None         => hashes0
+      case Some(k) => Artifacts.frame(spark, k)(hashes0)
+      case None    => hashes0
     }
     // posexplode keeps (band index, value) in one pass
     val banded = hashes.select(col("doc_id"), col("phash"),
@@ -680,8 +682,7 @@ object MultimodalOps {
   private def mm4PhashNearDup(s: SparkSession, d: String): DataFrame =
     graft.util.OracleFixtures.withCorpusKey(
       phashNearDups(s, synthesizeNearDupMedia(Tables.documents(s, d)),
-        landKey = Some((s,
-          graft.util.Landing.mtimeKey(d, "documents") + "|mm4_phash"))),
+        landKey = Some(Artifacts.key("mm4_phash", Tables.path(d, "documents")))),
       s, d)
       .orderBy(col("a"), col("b"))
 
@@ -699,8 +700,7 @@ object MultimodalOps {
   private def mm5AudioNearDup(s: SparkSession, d: String): DataFrame =
     graft.util.OracleFixtures.withCorpusKey(
       phashNearDups(s, synthesizeNearDupAudio(Tables.documents(s, d)),
-        landKey = Some((s,
-          graft.util.Landing.mtimeKey(d, "documents") + "|mm5_phash"))),
+        landKey = Some(Artifacts.key("mm5_phash", Tables.path(d, "documents")))),
       s, d)
       .orderBy(col("a"), col("b"))
 
@@ -780,20 +780,14 @@ object MultimodalOps {
     * Scale: payloads never leave their input split — only (doc_id,
     * frame_no, 8-byte hash) rides the per-video shuffle; the window is
     * PARTITIONED BY video (high cardinality), frames-per-video bounds
-    * the sort. The hash table is slim source-derived state, landed per
-    * corpus version like mm4's.
+    * the sort.
     */
-  def sceneCuts(frames: DataFrame, threshold: Int,
-      landKey: Option[(SparkSession, String)] = None): DataFrame = {
+  def sceneCuts(frames: DataFrame, threshold: Int): DataFrame = {
     val s = frames.sparkSession
     import s.implicits._
-    val hashes0 = frames.as[(Long, Int, Array[Byte])]
+    val hashes = frames.as[(Long, Int, Array[Byte])]
       .map { case (d, f, p) => (d, f, aHash64(p)._2) }
       .toDF("doc_id", "frame_no", "phash")
-    val hashes = landKey match {
-      case Some((ls, k)) => graft.util.Landing.frameLanding(ls, k)(hashes0)
-      case None          => hashes0
-    }
     val w = Window.partitionBy(col("doc_id")).orderBy(col("frame_no"))
     hashes
       .withColumn("_prev", lag(col("phash"), 1).over(w))
@@ -813,9 +807,7 @@ object MultimodalOps {
     */
   private def mm6SceneCuts(s: SparkSession, d: String): DataFrame =
     graft.util.OracleFixtures.withCorpusKey(
-      sceneCuts(synthesizeVideo(Tables.documents(s, d)), Mm6CutThreshold,
-        landKey = Some((s,
-          graft.util.Landing.mtimeKey(d, "documents") + "|mm6_phash"))),
+      sceneCuts(synthesizeVideo(Tables.documents(s, d)), Mm6CutThreshold),
       s, d)
       .orderBy(col("doc_id"), col("frame_no"))
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.functions.VecOps
+import graft.util.Artifacts
 
 /** One (candidate, partner) edge of the MMR input: `a_rel` is the
   * candidate's (rounded) relevance to the query, `psim` its (rounded)
@@ -154,19 +155,17 @@ object RetrievalOps {
     rrfFuse(bm, denseIdx)
   }
 
-  /** Both fused lists are pure functions of the (documents, embeddings)
-    * version and ≤ FusedTopK rows — landed per version so the gate's
-    * bounded counts don't re-run the exact fused lineage on every
-    * DataFrame build (PhaseProbe measured 3.55 s/fresh build before the
-    * landing — the d13 recurring-driver-cost class; landed: ~0.1 s).
+  /** The exact fused list is a pure function of the (documents,
+    * embeddings) version, ≤ FusedTopK rows, and read three times per
+    * gate — landed per version so the gate's bounded counts don't re-run
+    * the exact fused lineage on every DataFrame build (3.55 s per fresh
+    * build before the landing).
     */
   private def x13bGate(s: SparkSession, d: String): DataFrame = {
-    val ver = graft.util.Landing.sourceMtime(d,
-      Seq("documents", "embeddings"))
-    val exact = graft.util.Landing.frameLanding(s, s"$d|x13b_exact|$ver")(
+    val exact = Artifacts.frame(s, Artifacts.key("x13b_exact",
+        Seq("documents", "embeddings").map(Tables.path(d, _))))(
       x13Hybrid(s, d).select(col("doc_id"), col("rrf")))
-    val indexed = graft.util.Landing.frameLanding(s, s"$d|x13b_idx|$ver")(
-      x13bIndexedFused(s, d).select(col("doc_id")))
+    val indexed = x13bIndexedFused(s, d).select(col("doc_id"))
     val overlap = exact.join(indexed, "doc_id").count()
     val n = exact.count()
     exact.agg(count(lit(1)).cast("long").as("n_fused"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.functions.VecOps
+import graft.util.Artifacts
 
 /** Similarity search over the `embeddings` table (north-star extension).
   *
@@ -226,22 +227,19 @@ object SimilarityOps {
 
   /** Exact-side memo for the recall gates: the brute-force top-k over a
     * BOUNDED query set (5 probes / 100-sample) is a pure function of
-    * (dir, mtime, tag) and at most a few hundred rows — collect it once
-    * per JVM and replay as a local relation. recallGate consumes the
-    * exact frame three times (payload agg, hits semi-join, total), so
+    * (embeddings version, tag) and at most a few hundred rows — collect
+    * it once per version and replay as a local relation. recallGate
+    * consumes the exact frame three times (payload agg, hits semi-join,
+    * total), so
     * without the memo every gate execution re-scanned the corpus ×3 —
     * the round-6 "gate cost" regression (x4 0.48→0.95s, mm1 similar).
     * Same amortized-landing accounting as j6: rep 1 pays, steady state
     * measures the operator.
     */
-  private val exactMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Long, Double)]]
-
   private def memoExact(s: SparkSession, d: String, tag: String)(
       build: => DataFrame): DataFrame = {
     import s.implicits._
-    val key = graft.util.Landing.mtimeKey(d, "embeddings") + "|" + tag
-    exactMemo.getOrElseUpdate(key,
+    Artifacts.value(Artifacts.key("exact", Tables.path(d, "embeddings"), tag))(
       build.select(col("q_id"), col("c_id"), col("sim")).collect().toSeq
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
       .toDF("q_id", "c_id", "sim")
@@ -345,25 +343,10 @@ object SimilarityOps {
     val sample = emb.orderBy(
       md5(concat_ws("|", col("vec_id").cast("string"), lit("42"))),
       col("vec_id")).limit(100)
-    recallGate(x7KnnLanded(s, d).select("q_id", "c_id"),
+    recallGate(knnJoin(emb, k = 3).select("q_id", "c_id"),
       memoExact(s, d, "md5sample100k3")(bruteForceTopK(emb, sample, 3)),
       X7Floor)
   }
-
-  /** The all-pairs kNN table, landed once per embeddings version: k slim
-    * rows per vector — the materialized kNN-graph a production vector
-    * store maintains per corpus version (the artifact x18's graph build
-    * consumes). The gate and the fixture shape both serve this landing
-    * (r19; the per-rep 41M-candidate pipeline ran per execution before:
-    * x7 full-run 1.63 s → ~0.2 s steady). Specs, sweeps and the b1/b3
-    * consumers call [[knnJoin]] directly and still execute the full
-    * pipeline.
-    */
-  private def x7KnnLanded(s: SparkSession, d: String): DataFrame =
-    graft.util.Landing.frameLanding(s,
-      graft.util.Landing.mtimeKey(d, "embeddings") + "|x7knn:k3")(
-      knnJoin(Tables.embeddings(s, d), k = 3)
-        .select(col("q_id"), col("rank"), col("c_id"), col("sim")))
 
   private val x7GateSql =
     """WITH smp AS (
@@ -502,9 +485,8 @@ object SimilarityOps {
     // tables), deterministic per (corpus version, knobs), and its build
     // runs two driver actions (max-width probe, salt detection) — landed
     // once per version like the persisted-IVF layouts (x12 discipline).
-    val bucketTable = graft.util.Landing.frameLanding(s,
-      graft.util.Landing.planVersionKey(df) +
-        s"|x7buckets:b$useBits:t$tables:m$maxBucket")(buildBuckets())
+    val bucketTable = Artifacts.frame(s,
+      Artifacts.key("x7buckets", df, useBits, tables, maxBucket))(buildBuckets())
     val q = bucketTable
     val c = bucketTable.withColumnRenamed("q_id", "c_id")
     // Candidates are scored MAP-SIDE (the vector+norm sides broadcast
@@ -539,7 +521,9 @@ object SimilarityOps {
   }
 
   private[graft] def x7KnnJoin(s: SparkSession, d: String): DataFrame =
-    x7KnnLanded(s, d).orderBy(col("q_id"), col("rank"))
+    knnJoin(Tables.embeddings(s, d), k = 3)
+      .select(col("q_id"), col("rank"), col("c_id"), col("sim"))
+      .orderBy(col("q_id"), col("rank"))
 
   /** Embedding-cosine near-duplicate pairs above a threshold — EXACT, via
     * metric-pruned blocking (no corpus-wide crossJoin/broadcast):
@@ -641,9 +625,8 @@ object SimilarityOps {
     // the sample collect doubles as the size probe above, so it stays
     // per-call; the Lloyd fit over it is deterministic per corpus version
     // and memoizes like the IVF quantizer fits
-    val cents = memoVersioned(fitCents,
-      graft.util.Landing.planVersionKey(corpus) +
-        s"|centspairs:c$cells:f$sampleCap")(
+    val cents = Artifacts.value(
+        Artifacts.key("centspairs", corpus, cells, sampleCap))(
       sphericalLloyd(sample, math.min(cells, sample.length), 5))
     val k = cents.length
     // struct evaluated once per row (two-step select), then split into
@@ -780,7 +763,7 @@ object SimilarityOps {
     * the final left join broadcasts the component labels when they fit.
     */
   /** The τ=0.35 exact near-dup pair set, landed once per embeddings
-    * version (frameLanding, planVersionKey): slim source-derived state in
+    * version: slim source-derived state in
     * the d4/d7 shared-index class — d11, the d12 gate, and the d12
     * coverage probe all consume the SAME pair list, and each was
     * re-running the blocked n² verification per execution (~0.6 s each at
@@ -788,20 +771,14 @@ object SimilarityOps {
     * the corpus, so the pinned blocks stay tiny.
     */
   private def landedExactPairs(emb: DataFrame): DataFrame =
-    graft.util.Landing.frameLanding(emb.sparkSession,
-      graft.util.Landing.planVersionKey(emb) + "|tau35pairs")(
+    Artifacts.frame(emb.sparkSession, Artifacts.key("tau35pairs", emb))(
       cosinePairsExact(emb, D12Tau).select(col("id_a"), col("id_b")))
 
   private def d11SemDedup(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val edges = landedExactPairs(emb)
-    // components land too (pr5-labels class): the union-find fold
-    // checkpoints internally, so it re-ran per execution over a landed
-    // edge list; the label table is ≤ |paired vectors| rows
-    val comps = graft.util.Landing.frameLanding(s,
-      graft.util.Landing.planVersionKey(emb) + "|d11comps")(
-      DedupOps.connectedComponents(edges)
-        .select(col("id").as("vec_id"), col("label").as("rep_id")))
+    val comps = DedupOps.connectedComponents(edges)
+      .select(col("id").as("vec_id"), col("label").as("rep_id"))
     emb.select(col("vec_id"))
       .join(comps, Seq("vec_id"), "left")
       .select(col("vec_id"),
@@ -932,13 +909,8 @@ object SimilarityOps {
       .filter(col("sim") >= D12Tau)
       .select(col("id_a"), col("id_b"))
       .distinct()
-    // landed per corpus version like d11's (pr5-labels class): the
-    // within-cell pair join + union-find fold is the slim derived state,
-    // the per-vector left join below stays the serving query
-    val comps = graft.util.Landing.frameLanding(s,
-      graft.util.Landing.planVersionKey(emb) + "|d12comps")(
-      DedupOps.connectedComponents(pairs)
-        .select(col("id").as("vec_id"), col("label").as("rep_id")))
+    val comps = DedupOps.connectedComponents(pairs)
+      .select(col("id").as("vec_id"), col("label").as("rep_id"))
     emb.select(col("vec_id"))
       .join(comps, Seq("vec_id"), "left")
       .select(col("vec_id"),
@@ -1127,8 +1099,7 @@ object SimilarityOps {
     val emb = Tables.embeddings(s, d)
     val (cells, _) = ivfGeometry(memoCount(emb), 0, 0)
     val fs = ivfFitSample(0, cells)
-    memoVersioned(fitCents,
-      graft.util.Landing.planVersionKey(emb) + s"|bisect:k$Km2K:f$fs")(
+    Artifacts.value(Artifacts.key("bisect", emb, Km2K, fs))(
       bisectingFit(memoUnitSample(emb, fs), Km2K))
   }
 
@@ -1235,8 +1206,8 @@ object SimilarityOps {
         if (n == 0.0) None else Some(p.map(x => (x / n).toFloat))
       }
 
-  /** Index-build products memoized per corpus VERSION
-    * (`Landing.planVersionKey`: plan identity + relation-root mtimes) —
+  /** Index-build products memoized per corpus VERSION (the corpus frame's
+    * source stamps + plan identity, `Artifacts.key(op, df)`) —
     * production ANN accounting: the coarse quantizer trains ONCE per
     * corpus version and serves every query batch, it does not refit per
     * batch. At 100 TB the fit's TakeOrdered sample pass and the geometry
@@ -1248,41 +1219,20 @@ object SimilarityOps {
     * value-transparent; payload is bounded (count: 8 bytes; sample:
     * ≤16k × 64-float unit vectors ≈ 4 MB; centroids ≤ 1024×64 floats
     * ≈ 256 KB; PQ books m×ks sub-centroids) and one version per family
-    * stays cached — a regenerated corpus evicts the superseded entry
-    * (the frameLanding discipline); different corpora are different
-    * families (the key's path segment survives numeric stripping).
-    */
-  private[graft] val fitCounts =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-  private val fitSamples =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Float]]]
-  private val fitCents =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Float]]]
-  private val fitBooks =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Array[Float]]]]
-
-  private def memoVersioned[A](memo: scala.collection.concurrent.TrieMap[String, A],
-      key: String)(build: => A): A =
-    graft.util.Landing.memoVersioned(memo, key)(build)
-
-  /** `tag` extends the key's non-numeric family segment: a DERIVED corpus
-    * over the same source files (x11's base split) must not share a memo
-    * family with the full corpus — semanticHash alone is numeric, gets
-    * stripped by frameFamily, and would make the two thrash-evict each
-    * other (the CLAUDE.md cross-corpus-memo rule).
+    * stays cached — a regenerated corpus evicts the superseded entry;
+    * different corpora are different families. `tag` is part of the
+    * family too: a DERIVED corpus over the same source files (x11's base
+    * split) must not share a family with the full corpus, or the two
+    * would evict each other.
     */
   private[graft] def memoCount(corpus: DataFrame, tag: String = ""): Long =
-    memoVersioned(fitCounts,
-      graft.util.Landing.planVersionKey(corpus) + s"|n$tag")(corpus.count())
+    Artifacts.value(Artifacts.key("count", corpus, tag))(corpus.count())
 
   private def memoUnitSample(corpus: DataFrame, fitSample: Int,
       tag: String = ""): Array[Array[Float]] =
-    // "sample:N" is one NON-numeric token: different sample sizes over
-    // one corpus are different FAMILIES (x9's fixed 4096 must not evict
-    // x4's cells×16 once they diverge at scale), while a regen still
-    // evicts via the key's standalone mtime segment
-    memoVersioned(fitSamples,
-      graft.util.Landing.planVersionKey(corpus) + s"|sample:$fitSample$tag")(
+    // different sample sizes over one corpus are different families
+    // (x9's fixed 4096 must not evict x4's cells×16)
+    Artifacts.value(Artifacts.key("sample", corpus, fitSample, tag))(
       unitSample(corpus, fitSample))
 
   /** FITTED centroids memoized per corpus version, completing the
@@ -1292,23 +1242,17 @@ object SimilarityOps {
     * "a few seconds" PER CALL at the 1024-cell cap, where the `:813`
     * scaladoc promises one-time. The fit is a deterministic function of
     * the memoized sample and (k), so memoization stays value-transparent;
-    * `k` rides in the key's non-numeric family segment (`k$k` — km2's
-    * k=8 and x4's k=cells over one corpus are different families, they
-    * must not thrash-evict), and a regen still evicts via the standalone
-    * mtime segment. Payload ≤ 1024×64 floats ≈ 256 KB per family.
+    * `k` is part of the family (km2's k=8 and x4's k=cells over one
+    * corpus must not evict each other). Payload ≤ 1024×64 floats
+    * ≈ 256 KB per family.
     */
   private def memoCentroids(corpus: DataFrame, fitSample: Int, k: Int,
       tag: String = ""): Array[Array[Float]] = {
     val sampleUnit = memoUnitSample(corpus, fitSample, tag)
     if (sampleUnit.isEmpty) Array.empty
-    else memoVersioned(fitCents,
-      graft.util.Landing.planVersionKey(corpus) +
-        s"|cents:f$fitSample:k$k$tag")(
+    else Artifacts.value(Artifacts.key("cents", corpus, fitSample, k, tag))(
       sphericalLloyd(sampleUnit, math.min(k, sampleUnit.length), 5))
   }
-
-  private val fitSpillThresholds =
-    scala.collection.concurrent.TrieMap.empty[String, Double]
 
   /** Margin threshold realizing [[IvfSpillBudget]]: the budget-quantile
     * of best-vs-second centroid dot margins over the memoized unit fit
@@ -1320,9 +1264,8 @@ object SimilarityOps {
     */
   private def memoSpillThreshold(corpus: DataFrame, fitSample: Int,
       cents: Array[Array[Float]], tag: String = ""): Double =
-    memoVersioned(fitSpillThresholds,
-      graft.util.Landing.planVersionKey(corpus) +
-        s"|spillq:f$fitSample:k${cents.length}$tag") {
+    Artifacts.value(
+        Artifacts.key("spillq", corpus, fitSample, cents.length, tag)) {
       val sample = memoUnitSample(corpus, fitSample, tag)
       if (sample.isEmpty || cents.length < 2) 0.0
       else {
@@ -1525,19 +1468,10 @@ object SimilarityOps {
       // a real vector store schema is id + vector + filter columns)
       "c_label" -> col("label")), margin)
 
-  /** Land `build(dir)` once per `key` version (partitionBy(cell) layout);
-    * superseded same-family versions evict with their dirs deleted —
-    * shared machinery in [[graft.util.Landing.landedLayout]] since t18's
-    * inverted-index landing adopted the same discipline.
-    */
-  private def landedCellLayout(key: String, prefix: String)(
-      build: String => Unit): String =
-    graft.util.Landing.landedLayout(key, prefix)(build)
-
   private def landedIndexDir(s: SparkSession, d: String,
       cents: Array[Array[Float]], margin: Double): String =
-    landedCellLayout(graft.util.Landing.mtimeKey(d, "embeddings") + "|ivfidx",
-      "graft_ivfidx") { dir =>
+    Artifacts.dir(Artifacts.key("ivfidx", Tables.path(d, "embeddings")),
+        "graft_ivfidx") { dir =>
       assignedForLanding(s, Tables.embeddings(s, d), cents, margin)
         // one shuffle at BUILD time so each cell lands as one file run,
         // not one fragment per writer task (the compaction posture)
@@ -1572,24 +1506,20 @@ object SimilarityOps {
     * per-build cost class (round-13 advice; the x13b gate needed exactly
     * this fix last round). The set is a deterministic function of the
     * memoized centroids and the query set, so memoization is
-    * value-transparent; geometry rides in one non-numeric family token
-    * so different probe policies over one query set don't thrash-evict.
+    * value-transparent; geometry is part of the family so different
+    * probe policies over one query set don't evict each other.
     */
-  private val fitProbedCells =
-    scala.collection.concurrent.TrieMap.empty[String, IndexedSeq[Int]]
-
   private def memoProbedCells(queries: DataFrame, probes: DataFrame,
       cents: Array[Array[Float]], probe: Int): IndexedSeq[Int] =
-    memoVersioned(fitProbedCells,
-      graft.util.Landing.planVersionKey(queries) +
-        s"|pcells:k${cents.length}:p$probe")(
+    Artifacts.value(
+        Artifacts.key("pcells", queries, cents.length, probe))(
       probes.select(col("cell")).distinct()
         .collect().map(_.getInt(0)).toIndexedSeq.sorted)
 
   private def servePersisted(s: SparkSession, dir: String,
       queries: DataFrame, cents: Array[Array[Float]], probe: Int,
       k: Int): DataFrame = {
-    val landed = graft.util.Landing.readLayout(s, dir)
+    val landed = Artifacts.read(s, dir)
     val probes = queryProbes(s, queries, cents, probe, matchLabel = false)
     val probedCells = memoProbedCells(queries, probes, cents, probe)
     rerankProbed(s,
@@ -1630,7 +1560,7 @@ object SimilarityOps {
     val cents = memoCentroids(emb, fs, cells)
     if (cents.isEmpty) return filteredBruteTopK(emb, queries, k)
     val margin = memoSpillThreshold(emb, fs, cents)
-    val landed = graft.util.Landing.readLayout(s,
+    val landed = Artifacts.read(s,
       landedIndexDir(s, d, cents, margin))
     val probes = queryProbes(s, queries, cents, probe, matchLabel = true)
     val probedCells = memoProbedCells(queries, probes, cents, probe)
@@ -1729,8 +1659,7 @@ object SimilarityOps {
 
   private[graft] def knnGraphDir(s: SparkSession, d: String,
       degree: Int = X18Degree): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "embeddings") + s"|knngraph:g$degree",
+    Artifacts.dir(Artifacts.key("knngraph", Tables.path(d, "embeddings"), degree),
       "graft_knng") { dir =>
       val emb = Tables.embeddings(s, d)
       buildGraphLayout(s, emb, dir, degree, x18Buckets(memoCount(emb)))
@@ -1770,36 +1699,19 @@ object SimilarityOps {
       queries: DataFrame, k: Int, beam: Int = X18Beam,
       hops: Int = X18Hops, nEntries: Int = X18Entries,
       seeds: Option[DataFrame] = None): DataFrame = {
-    // land the walked front per (query-set version, graph version,
-    // knobs): the per-hop driver collects otherwise re-run on EVERY
-    // fresh DataFrame build — the d13 class (round-14 verdict #3). The
-    // key is version-transparent: planVersionKey carries the query
-    // frame's source identity+mtime, versionedPathKey the layout
-    // version; checkpoint-derived seed frames (x19's descent) key on
-    // their unique plan hash — never a stale hit, and the outer
-    // hnswTopK landing makes their misses once-per-version. k stays
-    // OUTSIDE the landing (the front is k-independent; beam bounds it).
-    val landedFront = graft.util.Landing.frameLanding(s,
-      graft.util.Landing.planVersionKey(queries) +
-        seeds.map(sd =>
-          "|sd." + graft.util.Landing.planVersionKey(sd)).getOrElse("") +
-        s"|bwF.b$beam.h$hops.e$nEntries|" +
-        graft.util.Landing.versionedPathKey(dir)) {
-      val q = withNorm(s, queries, "q").localCheckpoint(true)
-      graphBeamWalk(s, dir, beam, hops, nEntries, seeds,
-        (cand, nodeRows) => {
-          val cn = nodeRows.filter(col("nrm").isNotNull && col("nrm") > 0)
-            .select(col("id").as("c_id"), col("emb").as("c_emb"),
-              col("nrm").as("c_norm"))
-          cand.join(broadcast(cn), "c_id").join(broadcast(q), "q_id")
-            .filter(col("q_id") =!= col("c_id"))
-            .select(col("q_id"), col("c_id"),
-              (VecOps.fdot(s, col("q_emb"), col("c_emb")) /
-                (col("q_norm") * col("c_norm"))).as("sim"))
-        },
-        q.select(col("q_id")))
-    }
-    landedFront
+    val q = withNorm(s, queries, "q").localCheckpoint(true)
+    graphBeamWalk(s, dir, beam, hops, nEntries, seeds,
+      (cand, nodeRows) => {
+        val cn = nodeRows.filter(col("nrm").isNotNull && col("nrm") > 0)
+          .select(col("id").as("c_id"), col("emb").as("c_emb"),
+            col("nrm").as("c_norm"))
+        cand.join(broadcast(cn), "c_id").join(broadcast(q), "q_id")
+          .filter(col("q_id") =!= col("c_id"))
+          .select(col("q_id"), col("c_id"),
+            (VecOps.fdot(s, col("q_emb"), col("c_emb")) /
+              (col("q_norm") * col("c_norm"))).as("sim"))
+      },
+      q.select(col("q_id")))
       .withColumn("rank", row_number().over(Window.partitionBy(col("q_id"))
         .orderBy(col("sim").desc, col("c_id"))))
       .filter(col("rank") <= k)
@@ -1820,7 +1732,7 @@ object SimilarityOps {
       score: (DataFrame, DataFrame) => DataFrame,
       qIds: DataFrame, keepAllScored: Boolean = false): DataFrame = {
     val nb = graphSidecarInt(dir, "_nbuckets.txt")
-    val nodes = graft.util.Landing.readLayout(s, dir)
+    val nodes = Artifacts.read(s, dir)
     def lookup(ids: Seq[Long]): DataFrame = {
       val pbs = ids.map(i => (i % nb).toInt).distinct.sorted
       nodes.filter(col("pb").isin(pbs: _*) && col("id").isin(ids: _*))
@@ -1898,11 +1810,7 @@ object SimilarityOps {
   }
 
   /** Raw x18 builder on the 5-probe query set (fixture-pinned like
-    * x2/x4/x7): the hop collects run at DataFrame-BUILD time, so the
-    * REGISTERED gate serves this through a frameLanding (one search per
-    * corpus version per JVM — the d13 production accounting; a real
-    * serving tier answers a query batch once, not once per downstream
-    * consumer).
+    * x2/x4/x7); the hop collects run at DataFrame-BUILD time.
     */
   private[graft] def x18BeamTopK(s: SparkSession, d: String): DataFrame =
     knnGraphBeamTopK(s, d,
@@ -1918,10 +1826,7 @@ object SimilarityOps {
   private def x18Gate(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val q5 = emb.filter(col("vec_id") < 5)
-    val served = graft.util.Landing.frameLanding(s,
-      graft.util.Landing.mtimeKey(d, "embeddings") + "|x18serve") {
-      knnGraphBeamTopK(s, d, q5, 10)
-    }
+    val served = knnGraphBeamTopK(s, d, q5, 10)
     recallGate(served,
       memoExact(s, d, "probe5k10")(bruteForceTopK(emb, q5, 10)),
       X18Floor)
@@ -1956,9 +1861,8 @@ object SimilarityOps {
     */
   private[graft] def x18bBaseDir(s: SparkSession, d: String): String = {
     val (base, _) = x18bBaseDelta(s, d)
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "embeddings") +
-        s"|knngapnd:g$X18Degree", "graft_knngapnd") { p =>
+    Artifacts.dir(Artifacts.key("knngapnd", Tables.path(d, "embeddings"),
+        X18Degree), "graft_knngapnd") { p =>
       buildGraphLayout(s, base, p, X18Degree,
         x18Buckets(memoCount(base, tag = ":gbase")))
     }
@@ -1966,26 +1870,24 @@ object SimilarityOps {
 
   private[graft] def x18bDir(s: SparkSession, d: String): String = {
     val (_, delta) = x18bBaseDelta(s, d)
-    val verKey = graft.util.Landing.mtimeKey(d, "embeddings")
     val dir = x18bBaseDir(s, d)
-    appendedKeys.synchronized {
-      appendedKeys.getOrElseUpdate(verKey + "|knngapnd:delta", {
-        val famKey = verKey + "|knngapnd:delta"
-        val fam = graft.util.Landing.frameFamily(famKey)
-        appendedKeys.keySet.filter(k2 => k2 != famKey &&
-            graft.util.Landing.frameFamily(k2) == fam)
-          .foreach(appendedKeys.remove)
-        // insert-by-search: each (nonzero-norm) delta vector's edges are
-        // its beam-search neighbours over the BASE graph
-        graphInsertRows(s, dir, delta,
-            graphSidecarInt(dir, "_nbuckets.txt"))
-          .repartition(col("pb"))
-          .write.mode("append").partitionBy("pb").parquet(dir)
-        dir
-      })
+    appendOnce("knngapnd_delta", d, dir) {
+      // insert-by-search: each (nonzero-norm) delta vector's edges are
+      // its beam-search neighbours over the BASE graph
+      graphInsertRows(s, dir, delta,
+          graphSidecarInt(dir, "_nbuckets.txt"))
+        .repartition(col("pb"))
+        .write.mode("append").partitionBy("pb").parquet(dir)
     }
-    dir
   }
+
+  /** Runs `append` into the landed layout `dir` once per embeddings
+    * version; returns `dir`.
+    */
+  private def appendOnce(op: String, d: String, dir: String)(
+      append: => Unit): String =
+    Artifacts.value(Artifacts.Key(op, Nil, Seq(dir),
+        Artifacts.stamp(Tables.path(d, "embeddings")))) { append; dir }
 
   /** E26: STREAMING graph-index maintenance — x18b's insert-by-search as
     * a Structured Streaming sink (the e20 shape for the graph family):
@@ -2005,41 +1907,33 @@ object SimilarityOps {
     */
   private[graft] def e26LayoutDir(s: SparkSession, d: String): String = {
     val (base, delta) = x18bBaseDelta(s, d)
-    val verKey = graft.util.Landing.mtimeKey(d, "embeddings")
-    val dir = graft.util.Landing.landedLayout(
-      verKey + s"|knngstrm:g$X18Degree", "graft_knngstrm") { p =>
+    val dir = Artifacts.dir(Artifacts.key("knngstrm",
+        Tables.path(d, "embeddings"), X18Degree), "graft_knngstrm") { p =>
       buildGraphLayout(s, base, p, X18Degree,
         x18Buckets(memoCount(base, tag = ":gbase")))
     }
-    streamedKeys.synchronized {
-      streamedKeys.getOrElseUpdate(verKey + "|knngstrm:delta", {
-        val fam = graft.util.Landing.frameFamily(verKey + "|knngstrm:delta")
-        streamedKeys.keySet.filter(k2 =>
-          k2 != verKey + "|knngstrm:delta" &&
-            graft.util.Landing.frameFamily(k2) == fam)
-          .foreach(streamedKeys.remove)
-        val nb = graphSidecarInt(dir, "_nbuckets.txt")
-        val stage = graft.util.Landing.tempDirOnce("graft_knngstrm_stage")
-        val ckpt = graft.util.Landing.tempDirOnce("graft_knngstrm_ckpt")
-        delta.repartition(3).write.mode("overwrite").parquet(stage.toString)
-        val schema = s.read.parquet(stage.toString).schema
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(stage.toString)
-          .writeStream
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            graft.util.Landing.idempotentAppend(
-              graphInsertRows(s, dir, batch, nb).repartition(col("pb")),
-              dir, batchId, "pb")
-          }
-          .start()
-        q.awaitTermination()
-        dir
-      })
+    appendOnce("knngstrm_delta", d, dir) {
+      val nb = graphSidecarInt(dir, "_nbuckets.txt")
+      val stage = Artifacts.scratchDir("graft_knngstrm_stage")
+      val ckpt = Artifacts.scratchDir("graft_knngstrm_ckpt")
+      delta.repartition(3).write.mode("overwrite").parquet(stage.toString)
+      val schema = s.read.parquet(stage.toString).schema
+      val q = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage.toString)
+        .writeStream
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          graft.util.Landing.idempotentAppend(
+            graphInsertRows(s, dir, batch, nb).repartition(col("pb")),
+            dir, batchId, "pb")
+        }
+        .start()
+      q.awaitTermination()
+      Artifacts.delete(stage)
+      Artifacts.delete(ckpt)
     }
-    dir
   }
 
   /** e26 measured 1.00/0.98 (RecallProbe) — the micro-batched insert
@@ -2050,10 +1944,7 @@ object SimilarityOps {
   private def e26Gate(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val q5 = emb.filter(col("vec_id") < 5)
-    val served = graft.util.Landing.frameLanding(s,
-      graft.util.Landing.mtimeKey(d, "embeddings") + "|e26serve") {
-      beamSearchGraph(s, e26LayoutDir(s, d), q5, 10)
-    }
+    val served = beamSearchGraph(s, e26LayoutDir(s, d), q5, 10)
     recallGate(served,
       memoExact(s, d, "probe5k10")(bruteForceTopK(emb, q5, 10)),
       E26Floor)
@@ -2098,10 +1989,7 @@ object SimilarityOps {
   private def x18bGate(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val q5 = emb.filter(col("vec_id") < 5)
-    val served = graft.util.Landing.frameLanding(s,
-      graft.util.Landing.mtimeKey(d, "embeddings") + "|x18bserve") {
-      beamSearchGraph(s, x18bDir(s, d), q5, 10)
-    }
+    val served = beamSearchGraph(s, x18bDir(s, d), q5, 10)
     recallGate(served,
       memoExact(s, d, "probe5k10")(bruteForceTopK(emb, q5, 10)),
       X18bFloor)
@@ -2130,8 +2018,7 @@ object SimilarityOps {
     * probes for which layers exist.
     */
   private[graft] def x19LayersDir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "embeddings") + "|hnswlayers",
+    Artifacts.dir(Artifacts.key("hnswlayers", Tables.path(d, "embeddings")),
       "graft_hnsw") { dir =>
       val emb = Tables.embeddings(s, d)
       def level(div: Long) =
@@ -2166,35 +2053,22 @@ object SimilarityOps {
       k: Int): DataFrame = {
     val root = x19LayersDir(s, d)
     val base = knnGraphDir(s, d)
-    // land the whole descent per (query-set version, layers+base graph
-    // versions): the per-layer seed frames are checkpoint-derived, so
-    // the inner beamSearchGraph landings can't hit across fresh builds
-    // — this outer landing is what makes a fresh x19 build flat
-    // (round-14 verdict #3)
-    graft.util.Landing.frameLanding(s,
-      graft.util.Landing.planVersionKey(queries) + s"|x19d.k$k|" +
-        graft.util.Landing.versionedPathKey(root) + "|" +
-        graft.util.Landing.versionedPathKey(base)) {
-      val layerSubs = {
-        val src = scala.io.Source.fromFile(s"$root/_layers.txt")
-        try src.getLines().filter(_.nonEmpty).toList finally src.close()
-      }
-      var seeds: Option[DataFrame] = None
-      for (sub <- layerSubs) {
-        val res = beamSearchGraph(s, s"$root/$sub", queries,
-          k = X19SeedsPerLayer, beam = 8, hops = 2, nEntries = 2,
-          seeds = seeds)
-        seeds = Some(res.select(col("q_id"), col("c_id")))
-      }
-      beamSearchGraph(s, base, queries, k,
-        beam = X19Beam, hops = X19Hops, seeds = seeds)
+    val layerSubs = {
+      val src = scala.io.Source.fromFile(s"$root/_layers.txt")
+      try src.getLines().filter(_.nonEmpty).toList finally src.close()
     }
+    var seeds: Option[DataFrame] = None
+    for (sub <- layerSubs) {
+      val res = beamSearchGraph(s, s"$root/$sub", queries,
+        k = X19SeedsPerLayer, beam = 8, hops = 2, nEntries = 2,
+        seeds = seeds)
+      seeds = Some(res.select(col("q_id"), col("c_id")))
+    }
+    beamSearchGraph(s, base, queries, k,
+      beam = X19Beam, hops = X19Hops, seeds = seeds)
   }
 
-  /** Raw x19 builder on the 5-probe query set (fixture-pinned like x18;
-    * the registered gate serves through a frameLanding — the d13
-    * production accounting).
-    */
+  /** Raw x19 builder on the 5-probe query set (fixture-pinned like x18). */
   private[graft] def x19HnswTopK(s: SparkSession, d: String): DataFrame =
     hnswTopK(s, d,
         Tables.embeddings(s, d).filter(col("vec_id") < 5), 10)
@@ -2211,10 +2085,7 @@ object SimilarityOps {
   private def x19Gate(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val q5 = emb.filter(col("vec_id") < 5)
-    val served = graft.util.Landing.frameLanding(s,
-      graft.util.Landing.mtimeKey(d, "embeddings") + "|x19serve") {
-      hnswTopK(s, d, q5, 10)
-    }
+    val served = hnswTopK(s, d, q5, 10)
     recallGate(served,
       memoExact(s, d, "probe5k10")(bruteForceTopK(emb, q5, 10)),
       X19Floor)
@@ -2248,12 +2119,11 @@ object SimilarityOps {
     * k-NN structure itself (pruning REMOVES edges; it never re-searches).
     */
   private[graft] def x20CompactDir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "embeddings") + "|graphcompact",
+    Artifacts.dir(Artifacts.key("graphcompact", Tables.path(d, "embeddings")),
       "graft_gcompact") { dir =>
       val srcDir = x18bDir(s, d)
       val nb = graphSidecarInt(srcDir, "_nbuckets.txt")
-      val merged = graft.util.Landing.readLayout(s, srcDir)
+      val merged = Artifacts.read(s, srcDir)
         .groupBy(col("id"))
         .agg(first(col("emb"), ignoreNulls = true).as("emb"),
           first(col("nrm"), ignoreNulls = true).as("nrm"),
@@ -2298,10 +2168,7 @@ object SimilarityOps {
   private def x20Gate(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val q5 = emb.filter(col("vec_id") < 5)
-    val served = graft.util.Landing.frameLanding(s,
-      graft.util.Landing.mtimeKey(d, "embeddings") + "|x20serve") {
-      beamSearchGraph(s, x20CompactDir(s, d), q5, 10)
-    }
+    val served = beamSearchGraph(s, x20CompactDir(s, d), q5, 10)
     recallGate(served,
       memoExact(s, d, "probe5k10")(bruteForceTopK(emb, q5, 10)),
       X20Floor)
@@ -2317,12 +2184,11 @@ object SimilarityOps {
     * x21 share one k-NN build per corpus version.
     */
   private[graft] def x21Sq8Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "embeddings") + "|graphsq8",
+    Artifacts.dir(Artifacts.key("graphsq8", Tables.path(d, "embeddings")),
       "graft_gsq8") { dir =>
       val src = knnGraphDir(s, d)
       val qp = VecOps.qparams8(s, col("emb"))
-      graft.util.Landing.readLayout(s, src).select(col("id"),
+      Artifacts.read(s, src).select(col("id"),
           VecOps.quantize8(s, col("emb")).as("qb"),
           element_at(qp, 1).cast("double").as("vmin"),
           element_at(qp, 2).cast("double").as("step"),
@@ -2350,15 +2216,7 @@ object SimilarityOps {
       k: Int): DataFrame = {
     val codesDir = x21Sq8Dir(s, d)
     val floatDir = knnGraphDir(s, d)
-    // land the whole walk+rerank per (query-set version, codes+float
-    // layout versions): the hop collects AND the finalist-id collect
-    // otherwise re-run per fresh build (round-14 verdict #3)
-    graft.util.Landing.frameLanding(s,
-      graft.util.Landing.planVersionKey(queries) + s"|x21s.k$k|" +
-        graft.util.Landing.versionedPathKey(codesDir) + "|" +
-        graft.util.Landing.versionedPathKey(floatDir)) {
-      graphSq8TopKBuild(s, codesDir, floatDir, queries, k)
-    }
+    graphSq8TopKBuild(s, codesDir, floatDir, queries, k)
   }
 
   private def graphSq8TopKBuild(s: SparkSession, codesDir: String,
@@ -2392,7 +2250,7 @@ object SimilarityOps {
     val ids = front.select(col("c_id")).distinct()
       .collect().map(_.getLong(0)).toSeq.sorted
     val pbs = ids.map(i => (i % nbF).toInt).distinct.sorted
-    val cn = graft.util.Landing.readLayout(s, floatDir)
+    val cn = Artifacts.read(s, floatDir)
       .filter(col("pb").isin(pbs: _*) && col("id").isin(ids: _*))
       .filter(col("nrm").isNotNull && col("nrm") > 0)
       .select(col("id").as("c_id"), col("emb").as("c_emb"),
@@ -2423,10 +2281,7 @@ object SimilarityOps {
   private def x21Gate(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val q5 = emb.filter(col("vec_id") < 5)
-    val served = graft.util.Landing.frameLanding(s,
-      graft.util.Landing.mtimeKey(d, "embeddings") + "|x21serve") {
-      graphSq8TopK(s, d, q5, 10)
-    }
+    val served = graphSq8TopK(s, d, q5, 10)
     recallGate(served,
       memoExact(s, d, "probe5k10")(bruteForceTopK(emb, q5, 10)),
       X21Floor)
@@ -2439,13 +2294,12 @@ object SimilarityOps {
     * layout; the k-NN build stays shared.
     */
   private[graft] def x22LabeledDir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "embeddings") + "|graphlbl",
+    Artifacts.dir(Artifacts.key("graphlbl", Tables.path(d, "embeddings")),
       "graft_glbl") { dir =>
       val src = knnGraphDir(s, d)
       val lbl = Tables.embeddings(s, d)
         .select(col("vec_id").as("id"), col("label").as("lbl"))
-      graft.util.Landing.readLayout(s, src).join(broadcast(lbl), Seq("id"), "left")
+      Artifacts.read(s, src).join(broadcast(lbl), Seq("id"), "left")
         .select(col("id"), col("emb"), col("nrm"), col("lbl"),
           col("nbrs"), col("pb"))
         .repartition(col("pb"))
@@ -2474,13 +2328,7 @@ object SimilarityOps {
   def graphFilteredTopK(s: SparkSession, d: String, queries: DataFrame,
       k: Int): DataFrame = {
     val dir = x22LabeledDir(s, d)
-    // land the pooled walk + label lookup per (query-set version,
-    // labeled-layout version) — round-14 verdict #3, as above
-    graft.util.Landing.frameLanding(s,
-      graft.util.Landing.planVersionKey(queries) + s"|x22f.k$k|" +
-        graft.util.Landing.versionedPathKey(dir)) {
-      graphFilteredTopKBuild(s, dir, queries, k)
-    }
+    graphFilteredTopKBuild(s, dir, queries, k)
   }
 
   private def graphFilteredTopKBuild(s: SparkSession, dir: String,
@@ -2513,7 +2361,7 @@ object SimilarityOps {
     val ids = scoredAll.select(col("c_id")).distinct()
       .collect().map(_.getLong(0)).toSeq.sorted
     val pbs = ids.map(i => (i % nb).toInt).distinct.sorted
-    val lbls = graft.util.Landing.readLayout(s, dir)
+    val lbls = Artifacts.read(s, dir)
       .filter(col("pb").isin(pbs: _*) && col("id").isin(ids: _*))
       .filter(col("nrm").isNotNull)
       .select(col("id").as("c_id"), col("lbl"))
@@ -2544,22 +2392,13 @@ object SimilarityOps {
   private def x22Gate(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val q5 = emb.filter(col("vec_id") < 5)
-    val served = graft.util.Landing.frameLanding(s,
-      graft.util.Landing.mtimeKey(d, "embeddings") + "|x22serve") {
-      graphFilteredTopK(s, d, q5, 10)
-    }
+    val served = graphFilteredTopK(s, d, q5, 10)
     recallGate(served,
       memoExact(s, d, "probe5k10filt")(filteredBruteTopK(emb, q5, 10)),
       X22Floor)
   }
 
   // ---- X11b: incremental append into the persisted index -----------------
-  /** Once-per-version append markers: the delta assignment job runs once
-    * per (base, delta) version; same lock discipline as the layouts.
-    */
-  private val appendedKeys =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** X11b: incremental append INTO the persisted index — x11's no-refit
     * delta assignment composed with x12's partition-pruned serving
     * layout, closing the gap between the two (round-10 verdict: x11's
@@ -2610,28 +2449,19 @@ object SimilarityOps {
     */
   private[graft] def x11bLayoutDir(s: SparkSession, d: String): String = {
     val (base, _, cents, _, margin) = x11bState(s, d)
-    val verKey = graft.util.Landing.mtimeKey(d, "embeddings")
-    val dir = landedCellLayout(verKey + "|ivfapnd", "graft_ivfapnd") { p =>
+    val dir = Artifacts.dir(Artifacts.key("ivfapnd", Tables.path(d, "embeddings")),
+        "graft_ivfapnd") { p =>
       assignedForLanding(s, base, cents, margin)
         .repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(p)
     }
-    appendedKeys.synchronized {
-      appendedKeys.getOrElseUpdate(verKey + "|ivfapnd:delta", {
-        val fam = graft.util.Landing.frameFamily(verKey + "|ivfapnd:delta")
-        appendedKeys.keySet.filter(k2 =>
-          k2 != verKey + "|ivfapnd:delta" &&
-            graft.util.Landing.frameFamily(k2) == fam)
-          .foreach(appendedKeys.remove)
-        // the append job's ONLY data-sized input is the delta scan — one
-        // map-only assignment, one file commit into existing partitions
-        x11bDeltaFrame(s, d)
-          .repartition(col("cell"))
-          .write.mode("append").partitionBy("cell").parquet(dir)
-        dir
-      })
+    appendOnce("ivfapnd_delta", d, dir) {
+      // the append job's ONLY data-sized input is the delta scan — one
+      // map-only assignment, one file commit into existing partitions
+      x11bDeltaFrame(s, d)
+        .repartition(col("cell"))
+        .write.mode("append").partitionBy("cell").parquet(dir)
     }
-    dir
   }
 
   def ivfAppendedTopK(s: SparkSession, d: String, queries: DataFrame,
@@ -2663,46 +2493,36 @@ object SimilarityOps {
     * no refit, no rescan, no shuffle of the base; quantizer refit stays
     * an offline compaction decision (x12's note).
     */
-  private val streamedKeys =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private[graft] def e20LayoutDir(s: SparkSession, d: String): String = {
     val (base, delta, cents, _, margin) = x11bState(s, d)
-    val verKey = graft.util.Landing.mtimeKey(d, "embeddings")
-    val dir = landedCellLayout(verKey + "|ivfstrm", "graft_ivfstrm") { p =>
+    val dir = Artifacts.dir(Artifacts.key("ivfstrm", Tables.path(d, "embeddings")),
+        "graft_ivfstrm") { p =>
       assignedForLanding(s, base, cents, margin)
         .repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(p)
     }
-    streamedKeys.synchronized {
-      streamedKeys.getOrElseUpdate(verKey + "|ivfstrm:delta", {
-        val fam = graft.util.Landing.frameFamily(verKey + "|ivfstrm:delta")
-        streamedKeys.keySet.filter(k2 =>
-          k2 != verKey + "|ivfstrm:delta" &&
-            graft.util.Landing.frameFamily(k2) == fam)
-          .foreach(streamedKeys.remove)
-        val stage = graft.util.Landing.tempDirOnce("graft_ivfstrm_stage")
-        val ckpt = graft.util.Landing.tempDirOnce("graft_ivfstrm_ckpt")
-        delta.repartition(3).write.mode("overwrite").parquet(stage.toString)
-        val schema = s.read.parquet(stage.toString).schema
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(stage.toString)
-          .writeStream
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            graft.util.Landing.idempotentAppend(
-              assignedForLanding(s, batch, cents, margin)
-                .repartition(col("cell")),
-              dir, batchId, "cell")
-          }
-          .start()
-        q.awaitTermination()
-        dir
-      })
+    appendOnce("ivfstrm_delta", d, dir) {
+      val stage = Artifacts.scratchDir("graft_ivfstrm_stage")
+      val ckpt = Artifacts.scratchDir("graft_ivfstrm_ckpt")
+      delta.repartition(3).write.mode("overwrite").parquet(stage.toString)
+      val schema = s.read.parquet(stage.toString).schema
+      val q = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage.toString)
+        .writeStream
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          graft.util.Landing.idempotentAppend(
+            assignedForLanding(s, batch, cents, margin)
+              .repartition(col("cell")),
+            dir, batchId, "cell")
+        }
+        .start()
+      q.awaitTermination()
+      Artifacts.delete(stage)
+      Artifacts.delete(ckpt)
     }
-    dir
   }
 
   def ivfStreamedTopK(s: SparkSession, d: String, queries: DataFrame,
@@ -2737,12 +2557,10 @@ object SimilarityOps {
     if (cents.isEmpty) return bruteForceTopK(emb, queries, k)
     val margin = memoSpillThreshold(emb, fs, cents)
     val sampleUnit = memoUnitSample(emb, 4096)
-    val books = memoVersioned(fitBooks,
-      graft.util.Landing.planVersionKey(emb) + s"|pqbooks:m$m:ks$ks:f4096")(
+    val books = Artifacts.value(Artifacts.key("pqbooks", emb, m, ks, 4096))(
       pqTrain(sampleUnit, m, ks, iters = 8))
-    val dir = landedCellLayout(
-      graft.util.Landing.mtimeKey(d, "embeddings") + "|ivfpq",
-      "graft_ivfpq") { p =>
+    val dir = Artifacts.dir(Artifacts.key("ivfpq", Tables.path(d, "embeddings")),
+        "graft_ivfpq") { p =>
       val pre = emb.select(col("vec_id"), col("embedding"),
           VecOps.fnorm(s, col("embedding")).as("_n"))
         .filter(col("_n") > 0)
@@ -2754,7 +2572,7 @@ object SimilarityOps {
         .repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(p)
     }
-    val landed = graft.util.Landing.readLayout(s, dir)
+    val landed = Artifacts.read(s, dir)
     val probes = queryProbes(s, queries, cents, probe, matchLabel = false)
     // shared probed-cell memo (the d13 build-cost class): x16 was the one
     // persisted serve still collecting the probe plan per fresh build
@@ -2825,7 +2643,7 @@ object SimilarityOps {
   private[graft] def x15State(s: SparkSession, d: String)
       : (String, Array[Array[Float]], Int) = {
     val apDir = x11bLayoutDir(s, d)
-    val recovered = graft.util.Landing.readLayout(s, apDir)
+    val recovered = Artifacts.read(s, apDir)
       // c_label rides through so the compacted layout keeps the
       // filterable metadata (assignedForLanding expects `label`)
       .select(col("c_id").as("vec_id"), col("c_emb").as("embedding"),
@@ -2837,9 +2655,8 @@ object SimilarityOps {
     val cents = memoCentroids(recovered, fs, cells, tag = ":compact")
     if (cents.isEmpty) return ("", cents, probe)
     val margin = memoSpillThreshold(recovered, fs, cents, tag = ":compact")
-    val dir = landedCellLayout(
-      graft.util.Landing.mtimeKey(d, "embeddings") + "|ivfcomp",
-      "graft_ivfcomp") { p =>
+    val dir = Artifacts.dir(Artifacts.key("ivfcomp", Tables.path(d, "embeddings")),
+        "graft_ivfcomp") { p =>
       assignedForLanding(s, recovered, cents, margin)
         .repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(p)
@@ -3088,9 +2905,8 @@ object SimilarityOps {
     if (sampleUnit.isEmpty) return bruteForceTopK(corpus, queries, k)
     // codebooks follow the centroid-memo discipline: deterministic on the
     // memoized sample, fitted once per corpus version
-    val books = memoVersioned(fitBooks,
-      graft.util.Landing.planVersionKey(corpus) +
-        s"|pqbooks:m$m:ks$ks:f$fitSample")(
+    val books = Artifacts.value(
+        Artifacts.key("pqbooks", corpus, m, ks, fitSample))(
       pqTrain(sampleUnit, m, ks, iters = 8))
     // encode on unit vectors: norm hoisted OUTSIDE the transform lambda
     // (interpreted-HOF doctrine), codes are one codegen kernel call

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.util.Artifacts
 
 /** Text-analysis operators for LLM training-data pipelines (north-star
   * extension; BASELINE.json). All operate on the `documents` table and are
@@ -465,19 +466,18 @@ object TextOps {
     *
     * Scale: counting is two map-side-combined aggregations; the unigram
     * model is vocabulary-sized (hash join or broadcast), the bigram
-    * lookup is a hash join on (w1, w2). In production the model is
-    * trained once and LANDED, then reused across scoring runs (the d8
-    * landing discipline); nothing collects to the driver. The per-doc
+    * lookup is a hash join on (w1, w2); nothing collects to the driver.
+    * The per-doc
     * fold is an interpreted HOF over ≤ tokens-per-doc elements —
     * bounded, and off the hot counting path. Docs with < 2 tokens have
     * no bigrams and drop out on both engines.
     */
-  def lmScore(docs: DataFrame, landKey: Option[String] = None): DataFrame = {
+  def lmScore(docs: DataFrame): DataFrame = {
     val arr = docs.select(col("doc_id"),
       split(lower(col("text")), "\\s+").as("t"))
     val toks = arr.select(explode(col("t")).as("tok"))
-    val uniRaw = toks.groupBy("tok").agg(count(lit(1)).as("c1"))
-    val nTokRaw = toks.agg(count(lit(1)).cast("double").as("_n"))
+    val uni = toks.groupBy("tok").agg(count(lit(1)).as("c1"))
+    val nTok = toks.agg(count(lit(1)).cast("double").as("_n"))
     val bigr = arr
       .filter(size(col("t")) >= 2)
       .select(col("doc_id"), posexplode(expr(
@@ -485,30 +485,12 @@ object TextOps {
         .as(Seq("pos", "bg")))
       .select(col("doc_id"), col("pos"),
         col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-    val biRaw = bigr.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
-    // the trained model (unigram/bigram counts + token total) is
-    // vocabulary-sized derived state — landed once per corpus version
-    // when the caller has a stable source (the d8/landing discipline the
-    // scaladoc promises); scoring runs per execution against it
-    def landed(tag: String, df: DataFrame): DataFrame = landKey match {
-      case Some(k) =>
-        graft.util.Landing.frameLanding(docs.sparkSession, k + tag)(df)
-      case None => df
-    }
-    // vocabulary-sized model tables usually fit a broadcast, but that is
-    // data-dependent — the adaptive size probe (the x3/d7 idiom) proves
-    // it per landed version for the cost of a bounded count on the
-    // checkpointed frame, and keeps the per-position joins map-side
-    // (3 fewer exchanges of the exploded bigram stream); oversized
-    // models fall back to the shuffle join
+    val bi = bigr.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
     // NOT broadcast-hinted: an A/B at sf0.1 measured the hinted plan
     // SLOWER (0.82s vs 0.67s min-of-3) — the per-execution broadcast
-    // builds of the landed model cost more than the 32-partition
-    // exchanges they remove at this scale; AQE still converts at runtime
-    // where actual sizes warrant it
-    val uni = landed("|uni", uniRaw)
-    val nTok = landed("|ntok", nTokRaw)
-    val bi = landed("|bi", biRaw)
+    // builds of the model cost more than the 32-partition exchanges they
+    // remove at this scale; AQE still converts at runtime where actual
+    // sizes warrant it
     val p = bigr
       .join(bi, Seq("w1", "w2"), "left")
       .join(uni.select(col("tok").as("w1"), col("c1").as("_c1")), Seq("w1"))
@@ -528,9 +510,7 @@ object TextOps {
   }
 
   private def t12LmScore(s: SparkSession, d: String): DataFrame =
-    lmScore(Tables.documents(s, d),
-      landKey = Some(graft.util.Landing.mtimeKey(d, "documents") + "|t12_lm"))
-      .orderBy(col("doc_id"))
+    lmScore(Tables.documents(s, d)).orderBy(col("doc_id"))
 
   private val t12Sql =
     """WITH arr AS (
@@ -629,24 +609,14 @@ object TextOps {
     * both engines cut identically.
     */
   private def t14QualityBuckets(s: SparkSession, d: String): DataFrame = {
-    // The scored+ranked frame is an amortized LANDING per source version
-    // (Landing.frameLanding, the j6 accounting): the scoring kernel, the
-    // rank's approxQuantile action, the band-count agg, and the band join
-    // all run ONCE per (session, documents.parquet mtime); later calls
-    // reuse the checkpointed (doc_id, lm_score, _rank, _n) frame — a
-    // production curriculum pipeline ranks a corpus once per corpus
-    // version, not once per consumer. Inside the build, `scored` is
-    // itself eagerly checkpointed because the rank evaluates it four
-    // times before the landing materializes.
-    val ranked = graft.util.Landing.frameLanding(
-      s, graft.util.Landing.mtimeKey(d, "documents") + "|t14rank") {
-      val scored = lmScore(Tables.documents(s, d))
-        .select(col("doc_id"), col("lm_score"))
-        .localCheckpoint(true)
-      graft.util.Ranks
-        .distributedRank(scored, "lm_score", "doc_id", "_rank")
-        .crossJoin(broadcast(scored.agg(count(lit(1)).as("_n"))))
-    }
+    // `scored` is eagerly checkpointed because the rank evaluates it
+    // four times
+    val scored = lmScore(Tables.documents(s, d))
+      .select(col("doc_id"), col("lm_score"))
+      .localCheckpoint(true)
+    val ranked = graft.util.Ranks
+      .distributedRank(scored, "lm_score", "doc_id", "_rank")
+      .crossJoin(broadcast(scored.agg(count(lit(1)).as("_n"))))
     ranked
       .withColumn("bucket", graft.util.Ranks.ntileFromRank("_rank", "_n", 10))
       .groupBy(col("bucket"))
@@ -831,7 +801,7 @@ object TextOps {
     * [[Bm25Buckets]] — d8b's digest-index shape, so the directory count
     * is bounded whatever the vocabulary), plus a 1-row corpus-stats
     * table, evicted per source version via
-    * [[graft.util.Landing.landedLayout]]. The serve path filters on the
+    * [[graft.util.Artifacts.dir]]. The serve path filters on the
     * PARTITION column with the query terms' buckets (driver-computed
     * from the same hash) plus an in-file residual on tok, so a query
     * reads only its terms' bucket files (PartitionFilters,
@@ -843,8 +813,7 @@ object TextOps {
     * t17's DuckDB oracle gates it unchanged.
     */
   private[graft] def bm25IndexDir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "documents") + "|bm25idx",
+    Artifacts.dir(Artifacts.key("bm25idx", Tables.path(d, "documents")),
       "graft_bm25idx") { dir =>
       val tk = bm25Tokens(Tables.documents(s, d))
       val dl = tk.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
@@ -864,11 +833,11 @@ object TextOps {
       terms: Seq[String], limitN: Int = 20): DataFrame = {
     val dir = bm25IndexDir(s, d)
     val buckets = terms.map(bm25TokBucket).distinct
-    val post = graft.util.Landing.readLayout(s, s"$dir/postings")
+    val post = Artifacts.read(s, s"$dir/postings")
       .filter(col("tok_b").isin(buckets: _*) && col("tok").isin(terms: _*))
     val dft = post.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     bm25FromPostings(post, dft,
-      graft.util.Landing.readLayout(s, s"$dir/stats"), terms, limitN)
+      Artifacts.read(s, s"$dir/stats"), terms, limitN)
   }
 
   private def t18Bm25Indexed(s: SparkSession, d: String): DataFrame =
@@ -949,15 +918,6 @@ object TextOps {
     out.toSeq
   }
 
-  /** Merge table memoized per corpus version (family-evicting via
-    * [[graft.util.Landing.memoVersioned]] — a mid-JVM regen drops the
-    * superseded entry instead of accumulating, round-13 advice): the
-    * dict collect + fold happen at DataFrame-BUILD time (the d13 cost
-    * class), and the values are deterministic on a fixed corpus.
-    */
-  private val bpeMemo = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(Int, String, String, String, Long)]]
-
   /** T19: tokenizer vocabulary induction — the BPE merge table an LLM
     * pipeline trains over its corpus. The 100 TB part is the word-
     * frequency aggregation (one scan + one vocab-keyed exchange with
@@ -972,16 +932,14 @@ object TextOps {
     * ([[graft.util.OracleFixtures]], the d2/d3 discipline).
     */
   private def t19BpeMerges(s: SparkSession, d: String): DataFrame = {
-    val merges = graft.util.Landing.memoVersioned(bpeMemo,
-      graft.util.Landing.mtimeKey(d, "documents") + "|bpe") {
-        val dict = Tables.documents(s, d)
-          .select(explode(split(lower(col("text")), " ")).as("w"))
-          .filter(col("w").rlike("^[a-z]+$"))
-          .groupBy(col("w")).agg(count(lit(1)).as("f"))
-          .orderBy(col("f").desc, col("w")).limit(BpeVocabCap)
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
-        bpeMerges(dict, BpeMerges)
-      }
+    // the dict collect + fold happen at DataFrame-BUILD time
+    val dict = Tables.documents(s, d)
+      .select(explode(split(lower(col("text")), " ")).as("w"))
+      .filter(col("w").rlike("^[a-z]+$"))
+      .groupBy(col("w")).agg(count(lit(1)).as("f"))
+      .orderBy(col("f").desc, col("w")).limit(BpeVocabCap)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+    val merges = bpeMerges(dict, BpeMerges)
     import s.implicits._
     graft.util.OracleFixtures.withCorpusKey(
       merges.toDF("merge_round", "lhs", "rhs", "merged", "n")

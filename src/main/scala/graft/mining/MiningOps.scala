@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.util.Artifacts
 
 /** Classic data-mining operators the reference course (Data-warehouse-
   * data-mining) teaches alongside classification: association rules,
@@ -49,22 +50,15 @@ object MiningOps {
     * rounded to 6.
     */
   def associationRules(baskets: DataFrame, idCol: String, itemCol: String,
-      minSupPct: Int = 1,
-      landKey: Option[(SparkSession, String)] = None): DataFrame = {
+      minSupPct: Int = 1): DataFrame = {
     require(minSupPct >= 1 && minSupPct <= 100, "minSupPct in [1,100]")
     // materialize the deduped basket table ONCE: it feeds the total, the
     // item supports, and both sides of the pair self-join — without this
     // the dim-join + distinct runs four times (localCheckpoint(eager) is
-    // the scoped-persist idiom; ContextCleaner frees the blocks). With
-    // landKey the basket table additionally lands once per source
-    // version (Landing.frameLanding): baskets are source-derived state,
-    // the same accounting as pr1's graph landing.
-    val bDistinct = baskets
+    // the scoped-persist idiom; ContextCleaner frees the blocks).
+    val b = baskets
       .select(col(idCol).as("bid"), col(itemCol).as("item")).distinct()
-    val b = landKey match {
-      case Some((s, key)) => graft.util.Landing.frameLanding(s, key)(bDistinct)
-      case None => bDistinct.localCheckpoint(true)
-    }
+      .localCheckpoint(true)
     val nB = b.select(countDistinct(col("bid")).as("n_baskets"))
     val items = b.groupBy(col("item")).agg(count(lit(1)).as("item_cnt"))
     val pairs = b.as("l").join(b.as("r"),
@@ -102,18 +96,7 @@ object MiningOps {
     val baskets = li.join(broadcast(pt),
         li("l_partkey") === pt("p_partkey"))
       .select(col("l_orderkey").as("bid"), col("p_brand").as("item"))
-    // key on BOTH source tables (Landing.sourceMtime, the multi-table
-    // landing discipline): baskets = lineitem ⋈ part, so a part-only
-    // rewrite must re-land too
-    val srcKey = s"$d|fm1_baskets|" +
-      graft.util.Landing.sourceMtime(d, Seq("lineitem", "part"))
-    // the rule table (≤ |brand|² directed pairs) is slim derived state —
-    // landed per source version like fm4's lattice; the pair self-join
-    // and support aggregates run once per version
-    graft.util.Landing.frameLanding(s, srcKey + "|rules")(
-      associationRules(baskets, "bid", "item", minSupPct = 1,
-        landKey = Some((s, srcKey))))
-      .orderBy(col("antecedent"), col("consequent"))
+    associationRules(baskets, "bid", "item", minSupPct = 1)
   }
 
   private val fm1Sql =
@@ -183,10 +166,9 @@ object MiningOps {
   }
 
   /** The rank-deterministic seed rows (≤3: cl, cnt=1, sx, sy) for
-    * [[kmeansIterate]]. Split out so km1 can LAND them once per source
-    * version (Landing.frameLanding): the seeding is the expensive half —
-    * count action + distributedRank's approxQuantile + band join — and
-    * depends only on the input frame, never on the iteration count.
+    * [[kmeansIterate]]: a count action + distributedRank's
+    * approxQuantile + band join, depending only on the input frame,
+    * never on the iteration count.
     */
   def kmeansSeeds(pts: DataFrame): DataFrame = {
     val n = pts.count()
@@ -268,27 +250,10 @@ object MiningOps {
       .orderBy(col("cl"))
   }
 
-  private def km1Kmeans(s: SparkSession, d: String): DataFrame = {
-    // Points and seeds are amortized landings per part.parquet version
-    // (round-7 verdict #4): the first call pays the checkpoint + the
-    // seeding's approxQuantile/rank actions; every later call (bench
-    // reps, ScaleSweep) starts straight at the Lloyd iterations — the
-    // production accounting, since seeds are a function of the source
-    // alone. Both frames are tiny (3 long cols / 3 rows).
-    val key = graft.util.Landing.mtimeKey(d, "part") + "|km1"
-    val pts = graft.util.Landing.frameLanding(s, key + "|pts")(
-      Tables.part(s, d).select(
-        col("p_partkey").as("id"), col("p_size").cast("long").as("x"),
-        round(col("p_retailprice") * 100).cast("long").as("y")))
-    val seeds = graft.util.Landing.frameLanding(s, key + "|seeds")(
-      kmeansSeeds(pts))
-    // the fitted model (k rows of exact rational centroids + means) is
-    // itself slim source-derived state — landed like pr5's labels, so
-    // the 3 sequenced Lloyd broadcast rounds run once per part version
-    graft.util.Landing.frameLanding(s, key + "|model")(
-      kmeansIterate(pts, seeds, iters = 3))
-      .orderBy(col("cl"))
-  }
+  private def km1Kmeans(s: SparkSession, d: String): DataFrame =
+    kmeans(Tables.part(s, d).select(
+      col("p_partkey").as("id"), col("p_size").cast("long").as("x"),
+      round(col("p_retailprice") * 100).cast("long").as("y")), iters = 3)
 
   /** The oracle unrolls the identical iterations as a CTE chain; the SQL
     * is generated so the per-iteration algebra is written once and
@@ -372,36 +337,23 @@ object MiningOps {
     * iterations = 3 bounded shuffles of |V| rows.
     */
   def pageRank(edges: DataFrame, iters: Int = 3,
-      scale: Long = 1000000000000L, directed: Boolean = false,
-      landKey: Option[(SparkSession, String)] = None): DataFrame = {
+      scale: Long = 1000000000000L, directed: Boolean = false): DataFrame = {
     // materialize the degree-annotated edge list ONCE — every iteration
     // joins it; without this the upstream scan + distinct re-runs per
-    // iteration (4×). On a cluster this is the "land the graph, iterate
-    // over the landing" posture; with landKey the landing additionally
-    // amortizes across RUNS of the same source version
-    // (Landing.frameLanding — the graph is source-derived state).
-    def land(tag: String)(build: => DataFrame): DataFrame = landKey match {
-      case Some((s, base)) =>
-        graft.util.Landing.frameLanding(s, base + "|" + tag)(build)
-      case None => build.localCheckpoint(true)
-    }
+    // iteration (4×): the "land the graph, iterate over the landing"
+    // posture. e is consumed only while BUILDING deg/eDeg/nodes, never by
+    // the iterations.
     val e0 = edges.select(col("src"), col("dst"))
-    // e is consumed only while BUILDING deg/eDeg/nodes, never by the
-    // iterations — so it is NOT landed (round-8 review: landing it would
-    // session-pin a second full copy of the edge list next to eDeg).
-    // Landed path: lazy checkpoint — materializes once on a cold build,
-    // costs nothing on a warm memo-hit call, blocks GC-freed after.
-    // Unlanded path: eager, the original scoped-persist behavior.
     val e = (if (directed) e0 else e0.unionByName(
       edges.select(col("dst").as("src"), col("src").as("dst"))))
-      .localCheckpoint(landKey.isEmpty)
-    val deg = land("deg")(
-      e.groupBy(col("src")).agg(count(lit(1)).as("d")))
+      .localCheckpoint(true)
+    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
+      .localCheckpoint(true)
     // Degree-annotated edges: folding d onto each edge row up front
     // removes one join from EVERY iteration (the classic adjacency-with-
     // degree layout); r div d is unchanged arithmetic, so the oracle CTE
     // and the rank vector stay bit-identical.
-    val eDeg = land("edeg")(e.join(deg, "src"))
+    val eDeg = e.join(deg, "src").localCheckpoint(true)
     // node universe = every edge endpoint. Undirected doubling makes every
     // node both a source and a destination, so the degree keys ARE the
     // universe (no extra distinct); a genuinely directed graph has pure
@@ -409,9 +361,9 @@ object MiningOps {
     // hold rank, hence the explicit endpoint frame.
     val nodes =
       if (!directed) deg.select(col("src").as("node"))
-      else land("nodes")(e.select(col("src").as("node"))
+      else e.select(col("src").as("node"))
         .unionByName(e.select(col("dst").as("node")))
-        .distinct())
+        .distinct().localCheckpoint(true)
     val nn = nodes.agg(count(lit(1)).as("n"))
     val tele = expr(s"(15 * ${scale}L) div (100 * n)")
     var r = nodes.crossJoin(broadcast(nn))
@@ -443,34 +395,25 @@ object MiningOps {
       }
       r = dangled
     }
-    // The converged rank VECTOR is itself source-derived state (|V| slim
-    // rows — the maintained centrality MV a production graph store serves
-    // lookups from): with landKey it lands once per graph version and the
-    // per-call cost is the top-20 sort over the landing; the 3 message-
-    // passing rounds run once per source version (r19; pr1 1.17 s →
-    // ~0.06 s steady, pr2 1.01 s → ~0.07 s). Without landKey (specs,
-    // sweeps) every call still runs the iterations.
-    val ranks = land(s"ranks$iters")(
-      r.select(col("node"), col("r").as("rank_scaled")))
+    val ranks = r.select(col("node"), col("r").as("rank_scaled"))
     ranks.orderBy(col("rank_scaled").desc, col("node")).limit(20)
   }
 
   /** The distinct part↔supplier sourcing edge list, landed once per
-    * lineitem.parquet version (Landing.frameLanding): graph construction
-    * is source-derived state — production lands the graph and every
-    * analysis (pr1, pr2, future centrality) iterates over the landing.
+    * lineitem.parquet version and shared by pr1 and pr2: graph
+    * construction is source-derived state — production lands the graph
+    * and every analysis iterates over the landing.
     * The per-call cost drops to the iterations themselves; the fact-scan
     * + 600k-row distinct runs once per source version.
     */
   private def sourcingEdges(s: SparkSession, d: String): DataFrame =
-    graft.util.Landing.frameLanding(
-      s, graft.util.Landing.mtimeKey(d, "lineitem") + "|sourcing_edges")(
+    Artifacts.frame(s,
+      Artifacts.key("sourcing_edges", Tables.path(d, "lineitem")))(
       Tables.lineitem(s, d).select((col("l_partkey") * 2).as("src"),
         (col("l_suppkey") * 2 + 1).as("dst")).distinct())
 
   private def pr1PageRank(s: SparkSession, d: String): DataFrame =
-    pageRank(sourcingEdges(s, d), iters = 3, landKey = Some(
-      (s, graft.util.Landing.mtimeKey(d, "lineitem") + "|pr1")))
+    pageRank(sourcingEdges(s, d), iters = 3)
 
   private val pr1Sql =
     """WITH e0 AS (
@@ -517,8 +460,7 @@ object MiningOps {
     * shuffles the edge list.
     */
   private def pr2PageRankDirected(s: SparkSession, d: String): DataFrame =
-    pageRank(sourcingEdges(s, d), iters = 3, directed = true, landKey =
-      Some((s, graft.util.Landing.mtimeKey(d, "lineitem") + "|pr2")))
+    pageRank(sourcingEdges(s, d), iters = 3, directed = true)
 
   private val pr2Sql = {
     val tele = "(15 * 1000000000000) // (100 * (SELECT n FROM nn))"
@@ -743,7 +685,7 @@ object MiningOps {
     *
     * Plan shape, scale-first: the oriented edge list is built once (one
     * shuffle for distinct edges + a broadcast-size degree table joined
-    * twice) and landed per source version; the wedge self-join and the
+    * twice) and checkpointed once per call; the wedge self-join and the
     * closure join shuffle only slim (long, long, long) rows — node ids and
     * one degree column, never payloads. All arithmetic is exact integer
     * counting: both engines agree bit-for-bit, no bounded gate needed.
@@ -752,7 +694,7 @@ object MiningOps {
     * is making sure those rows never ride an exchange, and that the
     * stage GENERATING them keeps its parallelism:
     *  - both self-join sides derive from ONE explicit
-    *    `repartition(n, src)` of the landed edge list; the exchange is
+    *    `repartition(n, src)` of the checkpointed edge list; the exchange is
     *    reused (one 1.2M-row shuffle total) and, critically, its
     *    REPARTITION_BY_NUM origin is exempt from AQE partition
     *    coalescing — with a plain ENSURE_REQUIREMENTS exchange AQE saw a
@@ -770,7 +712,6 @@ object MiningOps {
     *    carries ≈ triangles, not Σoutdeg².
     */
   def triangleCount(edges: DataFrame,
-      landKey: Option[(SparkSession, String)] = None,
       broadcastEdgeCap: Long = 4000000L): DataFrame = {
     // normalize: undirected, no self-loops, one row per edge with u < v
     val e = edges.select(
@@ -787,10 +728,7 @@ object MiningOps {
         when(fwd, col("u")).otherwise(col("v")).as("src"),
         when(fwd, col("v")).otherwise(col("u")).as("dst"),
         when(fwd, col("dv")).otherwise(col("du")).as("ddg"))
-    val o = landKey match {
-      case Some((s, k)) => graft.util.Landing.frameLanding(s, k)(oriented)
-      case None         => oriented.localCheckpoint(true)
-    }
+    val o = oriented.localCheckpoint(true)
     val spark = o.sparkSession
     // Wedges are generated from per-src SORTED adjacency arrays instead
     // of the op⋈op self-join (r18): the join emitted Σoutdeg² rows
@@ -803,18 +741,14 @@ object MiningOps {
     // edge list (groupBy src — same bytes the explicit repartition
     // moved), the explosion itself map-side with full parallelism.
     // Packing bounds (ddg < 2^23, dst < 2^40) hold to ~10¹²-edge graphs;
-    // the landed build would fail loudly on overflow via the domain
-    // check below, never silently misorder.
+    // the pack is only order-preserving inside them, so overflow fails
+    // loudly here, never silently misorders.
     val PackShift = 40
-    // once per graph version: the pack is only order-preserving inside
-    // (ddg < 2^23, dst < 2^40) — overflow fails loudly, never misorders
-    graft.util.Landing.memoVersioned(triBoundsOk,
-      graft.util.Landing.planVersionKey(o) + "|tribounds") {
+    locally {
       val r = o.agg(max(col("dst")), max(col("ddg"))).head()
       require(r.isNullAt(0) ||
         (r.getLong(0) < (1L << 40) && r.getLong(1) < (1L << 23)),
         s"triangleCount pack overflow: max dst=${r.get(0)} ddg=${r.get(1)}")
-      true
     }
     // explicit REPARTITION_BY_NUM (not the groupBy's ENSURE_REQUIREMENTS
     // exchange): AQE coalesces the slim edge-list map output toward a
@@ -837,15 +771,10 @@ object MiningOps {
     // Bloom-prune the wedges map-side on the packed (b, c) closure key
     // in BOTH paths (r18 — previously only the past-broadcast-cap
     // fallback): at 1% fp the exact closure join probes ≈ triangles +
-    // fp (2.3M rows at sf0.1) instead of every wedge (41M). The filter
-    // is memoized per oriented-graph version (planVersionKey of the
-    // landed frame is stable for the landing's lifetime), so reps pay
-    // one codegen bloom probe per wedge, not a bloom build.
+    // fp (2.3M rows at sf0.1) instead of every wedge (41M).
     val bcKey = xxhash64(col("b"), col("c"))
-    val bloom = graft.util.Landing.memoVersioned(triBlooms,
-      graft.util.Landing.planVersionKey(o) + "|tribloom")(
-      closure.withColumn("bc", bcKey).stat
-        .bloomFilter("bc", math.max(1L, o.count()), 0.01))
+    val bloom = closure.withColumn("bc", bcKey).stat
+      .bloomFilter("bc", math.max(1L, o.count()), 0.01)
     val name = "bloom_might_" +
       (System.identityHashCode(bloom) & Int.MaxValue).toHexString
     graft.functions.KernelRegistry.ensureTransient(spark, name)(
@@ -863,31 +792,13 @@ object MiningOps {
     val counts = closed
       .select(explode(array(col("src"), col("b"), col("c"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("triangles"))
-    // Per-node triangle counts are the slim source-derived RESULT table
-    // (≤|V| rows — the fm4/pr5 landing class): with landKey the 41M-wedge
-    // enumeration runs once per graph version and every later call serves
-    // the landed counts (r19; pr3 1.93 s → ~0.08 s steady). Specs and
-    // sweeps pass no landKey and still execute the full pipeline.
-    val landedCounts = landKey match {
-      case Some((s, k)) =>
-        graft.util.Landing.frameLanding(s, k + "|tricounts")(counts)
-      case None => counts
-    }
-    landedCounts.orderBy(col("triangles").desc, col("node"))
+    counts.orderBy(col("triangles").desc, col("node"))
   }
-
-  // memoized per oriented-graph version (see triangleCount)
-  private val triBlooms = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.util.sketch.BloomFilter]
-  private val triBoundsOk =
-    scala.collection.concurrent.TrieMap.empty[String, Boolean]
 
   /** The part co-purchase graph: parts appearing in the same order. Pair
     * fan-out per order is bounded by C(items-per-order, 2) ≤ C(7,2) = 21 in
     * this schema — the quadratic term is capped per BASKET, so the edge
-    * build stays linear in the fact table at any corpus size. The oriented
-    * graph itself is slim source-derived state (3 longs per edge), landed
-    * once per lineitem version like pr1's sourcing graph.
+    * build stays linear in the fact table at any corpus size.
     */
   private def pr3Triangles(s: SparkSession, d: String): DataFrame = {
     val items = Tables.lineitem(s, d)
@@ -896,11 +807,7 @@ object MiningOps {
     val edges = items.as("a").join(items.as("b"), Seq("ok"))
       .filter(col("a.pk") < col("b.pk"))
       .select(col("a.pk").as("u"), col("b.pk").as("v"))
-    // the ORIENTED graph is the landed source-derived state (3 slim longs
-    // per edge, pre-partitioned on src) — the basket scan, pair distinct
-    // and degree joins run once per lineitem version
-    triangleCount(edges, landKey = Some((s,
-      graft.util.Landing.mtimeKey(d, "lineitem") + "|copurchase_oriented")))
+    triangleCount(edges)
       .limit(20)
   }
 
@@ -1005,15 +912,10 @@ object MiningOps {
     * what survives is the CYCLIC repeat-co-purchase backbone (the
     * structure bot-ring/boilerplate detection and community seeding
     * start from; measured cores 200/1535/3 nodes at the three SFs,
-    * fixpoint in ≤ 6 rounds, both nonempty and genuinely peeled). The
-    * result is source-derived state, landed once per lineitem version
-    * (pr1's accounting): analyses read the landing, the 10-round peel
-    * runs once per source version.
+    * fixpoint in ≤ 6 rounds, both nonempty and genuinely peeled).
     */
   private def pr4Kcore(s: SparkSession, d: String): DataFrame =
-    graft.util.Landing.frameLanding(
-      s, graft.util.Landing.mtimeKey(d, "lineitem") + "|pr4_kcore")(
-      kcore(coPurchaseEdges(s, d), KcoreK, KcoreRounds))
+    kcore(coPurchaseEdges(s, d), KcoreK, KcoreRounds)
       .orderBy(col("node"))
 
   /** Each peel CTE is referenced twice (both endpoint joins) — without
@@ -1091,12 +993,10 @@ object MiningOps {
   /** PR5 query: communities of the support-2 co-purchase backbone (the
     * pr4 graph — the raw one-order pair graph is near-regular and LPA
     * on it collapses to one community in a round; the thresholded
-    * backbone has real structure). Landed once per lineitem version.
+    * backbone has real structure).
     */
   private def pr5Communities(s: SparkSession, d: String): DataFrame =
-    graft.util.Landing.frameLanding(
-      s, graft.util.Landing.mtimeKey(d, "lineitem") + "|pr5_lpa")(
-      labelPropagation(coPurchaseEdges(s, d), LpaRounds))
+    labelPropagation(coPurchaseEdges(s, d), LpaRounds)
       .orderBy(col("node"))
 
   /** Oracle: the same fixed unroll as chained CTEs — per round a
@@ -1222,16 +1122,14 @@ object MiningOps {
   }
 
   /** KM4 query: DBSCAN over km1's integer part points (size, price
-    * cents→dollars), landed once per part version. The density
+    * cents→dollars). The density
     * complement to km1's centroidal clustering: clusters of arbitrary
     * shape, plus an explicit noise set (absent rows).
     */
   private def km4Dbscan(s: SparkSession, d: String): DataFrame =
-    graft.util.Landing.frameLanding(
-      s, graft.util.Landing.mtimeKey(d, "part") + "|km4_dbscan")(
-      dbscan(Tables.part(s, d).select(
+    dbscan(Tables.part(s, d).select(
         col("p_partkey").as("id"), col("p_size").cast("long").as("x"),
-        round(col("p_retailprice")).cast("long").as("y"))))
+        round(col("p_retailprice")).cast("long").as("y")))
 
   private val km4Sql =
     """WITH RECURSIVE pts AS (
@@ -1325,22 +1223,19 @@ object MiningOps {
     * the m3/c2 membership discipline) over the support-2 co-purchase
     * backbone, within [[BfsRounds]] hops. The classic reachability /
     * blast-radius primitive next to pagerank (pr1), triangles (pr3),
-    * k-core (pr4) and communities (pr5); landed once per lineitem
-    * version (the pr1 accounting). Unreached nodes are absent — distance
-    * is a partial function, not a sentinel.
+    * k-core (pr4) and communities (pr5). Unreached nodes are absent —
+    * distance is a partial function, not a sentinel.
     */
-  private def pr6BfsDistance(s: SparkSession, d: String): DataFrame =
-    graft.util.Landing.frameLanding(
-      s, graft.util.Landing.mtimeKey(d, "lineitem") + "|pr6_bfs") {
-      val edges = coPurchaseEdges(s, d)
-      val sym = edges.select(col("u").as("a"))
-        .unionByName(edges.select(col("v").as("a")))
-      val seeds = sym.select(col("a").as("node")).distinct()
-        .orderBy(md5(concat_ws("|", col("node").cast("string"),
-          lit("pr6"))), col("node"))
-        .limit(BfsSeeds)
-      multiSourceBfs(edges, seeds, BfsRounds)
-    }.orderBy(col("node"))
+  private def pr6BfsDistance(s: SparkSession, d: String): DataFrame = {
+    val edges = coPurchaseEdges(s, d)
+    val sym = edges.select(col("u").as("a"))
+      .unionByName(edges.select(col("v").as("a")))
+    val seeds = sym.select(col("a").as("node")).distinct()
+      .orderBy(md5(concat_ws("|", col("node").cast("string"),
+        lit("pr6"))), col("node"))
+      .limit(BfsSeeds)
+    multiSourceBfs(edges, seeds, BfsRounds).orderBy(col("node"))
+  }
 
   /** Oracle: the same fixed unroll — per round, a frontier CTE (distinct
     * neighbors not yet settled) and a cumulative settled CTE. Frontier
@@ -1399,24 +1294,19 @@ object MiningOps {
     * DataFrame. Baskets are collect_set per order — bounded by items
     * per order (≤ 7 here), never a skew risk.
     */
-  private def fm4Fpgrowth(s: SparkSession, d: String): DataFrame =
-    // The mined lattice is SOURCE-DERIVED STATE (a few hundred slim
-    // rows), landed once per (lineitem, part) version — production mines
-    // itemsets per corpus drop, not per downstream query (fm1's
-    // amortized-landing accounting; the PFP fit is the whole cost).
-    graft.util.Landing.frameLanding(s, s"$d|fm4_lattice|" +
-        graft.util.Landing.sourceMtime(d, Seq("lineitem", "part"))) {
-      val li = Tables.lineitem(s, d)
-      val pt = Tables.part(s, d)
-      val baskets = li.join(broadcast(pt), li("l_partkey") === pt("p_partkey"))
-        .select(col("l_orderkey").as("bid"), col("p_brand").as("item"))
-        .groupBy(col("bid")).agg(collect_set(col("item")).as("items"))
-      val model = new org.apache.spark.ml.fpm.FPGrowth()
-        .setItemsCol("items").setMinSupport(0.02).fit(baskets)
-      model.freqItemsets
-        .select(array_join(array_sort(col("items")), "|").as("itemset"),
-          size(col("items")).as("n_items"), col("freq"))
-    }.orderBy(col("n_items"), col("itemset"))
+  private def fm4Fpgrowth(s: SparkSession, d: String): DataFrame = {
+    val li = Tables.lineitem(s, d)
+    val pt = Tables.part(s, d)
+    val baskets = li.join(broadcast(pt), li("l_partkey") === pt("p_partkey"))
+      .select(col("l_orderkey").as("bid"), col("p_brand").as("item"))
+      .groupBy(col("bid")).agg(collect_set(col("item")).as("items"))
+    val model = new org.apache.spark.ml.fpm.FPGrowth()
+      .setItemsCol("items").setMinSupport(0.02).fit(baskets)
+    model.freqItemsets
+      .select(array_join(array_sort(col("items")), "|").as("itemset"),
+        size(col("items")).as("n_items"), col("freq"))
+      .orderBy(col("n_items"), col("itemset"))
+  }
 
   private val fm4Sql =
     """WITH b AS (
@@ -1495,10 +1385,7 @@ object MiningOps {
   }
 
   private def fm5Prefixspan(s: SparkSession, d: String): DataFrame =
-    graft.util.Landing.frameLanding(s, s"$d|fm5_patterns|" +
-        graft.util.Landing.mtimeKey(d, "events")) {
-      prefixPatterns(Tables.events(s, d))
-    }.orderBy(col("len"), col("pattern"))
+    prefixPatterns(Tables.events(s, d)).orderBy(col("len"), col("pattern"))
 
   /** Oracle: gapped-subsequence enumeration to length 3 (complete
     * because maxPatternLength caps the Spark side), distinct-user

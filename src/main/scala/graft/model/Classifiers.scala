@@ -6,6 +6,7 @@ import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.sql.DataFrame
+import graft.util.Artifacts
 
 /** The reference's five binary classifiers + CV grid search
   * (stroke_predict.py:136-218, both notebooks cells 9-12).
@@ -71,18 +72,9 @@ object Classifiers {
 
   final case class TrainResult(predictions: DataFrame, auc: Double)
 
-  /** Local mtime of a relation root for the split-staleness key.
-    * Only `file:`/scheme-less paths have one; hdfs/s3 roots degrade to 0
-    * (stable key, no re-land on version — the documented tradeoff)
-    * instead of throwing — `new File(URI)` rejects any non-file absolute
-    * URI with IllegalArgumentException (round-9 ADVICE item 4).
-    */
-  private[graft] def rootPathMtime(p: org.apache.hadoop.fs.Path): Long =
-    graft.util.Landing.rootPathMtime(p)
-
   /** The seeded 70/30 split halves, LANDED once per (session,
-    * prepared-plan, seed) — Landing.frameLanding keyed on the analyzed
-    * plan's semanticHash, so s4, s5, and all five s8 cells (which fit on
+    * prepared-plan version, seed) — keyed on the prepared frame's source
+    * stamps and semantic hash, so s4, s5, and all five s8 cells (which fit on
     * the SAME dataset + seed) share one materialized split instead of
     * each re-splitting + re-checkpointing. History of this spot: plain
     * cache()+finally-unpersist raced under Experiments.matrix's
@@ -90,9 +82,8 @@ object Classifiers {
     * first finisher's unpersist evicted it under the other fits); a
     * per-call localCheckpoint fixed the race but paid the split +
     * materialization per cell. The landing keeps the checkpoint's
-    * own-storage-identity fix AND amortizes it: a concurrent
-    * getOrElseUpdate race at worst builds twice and keeps one — both
-    * builds are seeded-identical and nothing ever unpersists.
+    * own-storage-identity fix AND amortizes it: concurrent callers of
+    * one key share a single build, and nothing ever unpersists.
     *
     * Train is coalesced to 8 BEFORE checkpointing: the stroke parity
     * surface is driver-scale (~5k rows) and every LR/SVC fit iteration
@@ -104,48 +95,28 @@ object Classifiers {
     * as destructuring one call.
     */
   def split7030(prepared: DataFrame, seed: Long): (DataFrame, DataFrame) = {
-    // plan hash = source identity, file-relation mtimes = source version
-    // (Landing.planVersionKey) so an in-place CSV rewrite re-lands the
+    // an in-place CSV rewrite changes the key's version and re-lands the
     // split instead of serving stale halves
-    val key =
-      s"stroke_split|${graft.util.Landing.planVersionKey(prepared)}|$seed"
-    val train = graft.util.Landing.frameLanding(
-      prepared.sparkSession, key + "|train")(
+    def half(i: Int)(make: => DataFrame) = Artifacts.frame(
+      prepared.sparkSession,
+      Artifacts.key("split7030", prepared, seed, i))(make)
+    val train = half(0)(
       prepared.randomSplit(Array(0.7, 0.3), seed)(0).coalesce(8))
-    val test = graft.util.Landing.frameLanding(
-      prepared.sparkSession, key + "|test")(
-      prepared.randomSplit(Array(0.7, 0.3), seed)(1))
+    val test = half(1)(prepared.randomSplit(Array(0.7, 0.3), seed)(1))
     (train, test)
   }
 
   /** 70/30 split path (stroke_predict.py:148-173): fit on train, score
-    * test, AUC from rawPrediction. MEMOIZED per (classifier, prepared
-    * source version, label, seed) — the split7030 accounting one level
-    * up: two registered queries over the same seeded fit (s5's AUC and
-    * s21's PR curve both read the LR scores) pay ONE fit per source
-    * version, exactly as a production model registry serves one trained
-    * artifact to every downstream evaluation. Seeded fits are
-    * deterministic here (PARITY.md), so the memo is value-transparent;
-    * family eviction drops superseded source versions
-    * (Landing.memoVersioned).
+    * test, AUC from rawPrediction. Every call fits; the split is the
+    * shared landing.
     */
-  private val fits =
-    scala.collection.concurrent.TrieMap.empty[String, TrainResult]
-
   def trainEval(name: String, prepared: DataFrame,
       labelCol: String = "stroke", seed: Long = 42L): TrainResult = {
-    // drop fits of stopped sessions (the frameLanding liveness guard)
-    fits.filterInPlace((_, v) =>
-      !v.predictions.sparkSession.sparkContext.isStopped)
-    graft.util.Landing.memoVersioned(fits,
-      s"fit:$name:$labelCol|" +
-        s"${graft.util.Landing.planVersionKey(prepared)}|$seed") {
-      val (train, test) = split7030(prepared, seed)
-      val model = estimator(name, labelCol).fit(train)
-      val pred = model.asInstanceOf[Model[_]].transform(test)
-        .localCheckpoint(true)
-      TrainResult(pred, evaluator(labelCol).evaluate(pred))
-    }
+    val (train, test) = split7030(prepared, seed)
+    val model = estimator(name, labelCol).fit(train)
+    val pred = model.asInstanceOf[Model[_]].transform(test)
+      .localCheckpoint(true)
+    TrainResult(pred, evaluator(labelCol).evaluate(pred))
   }
 
   /** 5-fold CV grid path with resubstitution evaluation

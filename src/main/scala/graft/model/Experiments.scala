@@ -49,10 +49,8 @@ object Experiments {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     // Land each dataset's prepared frame AND its 70/30 split once,
-    // before fan-out: split7030's frameLanding materializes the cached
-    // prepared frame as a side effect (the old separate count() action),
-    // and pre-landing removes the concurrent-cell getOrElseUpdate race
-    // that could checkpoint the split twice (seed 42 = trainEval's).
+    // before fan-out: the split landing materializes the prepared frame
+    // as a side effect (seed 42 = trainEval's).
     datasets.foreach(d =>
       Classifiers.split7030(StrokePipeline.prepare(spark, d), 42L))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.feature.{OneHotEncoder, StringIndexer, StringIndexerModel, VectorAssembler}
+import graft.util.Artifacts
 
 /** The reference's end-to-end ETL + encoding pipeline, Spark-native.
   *
@@ -107,37 +108,15 @@ object StrokePipeline {
     new VectorAssembler().setInputCols(features.toArray).setOutputCol("features")
       .transform(df)
 
-  /** Full prep: read → clean → encode → assemble → cache. The reference
-    * re-read the CSV per action; we cache the small encoded frame AND
-    * memoize per (session, path) so the several model queries sharing a
-    * prepared frame don't re-run ingestion + indexer fits.
+  /** Full prep: read → clean → encode → assemble, landed once per
+    * (session, CSV version) so the several model queries sharing a
+    * prepared frame don't re-run ingestion + indexer fits. The reference
+    * re-read the CSV per action.
     */
-  private val MaxPrepared = 8
-
-  // Access-ordered LRU, bounded: the evicted frame is unpersisted, and
-  // entries whose session has stopped are dropped on every call — a
-  // long-lived JVM never holds cached frames for dead sessions or an
-  // unbounded set of (session, path) pairs.
-  private val prepared =
-    new java.util.LinkedHashMap[(SparkSession, String), DataFrame](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), DataFrame]): Boolean =
-        if (size > MaxPrepared) {
-          if (!e.getKey._1.sparkContext.isStopped) e.getValue.unpersist()
-          true
-        } else false
-    }
-
   def prepare(spark: SparkSession, path: String): DataFrame =
-    prepared.synchronized {
-      val it = prepared.entrySet().iterator()
-      while (it.hasNext) if (it.next().getKey._1.sparkContext.isStopped) it.remove()
-      val key = (spark, path)
-      Option(prepared.get(key)).getOrElse {
-        val Encoded(enc, _) = encode(clean(readCsv(spark, path)))
-        val df = assemble(enc).cache()
-        prepared.put(key, df)
-        df
-      }
+    Artifacts.frame(spark,
+        Artifacts.key("stroke_prepared", path)) {
+      val Encoded(enc, _) = encode(clean(readCsv(spark, path)))
+      assemble(enc)
     }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.util.Artifacts
 
 /** As-of join — "for each left row, the most recent right row at or
   * before its timestamp, per key". Spark has no native operator for this;
@@ -85,11 +86,12 @@ object AsOfJoin {
     * the exact cents sum of that week's values, VALID FROM the next
     * week's start (a feature computed over week w is servable from
     * w+1 — the leakage rule every feature store enforces). Slim
-    * source-derived state, landed once per events version.
+    * source-derived state, landed once per events version: af4, af5 and
+    * e24 all read it, and every PIT enrichment reads it twice.
     */
   private[graft] def weeklyVersions(s: SparkSession, d: String): DataFrame =
-    graft.util.Landing.frameLanding(
-      s, graft.util.Landing.mtimeKey(d, "events") + "|af4_versions")(
+    Artifacts.frame(s,
+      Artifacts.key("af4_versions", Tables.path(d, "events")))(
       Tables.events(s, d)
         .groupBy(col("user_id"),
           date_trunc("week", col("ts")).as("_wk"))
@@ -234,11 +236,10 @@ object AsOfJoin {
     * per-batch disjointness.
     */
   private[graft] def e24ResultDir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "events") + "|pitstrm",
+    Artifacts.dir(Artifacts.key("pitstrm", Tables.path(d, "events")),
       "graft_pitstrm") { dir =>
-      val stage = graft.util.Landing.tempDirOnce("graft_pitstrm_stage")
-      val ckpt = graft.util.Landing.tempDirOnce("graft_pitstrm_ckpt")
+      val stage = Artifacts.scratchDir("graft_pitstrm_stage")
+      val ckpt = Artifacts.scratchDir("graft_pitstrm_ckpt")
       Tables.events(s, d)
         .select(col("user_id"), col("event_id"), col("ts"))
         .repartition(3)
@@ -256,6 +257,8 @@ object AsOfJoin {
         }
         .start()
       q.awaitTermination()
+      Artifacts.delete(stage)
+      Artifacts.delete(ckpt)
     }
 
   private def e24StreamPit(s: SparkSession, d: String): DataFrame =

@@ -3,6 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.util.Artifacts
 
 /** Bucketed co-located join (j6): pre-shuffle at WRITE time so the join
   * itself plans with no Exchange on either side — the layout decision that
@@ -24,10 +25,10 @@ object Bucketed {
 
   /** One temp warehouse per JVM for the external bucketed tables; deleted
     * on exit (same discipline as SparkSpec's test warehouse — round 2's
-    * temp-dir leak class; sweep shared via util.Landing).
+    * temp-dir leak class; swept by the Artifacts shutdown hook).
     */
   private lazy val bucketDir: java.nio.file.Path =
-    graft.util.Landing.tempDirOnce("graft_bucketed")
+    Artifacts.scratchDir("graft_bucketed")
 
   private val NBuckets = 8
 
@@ -44,24 +45,17 @@ object Bucketed {
     s.table(table)
   }
 
-  // The bucketed landing is written ONCE per (source dir, source mtime)
+  // The bucketed landing is written ONCE per (lineitem, orders) version
   // and reused by every subsequent j6 call in the session — exactly the
   // production accounting: one layout shuffle when the table lands
-  // amortizes over every later co-located join, and repeated bench reps
-  // measure that steady state instead of re-paying the landing each rep.
-  // The mtime in the key makes a REWRITTEN source re-land into fresh
-  // table names instead of serving a stale layout (the previous landing's
-  // files stay under bucketDir until the JVM-exit sweep — a bounded,
-  // session-lifetime cost).
-  private val prepared =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), (String, String)]
-
-  private def sourceStamp(d: String): Long =
-    graft.util.Landing.sourceMtime(d, Seq("lineitem", "orders"))
-
+  // amortizes over every later co-located join. A REWRITTEN source
+  // re-lands into fresh table names instead of serving a stale layout
+  // (the previous landing's files stay under bucketDir until the
+  // JVM-exit sweep — a bounded, session-lifetime cost).
   private[graft] def preparedNames(s: SparkSession, d: String): (String, String) = {
-    val key = (d, sourceStamp(d))
-    prepared.getOrElseUpdate(key, {
+    val key = Artifacts.key("j6bucketed",
+      Seq("lineitem", "orders").map(Tables.path(d, _)))
+    Artifacts.value(key) {
       val suffix = (key.hashCode & Int.MaxValue).toHexString
       val lt = s"graft_j6_lineitem_$suffix"
       val ot = s"graft_j6_orders_$suffix"
@@ -72,7 +66,7 @@ object Bucketed {
         Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus")),
         ot, "o_orderkey")
       (lt, ot)
-    })
+    }
   }
 
   private def preparedTables(s: SparkSession, d: String): (DataFrame, DataFrame) = {

@@ -98,36 +98,15 @@ object Scd {
           .as("bal_cents"))
       .orderBy(col("c_custkey"))
 
-  /** cdc2's insert-key offset memoized per source version: the max(k)
-    * scalar agg is a driver-blocking job at DataFrame-BUILD time — the
-    * exact per-build cost class the d13/PhaseProbe note warns about —
-    * and the value only changes when the customer table does. Superseded
-    * same-dir entries evict on insert (the frameFamily discipline —
-    * round-12 advice: a raw forever-memo quietly grows across regens
-    * within a JVM).
-    */
-  private val cdc2Offsets =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
-  private def cdc2Offset(key: String)(compute: => Long): Long =
-    cdc2Offsets.get(key).getOrElse {
-      val fam = graft.util.Landing.frameFamily(key)
-      cdc2Offsets.keySet
-        .filter(k2 => k2 != key && graft.util.Landing.frameFamily(k2) == fam)
-        .foreach(cdc2Offsets.remove)
-      cdc2Offsets.getOrElseUpdate(key, compute)
-    }
-
   private def cdc2Scd1(s: SparkSession, d: String): DataFrame = {
     val base = Tables.customer(s, d).select(col("c_custkey").as("k"),
       round(col("c_acctbal") * 100).cast("long").as("bal"))
     // synthetic insert keys offset past max(c_custkey), not a fixed
     // constant: c_custkey reaches 10M around SF 67, where a fixed 10M
     // offset would collide with real base keys and silently demote the
-    // planted inserts to updates. One scalar agg (the S4 first() shape),
-    // memoized per (dir, mtime); the oracle derives the identical offset.
-    val off = cdc2Offset(graft.util.Landing.mtimeKey(d, "customer"))(
-      base.agg(max(col("k")).cast("long")).first().getLong(0) + 1L)
+    // planted inserts to updates. One scalar agg at build time (the S4
+    // first() shape); the oracle derives the identical offset.
+    val off = base.agg(max(col("k")).cast("long")).first().getLong(0) + 1L
     val chg0 = Tables.orders(s, d)
       .groupBy(col("o_custkey").as("k"))
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("val"))

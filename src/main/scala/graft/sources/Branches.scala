@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.util.Artifacts
 
 /** S35: BRANCHES + AUDITED FAST-FORWARD — multi-commit staging, the
   * tier above s27's single-candidate WAP (Iceberg branch / Delta
@@ -80,8 +81,7 @@ object Branches {
     * stays on the audited chain.
     */
   private[graft] def s35Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "customer") + "|snapbranch",
+    Artifacts.dir(Artifacts.key("snapbranch", Tables.path(d, "customer")),
       "graft_snapbranch") { dir =>
       val base = Tables.customer(s, d)
         .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.util.Artifacts
 
 /** S40: COLUMN RENAME/DROP by COLUMN-ID MAPPING — the schema-evolution
   * leg s20 (ADD COLUMN) left open, and the round-16 verdict's arc #6.
@@ -170,8 +171,7 @@ object ColumnIds {
     *       interoperate in every read.
     */
   private[graft] def s40Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "customer") + "|colids",
+    Artifacts.dir(Artifacts.key("colids", Tables.path(d, "customer")),
       "graft_colids") { dir =>
       val base = Tables.customer(s, d)
         .select(col("c_custkey").as("c1"),
@@ -237,8 +237,7 @@ object ColumnIds {
     *       so the reborn column is typed nulls by construction.
     */
   private[graft] def s46Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "customer") + "|colreclaim",
+    Artifacts.dir(Artifacts.key("colreclaim", Tables.path(d, "customer")),
       "graft_colreclaim") { dir =>
       Tables.customer(s, d)
         .select(col("c_custkey").as("c1"),

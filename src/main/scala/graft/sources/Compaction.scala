@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.util.Artifacts
 import graft.util.Det.{dsum, sqlDsum}
 
 /** Small-file compaction (s13): the lakehouse maintenance job every
@@ -36,27 +37,19 @@ object Compaction {
 
   private val FragmentFiles = 64
 
-  // Fragmented landing staged once per (source dir, mtime) — same
-  // lifecycle discipline as Bucketed/SortedLanding (util.Landing).
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def parquetFiles(dir: String): Array[java.io.File] =
     new java.io.File(dir).listFiles()
       .filter(f => f.isFile && f.getName.endsWith(".parquet") &&
         !f.getName.startsWith("_") && !f.getName.startsWith("."))
 
-  private def fragmentedLanding(s: SparkSession, d: String): String = {
-    val key = graft.util.Landing.mtimeKey(d, "events")
-    staged.getOrElseUpdate(key, {
-      val out = graft.util.Landing
-        .tempDirOnce("graft_fragmented").toString
+  // the fragmented input is staged once per events version
+  private def fragmentedLanding(s: SparkSession, d: String): String =
+    Artifacts.dir(Artifacts.key("s13frag", Tables.path(d, "events")),
+        "graft_fragmented") { out =>
       Tables.events(s, d)
         .repartition(FragmentFiles)
         .write.mode("overwrite").parquet(out)
-      out
-    })
-  }
+    }
 
   /** Compact `inDir` to ~`targetBytes`-sized files; returns the output
     * dir. File count = ceil(actual bytes / target), floor 1.
@@ -72,18 +65,22 @@ object Compaction {
 
   private def s13Compaction(s: SparkSession, d: String): DataFrame = {
     val frag = fragmentedLanding(s, d)
-    val out = graft.util.Landing.tempDirOnce("graft_compacted").toString
-    compact(s, frag, out, targetBytes = 8L << 20)
-    val before = parquetFiles(frag).length
-    val after = parquetFiles(out).length
-    // payload recomputed from the COMPACTED files: count + exact sum —
-    // if compaction dropped or duplicated anything, these diverge from
-    // the oracle's recompute over the raw table
-    s.read.parquet(out)
-      .agg(count(lit(1)).as("n_rows"), dsum(col("value")).as("sum_value"))
-      .select(col("n_rows"), col("sum_value"),
-        lit(before == FragmentFiles).as("was_fragmented"),
-        lit(after < before).as("fewer_files"))
+    val out = Artifacts.scratchDir("graft_compacted").toString
+    try {
+      compact(s, frag, out, targetBytes = 8L << 20)
+      val before = parquetFiles(frag).length
+      val after = parquetFiles(out).length
+      // payload recomputed from the COMPACTED files: count + exact sum —
+      // if compaction dropped or duplicated anything, these diverge from
+      // the oracle's recompute over the raw table. The one result row is
+      // fetched here so the compacted copy can be deleted before return.
+      val res = s.read.parquet(out)
+        .agg(count(lit(1)).as("n_rows"), dsum(col("value")).as("sum_value"))
+        .select(col("n_rows"), col("sum_value"),
+          lit(before == FragmentFiles).as("was_fragmented"),
+          lit(after < before).as("fewer_files"))
+      s.createDataFrame(java.util.Arrays.asList(res.collect(): _*), res.schema)
+    } finally Artifacts.delete(out)
   }
 
   private val s13Sql =

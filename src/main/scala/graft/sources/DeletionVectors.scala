@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.util.Artifacts
 
 /** S25: MERGE-ON-READ DELETE via deletion vectors + the purge
   * compaction — the DML mode complementing s22's copy-on-write MERGE
@@ -61,8 +62,7 @@ object DeletionVectors {
     *       deleted rows, untouched buckets shared, no delete sidecar.
     */
   private[graft] def s25Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "customer") + "|dvstore",
+    Artifacts.dir(Artifacts.key("dvstore", Tables.path(d, "customer")),
       "graft_dvstore") { dir =>
       val base = Tables.customer(s, d)
         .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.util.Artifacts
 
 /** S23: file-level column statistics in the manifest + DATA-SKIPPING
   * reads — the metadata leg of the manifest store (round-14 verdict #2):
@@ -32,7 +33,7 @@ import graft.{Q, Tables}
   * decision costs one driver manifest parse — no footer opens, no tasks,
   * no listing of skipped files. Stats collection costs one columnar
   * aggregate over the landed data at commit time, amortized per version
-  * (the landedLayout accounting).
+  * (the Artifacts.dir accounting).
   */
 object FileStats {
 
@@ -43,8 +44,7 @@ object FileStats {
     * file).
     */
   private[graft] def s23Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "orders") + "|statskip",
+    Artifacts.dir(Artifacts.key("statskip", Tables.path(d, "orders")),
       "graft_statskip") { dir =>
       Tables.orders(s, d)
         .select(col("o_orderkey").as("ok"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.{Q, Tables}
+import graft.util.Artifacts
 
 /** Incremental materialized-view maintenance (mv1): the 100 TB refresh
   * pattern — a daily rollup is NOT recomputed from the full fact table;
@@ -33,12 +34,6 @@ object IncrementalRollup {
     */
   private val SplitDate = "2001-01-01 00:00:00"
 
-  private lazy val landDir: java.nio.file.Path =
-    graft.util.Landing.tempDirOnce("graft_mv_landing")
-
-  private val prepared =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Per-day rollup with the sum kept in exact decimal (re-aggregatable). */
   private def dayRollup(li: DataFrame): DataFrame =
     li.groupBy(substring(col("l_shipdate").cast("string"), 1, 10).as("day"))
@@ -46,14 +41,13 @@ object IncrementalRollup {
         sum(col("l_extendedprice").cast(DecimalType(14, 2))).as("_rev_dec"))
 
   private def mv1Incremental(s: SparkSession, d: String): DataFrame = {
-    val key = graft.util.Landing.mtimeKey(d, "lineitem")
-    val basePath = prepared.getOrElseUpdate(key, {
-      val out = s"$landDir/base_${(key.hashCode & Int.MaxValue).toHexString}"
+    val basePath = Artifacts.dir(
+        Artifacts.key("mv1base", Tables.path(d, "lineitem")),
+        "graft_mv_landing") { out =>
       dayRollup(Tables.lineitem(s, d)
           .filter(col("l_shipdate") < lit(SplitDate).cast("timestamp")))
         .write.mode("overwrite").parquet(out)
-      out
-    })
+    }
     val delta = dayRollup(Tables.lineitem(s, d)
       .filter(col("l_shipdate") >= lit(SplitDate).cast("timestamp")))
     // The refresh must not rescan history: the delta's date bound has to
@@ -87,7 +81,7 @@ object IncrementalRollup {
     * not distributive), so an exact range query must rescan raw events —
     * but an HLL sketch is an algebraic aggregate whose union is exact
     * SET union over disjoint or overlapping inputs. Per-day sketches of
-    * the distinct-user set land once per source version (frameLanding);
+    * the distinct-user set land once per source version (Artifacts.frame);
     * any date-range distinct-user question is then answered by merging
     * the ≤|days| landed sketch rows (`hll_union_agg`) instead of
     * rescanning raw events. At 100 TB the raw scan happens once per
@@ -100,8 +94,8 @@ object IncrementalRollup {
     * expects TRUE flags.
     */
   private def mv2Sketch(s: SparkSession, d: String): DataFrame = {
-    val daily = graft.util.Landing.frameLanding(s,
-      graft.util.Landing.mtimeKey(d, "events") + "|mv2daily")(
+    val daily = Artifacts.frame(s,
+        Artifacts.key("mv2daily", Tables.path(d, "events")))(
       Tables.events(s, d)
         .groupBy(to_date(col("ts")).as("day"))
         .agg(hll_sketch_agg(col("user_id")).as("sk")))
@@ -145,9 +139,8 @@ object IncrementalRollup {
     * range queries keep reading |days|×partials ≈ KBs.
     */
   private[graft] def e22SketchDir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "events") + "|skstrm",
-      "graft_skstrm") { dir =>
+    Artifacts.dir(Artifacts.key("skstrm", Tables.path(d, "events")),
+        "graft_skstrm") { dir =>
       val ev = Tables.events(s, d)
       val split = lit("2024-01-21").cast("date")
       def daily(df: DataFrame): DataFrame =
@@ -156,23 +149,25 @@ object IncrementalRollup {
       daily(ev.filter(to_date(col("ts")) < split))
         .repartition(col("day"))
         .write.mode("overwrite").partitionBy("day").parquet(dir)
-      val stage = graft.util.Landing.tempDirOnce("graft_skstrm_stage")
-      val ckpt = graft.util.Landing.tempDirOnce("graft_skstrm_ckpt")
-      ev.filter(to_date(col("ts")) >= split).repartition(3)
-        .write.mode("overwrite").parquet(stage.toString)
-      val schema = s.read.parquet(stage.toString).schema
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage.toString)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.util.Landing.idempotentAppend(
-            daily(Tables.normalizeTs(batch)), dir, batchId, "day")
+      Artifacts.withScratchDir("graft_skstrm_stage") { stage =>
+        Artifacts.withScratchDir("graft_skstrm_ckpt") { ckpt =>
+          ev.filter(to_date(col("ts")) >= split).repartition(3)
+            .write.mode("overwrite").parquet(stage.toString)
+          val schema = s.read.parquet(stage.toString).schema
+          val q = s.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(stage.toString)
+            .writeStream
+            .option("checkpointLocation", ckpt.toString)
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .foreachBatch { (batch: DataFrame, batchId: Long) =>
+              graft.util.Landing.idempotentAppend(
+                daily(Tables.normalizeTs(batch)), dir, batchId, "day")
+            }
+            .start()
+          q.awaitTermination()
         }
-        .start()
-      q.awaitTermination()
+      }
     }
 
   /** E22 query: the same weekly frame as mv2, served from the streamed

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.{Q, Tables}
+import graft.util.Artifacts
 
 /** Semi-structured parsing + file-sink surface (SURVEY.md §2.1).
   *
@@ -34,24 +35,12 @@ object JsonAndSinks {
       |  MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  // Landing lifecycle (temp-dir shutdown sweep + mtime staleness keys)
-  // lives in util.Landing, shared with Bucketed/SortedLanding/d8b. The
-  // s9/s10 memo keys include the SOURCE file's mtime: a rewritten source
-  // parquet re-lands instead of serving a stale landing for the rest of
-  // the JVM. s7 rewrites on every call, so its key is just the dir.
-  private def tempLandingDir(
-      memo: scala.collection.concurrent.TrieMap[String, java.nio.file.Path],
-      key: String, prefix: String): java.nio.file.Path =
-    graft.util.Landing.tempDir(memo, key, prefix)
-
-  private def mtimeKey(src: String, table: String): String =
-    graft.util.Landing.mtimeKey(src, table)
-
-  private val sinkDirs =
-    scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
-
-  private def sinkDir(src: String): java.nio.file.Path =
-    tempLandingDir(sinkDirs, src, "graft_partitioned_sink")
+  // s9/s10/s14/s15 land once per SOURCE version (Artifacts.dir): a
+  // rewritten source re-lands instead of serving a stale landing. s7
+  // rewrites on every call, so its directory is keyed on the dir alone.
+  private def sinkDir(src: String): String =
+    Artifacts.dir(Artifacts.Key("s7sink", Nil, Seq(src), ()),
+      "graft_partitioned_sink")(_ => ())
 
   /** S7: partitioned parquet sink round-trip — write documents partitioned
     * by lang, read back through the partitioned layout, count per
@@ -59,7 +48,7 @@ object JsonAndSinks {
     * loses nothing and the partition column survives the round-trip.
     */
   private def s7PartitionedSink(s: SparkSession, d: String): DataFrame = {
-    val out = sinkDir(d).toString
+    val out = sinkDir(d)
     Tables.documents(s, d)
       .write.mode("overwrite").partitionBy("lang").parquet(out)
     s.read.parquet(out)
@@ -72,12 +61,6 @@ object JsonAndSinks {
       |GROUP BY lang ORDER BY lang""".stripMargin
 
   // ---- S9: ORC source/sink round-trip ------------------------------------
-  // One ORC landing per (source dir, source mtime) so Verify/Bench reps
-  // measure the steady-state read, not the landing write — the j6/d8b
-  // amortized-landing discipline, staleness-guarded like Bucketed.
-  private val orcDirs =
-    scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
-
   /** S9: the second columnar format. Orders land once as ORC; the read
     * path must push the filter into the ORC reader (same PushedFilters
     * machinery as parquet — plan-asserted in EventProfileSpec's s9 test)
@@ -87,13 +70,11 @@ object JsonAndSinks {
     * the query changing.
     */
   private def s9OrcRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val out = {
-      val dir = tempLandingDir(orcDirs, mtimeKey(d, "orders"), "graft_orc_sink")
-      if (!java.nio.file.Files.exists(dir.resolve("_SUCCESS")))
-        Tables.orders(s, d).write.mode("overwrite").orc(dir.toString)
-      dir
+    val out = Artifacts.dir(Artifacts.key("s9orc", Tables.path(d, "orders")),
+        "graft_orc_sink") { dir =>
+      Tables.orders(s, d).write.mode("overwrite").orc(dir)
     }
-    s.read.orc(out.toString)
+    s.read.orc(out)
       .filter(col("o_totalprice") > 50000.0)
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"),
@@ -108,9 +89,6 @@ object JsonAndSinks {
        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
 
   // ---- S10: schema evolution across landed batches -----------------------
-  private val mergeDirs =
-    scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
-
   /** S10: schema drift at the landing zone — batch 1 lands (doc_id,
     * n_chars), batch 2 lands with a new `lang` column, and one
     * mergeSchema read unions them (missing column → null). This is the
@@ -122,21 +100,18 @@ object JsonAndSinks {
     * batch 1 had no lang.
     */
   private def s10SchemaMerge(s: SparkSession, d: String): DataFrame = {
-    val out = {
-      val dir = tempLandingDir(mergeDirs, mtimeKey(d, "documents"),
-        "graft_schema_merge")
-      if (!java.nio.file.Files.exists(dir.resolve("batch=2"))) {
-        val docs = Tables.documents(s, d)
-        docs.filter(col("doc_id") % 2 === 0)
-          .select(col("doc_id"), col("n_chars"))
-          .write.mode("overwrite").parquet(s"$dir/batch=1")
-        docs.filter(col("doc_id") % 2 === 1)
-          .select(col("doc_id"), col("n_chars"), col("lang"))
-          .write.mode("overwrite").parquet(s"$dir/batch=2")
-      }
-      dir
+    val out = Artifacts.dir(
+        Artifacts.key("s10merge", Tables.path(d, "documents")),
+        "graft_schema_merge") { dir =>
+      val docs = Tables.documents(s, d)
+      docs.filter(col("doc_id") % 2 === 0)
+        .select(col("doc_id"), col("n_chars"))
+        .write.mode("overwrite").parquet(s"$dir/batch=1")
+      docs.filter(col("doc_id") % 2 === 1)
+        .select(col("doc_id"), col("n_chars"), col("lang"))
+        .write.mode("overwrite").parquet(s"$dir/batch=2")
     }
-    s.read.option("mergeSchema", "true").parquet(out.toString)
+    s.read.option("mergeSchema", "true").parquet(out)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
       .orderBy(col("lang").asc_nulls_first)
@@ -148,9 +123,6 @@ object JsonAndSinks {
       |FROM documents GROUP BY 1 ORDER BY lang NULLS FIRST""".stripMargin
 
   // ---- S14: XML source/sink round-trip (built-in since Spark 4) ----------
-  private val xmlDirs =
-    scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
-
   /** S14: the semi-structured interchange format — Spark 4 ships the XML
     * data source in core (the spark-xml merge). Suppliers land once as
     * `<supplier>` row elements (same amortized-landing discipline as s9);
@@ -165,14 +137,12 @@ object JsonAndSinks {
     * layout.
     */
   private def s14XmlRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val out = {
-      val dir = tempLandingDir(xmlDirs, mtimeKey(d, "supplier"),
-        "graft_xml_sink")
-      if (!java.nio.file.Files.exists(dir.resolve("_SUCCESS")))
-        Tables.supplier(s, d).write.mode("overwrite")
-          .option("rootTag", "suppliers").option("rowTag", "supplier")
-          .format("xml").save(dir.toString)
-      dir
+    val out = Artifacts.dir(
+        Artifacts.key("s14xml", Tables.path(d, "supplier")),
+        "graft_xml_sink") { dir =>
+      Tables.supplier(s, d).write.mode("overwrite")
+        .option("rootTag", "suppliers").option("rowTag", "supplier")
+        .format("xml").save(dir)
     }
     val schema = StructType(Seq(
       StructField("s_suppkey", LongType),
@@ -180,7 +150,7 @@ object JsonAndSinks {
       StructField("s_nationkey", IntegerType),
       StructField("s_acctbal", DoubleType)))
     s.read.schema(schema).option("rowTag", "supplier")
-      .format("xml").load(out.toString)
+      .format("xml").load(out)
       .filter(col("s_acctbal") > 0.0)
       .groupBy(col("s_nationkey"))
       .agg(count(lit(1)).as("n"),
@@ -195,9 +165,6 @@ object JsonAndSinks {
        |GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin
 
   // ---- S15: dynamic partition overwrite ----------------------------------
-  private val dynDirs =
-    scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
-
   /** S15: `partitionOverwriteMode=dynamic` — the in-place partition
     * replacement every incremental lakehouse load relies on. Phase 1
     * lands the full events table partitioned by event_type; phase 2
@@ -218,12 +185,11 @@ object JsonAndSinks {
     * read-back aggregate.
     */
   private def s15DynamicOverwrite(s: SparkSession, d: String): DataFrame = {
-    val dir = tempLandingDir(dynDirs, mtimeKey(d, "events") + "|dyn",
-      "graft_dynover")
-    val done = dir.resolve("_GRAFT_DYN_DONE")
-    if (!java.nio.file.Files.exists(done)) {
+    val dir = Artifacts.dir(
+        Artifacts.key("s15dyn", Tables.path(d, "events")),
+        "graft_dynover") { dir =>
       val ev = Tables.events(s, d)
-      ev.write.mode("overwrite").partitionBy("event_type").parquet(dir.toString)
+      ev.write.mode("overwrite").partitionBy("event_type").parquet(dir)
       val corrective =
         ev.filter(col("event_type") === "click" && col("value") > 50.0)
       // an EMPTY corrective batch touches no partitions under dynamic
@@ -238,11 +204,10 @@ object JsonAndSinks {
       s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       try corrective
         .write.mode("overwrite").partitionBy("event_type")
-        .parquet(dir.toString)
+        .parquet(dir)
       finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-      java.nio.file.Files.createFile(done)
     }
-    s.read.parquet(dir.toString)
+    s.read.parquet(dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         graft.util.Det.dsum(col("value")).as("sum_value"))

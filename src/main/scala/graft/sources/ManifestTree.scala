@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.util.Artifacts
 
 /** S32: TWO-LEVEL MANIFEST TREE — the metadata layer a million-file
   * table needs (round-15 verdict #6): every other store here reads ONE
@@ -242,10 +243,7 @@ object ManifestTree {
     * many bucket manifests the merge actually opened.
     */
   private[graft] def s32Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      // key v2: round-17 routes the v2 publish through treeOccCommit
-      // (treplaced metadata now exists) — rebuild superseded layouts
-      graft.util.Landing.mtimeKey(d, "customer") + "|mtree2",
+    Artifacts.dir(Artifacts.key("mtree2", Tables.path(d, "customer")),
       "graft_mtree") { dir =>
       val base = Tables.customer(s, d)
         .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.util.Artifacts
 
 /** S26: PARTITION-SPEC EVOLUTION — the table-format primitive that lets
   * a table CHANGE its partitioning without rewriting history (Iceberg's
@@ -49,8 +50,7 @@ object PartitionEvolution {
     * evolved table: every spec-1 file unchanged + the spec-2 files).
     */
   private[graft] def s26Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "orders") + "|pspecevo",
+    Artifacts.dir(Artifacts.key("pspecevo", Tables.path(d, "orders")),
       "graft_pevo") { dir =>
       val o = Tables.orders(s, d).select(
         col("o_orderkey").as("ok"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.{Q, Tables}
+import graft.util.Artifacts
 
 /** S39: SCHEMA-DRIVEN per-file stats — the round-16 verdict's
   * generality arc #3: [[Snapshots.statsEntries]] hardcodes the
@@ -117,9 +118,8 @@ object SchemaStats {
     * manifest_2 = v1 entries verbatim + the new files' entries.
     */
   private[graft] def s39Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      s"$d|custorders|${graft.util.Landing.sourceMtime(d,
-        Seq("customer", "orders"))}|genstats",
+    Artifacts.dir(Artifacts.key("genstats",
+        Seq("customer", "orders").map(Tables.path(d, _))),
       "graft_genstats") { dir =>
       val base = Tables.customer(s, d)
         .select(col("c_custkey").as("k"), col("c_nationkey").as("nkd"),

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.util.Artifacts
 
 /** S16: manifest-based SNAPSHOT ISOLATION / time travel — the core
   * mechanism under every lakehouse table format (Iceberg/Delta/Hudi),
@@ -78,8 +79,7 @@ object Snapshots {
   }
 
   private[graft] def s16Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "customer") + "|snap",
+    Artifacts.dir(Artifacts.key("snap", Tables.path(d, "customer")),
       "graft_snap")(dir => buildVersioned(s, d, dir))
 
   /** Raw manifest ENTRIES of a version — one line per data file, either
@@ -186,8 +186,7 @@ object Snapshots {
     * Exposed for the spec's before/after file assertions.
     */
   private[graft] def s18Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "customer") + "|snapvac",
+    Artifacts.dir(Artifacts.key("snapvac", Tables.path(d, "customer")),
       "graft_snapvac") { dir =>
       buildVersioned(s, d, dir)
       val live = manifest(dir, 2).toSet
@@ -409,8 +408,7 @@ object Snapshots {
     * concurrent-advance path. Both updates land exactly once; head = 3.
     */
   private[graft] def s19Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "customer") + "|snapocc",
+    Artifacts.dir(Artifacts.key("snapocc", Tables.path(d, "customer")),
       "graft_snapocc") { dir =>
       val base = Tables.customer(s, d)
         .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),
@@ -475,8 +473,7 @@ object Snapshots {
     * `ADD COLUMN` contract.
     */
   private[graft] def s20Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "customer") + "|snapevo",
+    Artifacts.dir(Artifacts.key("snapevo", Tables.path(d, "customer")),
       "graft_snapevo") { dir =>
       val cust = Tables.customer(s, d)
       cust.filter(col("c_nationkey") < 12)
@@ -725,9 +722,8 @@ object Snapshots {
     * at 2.
     */
   private[graft] def s22Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      s"$d|custorders|${graft.util.Landing.sourceMtime(d,
-        Seq("customer", "orders"))}|snapmerge",
+    Artifacts.dir(Artifacts.key("snapmerge",
+        Seq("customer", "orders").map(Tables.path(d, _))),
       "graft_snapmerge") { dir =>
       val base = Tables.customer(s, d)
         .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),
@@ -1128,8 +1124,7 @@ object Snapshots {
     * the ROLLBACK — head v3's manifest equals v1's by content.
     */
   private[graft] def s29Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "customer") + "|snaprollback",
+    Artifacts.dir(Artifacts.key("snaprollback", Tables.path(d, "customer")),
       "graft_snapback") { dir =>
       val base = Tables.customer(s, d)
         .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),
@@ -1276,8 +1271,7 @@ object Snapshots {
     * (+300) — the head. Then the tag-aware vacuum expires exactly v1.
     */
   private[graft] def s33Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "customer") + "|snaptags",
+    Artifacts.dir(Artifacts.key("snaptags", Tables.path(d, "customer")),
       "graft_snaptags") { dir =>
       val base = Tables.customer(s, d)
         .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),
@@ -1467,8 +1461,7 @@ object Snapshots {
     * the conflicted attempt's files.
     */
   private[graft] def s34Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "customer") + "|snaporphan",
+    Artifacts.dir(Artifacts.key("snaporphan", Tables.path(d, "customer")),
       "graft_snaporphan") { dir =>
       val base = Tables.customer(s, d)
         .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.util.Artifacts
 
 /** S41: SORT-ON-COMPACT — clustering the transactional store (round-16
   * verdict #7): [[Snapshots.compactBucket]] coalesces a bucket's small
@@ -69,8 +70,7 @@ object SortedCompaction {
     * on bucket 9 → v2.
     */
   private[graft] def s41Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "customer") + "|sortcompact2",
+    Artifacts.dir(Artifacts.key("sortcompact2", Tables.path(d, "customer")),
       "graft_sortcompact") { dir =>
       val base = Tables.customer(s, d)
         .select(col("c_custkey").as("k"), col("c_nationkey").as("nkd"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.util.Det._
+import graft.util.Artifacts
 
 /** Sort-ordered landing (s11): the range-predicate analogue of j6's
   * bucketing. Landing a fact table range-partitioned + sorted on its query
@@ -24,9 +25,6 @@ import graft.util.Det._
   * same filter) is asserted in SortedLandingSpec.
   */
 object SortedLanding {
-
-  private lazy val landDir: java.nio.file.Path =
-    graft.util.Landing.tempDirOnce("graft_sorted_landing")
 
   /** Land `df` range-partitioned and sorted by `sortCol` under `path`.
     * `nRanges` controls file granularity: more ranges → finer min-max
@@ -72,20 +70,13 @@ object SortedLanding {
 
   private val writeLock = new Object
 
-  // one landing per (source dir, source mtime), amortized across the
-  // session exactly like Bucketed.prepared (j6)
-  private val prepared =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private[graft] def landedEvents(s: SparkSession, d: String): DataFrame = {
-    val key = graft.util.Landing.mtimeKey(d, "events")
-    val path = prepared.getOrElseUpdate(key, {
-      val out = s"$landDir/events_${(key.hashCode & Int.MaxValue).toHexString}"
+  // one landing per events version, amortized like Bucketed.prepared (j6)
+  private[graft] def landedEvents(s: SparkSession, d: String): DataFrame =
+    Artifacts.read(s, Artifacts.dir(
+        Artifacts.key("s11sorted", Tables.path(d, "events")),
+        "graft_sorted_landing") { out =>
       writeSorted(Tables.events(s, d), out, "ts")
-      out
     })
-    s.read.parquet(path)
-  }
 
   private val DayStart = "2024-01-15 00:00:00"
   private val DayEnd = "2024-01-16 00:00:00"

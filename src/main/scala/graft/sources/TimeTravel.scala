@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.util.Artifacts
 
 /** S37: AS-OF reads — time travel resolved by COMMIT WATERMARKS rather
   * than version numbers (the user-facing half of s16: `SELECT ... AS OF
@@ -60,8 +61,7 @@ object TimeTravel {
     * before the manifest.
     */
   private[graft] def s37Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "orders") + "|asof",
+    Artifacts.dir(Artifacts.key("asof", Tables.path(d, "orders")),
       "graft_asof") { dir =>
       val slim = Tables.orders(s, d)
         .select(col("o_orderkey").as("ok"),

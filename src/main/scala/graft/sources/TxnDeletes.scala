@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.util.Artifacts
 
 /** S38: ROW-LEVEL DELETES through the TRANSACTIONAL merge path — the
   * round-16 verdict's composition arc #2: s25 proved deletion-vector
@@ -331,8 +332,7 @@ object TxnDeletes {
   private[graft] def mv5Refreshed(s: SparkSession, store: String,
       v: Int): DataFrame = {
     val m1 = Snapshots.manifest(store, 1)
-    var mv = graft.util.Landing.frameLanding(s,
-      s"mv5base|${graft.util.Landing.versionedPathKey(store)}")(
+    var mv = Artifacts.frame(s, Artifacts.key("mv5base", store))(
       morAgg(s, m1, resolveDeletes(store, 1), m1.head))
     (2 to v).foreach { i =>
       val d = mv5Delta(s, store, i)
@@ -385,12 +385,7 @@ object TxnDeletes {
     */
   private def mv5IncrementalMvMor(s: SparkSession, d: String): DataFrame = {
     val dir = s38Dir(s, d)
-    // ≤|nations| rows; the differential fold re-executes its full
-    // lineage on every fresh build otherwise (the d13 class) — land the
-    // slim result once per store version
-    graft.util.Landing.frameLanding(s,
-      s"mv5final|${graft.util.Landing.versionedPathKey(dir)}")(
-      mv5Refreshed(s, dir, Snapshots.head(dir)))
+    mv5Refreshed(s, dir, Snapshots.head(dir))
       .select(col("nk"), col("n").as("n_rows"),
         col("cents").as("total_cents"))
       .orderBy(col("nk"))
@@ -416,8 +411,7 @@ object TxnDeletes {
     *  v5 the PURGE — deleted buckets rewritten, sidecar emptied.
     */
   private[graft] def s38Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "customer") + "|txndel",
+    Artifacts.dir(Artifacts.key("txndel", Tables.path(d, "customer")),
       "graft_txndel") { dir =>
       val base = Tables.customer(s, d)
         .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.util.Artifacts
 
 /** S24: MULTI-TABLE ATOMIC COMMIT — the transaction tier above s19's
   * per-table OCC (round-14 verdict #6): a real pipeline commits a fact
@@ -162,8 +163,7 @@ object TxnPair {
     * append-only member and a copy-on-write member.
     */
   private[graft] def s24Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "lineitem") + "|txnpair",
+    Artifacts.dir(Artifacts.key("txnpair", Tables.path(d, "lineitem")),
       "graft_txnpair") { dir =>
       val fact = factSlim(s, d)
       val f1 = fact.filter(col("sd") < Cut)

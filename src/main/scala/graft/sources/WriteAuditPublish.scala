@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.util.Artifacts
 
 /** S27: WRITE-AUDIT-PUBLISH — the staged-commit pattern every serious
   * lakehouse pipeline runs (Iceberg's WAP / branch-audit-publish,
@@ -138,10 +139,7 @@ object WriteAuditPublish {
     * become reader-visible. The audit log lands as `_audit_log.txt`.
     */
   private[graft] def s27Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      // key v2: the round-17 publish also records replaced-file
-      // metadata and cleans rejected stages — rebuild superseded layouts
-      graft.util.Landing.mtimeKey(d, "customer") + "|wapstore2",
+    Artifacts.dir(Artifacts.key("wapstore2", Tables.path(d, "customer")),
       "graft_wap") { dir =>
       val base = Tables.customer(s, d)
         .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),

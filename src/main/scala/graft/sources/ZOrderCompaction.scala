@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.util.Artifacts
 
 /** S44: Z-ORDER COMPACTION — multi-dimensional clustering OPTIMIZE
   * (Delta `OPTIMIZE ZORDER BY`, Iceberg's z-order rewrite strategy).
@@ -168,8 +169,7 @@ object ZOrderCompaction {
     * [[zOrderCompact]] → v2.
     */
   private[graft] def s44Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "customer") + "|zorder",
+    Artifacts.dir(Artifacts.key("zorder", Tables.path(d, "customer")),
       "graft_zorder") { dir =>
       val base = Tables.customer(s, d)
         .select(col("c_custkey").as("k"), col("c_nationkey").as("nkd"),
@@ -229,8 +229,7 @@ object ZOrderCompaction {
     *       compaction untouched (nearest-at-or-below).
     */
   private[graft] def s45Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "customer") + "|zordermor",
+    Artifacts.dir(Artifacts.key("zordermor", Tables.path(d, "customer")),
       "graft_zordermor") { dir =>
       val base = Tables.customer(s, d)
         .select(col("c_custkey").as("k"), col("c_nationkey").as("nkd"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.util.Det._
+import graft.util.Artifacts
 
 /** Z-order (Morton-curve) landing (s12): multi-dimensional data skipping —
   * the 2-D generalization of s11's single-key sort.
@@ -54,24 +55,15 @@ object ZOrderLanding {
         .drop("_z")
     }
 
-  private lazy val landDir: java.nio.file.Path =
-    graft.util.Landing.tempDirOnce("graft_zorder_landing")
-
-  private val prepared =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private[graft] def landedEvents(s: SparkSession, d: String): DataFrame = {
-    val key = graft.util.Landing.mtimeKey(d, "events")
-    val path = prepared.getOrElseUpdate(key, {
-      val out = s"$landDir/events_${(key.hashCode & Int.MaxValue).toHexString}"
+  private[graft] def landedEvents(s: SparkSession, d: String): DataFrame =
+    Artifacts.read(s, Artifacts.dir(
+        Artifacts.key("s12zorder", Tables.path(d, "events")),
+        "graft_zorder_landing") { out =>
       // time dimension: minutes since epoch (fits 32 bits; coarse is fine
       // — skipping works on rectangles, not points)
       writeZOrdered(Tables.events(s, d), out,
         col("user_id"), (unix_timestamp(col("ts")) / 60).cast("long"))
-      out
     })
-    s.read.parquet(path)
-  }
 
   private val UserLo = 10
   private val UserHi = 19

@@ -3,8 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.Q
+import graft.{Q, Tables}
 import graft.sources.Snapshots
+import graft.util.Artifacts
 
 /** MV4: the STREAMING change-feed consumer — the composition arc the
   * round-16 verdict named top priority: e28 produces transactional
@@ -175,9 +176,8 @@ object ChangeFeedStream {
     * refreshes. The MV state is self-contained after the build.
     */
   private[graft] def mv4Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      s"$d|custorders|${graft.util.Landing.sourceMtime(d,
-        Seq("customer", "orders"))}|mvstream2",
+    Artifacts.dir(Artifacts.key("mvstream2",
+        Seq("customer", "orders").map(Tables.path(d, _))),
       "graft_mvstream") { out =>
       val store = StreamMerge.e28Dir(s, d)
       val feed = java.nio.file.Paths.get(s"$out/feed")
@@ -212,8 +212,7 @@ object ChangeFeedStream {
     * increment → zero-file-delta DELETE → increment → PURGE lifecycle.
     */
   private[graft] def mv6Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "customer") + "|mvstreammor2",
+    Artifacts.dir(Artifacts.key("mvstreammor2", Tables.path(d, "customer")),
       "graft_mvstreammor") { out =>
       val store = graft.sources.TxnDeletes.s38Dir(s, d)
       val feed = java.nio.file.Paths.get(s"$out/feed")
@@ -285,8 +284,7 @@ object ChangeFeedStream {
     * increment → purge.
     */
   private[graft] def cdc6Dir(s: SparkSession, d: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(d, "customer") + "|cdcstream",
+    Artifacts.dir(Artifacts.key("cdcstream", Tables.path(d, "customer")),
       "graft_cdcstream") { out =>
       val store = graft.sources.TxnDeletes.s38Dir(s, d)
       val feed = java.nio.file.Paths.get(s"$out/feed")

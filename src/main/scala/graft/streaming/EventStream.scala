@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.Trigger
+import graft.util.Artifacts
 
 /** Structured Streaming surface over the events table.
   *
@@ -22,16 +23,12 @@ object EventStream {
     * graft.Tables.events, whose normalizeTs converts either to
     * TimestampType after the streaming read.
     */
-  private val rawSchemaMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), StructType]
-
   private[graft] def rawSchema(spark: SparkSession, path: String): StructType =
-    rawSchemaMemo.getOrElseUpdate((spark, path), rawSchemaUncached(spark, path))
+    Artifacts.value(Artifacts.key("evschema", path, spark))(
+      rawSchemaUncached(spark, path))
 
-  // Memoized per (session, staged path): one footer read per staged dir —
-  // the stream builders call this per bench rep, and staged dirs are
-  // immutable once created (stagedDirs keys already embed the source
-  // mtime, so a regen stages a NEW path and misses the memo).
+  // One footer read per (session, staged dir version): the stream
+  // builders call this per query build.
   private def rawSchemaUncached(spark: SparkSession, path: String): StructType = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsType = spark.read.parquet(path).schema("ts").dataType
@@ -44,26 +41,17 @@ object EventStream {
       StructField("props", StringType)))
   }
 
-  // One staged directory per source VERSION (dir + events.parquet
-  // mtime — the Landing staleness discipline), deleted on JVM exit —
-  // repeated readStream calls in one session (Verify runs the stream
-  // query, suites share a session) must not leak a /tmp dir per call,
-  // and a source rewritten mid-JVM (ScaleSweep's synthetic dir rebuild)
-  // must re-stage instead of replaying stale chunks.
-  private val stagedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
-
+  // One staged directory per events VERSION: repeated readStream calls in
+  // one session must not stage a dir per call, and a source rewritten
+  // mid-JVM (ScaleSweep's synthetic dir rebuild) must re-stage instead of
+  // replaying stale chunks.
   private def stageDir(dir: String): java.nio.file.Path =
-    stagedDirs.getOrElseUpdate(graft.util.Landing.mtimeKey(dir, "events"), {
-      val staged = java.nio.file.Files.createTempDirectory("graft_events_stream")
+    java.nio.file.Paths.get(Artifacts.dir(
+        Artifacts.key("evstage", graft.Tables.path(dir, "events")),
+        "graft_events_stream") { out =>
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      sys.addShutdownHook {
-        java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
-        java.nio.file.Files.deleteIfExists(staged)
-      }
-      staged
+        java.nio.file.Paths.get(out, "events.parquet"))
     })
 
   def readStream(spark: SparkSession, dir: String): DataFrame = {
@@ -77,24 +65,15 @@ object EventStream {
 
   // At-least-once landing dir: the same events file staged under TWO
   // names — every event delivered twice, as a redeliver-on-retry source
-  // does. Cached/cleaned like stagedDirs.
-  private val dupStagedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
-
+  // does. Staged once per events version like stageDir.
   private def dupStageDir(dir: String): java.nio.file.Path =
-    dupStagedDirs.getOrElseUpdate(
-      graft.util.Landing.mtimeKey(dir, "events"), {
-      val staged = java.nio.file.Files.createTempDirectory("graft_events_dup")
+    java.nio.file.Paths.get(Artifacts.dir(
+        Artifacts.key("evdup", graft.Tables.path(dir, "events")),
+        "graft_events_dup") { out =>
       val src = java.nio.file.Paths.get(s"$dir/events.parquet")
-      java.nio.file.Files.copy(src, staged.resolve("events.parquet"))
-      java.nio.file.Files.copy(src, staged.resolve("events_redelivery.parquet"))
-      sys.addShutdownHook {
-        java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
-        java.nio.file.Files.deleteIfExists(
-          staged.resolve("events_redelivery.parquet"))
-        java.nio.file.Files.deleteIfExists(staged)
-      }
-      staged
+      java.nio.file.Files.copy(src, java.nio.file.Paths.get(out, "events.parquet"))
+      java.nio.file.Files.copy(src,
+        java.nio.file.Paths.get(out, "events_redelivery.parquet"))
     })
 
   def readStreamDuplicated(spark: SparkSession, dir: String): DataFrame = {
@@ -325,40 +304,26 @@ object EventStream {
   // The events file split into 4 disjoint chunks so AvailableNow +
   // maxFilesPerTrigger=1 drives FOUR micro-batches whose rollup keys
   // overlap — each batch genuinely re-upserts keys earlier batches
-  // already wrote, which is the claim under test. Memoized per source
-  // like stagedDirs.
-  private val splitStagedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
-
+  // already wrote, which is the claim under test. Staged once per events
+  // version like stageDir.
   private def splitStageDir(spark: SparkSession, dir: String)
       : java.nio.file.Path =
-    splitStagedDirs.getOrElseUpdate(
-      graft.util.Landing.mtimeKey(dir, "events"), {
-      import java.nio.file.{Files, Paths}
-      val staged = Files.createTempDirectory("graft_events_split")
+    java.nio.file.Paths.get(Artifacts.dir(
+        Artifacts.key("evsplit", graft.Tables.path(dir, "events")),
+        "graft_events_split") { out =>
+      import java.nio.file.Files
+      val staged = java.nio.file.Paths.get(out)
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(s"$dir/events.parquet")
-      for (k <- 0 until 4) {
-        val tmpOut = Files.createTempDirectory("graft_events_chunk")
-        raw.filter(pmod(col("event_id"), lit(4)) === k)
-          .coalesce(1).write.mode("overwrite").parquet(tmpOut.toString)
-        import scala.jdk.CollectionConverters._
-        val part = Files.list(tmpOut).iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet")).get
-        Files.move(part, staged.resolve(f"chunk_$k%02d.parquet"))
-        val walk = Files.walk(tmpOut)
-        try walk.iterator().asScala.toSeq.reverseIterator
-          .foreach(Files.deleteIfExists(_))
-        finally walk.close()
+      for (k <- 0 until 4) Artifacts.withScratchDir("graft_events_chunk") {
+        tmpOut =>
+          raw.filter(pmod(col("event_id"), lit(4)) === k)
+            .coalesce(1).write.mode("overwrite").parquet(tmpOut.toString)
+          import scala.jdk.CollectionConverters._
+          val part = Files.list(tmpOut).iterator().asScala
+            .find(_.getFileName.toString.endsWith(".parquet")).get
+          Files.move(part, staged.resolve(f"chunk_$k%02d.parquet"))
       }
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        val walk = Files.walk(staged)
-        try walk.iterator().asScala.toSeq.reverseIterator
-          .foreach(Files.deleteIfExists(_))
-        finally walk.close()
-      }
-      staged
     })
 
   /** The rollup the MV maintains: per (day, event_type) count + exact
@@ -385,8 +350,8 @@ object EventStream {
     */
   def runUpsertLogToCompletion(spark: SparkSession, dir: String,
       compactEvery: Int = 0): DataFrame = {
-    val target = graft.util.Landing.tempDirOnce("graft_mv_upsert").toString
-    val ckp = graft.util.Landing.tempDirOnce("graft_mv_upsert_ckp").toString
+    val target = Artifacts.scratchDir("graft_mv_upsert").toString
+    val ckp = Artifacts.scratchDir("graft_mv_upsert_ckp").toString
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     // 4 state partitions (state scales with the ~150-key GROUP
     // cardinality, never event volume; the e9 stream-stream lesson says
@@ -421,8 +386,13 @@ object EventStream {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.read.parquet(target)
+      // the log is landed in memory so neither directory outlives the call
+      spark.read.parquet(target).localCheckpoint(true)
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", prev)
+      Artifacts.delete(ckp)
+      Artifacts.delete(target)
+    }
   }
 
   // ---- e27: transactional streaming sink (OCC manifest commits) -----------
@@ -485,13 +455,12 @@ object EventStream {
     * stream, never a torn batch.
     */
   private[graft] def e27Dir(spark: SparkSession, dir: String): String =
-    graft.util.Landing.landedLayout(
-      graft.util.Landing.mtimeKey(dir, "events") + "|txnsink",
-      "graft_txnsink") { out =>
+    Artifacts.dir(Artifacts.key("txnsink", graft.Tables.path(dir, "events")),
+        "graft_txnsink") { out =>
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$out/manifest_1.txt"),
         Array.emptyByteArray)
-      val ckp = graft.util.Landing.tempDirOnce("graft_txnsink_ckp").toString
+      val ckp = Artifacts.scratchDir("graft_txnsink_ckp").toString
       val prev = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions", "4")
       try {
@@ -509,7 +478,10 @@ object EventStream {
           .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      } finally {
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        Artifacts.delete(ckp)
+      }
     }
 
   /** Keep-latest-revision-per-key rewrite of the upsert log — the
@@ -691,22 +663,16 @@ object EventStream {
     val key = "spark.sql.parquet.outputTimestampType"
     val prev = conf.get(key)
     conf.set(key, "TIMESTAMP_MICROS")
-    val tmpOut = Files.createTempDirectory("graft_events_late_tmp")
-    try df.coalesce(1).write.mode("overwrite").parquet(tmpOut.toString)
-    finally conf.set(key, prev)
-    import scala.jdk.CollectionConverters._
-    val part = Files.list(tmpOut).iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet")).get
-    Files.move(part, staged.resolve(name))
-    staged.resolve(name).toFile.setLastModified(mtime)
-    val walk = Files.walk(tmpOut)
-    try walk.iterator().asScala.toSeq.reverseIterator
-      .foreach(Files.deleteIfExists(_))
-    finally walk.close()
+    Artifacts.withScratchDir("graft_events_late_tmp") { tmpOut =>
+      try df.coalesce(1).write.mode("overwrite").parquet(tmpOut.toString)
+      finally conf.set(key, prev)
+      import scala.jdk.CollectionConverters._
+      val part = Files.list(tmpOut).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      Files.move(part, staged.resolve(name))
+      staged.resolve(name).toFile.setLastModified(mtime)
+    }
   }
-
-  private val lateStagedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
 
   /** Three-file landing dir with PLANTED late arrivals (staged once per
     * source version): batch 0 is the full events table; batch 1 is a
@@ -726,10 +692,10 @@ object EventStream {
     */
   private[graft] def lateStageDir(spark: SparkSession, dir: String)
       : java.nio.file.Path =
-    lateStagedDirs.getOrElseUpdate(
-      graft.util.Landing.mtimeKey(dir, "events"), {
-      val staged =
-        java.nio.file.Files.createTempDirectory("graft_events_late")
+    java.nio.file.Paths.get(Artifacts.dir(
+        Artifacts.key("evlate", graft.Tables.path(dir, "events")),
+        "graft_events_late") { out =>
+      val staged = java.nio.file.Paths.get(out)
       val ev = graft.Tables.events(spark, dir)
       val maxTs = ev.agg(max(col("ts"))).first().getTimestamp(0)
       def shifted(pred: org.apache.spark.sql.Column, backMs: Long) =
@@ -744,14 +710,6 @@ object EventStream {
       stageOneFile(ev, staged, "a_base.parquet", t0 - 120000)
       stageOneFile(heartbeat, staged, "b_mark.parquet", t0 - 60000)
       stageOneFile(late, staged, "c_late.parquet", t0)
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        val walk = java.nio.file.Files.walk(staged)
-        try walk.iterator().asScala.toSeq.reverseIterator
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-        finally walk.close()
-      }
-      staged
     })
 
   /** E25: watermark-drop OBSERVABILITY — per micro-batch (input rows,

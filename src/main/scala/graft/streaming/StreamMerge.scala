@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.{Q, Tables}
 import graft.sources.Snapshots
+import graft.util.Artifacts
 
 /** E28: STREAMING CDC MERGE — the change-capture stream applied to the
   * lakehouse table transactionally, composing the round's pieces into
@@ -38,41 +39,27 @@ import graft.sources.Snapshots
   */
 object StreamMerge {
 
-  private val stagedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
-
   /** Orders staged as 4 chunk files (o_orderkey mod 4 — the events
-    * splitStageDir discipline), memoized per source version.
+    * splitStageDir discipline), once per source version.
     */
   private def stageOrders(spark: SparkSession, dir: String)
       : java.nio.file.Path =
-    stagedDirs.getOrElseUpdate(
-      graft.util.Landing.mtimeKey(dir, "orders"), {
+    java.nio.file.Paths.get(Artifacts.dir(
+        Artifacts.key("orderstage", Tables.path(dir, "orders")),
+        "graft_orders_split") { out =>
       import java.nio.file.Files
-      val staged = Files.createTempDirectory("graft_orders_split")
+      val staged = java.nio.file.Paths.get(out)
       val raw = spark.read.parquet(s"$dir/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      for (k <- 0 until 4) {
-        val tmpOut = Files.createTempDirectory("graft_orders_chunk")
-        raw.filter(pmod(col("o_orderkey"), lit(4)) === k)
-          .coalesce(1).write.mode("overwrite").parquet(tmpOut.toString)
-        import scala.jdk.CollectionConverters._
-        val part = Files.list(tmpOut).iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet")).get
-        Files.move(part, staged.resolve(f"chunk_$k%02d.parquet"))
-        val walk = Files.walk(tmpOut)
-        try walk.iterator().asScala.toSeq.reverseIterator
-          .foreach(Files.deleteIfExists(_))
-        finally walk.close()
+      for (k <- 0 until 4) Artifacts.withScratchDir("graft_orders_chunk") {
+        tmpOut =>
+          raw.filter(pmod(col("o_orderkey"), lit(4)) === k)
+            .coalesce(1).write.mode("overwrite").parquet(tmpOut.toString)
+          import scala.jdk.CollectionConverters._
+          val part = Files.list(tmpOut).iterator().asScala
+            .find(_.getFileName.toString.endsWith(".parquet")).get
+          Files.move(part, staged.resolve(f"chunk_$k%02d.parquet"))
       }
-      sys.addShutdownHook {
-        import scala.jdk.CollectionConverters._
-        val walk = Files.walk(staged)
-        try walk.iterator().asScala.toSeq.reverseIterator
-          .foreach(Files.deleteIfExists(_))
-        finally walk.close()
-      }
-      staged
     })
 
   /** Batch markers embedded in merge-commit file paths (`mb<id>x`,
@@ -174,9 +161,8 @@ object StreamMerge {
     * 5 versions (base + one transactional merge per non-empty batch).
     */
   private[graft] def e28Dir(spark: SparkSession, dir: String): String =
-    graft.util.Landing.landedLayout(
-      s"$dir|custorders|${graft.util.Landing.sourceMtime(dir,
-        Seq("customer", "orders"))}|streammerge",
+    Artifacts.dir(Artifacts.key("streammerge",
+        Seq("customer", "orders").map(Tables.path(dir, _))),
       "graft_smerge")(out => buildMergeStore(spark, dir, out))
 
   /** Builds the streaming-merge store into `out` (shared by e28's read
@@ -196,7 +182,7 @@ object StreamMerge {
         java.nio.file.Paths.get(s"$out/manifest_1.txt"),
         m1.mkString("\n").getBytes("UTF-8"))
       val staged = stageOrders(spark, dir).toString
-      val ckp = graft.util.Landing.tempDirOnce("graft_smerge_ckp").toString
+      val ckp = Artifacts.scratchDir("graft_smerge_ckp").toString
       val prev = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions", "4")
       try {
@@ -211,7 +197,10 @@ object StreamMerge {
           .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      } finally {
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        Artifacts.delete(ckp)
+      }
     }
 
   /** E28: the registered read — the converged head snapshot (every
@@ -247,9 +236,8 @@ object StreamMerge {
     * `_batches.txt` BEFORE the manifests carrying them are dropped.
     */
   private[graft] def s31Dir(spark: SparkSession, dir: String): String =
-    graft.util.Landing.landedLayout(
-      s"$dir|custorders|${graft.util.Landing.sourceMtime(dir,
-        Seq("customer", "orders"))}|smergevac",
+    Artifacts.dir(Artifacts.key("smergevac",
+        Seq("customer", "orders").map(Tables.path(dir, _))),
       "graft_smergevac") { out =>
       buildMergeStore(spark, dir, out)
       val (nExp, nDel) = ledgerVacuum(out)
@@ -379,10 +367,8 @@ object StreamMerge {
         .agg(count(lit(1)).as("n"), sum(col("bal")).as("cents"))
     // the consumer's materialization at v1: landed once per store
     // version (≤ |nations| rows — the historical full scan happened at
-    // materialization time, never per refresh; versionedPathKey so a
-    // regenerated store evicts the stale frame)
-    val mv1 = graft.util.Landing.frameLanding(s,
-      s"mv3base|${graft.util.Landing.versionedPathKey(dir)}")(aggOf(m1))
+    // materialization time, never per refresh; a deleted store drops it)
+    val mv1 = Artifacts.frame(s, Artifacts.key("mv3base", dir))(aggOf(m1))
     val pre = aggOf(m1.filterNot(toSet))
       .select(col("nk"), col("n").as("pn"), col("cents").as("pc"))
     val post = aggOf(mh.filterNot(fromSet))

@@ -1,100 +1,11 @@
 package graft.util
 
-import java.nio.file.{Files, Path}
-import scala.collection.concurrent.TrieMap
+import java.nio.file.Files
 
-/** Shared landing-lifecycle helpers: every operator that materializes a
-  * layout (bucketed tables, sorted parquet, sink round-trips, digest
-  * indexes) needs the same two disciplines, so they live once here —
-  *  1. temp dirs removed on JVM exit (Verify + Bench + suites share
-  *     sessions; a leak per call compounds),
-  *  2. staleness keys that include the SOURCE mtime, so a rewritten
-  *     source re-lands instead of serving a stale layout for the rest of
-  *     the JVM.
+/** Commit protocols for landed layouts. Memoizing and keying a landed
+  * artifact lives in [[Artifacts]].
   */
 object Landing {
-
-  /** One temp directory, deleted recursively on JVM exit. */
-  def tempDirOnce(prefix: String): Path = {
-    val dir = Files.createTempDirectory(prefix)
-    sys.addShutdownHook {
-      import scala.jdk.CollectionConverters._
-      val walk = Files.walk(dir)
-      try walk.iterator().asScala.toSeq.reverseIterator
-        .foreach(Files.deleteIfExists(_))
-      finally walk.close()
-    }
-    dir
-  }
-
-  /** One temp dir per memo key, deleted on JVM exit. */
-  def tempDir(memo: TrieMap[String, Path], key: String,
-      prefix: String): Path =
-    memo.getOrElseUpdate(key, tempDirOnce(prefix))
-
-  /** Staleness key for a single-file parquet source: identity + mtime. */
-  def mtimeKey(src: String, table: String): String =
-    s"$src|$table|${new java.io.File(s"$src/$table.parquet").lastModified()}"
-
-  /** One landed on-disk layout per `key` version (the x12/d8b index
-    * discipline): on insert, superseded COMPLETED versions of the same
-    * family evict and their dirs delete eagerly — a mid-JVM regen must
-    * not leave the old layout on disk for the session's life. Once-only
-    * execution is guaranteed by a per-key future claimed with
-    * `putIfAbsent` (TrieMap.getOrElseUpdate alone does not guarantee it);
-    * the distributed `build` runs OUTSIDE any global lock, so a slow
-    * build of one layout family no longer serializes unrelated families
-    * behind a single JVM lock (round-11 advice). Only the family-eviction
-    * bookkeeping holds a short lock; an in-flight superseded build is
-    * dropped from the memo but its dir is left to the JVM-exit cleanup
-    * hook rather than deleted under a concurrent writer. Failure
-    * semantics: a failed build fails its concurrent waiters once (the
-    * builder's own exception, unwrapped below) and is removed from the
-    * memo, so LATER callers retry the build rather than inheriting the
-    * failure.
-    */
-  private val layoutDirs =
-    TrieMap.empty[String, java.util.concurrent.CompletableFuture[Path]]
-  def landedLayout(key: String, prefix: String)(
-      build: String => Unit): String = {
-    val mine = new java.util.concurrent.CompletableFuture[Path]
-    layoutDirs.putIfAbsent(key, mine) match {
-      case Some(existing) =>
-        try existing.get().toString
-        catch { // waiters see the builder's own exception, not the wrapper
-          case e: java.util.concurrent.ExecutionException =>
-            throw Option(e.getCause).getOrElse(e)
-        }
-      case None =>
-        try {
-          layoutDirs.synchronized {
-            val fam = frameFamily(key)
-            layoutDirs.keySet
-              .filter(k2 => k2 != key && frameFamily(k2) == fam)
-              .foreach { k2 =>
-                layoutDirs.remove(k2).foreach { f =>
-                  if (f.isDone && !f.isCompletedExceptionally) {
-                    import scala.jdk.CollectionConverters._
-                    val walk = Files.walk(f.get())
-                    try walk.iterator().asScala.toSeq.reverseIterator
-                      .foreach(Files.deleteIfExists(_))
-                    finally walk.close()
-                  }
-                }
-              }
-          }
-          val dir = tempDirOnce(prefix)
-          build(dir.toString)
-          mine.complete(dir)
-          dir.toString
-        } catch {
-          case t: Throwable =>
-            layoutDirs.remove(key, mine)
-            mine.completeExceptionally(t)
-            throw t
-        }
-    }
-  }
 
   /** Idempotent micro-batch append into an existing `partitionBy` parquet
     * layout (the e20 streaming-sink commit): foreachBatch is AT-LEAST-ONCE
@@ -149,178 +60,7 @@ object Landing {
               new java.io.File(target, prefix + f.getName).toPath)
           }
       }
-    locally {
-      import scala.jdk.CollectionConverters._
-      val walk = Files.walk(stage.toPath)
-      try walk.iterator().asScala.toSeq.reverseIterator
-        .foreach(Files.deleteIfExists(_))
-      finally walk.close()
-    }
+    Artifacts.delete(stage.toPath)
     Files.createFile(marker.toPath)
-  }
-
-  /** Amortized DataFrame landing (the j6 production-accounting pattern
-    * for derived FRAMES rather than written layouts): materialize `build`
-    * once per (session, key) via an eager localCheckpoint and serve the
-    * checkpointed frame to every later caller in the JVM. A production MV
-    * would land a ranked/seeded frame once per source version, not once
-    * per downstream query — keying on the source mtime (callers pass
-    * [[mtimeKey]]) reproduces exactly that accounting, and a rewritten
-    * source re-lands instead of serving stale ranks. Entries of stopped
-    * sessions are dropped on every access (the StrokePipeline.prepare
-    * discipline) so a long-lived JVM never pins frames of dead contexts.
-    * Intended for SMALL derived frames (ranked ids, seed rows): the memo
-    * reference keeps the checkpoint blocks alive for the session's life —
-    * two round-10 guards enforce that contract instead of trusting it:
-    *  1. SIZE: the landed frame is probed with the adaptive
-    *     `limit(cap+1).count()` idiom (cheap — it scans the already-
-    *     checkpointed blocks and stops at cap+1 rows). Past
-    *     [[FrameRowCap]] the frame is returned eagerly checkpointed but
-    *     NOT memoized, so an oversized landing lives only as long as its
-    *     caller holds it (ContextCleaner frees the blocks on GC) instead
-    *     of for the session's life. Every registered landing at bench
-    *     scale sits far under the cap; a 10×+ sweep corpus falls back to
-    *     per-run checkpointing — correct, just un-amortized.
-    *  2. VERSION EVICTION: keys embed source mtimes, so a mid-JVM source
-    *     regen lands under a NEW key while the superseded entry's blocks
-    *     stayed pinned (round-9 verdict). On insert, entries whose key
-    *     differs ONLY in numeric segments (mtimes, seeds — the version
-    *     axes) are dropped; the structural segments (path, table, op
-    *     tag) are the entry's FAMILY and at most one version per family
-    *     stays memoized.
-    */
-  private val frames =
-    TrieMap.empty[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame]
-
-  /** Memo cap: bench-scale derived frames are ≤ ~600k rows (pr1's
-    * degree-annotated edges at sf0.1); the cap bounds the pinned bytes,
-    * not correctness.
-    */
-  private[graft] val FrameRowCap = 2000000L
-
-  /** Version-insensitive key: `|`-delimited numeric segments (mtimes,
-    * seeds, plan hashes) dropped, structure kept.
-    */
-  private[graft] def frameFamily(key: String): String =
-    key.split('|').filterNot(seg =>
-      seg.nonEmpty && seg.forall(c => c.isDigit || c == '-')).mkString("|")
-
-  /** Family-evict-on-insert value memo (the SimilarityOps fit-chain
-    * discipline, hoisted round 14 so every driver-side memo shares it):
-    * at most one VERSION per [[frameFamily]] stays cached — a superseded
-    * (dir, mtime) entry drops on insert instead of accumulating across
-    * mid-JVM testdata regens (the round-12 cdc2Offsets leak class).
-    */
-  def memoVersioned[A](memo: TrieMap[String, A], key: String)(
-      build: => A): A = {
-    val fam = frameFamily(key)
-    memo.keySet.filter(k => k != key && frameFamily(k) == fam)
-      .foreach(memo.remove)
-    memo.getOrElseUpdate(key, build)
-  }
-
-  def frameLanding(spark: org.apache.spark.sql.SparkSession, key: String)(
-      build: => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    frames.keySet.filter(_._1.sparkContext.isStopped)
-      .foreach(frames.remove)
-    frames.get((spark, key)).getOrElse {
-      val landed = build.localCheckpoint(true)
-      if (landed.limit((FrameRowCap + 1).toInt).count() > FrameRowCap) landed
-      else {
-        val fam = frameFamily(key)
-        frames.keySet
-          .filter(k => (k._1 eq spark) && k._2 != key &&
-            frameFamily(k._2) == fam)
-          .foreach(frames.remove)
-        frames.getOrElseUpdate((spark, key), landed)
-      }
-    }
-  }
-
-  /** Memoized `spark.read.parquet(dir)` over a LANDED layout directory —
-    * the Tables.t plan-reuse discipline extended to the on-disk index
-    * layouts (r19): every serve-path read of a partitioned layout paid a
-    * driver-side file-index build + footer read per call (~0.3-0.5 s for
-    * a 45-cell IVF dir), and the bench re-builds each query's frame per
-    * rep. A DataFrame is an immutable plan: handing the same one back is
-    * pure plan reuse — actions still scan the files. Staleness: the memo
-    * key carries a 2-level mtime stamp (root + direct children) — file
-    * creation touches its parent dir, so both "new partition dir" and
-    * "new file inside a partition" bump the stamp and re-read; entries
-    * of stopped sessions drop on access like [[frameLanding]].
-    */
-  private val layoutReads = TrieMap.empty[
-    (org.apache.spark.sql.SparkSession, String),
-    (Long, org.apache.spark.sql.DataFrame)]
-
-  def readLayout(spark: org.apache.spark.sql.SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
-    layoutReads.keySet.filter(_._1.sparkContext.isStopped)
-      .foreach(layoutReads.remove)
-    val root = new java.io.File(dir)
-    val kids = Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-    val stamp = kids.foldLeft(root.lastModified())((m, f) =>
-      math.max(m, f.lastModified()))
-    layoutReads.get((spark, dir)) match {
-      case Some((s0, df)) if s0 == stamp => df
-      case _ =>
-        val df = spark.read.parquet(dir)
-        layoutReads.put((spark, dir), (stamp, df))
-        df
-    }
-  }
-
-  /** Latest mtime across a source dir's files (multi-table landings). */
-  def sourceMtime(dir: String, tables: Seq[String]): Long =
-    tables.map(t => new java.io.File(dir, s"$t.parquet").lastModified()).max
-
-  /** Scheme-safe mtime of a relation root: local paths report their
-    * mtime; non-file schemes (hdfs/s3 — `File(URI)` would throw) degrade
-    * to 0, where the path segment of [[planVersionKey]] still carries the
-    * identity.
-    */
-  def rootPathMtime(p: org.apache.hadoop.fs.Path): Long = {
-    val u = p.toUri
-    u.getScheme match {
-      case null   => new java.io.File(u.getPath).lastModified()
-      case "file" => new java.io.File(u).lastModified()
-      case _      => 0L
-    }
-  }
-
-  /** Version key for an ARBITRARY frame (the split7030 idiom, hoisted
-    * round 10): the analyzed plan's semanticHash is the source IDENTITY,
-    * the max mtime over every file relation's roots is the source
-    * VERSION, and the sorted root paths are the structural FAMILY — they
-    * survive [[frameFamily]]'s numeric stripping, so memos keyed this way
-    * treat two different corpora as different families (both stay cached)
-    * while two versions of one corpus evict each other. Frames with no
-    * file relations (local/checkpointed inputs) key on the hash alone —
-    * their canonicalized plan embeds the data/RDD identity.
-    */
-  /** Memo-key segment for a landed-layout PATH: tempDirOnce dirs embed a
-    * random numeric suffix per version, so a raw path segment would give
-    * every layout version its own [[frameFamily]] and superseded memo
-    * entries would never evict. Split the digits into their own
-    * `|`-segment: the letters keep the family stable across versions,
-    * the digits carry the version and strip out of the family.
-    */
-  def versionedPathKey(p: String): String =
-    p.replaceAll("[0-9]+", "") + "|" + p.filter(_.isDigit)
-
-  def planVersionKey(df: org.apache.spark.sql.DataFrame): String = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val plan = df.queryExecution.analyzed
-    val roots = plan.collect {
-      case l: LogicalRelation => l.relation match {
-        case f: HadoopFsRelation => f.location.rootPaths
-        case _ => Seq.empty
-      }
-    }.flatten
-    val mtime = roots.map(rootPathMtime).foldLeft(0L)(math.max)
-    val paths = roots.map(_.toString).distinct.sorted.mkString(",")
-    s"$paths|${plan.semanticHash()}|$mtime"
   }
 }

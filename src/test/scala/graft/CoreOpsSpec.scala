@@ -51,6 +51,27 @@ class CoreOpsSpec extends SparkSpec {
     assert(plan.contains("*("), plan.take(1200))
   }
 
+  test("sql13: without a hint the orders(F) side still broadcasts at " +
+      "sf0.01, and the result equals the reference three-way SQL") {
+    val df = SparkEntry.queries("sql13_tpch_q21")(spark, Sf001)
+    val got = df.collect().toSeq
+    // the final adaptive plan, query stages expanded
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan.treeString
+      case p => p.treeString
+    }
+    assert(plan.contains("BroadcastHashJoin") &&
+      !plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
+      "orders(F) no longer broadcasts at sf0.01:\n" + plan.take(3000))
+    assert("BroadcastQueryStage|BroadcastExchange".r
+      .findAllMatchIn(plan).size >= 2, plan.take(3000))
+    // the oracle text is ANSI SQL and runs unchanged on Spark (sql1's
+    // surface): same rows, same order
+    val want = spark.sql(SparkEntry.oracleSql("sql13_tpch_q21")).collect().toSeq
+    assert(got.nonEmpty)
+    assert(got === want)
+  }
+
   test("q6: predicates pushed to the scan, no unneeded columns read") {
     val plan = planString("q6_forecast_revenue")
     assert(plan.contains("PushedFilters:"), plan.take(800))

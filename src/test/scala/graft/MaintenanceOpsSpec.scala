@@ -218,7 +218,7 @@ class MaintenanceOpsSpec extends SparkSpec {
     import graft.sources.Snapshots
     // scratch store (never touch the landed s19 layout): manifests are
     // plain file lists, so the protocol is testable without parquet
-    val dir = graft.util.Landing.tempDirOnce("graft_occspec").toString
+    val dir = graft.util.Artifacts.scratchDir("graft_occspec").toString
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
       "fileA\nfileB".getBytes("UTF-8"))
@@ -265,7 +265,7 @@ class MaintenanceOpsSpec extends SparkSpec {
     // real thread interleavings (not the staged winner/loser above);
     // three trials vary the schedule
     for (trial <- 1 to 3) {
-      val dir = graft.util.Landing.tempDirOnce(s"graft_occrace$trial").toString
+      val dir = graft.util.Artifacts.scratchDir(s"graft_occrace$trial").toString
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
         (0 until 16).map(i => s"f$i").mkString("\n").getBytes("UTF-8"))
@@ -367,7 +367,7 @@ class MaintenanceOpsSpec extends SparkSpec {
     */
   private def buildMergeStore(tag: String, n: Int = 40,
       nations: Int = 4): String = {
-    val dir = graft.util.Landing.tempDirOnce(tag).toString
+    val dir = graft.util.Artifacts.scratchDir(tag).toString
     import spark.implicits._
     (0 until n).map(k => (k.toLong, k % nations, k.toLong * 10L))
       .toDF("k", "nkd", "bal")
@@ -561,7 +561,7 @@ class MaintenanceOpsSpec extends SparkSpec {
       "the store converges to the exact batch answer") {
     import graft.sources.Snapshots
     import graft.streaming.StreamMerge
-    val out = graft.util.Landing.tempDirOnce("graft_streamrace").toString
+    val out = graft.util.Artifacts.scratchDir("graft_streamrace").toString
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val compactions = new java.util.concurrent.atomic.AtomicInteger(0)
     val streamer = new Thread(() => {
@@ -795,7 +795,7 @@ class MaintenanceOpsSpec extends SparkSpec {
       "parked and invisible") {
     import graft.sources.{Branches, Snapshots}
     import spark.implicits._
-    val dir = graft.util.Landing.tempDirOnce("graft_branchspec").toString
+    val dir = graft.util.Artifacts.scratchDir("graft_branchspec").toString
     val base = (0 until 40).map(k => (k.toLong, k % 4, k.toLong * 10L))
       .toDF("k", "nkd", "bal").withColumn("nk", col("nkd"))
     base.repartition(col("nk"))
@@ -962,7 +962,7 @@ class MaintenanceOpsSpec extends SparkSpec {
       "the pair flips atomically") {
     import graft.sources.TxnPair
     import spark.implicits._
-    val dir = graft.util.Landing.tempDirOnce("graft_txnpairspec").toString
+    val dir = graft.util.Artifacts.scratchDir("graft_txnpairspec").toString
     def land(sub: String, df: org.apache.spark.sql.DataFrame): Seq[String] = {
       df.write.mode("overwrite").parquet(s"$dir/$sub")
       TxnPair.leaves(s"$dir/$sub")
@@ -1012,7 +1012,7 @@ class MaintenanceOpsSpec extends SparkSpec {
       "superseding commit still lands") {
     import graft.sources.{Snapshots, TxnPair}
     import spark.implicits._
-    val dir = graft.util.Landing.tempDirOnce("graft_txnstale").toString
+    val dir = graft.util.Artifacts.scratchDir("graft_txnstale").toString
     def land(sub: String, df: org.apache.spark.sql.DataFrame): Seq[String] = {
       df.write.mode("overwrite").parquet(s"$dir/$sub")
       TxnPair.leaves(s"$dir/$sub")
@@ -1043,7 +1043,7 @@ class MaintenanceOpsSpec extends SparkSpec {
       "against the NEW head and publishes the next slot") {
     import graft.sources.{Snapshots, WriteAuditPublish => WAP}
     import spark.implicits._
-    val dir = graft.util.Landing.tempDirOnce("graft_wapclaim").toString
+    val dir = graft.util.Artifacts.scratchDir("graft_wapclaim").toString
     val base = (0 until 20).map(k => (k.toLong, k % 4, k.toLong * 10L))
       .toDF("k", "nkd", "bal").withColumn("nk", col("nkd"))
     base.repartition(col("nk"))
@@ -1484,7 +1484,7 @@ class MaintenanceOpsSpec extends SparkSpec {
     val store = StreamMerge.e28Dir(spark, Sf0001)
     val h = Snapshots.head(store)
     assert(h === 5, s"merge store must hold 5 versions, got $h")
-    val root = graft.util.Landing.tempDirOnce("graft_mv4spec").toString
+    val root = graft.util.Artifacts.scratchDir("graft_mv4spec").toString
     val feed = s"$root/feed"
     val mv = s"$root/mv"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(feed))
@@ -1568,7 +1568,7 @@ class MaintenanceOpsSpec extends SparkSpec {
     import spark.implicits._
     // scratch store (the s19 claim-race discipline — never mutate the
     // landed e27 layout other specs and the registered query serve from)
-    val scratch = graft.util.Landing.tempDirOnce("graft_txnspec").toString
+    val scratch = graft.util.Artifacts.scratchDir("graft_txnspec").toString
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$scratch/manifest_1.txt"),
       Array.emptyByteArray)
@@ -1838,7 +1838,7 @@ class MaintenanceOpsSpec extends SparkSpec {
     import graft.sources.{Snapshots, TxnDeletes}
     import spark.implicits._
     // scratch store: one bucket (nk=1), two rows
-    val dir = graft.util.Landing.tempDirOnce("graft_delorder").toString
+    val dir = graft.util.Artifacts.scratchDir("graft_delorder").toString
     Seq((1L, 1, 100L, 1), (2L, 1, 200L, 1)).toDF("k", "nkd", "bal", "nk")
       .repartition(col("nk"))
       .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
@@ -1883,7 +1883,7 @@ class MaintenanceOpsSpec extends SparkSpec {
     import graft.sources.{Snapshots, TxnDeletes}
     import spark.implicits._
     for (trial <- 1 to 2) {
-      val dir = graft.util.Landing.tempDirOnce(s"graft_delrace$trial").toString
+      val dir = graft.util.Artifacts.scratchDir(s"graft_delrace$trial").toString
       Seq((1L, 1, 100L, 1), (2L, 1, 200L, 1), (3L, 2, 300L, 2))
         .toDF("k", "nkd", "bal", "nk")
         .repartition(col("nk"))
@@ -1980,7 +1980,7 @@ class MaintenanceOpsSpec extends SparkSpec {
     import graft.sources.{ManifestTree => MT, Snapshots}
     import spark.implicits._
     for (trial <- 1 to 2) {
-      val dir = graft.util.Landing.tempDirOnce(s"graft_treerace$trial").toString
+      val dir = graft.util.Artifacts.scratchDir(s"graft_treerace$trial").toString
       // real 3-bucket store: two files in bucket 1 (compactable)
       Seq((1L, 1, 100L, 1), (2L, 1, 200L, 1), (3L, 2, 300L, 2),
         (4L, 3, 400L, 3))
@@ -2098,7 +2098,7 @@ class MaintenanceOpsSpec extends SparkSpec {
       Seq("k", "nkd", "balance"))
     // scratch store for DROP + re-add: physical c1..c3, then drop c2,
     // then re-add a column named like the dropped one under id 4
-    val sdir = graft.util.Landing.tempDirOnce("graft_colids2").toString
+    val sdir = graft.util.Artifacts.scratchDir("graft_colids2").toString
     Seq((1L, 10L, 100L), (2L, 20L, 200L)).toDF("c1", "c2", "c3")
       .coalesce(1).write.parquet(s"$sdir/v1")
     val files = Option(new java.io.File(s"$sdir/v1").listFiles())
@@ -2240,7 +2240,7 @@ class MaintenanceOpsSpec extends SparkSpec {
     import graft.streaming.{ChangeFeedStream => CFS}
     import graft.sources.{Snapshots, TxnDeletes}
     val store = TxnDeletes.s38Dir(spark, Sf0001)
-    val root = graft.util.Landing.tempDirOnce("graft_mv6spec").toString
+    val root = graft.util.Artifacts.scratchDir("graft_mv6spec").toString
     val feed = s"$root/feed"
     val mv = s"$root/mv"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(feed))
@@ -2357,7 +2357,7 @@ class MaintenanceOpsSpec extends SparkSpec {
       "manifest entries are NOT treated as orphans (canonicalization " +
       "before the set difference)") {
     import graft.sources.Snapshots
-    val dir = graft.util.Landing.tempDirOnce("graft_orphanforms").toString
+    val dir = graft.util.Artifacts.scratchDir("graft_orphanforms").toString
     spark.range(3).selectExpr("id AS k").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/a")
     spark.range(3).selectExpr("id AS k").coalesce(1)
@@ -2390,7 +2390,7 @@ class MaintenanceOpsSpec extends SparkSpec {
       "conflict instead of silently rebasing past lost metadata") {
     import graft.sources.Snapshots
     // scratch store: v1, then an occ commit to v2 (replaces fileA)
-    val dir = graft.util.Landing.tempDirOnce("graft_occexpired").toString
+    val dir = graft.util.Artifacts.scratchDir("graft_occexpired").toString
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
       "fileA\nfileB".getBytes("UTF-8"))
@@ -2422,7 +2422,7 @@ class MaintenanceOpsSpec extends SparkSpec {
   test("s36: tableHistory tolerates bare-path (stats-less) manifest " +
       "entries — null row count, never an index error") {
     import graft.sources.Snapshots
-    val dir = graft.util.Landing.tempDirOnce("graft_histbare").toString
+    val dir = graft.util.Artifacts.scratchDir("graft_histbare").toString
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
       "/data/fileA|0|9|100|200|42\n/data/fileB".getBytes("UTF-8"))
@@ -2444,7 +2444,7 @@ class MaintenanceOpsSpec extends SparkSpec {
       "orphans are swept without touching the data-file counts") {
     import graft.sources.{Snapshots, WriteAuditPublish}
     import spark.implicits._
-    val dir = graft.util.Landing.tempDirOnce("graft_wapclean").toString
+    val dir = graft.util.Artifacts.scratchDir("graft_wapclean").toString
     Seq((1L, 10L), (2L, 20L)).toDF("k", "bal")
       .coalesce(1).write.parquet(s"$dir/v1")
     val m1 = Option(new java.io.File(s"$dir/v1").listFiles())
@@ -2513,7 +2513,7 @@ class MaintenanceOpsSpec extends SparkSpec {
       "tree read on an empty list fails with a clear message") {
     import graft.sources.{ManifestTree, Snapshots}
     import spark.implicits._
-    val dir = graft.util.Landing.tempDirOnce("graft_cdcempty").toString
+    val dir = graft.util.Artifacts.scratchDir("graft_cdcempty").toString
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$dir/manifest_0.txt"), Array.emptyByteArray)
     Seq((1L, 100L), (2L, 200L)).toDF("k", "bal")
@@ -2543,7 +2543,7 @@ class MaintenanceOpsSpec extends SparkSpec {
   /** One-bucket scratch delete store: v1 (k=1..2, nk=1) + manifest_1. */
   private def miniDeleteStore(tag: String): String = {
     import spark.implicits._
-    val dir = graft.util.Landing.tempDirOnce(tag).toString
+    val dir = graft.util.Artifacts.scratchDir(tag).toString
     Seq((1L, 1, 100L, 1), (2L, 1, 200L, 1), (3L, 2, 300L, 2))
       .toDF("k", "nkd", "bal", "nk")
       .repartition(col("nk"))
@@ -2704,7 +2704,7 @@ class MaintenanceOpsSpec extends SparkSpec {
     import graft.sources.{ColumnIds, Snapshots}
     import spark.implicits._
     for (trial <- 1 to 2) {
-      val dir = graft.util.Landing.tempDirOnce(s"graft_cmrace$trial").toString
+      val dir = graft.util.Artifacts.scratchDir(s"graft_cmrace$trial").toString
       Seq((1L, 10L)).toDF("c1", "c3").coalesce(1).write.parquet(s"$dir/v1")
       val files = Option(new java.io.File(s"$dir/v1").listFiles())
         .getOrElse(Array.empty)
@@ -2751,7 +2751,7 @@ class MaintenanceOpsSpec extends SparkSpec {
       "1995-06-01", "1995-12-31"))
     // end-to-end: a store with a date column, pruned on it
     import spark.implicits._
-    val dir = graft.util.Landing.tempDirOnce("graft_dateprune").toString
+    val dir = graft.util.Artifacts.scratchDir("graft_dateprune").toString
     def land(sub: String, rows: Seq[(Long, String)]): Unit =
       rows.toDF("k", "ds")
         .select(col("k"), col("ds").cast("date").as("d"))
@@ -2780,7 +2780,7 @@ class MaintenanceOpsSpec extends SparkSpec {
     */
   private def miniZStore(tag: String): String = {
     import spark.implicits._
-    val dir = graft.util.Landing.tempDirOnce(tag).toString
+    val dir = graft.util.Artifacts.scratchDir(tag).toString
     val rows = (1L to 50L).map(k =>
       (k, if (k <= 40) 1 else 2, k * 10L, if (k <= 40) 1 else 2))
     rows.toDF("k", "nkd", "bal", "nk")
@@ -2928,7 +2928,7 @@ class MaintenanceOpsSpec extends SparkSpec {
       "still resolves the dropped column") {
     import graft.sources.{ColumnIds, Snapshots}
     import spark.implicits._
-    val dir = graft.util.Landing.tempDirOnce("graft_reclaim").toString
+    val dir = graft.util.Artifacts.scratchDir("graft_reclaim").toString
     // f1 carries c2; f2 is already slim (written after a hypothetical
     // earlier reclaim) — the mixed-footer store reclaim must handle
     Seq((1L, 10L, 100L), (2L, 20L, 200L)).toDF("c1", "c2", "c3")
@@ -2982,7 +2982,7 @@ class MaintenanceOpsSpec extends SparkSpec {
     import graft.streaming.{ChangeFeedStream => CFS}
     import graft.sources.{Snapshots, TxnDeletes}
     val store = TxnDeletes.s38Dir(spark, Sf0001)
-    val root = graft.util.Landing.tempDirOnce("graft_cdc6spec").toString
+    val root = graft.util.Artifacts.scratchDir("graft_cdc6spec").toString
     val feed = s"$root/feed"
     val cdc = s"$root/cdc"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(feed))

@@ -167,7 +167,7 @@ class StreamSpec extends SparkSpec {
       spark.createDataFrame(rows.map { case (id, ts) =>
         (id, ts, 1L, "click", 1.0, "{}")
       }).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val staged = graft.util.Landing.tempDirOnce("graft_e25_boundary")
+    val staged = graft.util.Artifacts.scratchDir("graft_e25_boundary")
     val t0 = System.currentTimeMillis()
     // batch 0: the anchor event at T (watermark will be T − 1h)
     EventStream.stageOneFile(frame(1L -> T), staged, "a.parquet",

@@ -34,13 +34,14 @@ object ScaleSweep {
     Seq("documents", "embeddings", "lineitem", "part", "events")
 
   private def build(s: SparkSession): Unit = {
-    // Staleness guard: the stamp records the source mtime at build
+    // Staleness guard: the stamp records the source stamps at build
     // completion, so both a half-built dir (no stamp — the stamp is the
     // LAST write) and a dir built from since-regenerated testdata (the
     // driver rewrites /root/testdata between rounds) trigger a rebuild
     // instead of silently serving stale ratios.
     val stamp = new java.io.File(s"$Out/_source_mtime")
-    val cur = graft.util.Landing.sourceMtime(Src, SrcTables).toString
+    val cur = SrcTables
+      .map(t => graft.util.Artifacts.stamp(graft.Tables.path(Src, t))).mkString(",")
     if (stamp.exists() &&
         new java.io.File(s"$OutFlip/embeddings.parquet").exists() && {
           val src = scala.io.Source.fromFile(stamp)
