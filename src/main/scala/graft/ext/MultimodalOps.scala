@@ -35,14 +35,28 @@ object MultimodalOps {
     * overhead — and with 32 concurrent decode tasks the per-call temp-file
     * create/delete serializes on the filesystem (guide §1.2 per-task work;
     * the r18 verdict's mm decode fan-out regression). Memory-cached
-    * streams decode the same bytes to the same rasters; JVM-global, set
-    * once in the object initializer — every ImageIO call site lives in
-    * this object, so any JVM (driver or executor) flips the flag before
-    * its first decode.
+    * streams decode the same bytes to the same rasters. The flag is
+    * JVM-global and any other ImageIO user may flip it back, so
+    * [[readImage]] and [[pngBytes]], the only ImageIO call sites, clear it
+    * on every call.
     */
   private[ext] def imageIoNoDiskCache(): Unit =
     if (ImageIO.getUseCache) ImageIO.setUseCache(false)
-  imageIoNoDiskCache()
+
+  /** ImageIO decode of in-memory bytes; null when undecodable. */
+  private def readImage(payload: Array[Byte]): java.awt.image.BufferedImage = {
+    imageIoNoDiskCache()
+    try ImageIO.read(new ByteArrayInputStream(payload))
+    catch { case _: Exception => null }
+  }
+
+  /** PNG encoding of `img` by the JDK's writer. */
+  private def pngBytes(img: java.awt.image.BufferedImage): Array[Byte] = {
+    imageIoNoDiskCache()
+    val bos = new java.io.ByteArrayOutputStream()
+    ImageIO.write(img, "png", bos)
+    bos.toByteArray
+  }
 
   val FeatureDim = 8
 
@@ -83,9 +97,7 @@ object MultimodalOps {
     * decoded pixels. Returns null on undecodable bytes.
     */
   private def decodeImage(payload: Array[Byte]): Array[Float] = {
-    val img =
-      try ImageIO.read(new ByteArrayInputStream(payload))
-      catch { case _: Exception => null }
+    val img = readImage(payload)
     if (img == null) return null
     val (w, h) = (img.getWidth, img.getHeight)
     val bands = img.getRaster.getNumBands
@@ -215,9 +227,7 @@ object MultimodalOps {
       }
       y += 1
     }
-    val bos = new java.io.ByteArrayOutputStream()
-    ImageIO.write(img, "png", bos)
-    bos.toByteArray
+    pngBytes(img)
   }
 
   /** Synthesize a real WAV file: 44-byte RIFF/fmt/data header + PCM16
@@ -402,9 +412,7 @@ object MultimodalOps {
     if (payload == null || payload.isEmpty)
       return (0, 0, 0, new Array[Int](cells))
     if (isPng(payload)) {
-      val img =
-        try ImageIO.read(new ByteArrayInputStream(payload))
-        catch { case _: Exception => null }
+      val img = readImage(payload)
       if (img != null) {
         val w = img.getWidth; val h = img.getHeight
         val grid = new Array[Int](cells)
@@ -554,9 +562,7 @@ object MultimodalOps {
       y += 1
     }
     img.setRGB((member % w).toInt, (member % h).toInt, 0xffffff)
-    val bos = new java.io.ByteArrayOutputStream()
-    ImageIO.write(img, "png", bos)
-    bos.toByteArray
+    pngBytes(img)
   }
 
   /** Media table with PLANTED near-dup families: consecutive doc_ids in
@@ -743,9 +749,7 @@ object MultimodalOps {
     val (c1, c2) = (img.getRGB(x1, y1), img.getRGB(x2, y2))
     img.setRGB(x1, y1, c2)
     img.setRGB(x2, y2, c1)
-    val bos = new java.io.ByteArrayOutputStream()
-    ImageIO.write(img, "png", bos)
-    bos.toByteArray
+    pngBytes(img)
   }
 
   /** Synthetic "videos": per doc a [[Mm6Frames]]-frame PNG sequence where

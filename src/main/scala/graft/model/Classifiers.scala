@@ -85,25 +85,49 @@ object Classifiers {
     * own-storage-identity fix AND amortizes it: concurrent callers of
     * one key share a single build, and nothing ever unpersists.
     *
-    * Train is coalesced to 8 BEFORE checkpointing: the stroke parity
-    * surface is driver-scale (~5k rows) and every LR/SVC fit iteration
-    * otherwise launches one task per shuffle partition (~160 rows each).
-    * Membership of the seeded split is decided before the coalesce, so
-    * models stay within the golden AUC ranges. The two halves come from
-    * two randomSplit calls with the same seed over the same cached frame
-    * — per-partition seeded sampling makes them exact complements, same
-    * as destructuring one call.
+    * Each half is coalesced BEFORE it is checkpointed to
+    * `max(1, ceil(bytes / FitPartitionBytes))` partitions, bytes being its
+    * weight's share of `prepared`'s stored checkpoint bytes, read inside
+    * the build ([[fitPartitions]]). Every loss evaluation of
+    * LogisticRegression and LinearSVC is a `treeAggregate` whose final
+    * merge runs on an executor, so on a multi-partition input each
+    * optimizer iteration is a map stage plus a reduce stage; on one
+    * partition it is one single-task stage. Partitions stay at 64 MB, so
+    * a large input still fits in parallel. Membership of the seeded split
+    * is decided before the coalesce, so the rows are exactly the
+    * destructured split's; the coalesce does reorder the optimizer's loss
+    * sums, so on ill-conditioned data a fit can move by about 1e-6 in its
+    * coefficients (FitLayoutSpec pins 1e-9 on well-conditioned data). The two
+    * halves come from two randomSplit calls with the same seed over the
+    * same frame — per-partition seeded sampling makes them exact
+    * complements, same as destructuring one call.
     */
   def split7030(prepared: DataFrame, seed: Long): (DataFrame, DataFrame) = {
+    val weights = Array(0.7, 0.3)
     // an in-place CSV rewrite changes the key's version and re-lands the
     // split instead of serving stale halves
-    def half(i: Int)(make: => DataFrame) = Artifacts.frame(
-      prepared.sparkSession,
-      Artifacts.key("split7030", prepared, seed, i))(make)
-    val train = half(0)(
-      prepared.randomSplit(Array(0.7, 0.3), seed)(0).coalesce(8))
-    val test = half(1)(prepared.randomSplit(Array(0.7, 0.3), seed)(1))
-    (train, test)
+    def half(i: Int) = Artifacts.frame(prepared.sparkSession,
+        Artifacts.key("split7030", prepared, seed, i)) {
+      val raw = prepared.randomSplit(weights, seed)(i)
+      val bytes = (Artifacts.bytesOf(prepared) * weights(i)).toLong
+      fitPartitions(bytes, prepared.rdd.getNumPartitions)
+        .fold(raw)(raw.coalesce)
+    }
+    (half(0), half(1))
+  }
+
+  /** Target stored bytes per partition of a spark.ml fit input. */
+  private[graft] val FitPartitionBytes: Long = 64L << 20
+
+  /** Partition count for a fit input of `bytes` stored bytes now laid out
+    * in `partitions` partitions: one per [[FitPartitionBytes]], at least
+    * 1. Some only when that is fewer than `partitions`: the rule only
+    * coalesces, and an input with no stored bytes (not a checkpoint) keeps
+    * its layout.
+    */
+  private[graft] def fitPartitions(bytes: Long, partitions: Int): Option[Int] = {
+    val n = math.max(1L, math.ceil(bytes.toDouble / FitPartitionBytes).toLong)
+    if (bytes > 0 && n < partitions) Some(n.toInt) else None
   }
 
   /** 70/30 split path (stroke_predict.py:148-173): fit on train, score

@@ -180,19 +180,22 @@ object Artifacts {
       val landed = make.localCheckpoint(true)
       if (landed.limit((FrameRowCap + 1).toInt).count() > FrameRowCap)
         entries.remove(k, e)
-      else e.bytes = storedBytes(landed)
+      else e.bytes = bytesOf(landed)
       landed
     }
   }
 
-  private def storedBytes(df: DataFrame): Long = {
-    import org.apache.spark.sql.execution.LogicalRDD
-    val ids = df.queryExecution.analyzed.collect {
-      case l: LogicalRDD => l.rdd.id
-    }.toSet
-    df.sparkSession.sparkContext.getRDDStorageInfo
-      .filter(i => ids(i.id)).map(i => i.memSize + i.diskSize).sum
-  }
+  /** Storage bytes (memory plus disk) of a checkpointed frame, one whose
+    * plan is a single checkpointed RDD; 0 for any other plan. Read from
+    * the block manager's accounting, so it runs no Spark job.
+    */
+  private[graft] def bytesOf(df: DataFrame): Long =
+    df.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        df.sparkSession.sparkContext.getRDDStorageInfo
+          .filter(_.id == l.rdd.id).map(i => i.memSize + i.diskSize).sum
+      case _ => 0L
+    }
 
   /** An on-disk layout: `make` writes into a fresh scratch directory,
     * once per key; the directory is deleted when its entry is evicted.

@@ -300,36 +300,11 @@ class ArtifactsSpec extends SparkSpec {
     } finally deleteTree(tmp)
   }
 
-  /** A stroke-shaped CSV (the reference's 12 columns, every category
-    * level present) for the split contract — the contract is about
-    * partitioning, not the reference's values.
-    */
-  private def strokeCsv(dir: Path, rows: Int): String = {
-    val genders = Seq("Male", "Female", "Other")
-    val works = Seq("Private", "Self-employed", "Govt_job", "children",
-      "Never_worked")
-    val smoke = Seq("formerly smoked", "never smoked", "smokes", "Unknown")
-    val lines = (0 until rows).map { i =>
-      val bmi = if (i % 25 == 0) "N/A" else f"${18.0 + (i * 7 % 230) / 10.0}%.1f"
-      Seq(i.toString, genders(i % 3), (1 + i * 13 % 82).toString,
-        (i % 7 % 2).toString, (i % 11 % 2).toString,
-        if (i % 3 == 0) "No" else "Yes", works(i % 5),
-        if (i % 2 == 0) "Urban" else "Rural",
-        f"${55.0 + (i * 31 % 2000) / 10.0}%.2f", bmi, smoke(i % 4),
-        (if (i % 9 == 0) 1 else 0).toString).mkString(",")
-    }
-    val f = dir.resolve("stroke.csv")
-    val header = "id,gender,age,hypertension,heart_disease,ever_married," +
-      "work_type,Residence_type,avg_glucose_level,bmi,smoking_status,stroke"
-    Files.writeString(f, (header +: lines).mkString("\n") + "\n")
-    f.toString
-  }
-
   test("split7030: halves are an exact disjoint partition of prepared, " +
       "identical to one destructured randomSplit call") {
     val tmp = Files.createTempDirectory("graft_split")
     try {
-      val prepared = StrokePipeline.prepare(spark, strokeCsv(tmp, 400))
+      val prepared = StrokePipeline.prepare(spark, StrokeCsv.write(tmp, 400))
       val (train, test) = Classifiers.split7030(prepared, 42L)
       val (train2, test2) = Classifiers.split7030(prepared, 42L)
       assert(train eq train2, "split must be landed, not re-derived")

@@ -53,6 +53,18 @@ class MultimodalSpec extends SparkSpec {
     assert(math.abs(f(7) - 127.5f) < 1e-3f)
   }
 
+  test("every decode turns ImageIO's disk stream cache off again, even " +
+      "after another ImageIO user turned it on") {
+    val png = pngOf(Array(Array(0x102030)))
+    val was = javax.imageio.ImageIO.getUseCache
+    try {
+      javax.imageio.ImageIO.setUseCache(true)
+      assert(MultimodalOps.decodeFeatures(png)(0) === 1f)
+      assert(!javax.imageio.ImageIO.getUseCache,
+        "decode ran with ImageIO's disk cache on")
+    } finally javax.imageio.ImageIO.setUseCache(was)
+  }
+
   test("WAV decode parses the real header and computes RMS from samples") {
     val f = MultimodalOps.decodeFeatures(
       wavOf(Array[Short](16384, -16384, 16384, -16384)))
