@@ -1274,7 +1274,7 @@ object DedupOps {
       val ckpt = Artifacts.scratchDir("graft_ndstrm_ckpt")
       d15Incoming(s, d).repartition(3)
         .write.mode("overwrite").parquet(stage.toString)
-      val schema = s.read.parquet(stage.toString).schema
+      val schema = Artifacts.parquetSchema(s, stage.toString)
       val q = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(stage.toString)
@@ -1292,7 +1292,7 @@ object DedupOps {
     }
 
   private def e21StreamNeardup(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(e21ResultDir(s, d))
+    Artifacts.parquet(s, e21ResultDir(s, d))
       .select(col("q_id"), col("match_id"), col("est_jaccard"))
       .distinct()
       .orderBy(col("q_id"), col("match_id"))

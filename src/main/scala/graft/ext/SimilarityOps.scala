@@ -1917,7 +1917,7 @@ object SimilarityOps {
       val stage = Artifacts.scratchDir("graft_knngstrm_stage")
       val ckpt = Artifacts.scratchDir("graft_knngstrm_ckpt")
       delta.repartition(3).write.mode("overwrite").parquet(stage.toString)
-      val schema = s.read.parquet(stage.toString).schema
+      val schema = Artifacts.parquetSchema(s, stage.toString)
       val q = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(stage.toString)
@@ -2505,7 +2505,7 @@ object SimilarityOps {
       val stage = Artifacts.scratchDir("graft_ivfstrm_stage")
       val ckpt = Artifacts.scratchDir("graft_ivfstrm_ckpt")
       delta.repartition(3).write.mode("overwrite").parquet(stage.toString)
-      val schema = s.read.parquet(stage.toString).schema
+      val schema = Artifacts.parquetSchema(s, stage.toString)
       val q = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(stage.toString)

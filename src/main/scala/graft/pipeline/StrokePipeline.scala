@@ -15,8 +15,8 @@ import graft.util.Artifacts
   *    string column via numeric coercion — i.e. mean of non-sentinel values
   *    (stroke_predict.py:46-53, SURVEY.md §2.7d)
   *  - drop `id` (stroke_predict.py:44)
-  *  - StringIndexer(handleInvalid=keep) + OneHotEncoder per string column,
-  *    swapped in place (stroke_predict.py:58-87)
+  *  - StringIndexer(handleInvalid=keep) + OneHotEncoder over the string
+  *    columns, swapped in place (stroke_predict.py:58-87)
   *  - VectorAssembler over the fixed feature list (stroke_predict.py:127-133)
   */
 object StrokePipeline {
@@ -56,48 +56,29 @@ object StrokePipeline {
 
   final case class Encoded(df: DataFrame, mappings: Map[String, Map[String, Double]])
 
-  /** ML1–ML4: per string column StringIndexer(keep) + OneHotEncoder
-    * (dropLast default), then swap the encoded vector in place of the
-    * original column. Mappings come from StringIndexerModel.labelsArray —
-    * not distinct().collect() (SURVEY.md §2.7e).
+  /** ML1–ML4: StringIndexer(keep) + OneHotEncoder (dropLast default) over
+    * every string column, then swap each encoded vector in place of the
+    * original column. One multi-column indexer counts every column's
+    * labels in one pass, and the encoder sizes its vectors from the
+    * indexer's ML attributes, so the fit runs one job whatever the column
+    * count. Mappings come from StringIndexerModel.labelsArray — not
+    * distinct().collect() (SURVEY.md §2.7e).
     */
   def encode(df: DataFrame): Encoded = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
     val cols = stringCols(df)
-    // Every per-column fit is an independent tiny job; run each layer's
-    // fits as concurrent job submissions (the CrossValidator-parallelism
-    // pattern) instead of Pipeline.fit's sequential stage loop — identical
-    // models, wall time ≈ max(fit) per layer. df is cached for the fits so
-    // ingestion+cleaning run once.
-    df.cache()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val (indexers, ohes) =
-      try {
-        val idx = Await.result(Future.sequence(cols.map { c =>
-          Future(new StringIndexer().setInputCol(c).setOutputCol(c + "_index")
-            .setHandleInvalid("keep").fit(df))
-        }), Duration.Inf)
-        val indexed = idx.foldLeft(df)((acc, m) => m.transform(acc))
-        val oh = Await.result(Future.sequence(cols.map { c =>
-          Future(new OneHotEncoder().setInputCol(c + "_index")
-            .setOutputCol(c + "_encoded").fit(indexed))
-        }), Duration.Inf)
-        (idx, oh)
-      } finally { pool.shutdown(); df.unpersist() }
-    // ML3: the user-facing artifact is still a PipelineModel — fitting a
-    // Pipeline of already-fitted transformers wires them up without jobs.
-    val model = new Pipeline()
-      .setStages((indexers ++ ohes).toArray[org.apache.spark.ml.PipelineStage])
+    val model = new Pipeline().setStages(Array(
+      new StringIndexer().setInputCols(cols.toArray)
+        .setOutputCols(cols.map(_ + "_index").toArray)
+        .setHandleInvalid("keep"),
+      new OneHotEncoder().setInputCols(cols.map(_ + "_index").toArray)
+        .setOutputCols(cols.map(_ + "_encoded").toArray)))
       .fit(df)
-    val transformed = model.transform(df)
-    val mappings = model.stages.collect {
-      case m: StringIndexerModel =>
-        m.getInputCol -> m.labelsArray.head.zipWithIndex
-          .map { case (l, i) => l -> i.toDouble }.toMap
+    val indexer = model.stages.collectFirst { case m: StringIndexerModel => m }.get
+    val mappings = indexer.getInputCols.zip(indexer.labelsArray).map {
+      case (c, labels) =>
+        c -> labels.zipWithIndex.map { case (l, i) => l -> i.toDouble }.toMap
     }.toMap
-    val swapped = cols.foldLeft(transformed) { (acc, c) =>
+    val swapped = cols.foldLeft(model.transform(df)) { (acc, c) =>
       acc.drop(c, c + "_index").withColumnRenamed(c + "_encoded", c)
     }
     Encoded(swapped, mappings)

@@ -244,7 +244,7 @@ object AsOfJoin {
         .select(col("user_id"), col("event_id"), col("ts"))
         .repartition(3)
         .write.mode("overwrite").parquet(stage.toString)
-      val schema = s.read.parquet(stage.toString).schema
+      val schema = Artifacts.parquetSchema(s, stage.toString)
       val q = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(stage.toString)
@@ -262,7 +262,7 @@ object AsOfJoin {
     }
 
   private def e24StreamPit(s: SparkSession, d: String): DataFrame =
-    pitAggregate(s.read.parquet(e24ResultDir(s, d))
+    pitAggregate(Artifacts.parquet(s, e24ResultDir(s, d))
       .select(col("user_id"), col("event_id"), col("ver_cents")))
 
   val qs: Seq[(String, Q)] = Seq(

@@ -346,27 +346,51 @@ object CoreOps {
       |) ORDER BY c_custkey, kind""".stripMargin
 
   // ---- SQL1: the SQL surface itself --------------------------------------
-  // Registers the testdata tables as views and executes the *exact DuckDB
-  // oracle text* through spark.sql — the flagship query expressed in ANSI
-  // SQL runs unchanged on both engines.
-  // Once per (session, dir version): the views are session-global and the
-  // Tables frames are stable, so re-registering ten views per query build
-  // is pure waste. The dir is the version, not the family: a session
-  // holds one set of views, so switching dirs must re-register.
-  private[graft] def registerViews(s: SparkSession, d: String): Unit = {
-    val paths = Tables.names.map(Tables.path(d, _))
-    Artifacts.value(Artifacts.Key("views", Seq(s),
-        Nil, (d, paths.map(Artifacts.stamp)))) {
-      Tables.names.filterNot(_ == "events")
-        .foreach(n => Tables.t(s, d, n).createOrReplaceTempView(n))
-      Tables.events(s, d).createOrReplaceTempView("events")
-    }
+  // Executes the *exact DuckDB oracle text* through spark.sql — the
+  // flagship query expressed in ANSI SQL runs unchanged on both engines.
+
+  /** Runs `text` on `s` with the [[Tables]] it names bound as views of `d`. */
+  private[graft] def sql(s: SparkSession, d: String, text: String): DataFrame = {
+    registerViews(s, d, text)
+    s.sql(text)
   }
 
-  private def sql1TpchQ1(s: SparkSession, d: String): DataFrame = {
-    registerViews(s, d)
-    s.sql(q1Sql)
+  /** Binds, as temp views of `s`, the [[Tables.names]] that `text`
+    * references, subquery and CTE bodies included, and no others: a view
+    * costs a file listing and a footer read to bind. Each view is an
+    * artifact of family (view, session, name) and version (dir, stamp),
+    * so it is rebound when a query names it over another dir (a session
+    * holds one view per name) or when the file changes.
+    */
+  private[graft] def registerViews(s: SparkSession, d: String,
+      text: String): Unit =
+    referencedTables(s, text).foreach { n =>
+      Artifacts.value(Artifacts.Key("view", Seq(s, n), Nil,
+          (d, Artifacts.stamp(Tables.path(d, n))))) {
+        val df = if (n == "events") Tables.events(s, d) else Tables.t(s, d, n)
+        df.createOrReplaceTempView(n)
+      }
+    }
+
+  /** The [[Tables.names]] that `text` reads as unqualified relations,
+    * matched case-insensitively, from the session parser's plan. */
+  private[graft] def referencedTables(s: SparkSession,
+      text: String): Seq[String] = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    def names(p: LogicalPlan): Seq[String] = (p match {
+      case r: UnresolvedRelation if r.multipartIdentifier.size == 1 =>
+        r.multipartIdentifier
+      case _ => Nil
+    }) ++ (p.children ++ p.subqueries ++
+      p.innerChildren.collect { case c: LogicalPlan => c }).flatMap(names)
+    val named = names(s.sessionState.sqlParser.parsePlan(text))
+      .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
+    Tables.names.filter(named)
   }
+
+  private def sql1TpchQ1(s: SparkSession, d: String): DataFrame =
+    sql(s, d, q1Sql)
 
   /** SQL2: the snowflake join (j2's Q5 shape) through the same raw-SQL
     * surface — the exact DuckDB oracle text, joins and decimal revenue
@@ -375,10 +399,8 @@ object CoreOps {
     * estimation does it), which is the point: ANSI text in, the same
     * plan quality as the DataFrame form out.
     */
-  private def sql2TpchQ5(s: SparkSession, d: String): DataFrame = {
-    registerViews(s, d)
-    s.sql(j2Sql)
-  }
+  private def sql2TpchQ5(s: SparkSession, d: String): DataFrame =
+    sql(s, d, j2Sql)
 
   /** SQL3: the shipping-priority shape (TPC-H Q3) — a 3-way
     * fact-to-fact-to-dim join with filters on all three tables, a grouped
@@ -397,10 +419,8 @@ object CoreOps {
     * top-10 is TakeOrderedAndProject — per-partition heaps + a 10-row
     * merge, never a global sort of the grouped revenue.
     */
-  private def sql3TpchQ3(s: SparkSession, d: String): DataFrame = {
-    registerViews(s, d)
-    s.sql(q3Sql)
-  }
+  private def sql3TpchQ3(s: SparkSession, d: String): DataFrame =
+    sql(s, d, q3Sql)
 
   /** SQL4: TPC-H Q18 (large-volume customers) — top-k over a
     * HAVING-filtered aggregate feeding a semi-join back into a 3-way
@@ -417,10 +437,8 @@ object CoreOps {
     * falls back to a shuffled semi-join beyond — no plan rewrite needed
     * at 100 TB. The final LIMIT rides TakeOrderedAndProject.
     */
-  private def sql4TpchQ18(s: SparkSession, d: String): DataFrame = {
-    registerViews(s, d)
-    s.sql(q18Sql)
-  }
+  private def sql4TpchQ18(s: SparkSession, d: String): DataFrame =
+    sql(s, d, q18Sql)
 
   private val q18Sql =
     """SELECT c_name, c_custkey, o_orderkey,
@@ -445,10 +463,8 @@ object CoreOps {
     * on s_suppkey; the supplier×nation dim join broadcasts. Quantity
     * sums are integral-double exact as in SQL4.
     */
-  private def sql5TpchQ20(s: SparkSession, d: String): DataFrame = {
-    registerViews(s, d)
-    s.sql(q20Sql)
-  }
+  private def sql5TpchQ20(s: SparkSession, d: String): DataFrame =
+    sql(s, d, q20Sql)
 
   private val q20Sql =
     """SELECT s_suppkey, s_name, s_acctbal
@@ -474,10 +490,8 @@ object CoreOps {
     * second aggregate's key space is tiny (distinct order counts), its
     * partial completes map-side.
     */
-  private def sql6TpchQ13(s: SparkSession, d: String): DataFrame = {
-    registerViews(s, d)
-    s.sql(q13Sql)
-  }
+  private def sql6TpchQ13(s: SparkSession, d: String): DataFrame =
+    sql(s, d, q13Sql)
 
   private val q13Sql =
     """SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
@@ -498,10 +512,8 @@ object CoreOps {
     * partition-order dependent and a boundary customer could flip
     * membership between engines.
     */
-  private def sql7TpchQ22(s: SparkSession, d: String): DataFrame = {
-    registerViews(s, d)
-    s.sql(q22Sql)
-  }
+  private def sql7TpchQ22(s: SparkSession, d: String): DataFrame =
+    sql(s, d, q22Sql)
 
   private val q22Sql =
     s"""SELECT CAST(c_nationkey % 10 AS INTEGER) AS cntrycode,
@@ -535,10 +547,8 @@ object CoreOps {
     * the brand filter reaches the part scan. Output is one row per
     * brand — final agg collapses map-side.
     */
-  private def sql8TpchQ17(s: SparkSession, d: String): DataFrame = {
-    registerViews(s, d)
-    s.sql(q17Sql)
-  }
+  private def sql8TpchQ17(s: SparkSession, d: String): DataFrame =
+    sql(s, d, q17Sql)
 
   private val q17Sql =
     s"""SELECT p_brand, CAST(count(*) AS BIGINT) AS n_small,
@@ -561,10 +571,8 @@ object CoreOps {
     * a two-phase plan: dedup (brand, size, suppkey) partials map-side,
     * then count per (brand, size).
     */
-  private def sql9TpchQ16(s: SparkSession, d: String): DataFrame = {
-    registerViews(s, d)
-    s.sql(q16Sql)
-  }
+  private def sql9TpchQ16(s: SparkSession, d: String): DataFrame =
+    sql(s, d, q16Sql)
 
   private val q16Sql =
     """SELECT p_brand, p_size,
@@ -587,10 +595,8 @@ object CoreOps {
     * broadcast of part (or shuffle on partkey), month grouping collapses
     * map-side (~tens of groups).
     */
-  private def sql10TpchQ14(s: SparkSession, d: String): DataFrame = {
-    registerViews(s, d)
-    s.sql(q14Sql)
-  }
+  private def sql10TpchQ14(s: SparkSession, d: String): DataFrame =
+    sql(s, d, q14Sql)
 
   private val q14Sql =
     s"""SELECT substr(CAST(l_shipdate AS VARCHAR(30)), 1, 7) AS ship_month,
@@ -614,10 +620,8 @@ object CoreOps {
     * residual filters from the OR's common factors. One decimal revenue
     * row out.
     */
-  private def sql11TpchQ19(s: SparkSession, d: String): DataFrame = {
-    registerViews(s, d)
-    s.sql(q19Sql)
-  }
+  private def sql11TpchQ19(s: SparkSession, d: String): DataFrame =
+    sql(s, d, q19Sql)
 
   private val q19Sql =
     s"""SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -639,10 +643,8 @@ object CoreOps {
     * executes per row; DuckDB plans the same semi-join. Counts per
     * priority collapse map-side.
     */
-  private def sql12TpchQ4(s: SparkSession, d: String): DataFrame = {
-    registerViews(s, d)
-    s.sql(q4Sql)
-  }
+  private def sql12TpchQ4(s: SparkSession, d: String): DataFrame =
+    sql(s, d, q4Sql)
 
   private val q4Sql =
     """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
@@ -689,11 +691,9 @@ object CoreOps {
     * (numwait DESC, s_name) totalizes the boundary.
     */
   private def sql13TpchQ21(s: SparkSession, d: String): DataFrame = {
-    registerViews(s, d)
-    import org.apache.spark.sql.functions._
-    val o = s.table("orders").filter(col("o_orderstatus") === "F")
+    val o = Tables.orders(s, d).filter(col("o_orderstatus") === "F")
       .select(col("o_orderkey"), col("o_orderdate"))
-    val lo = s.table("lineitem")
+    val lo = Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
       .join(o, col("l_orderkey") === col("o_orderkey"))
       .select(col("l_orderkey"), col("l_suppkey"),
@@ -708,8 +708,8 @@ object CoreOps {
         max(when(col("late_cnt") > 0, col("l_suppkey"))).as("late_suppkey"),
         max(when(col("late_cnt") > 0, col("late_cnt"))).as("late_cnt"))
       .filter(col("n_supp") >= 2 && col("n_late_supp") === 1)
-    val sn = s.table("supplier")
-      .join(s.table("nation"), col("s_nationkey") === col("n_nationkey"))
+    val sn = Tables.supplier(s, d)
+      .join(Tables.nation(s, d), col("s_nationkey") === col("n_nationkey"))
       .filter(col("n_name").isin("NATION_0", "NATION_1", "NATION_2",
         "NATION_3"))
       .select(col("s_suppkey"), col("s_name"))
@@ -757,10 +757,8 @@ object CoreOps {
     * materialize via localCheckpoint if the window ever widens to the
     * full fact.
     */
-  private def sql14TpchQ15(s: SparkSession, d: String): DataFrame = {
-    registerViews(s, d)
-    s.sql(q15Sql)
-  }
+  private def sql14TpchQ15(s: SparkSession, d: String): DataFrame =
+    sql(s, d, q15Sql)
 
   private val q15Sql =
     """WITH revenue AS (
@@ -857,10 +855,8 @@ object CoreOps {
     * top-20 is TakeOrderedAndProject over the grouped frame — no
     * global sort.
     */
-  private def sql16TpchQ10(s: SparkSession, d: String): DataFrame = {
-    registerViews(s, d)
-    s.sql(q10Sql)
-  }
+  private def sql16TpchQ10(s: SparkSession, d: String): DataFrame =
+    sql(s, d, q10Sql)
 
   private val q10Sql =
     s"""SELECT c_custkey, c_name,
@@ -888,10 +884,8 @@ object CoreOps {
     * (two longs per group), so the exchange carries 2 groups × 32
     * partial rows regardless of data size.
     */
-  private def sql17TpchQ12(s: SparkSession, d: String): DataFrame = {
-    registerViews(s, d)
-    s.sql(q12Sql)
-  }
+  private def sql17TpchQ12(s: SparkSession, d: String): DataFrame =
+    sql(s, d, q12Sql)
 
   private val q12Sql =
     """SELECT l_linestatus,
@@ -921,10 +915,8 @@ object CoreOps {
     * keys once each, and the group-by key space (nations² × years) is
     * tiny so partials complete map-side.
     */
-  private def sql18TpchQ7(s: SparkSession, d: String): DataFrame = {
-    registerViews(s, d)
-    s.sql(q7Sql)
-  }
+  private def sql18TpchQ7(s: SparkSession, d: String): DataFrame =
+    sql(s, d, q7Sql)
 
   private val q7Sql =
     s"""SELECT supp_nation, cust_nation, l_year,
@@ -958,10 +950,8 @@ object CoreOps {
     * p_type prunes part before its join; the ratio's group key space
     * is |years|, so everything after the joins is map-side.
     */
-  private def sql19TpchQ8(s: SparkSession, d: String): DataFrame = {
-    registerViews(s, d)
-    s.sql(q8Sql)
-  }
+  private def sql19TpchQ8(s: SparkSession, d: String): DataFrame =
+    sql(s, d, q8Sql)
 
   private val q8Sql =
     """SELECT o_year,
@@ -1000,10 +990,8 @@ object CoreOps {
     * shuffles once on orderkey for the orders join; group key space
     * (25 nations × 7 years) keeps aggregation map-side.
     */
-  private def sql20TpchQ9(s: SparkSession, d: String): DataFrame = {
-    registerViews(s, d)
-    s.sql(q9Sql)
-  }
+  private def sql20TpchQ9(s: SparkSession, d: String): DataFrame =
+    sql(s, d, q9Sql)
 
   private val q9Sql =
     """SELECT nation, o_year, CAST(SUM(amount) AS DOUBLE) AS sum_profit

@@ -102,11 +102,10 @@ object RangeJoin {
     * interval into millions of sequence rows.
     */
   private def af3RangeRule(s: SparkSession, d: String): DataFrame = {
-    graft.relational.CoreOps.registerViews(s, d)
     val key = graft.plans.RangeBinRule.WidthKey
     val prev = s.conf.getOption(key)
     s.conf.set(key, "8")
-    try s.sql(
+    try CoreOps.sql(s, d,
       """SELECT o.o_orderkey, CAST(COUNT(*) AS BIGINT) AS n_lines,
         |  SUM(l.qty) AS sum_qty
         |FROM (SELECT o_orderkey,

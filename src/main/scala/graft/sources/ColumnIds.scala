@@ -140,7 +140,7 @@ object ColumnIds {
       require(doomedCols.nonEmpty, s"nothing to reclaim at v$h")
       // replace only the files that physically carry a doomed column
       val replaced = files.filter { f =>
-        val cols = s.read.parquet(f).schema.fieldNames.toSet
+        val cols = Artifacts.parquetSchema(s, f).fieldNames.toSet
         doomedCols.exists(cols)
       }.toSet
       val keep = raw.columns.filterNot(doomedCols.contains)
@@ -191,7 +191,7 @@ object ColumnIds {
       val sep = java.io.File.separator
       val replaced = Snapshots.manifest(dir, 2)
         .filter(_.contains(s"${sep}nk=2$sep")).toSet
-      s.read.parquet(replaced.toSeq.sorted: _*)
+      Artifacts.parquet(s, replaced.toSeq.sorted: _*)
         .withColumn("c3", col("c3") + lit(100L))
         .withColumn("nk", col("c2"))
         .repartition(col("nk"))

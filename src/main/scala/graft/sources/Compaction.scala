@@ -59,7 +59,7 @@ object Compaction {
     require(targetBytes > 0, "targetBytes must be positive")
     val bytes = parquetFiles(inDir).map(_.length()).sum
     val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    s.read.parquet(inDir).repartition(n)
+    Artifacts.parquet(s, inDir).repartition(n)
       .write.mode("overwrite").parquet(outDir)
   }
 
@@ -74,7 +74,7 @@ object Compaction {
       // if compaction dropped or duplicated anything, these diverge from
       // the oracle's recompute over the raw table. The one result row is
       // fetched here so the compacted copy can be deleted before return.
-      val res = s.read.parquet(out)
+      val res = Artifacts.parquet(s, out)
         .agg(count(lit(1)).as("n_rows"), dsum(col("value")).as("sum_value"))
         .select(col("n_rows"), col("sum_value"),
           lit(before == FragmentFiles).as("was_fragmented"),

@@ -46,11 +46,11 @@ object DeletionVectors {
     */
   private[graft] def readMergeOnRead(s: SparkSession, dir: String,
       v: Int): DataFrame = {
-    val data = s.read.parquet(Snapshots.manifest(dir, v): _*)
+    val data = Artifacts.parquet(s, Snapshots.manifest(dir, v): _*)
     val dvs = deletesOf(dir, v)
     if (dvs.isEmpty) data
     else data.join(
-      broadcast(s.read.parquet(dvs: _*).select(col("k"))),
+      broadcast(Artifacts.parquet(s, dvs: _*).select(col("k"))),
       Seq("k"), "left_anti")
   }
 
@@ -94,7 +94,7 @@ object DeletionVectors {
       val replaced = m1.filter(p =>
         touched.exists(nk => p.contains(s"${sep}nk=$nk$sep")))
       if (replaced.nonEmpty) {
-        s.read.parquet(replaced: _*)
+        Artifacts.parquet(s, replaced: _*)
           .join(broadcast(doomed.select(col("k"))), Seq("k"), "left_anti")
           .select(col("k"), col("nkd"), col("bal"), col("nkd").as("nk"))
           .repartition(col("nk"))

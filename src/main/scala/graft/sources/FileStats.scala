@@ -54,7 +54,7 @@ object FileStats {
         .write.mode("overwrite").parquet(s"$dir/data")
       // commit-time stats: one aggregate pass over the landed files
       // (≤ S23Files result rows — bounded driver collect)
-      val lines = s.read.parquet(s"$dir/data")
+      val lines = Artifacts.parquet(s, s"$dir/data")
         .groupBy(input_file_name().as("f"))
         .agg(min(col("od")).as("lo"), max(col("od")).as("hi"),
           count(lit(1)).as("n"))
@@ -92,8 +92,8 @@ object FileStats {
     // the table schema (round-15 advice: zero paths would throw
     // UNABLE_TO_INFER_SCHEMA) — one known file, constant-false filter
     val df =
-      if (kept.nonEmpty) s.read.parquet(kept.map(_._1): _*)
-      else s.read.parquet(st.head._1).filter(lit(false))
+      if (kept.nonEmpty) Artifacts.parquet(s, kept.map(_._1): _*)
+      else Artifacts.parquet(s, st.head._1).filter(lit(false))
     (df, kept.size, st.size)
   }
 

@@ -58,7 +58,7 @@ object IncrementalRollup {
       deltaPlan.contains("GreaterThanOrEqual(l_shipdate"),
       "delta date bound was not pushed to the fact scan:\n" +
         deltaPlan.take(2000))
-    s.read.parquet(basePath).unionByName(delta)
+    Artifacts.parquet(s, basePath).unionByName(delta)
       // days are disjoint across base/delta, but re-aggregate anyway —
       // the decimal sums make it exact, and it keeps the op correct if
       // the split ever lands mid-day
@@ -153,7 +153,7 @@ object IncrementalRollup {
         Artifacts.withScratchDir("graft_skstrm_ckpt") { ckpt =>
           ev.filter(to_date(col("ts")) >= split).repartition(3)
             .write.mode("overwrite").parquet(stage.toString)
-          val schema = s.read.parquet(stage.toString).schema
+          val schema = Artifacts.parquetSchema(s, stage.toString)
           val q = s.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(stage.toString)
@@ -175,7 +175,7 @@ object IncrementalRollup {
     * oracle SQL gates it verbatim (the t18/e21 reuse discipline).
     */
   private def e22StreamSketch(s: SparkSession, d: String): DataFrame = {
-    val daily = s.read.parquet(e22SketchDir(s, d))
+    val daily = Artifacts.parquet(s, e22SketchDir(s, d))
     val weekOf = (c: org.apache.spark.sql.Column) =>
       date_format(date_trunc("week", c), "yyyy-MM-dd")
     val est = daily

@@ -51,7 +51,7 @@ object JsonAndSinks {
     val out = sinkDir(d)
     Tables.documents(s, d)
       .write.mode("overwrite").partitionBy("lang").parquet(out)
-    s.read.parquet(out)
+    Artifacts.parquet(s, out)
       .groupBy(col("lang")).agg(count(lit(1)).as("n"))
       .orderBy(col("lang"))
   }
@@ -207,7 +207,7 @@ object JsonAndSinks {
         .parquet(dir)
       finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     }
-    s.read.parquet(dir)
+    Artifacts.parquet(s, dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         graft.util.Det.dsum(col("value")).as("sum_value"))

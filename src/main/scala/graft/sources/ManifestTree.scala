@@ -200,7 +200,7 @@ object ManifestTree {
       val ref = mlist(dir, h).find(_.nk == nk).getOrElse(
         throw new IllegalArgumentException(s"no bucket nk=$nk at tree v$h"))
       val sub = s"$tag${h}a$attempt"
-      val base = xform(s.read.parquet(bucketFiles(ref.bm).sorted: _*))
+      val base = xform(Artifacts.parquet(s, bucketFiles(ref.bm).sorted: _*))
         .select(col("k"), col("nkd"), col("bal"), col("nkd").as("nk"))
       (if (coalesce1) base.coalesce(1) else base.repartition(col("nk")))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/$sub")
@@ -267,7 +267,7 @@ object ManifestTree {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$dir/_merge_bm_fetched"),
         touchedRefs.size.toString.getBytes("UTF-8"))
-      s.read.parquet(inputFiles.sorted: _*)
+      Artifacts.parquet(s, inputFiles.sorted: _*)
         .withColumn("bal", col("bal") + lit(CreditCents))
         .select(col("k"), col("nkd"), col("bal"), col("nkd").as("nk"))
         .repartition(col("nk"))
@@ -301,8 +301,8 @@ object ManifestTree {
       balMin.forall(m => r.balHi >= m))
     val files = kept.flatMap(r => bucketFiles(r.bm))
     val df =
-      if (files.nonEmpty) s.read.parquet(files.sorted: _*)
-      else s.read.parquet(bucketFiles(refs.head.bm).head)
+      if (files.nonEmpty) Artifacts.parquet(s, files.sorted: _*)
+      else Artifacts.parquet(s, bucketFiles(refs.head.bm).head)
         .filter(lit(false))
     (df, kept.size, refs.size)
   }

@@ -120,8 +120,8 @@ object PartitionEvolution {
     // empty-intersection guard (round-15 advice): keep the table schema
     // via one known file behind a constant-false filter
     val df =
-      if (kept.nonEmpty) s.read.parquet(kept.map(_._2): _*)
-      else s.read.parquet(files.head._2).filter(lit(false))
+      if (kept.nonEmpty) Artifacts.parquet(s, kept.map(_._2): _*)
+      else Artifacts.parquet(s, files.head._2).filter(lit(false))
     (df, counts)
   }
 

@@ -105,7 +105,7 @@ object SchemaStats {
     val df =
       if (kept.nonEmpty)
         s.read.option("mergeSchema", "true").parquet(kept: _*)
-      else s.read.parquet(Snapshots.manifest(dir, v).head)
+      else Artifacts.parquet(s, Snapshots.manifest(dir, v).head)
         .filter(lit(false))
     (df, kept.size, lines.size)
   }

@@ -106,7 +106,7 @@ object Snapshots {
 
   private[graft] def readVersion(s: SparkSession, dir: String,
       v: Int): DataFrame =
-    s.read.parquet(manifest(dir, v): _*)
+    Artifacts.parquet(s, manifest(dir, v): _*)
 
   /** Commit-time per-file stats over staged data files (schema
     * k/nkd/bal — the versioned-store layout): one columnar aggregate
@@ -118,7 +118,7 @@ object Snapshots {
   private[graft] def statsEntries(s: SparkSession,
       files: Seq[String]): Seq[String] = {
     if (files.isEmpty) return Nil
-    s.read.parquet(files: _*)
+    Artifacts.parquet(s, files: _*)
       .groupBy(input_file_name().as("f"))
       .agg(min(col("nkd").cast("long")).as("nklo"),
         max(col("nkd").cast("long")).as("nkhi"),
@@ -152,8 +152,8 @@ object Snapshots {
           balMin.forall(m => hi.toLong >= m) }
     }.map(_.path)
     val df =
-      if (kept.nonEmpty) s.read.parquet(kept: _*)
-      else s.read.parquet(manifest(dir, v).head).filter(lit(false))
+      if (kept.nonEmpty) Artifacts.parquet(s, kept: _*)
+      else Artifacts.parquet(s, manifest(dir, v).head).filter(lit(false))
     (df, kept.size, lines.size)
   }
 
@@ -587,7 +587,7 @@ object Snapshots {
       if (replaced.isEmpty)
         changes.select(col("k"), col("nk").as("nkd"), col("val").as("bal"))
           .limit(0)
-      else s.read.parquet(replaced.toSeq.sorted: _*)
+      else Artifacts.parquet(s, replaced.toSeq.sorted: _*)
     // op semantics: U/I replace (upsert), D drops, A INCREMENTS — the
     // CDC-stream merge mode (e28): increments compose order-free across
     // batches, so exactly-once replay protection is what carries
@@ -676,7 +676,7 @@ object Snapshots {
         .filter(_.contains(s"${sep}nk=$nk$sep")).toSet
       require(bucket.nonEmpty, s"no files for bucket nk=$nk at v$h")
       val sub = s"$tag${h}a${attempt}u${stagingSeq.incrementAndGet()}"
-      s.read.parquet(bucket.toSeq.sorted: _*)
+      Artifacts.parquet(s, bucket.toSeq.sorted: _*)
         .select(col("k"), col("nkd"), col("bal"), col("nkd").as("nk"))
         .coalesce(1)
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/$sub")
@@ -916,8 +916,8 @@ object Snapshots {
         s"changeFeed($vFrom,$vTo) on $dir: both manifests are empty — " +
           "no schema source for the feed"))
     def readOr(files: Seq[String], alias: String): DataFrame =
-      (if (files.nonEmpty) s.read.parquet(files.sorted: _*)
-       else s.read.parquet(schemaFile).filter(lit(false)))
+      (if (files.nonEmpty) Artifacts.parquet(s, files.sorted: _*)
+       else Artifacts.parquet(s, schemaFile).filter(lit(false)))
         .select(col("k"), col("bal").as(alias))
     val pre = readOr(mFrom.filterNot(toSet), "bal_before")
     val post = readOr(mTo.filterNot(fromSet), "bal_after")
@@ -982,8 +982,8 @@ object Snapshots {
       throw new IllegalArgumentException(
         s"changeFeedPruned($vFrom,$vTo) on $dir: both manifests empty"))
     def readOr(files: Seq[String], alias: String): DataFrame =
-      (if (files.nonEmpty) s.read.parquet(files.sorted: _*)
-       else s.read.parquet(schemaFile).filter(lit(false)))
+      (if (files.nonEmpty) Artifacts.parquet(s, files.sorted: _*)
+       else Artifacts.parquet(s, schemaFile).filter(lit(false)))
         .filter(col("nkd").between(nkLo, nkHi))
         .select(col("k"), col("bal").as(alias))
     val pre = readOr(preKept, "bal_before")

@@ -40,7 +40,7 @@ object SortedCompaction {
         .filter(_.contains(s"${sep}nk=$nk$sep")).toSet
       require(bucket.nonEmpty, s"no files for bucket nk=$nk at v$h")
       val sub = s"$tag${h}a$attempt"
-      s.read.parquet(bucket.toSeq.sorted: _*)
+      Artifacts.parquet(s, bucket.toSeq.sorted: _*)
         .repartitionByRange(nFiles, col("bal"))
         .sortWithinPartitions(col("bal"))
         .select(col("k"), col("nkd"), col("bal"), col("nkd").as("nk"))

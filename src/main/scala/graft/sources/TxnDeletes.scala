@@ -62,11 +62,11 @@ object TxnDeletes {
     */
   private[graft] def readMoR(s: SparkSession, dir: String,
       v: Int): DataFrame = {
-    val data = s.read.parquet(Snapshots.manifest(dir, v): _*)
+    val data = Artifacts.parquet(s, Snapshots.manifest(dir, v): _*)
     val dvs = resolveDeletes(dir, v)
     if (dvs.isEmpty) data
     else data.join(
-      broadcast(s.read.parquet(dvs: _*).select(col("k"))),
+      broadcast(Artifacts.parquet(s, dvs: _*).select(col("k"))),
       Seq("k"), "left_anti")
   }
 
@@ -109,14 +109,14 @@ object TxnDeletes {
       val h = Snapshots.head(dir)
       val dvs = resolveDeletes(dir, h)
       require(dvs.nonEmpty, s"nothing to purge at v$h")
-      val doomed = s.read.parquet(dvs: _*)
+      val doomed = Artifacts.parquet(s, dvs: _*)
       val touched = doomed.select(col("nk")).distinct()
         .collect().map(_.getInt(0)).toSeq.sorted // bounded: ≤ |buckets|
       val replaced = Snapshots.manifest(dir, h)
         .filter(p => touched.exists(nk => p.contains(s"${sep}nk=$nk$sep")))
         .toSet
       val sub = s"${tag}purge${h}a$attempt"
-      s.read.parquet(replaced.toSeq.sorted: _*)
+      Artifacts.parquet(s, replaced.toSeq.sorted: _*)
         .join(broadcast(doomed.select(col("k"))), Seq("k"), "left_anti")
         .select(col("k"), col("nkd"), col("bal"), col("nkd").as("nk"))
         .repartition(col("nk"))
@@ -155,7 +155,7 @@ object TxnDeletes {
     val mor =
       if (dvs.isEmpty) df
       else df.join(
-        broadcast(s.read.parquet(dvs: _*).select(col("k"))),
+        broadcast(Artifacts.parquet(s, dvs: _*).select(col("k"))),
         Seq("k"), "left_anti")
     (mor, kept, total)
   }
@@ -166,11 +166,11 @@ object TxnDeletes {
   private[graft] def morAgg(s: SparkSession, files: Seq[String],
       dvs: Seq[String], schemaFile: String): DataFrame = {
     val base =
-      (if (files.nonEmpty) s.read.parquet(files.sorted: _*)
-       else s.read.parquet(schemaFile).filter(lit(false)))
+      (if (files.nonEmpty) Artifacts.parquet(s, files.sorted: _*)
+       else Artifacts.parquet(s, schemaFile).filter(lit(false)))
     (if (dvs.isEmpty) base
      else base.join(
-       broadcast(s.read.parquet(dvs: _*).select(col("k"))),
+       broadcast(Artifacts.parquet(s, dvs: _*).select(col("k"))),
        Seq("k"), "left_anti"))
       .groupBy(col("nkd").cast("int").as("nk"))
       .agg(count(lit(1)).as("n"), sum(col("bal")).as("cents"))
@@ -185,16 +185,16 @@ object TxnDeletes {
       dvs: Seq[String], schemaFile: String): DataFrame = {
     val sep = java.io.File.separator
     if (dvs.isEmpty)
-      return s.read.parquet(schemaFile).filter(lit(false))
+      return Artifacts.parquet(s, schemaFile).filter(lit(false))
         .groupBy(col("nkd").cast("int").as("nk"))
         .agg(count(lit(1)).as("n"), sum(col("bal")).as("cents"))
-    val doomed = s.read.parquet(dvs: _*)
+    val doomed = Artifacts.parquet(s, dvs: _*)
     val buckets = doomed.select(col("nk")).distinct()
       .collect().map(_.getInt(0)) // bounded: ≤ |buckets|
     val files = m.filter(p =>
       buckets.exists(nk => p.contains(s"${sep}nk=$nk$sep")))
-    (if (files.nonEmpty) s.read.parquet(files.sorted: _*)
-     else s.read.parquet(schemaFile).filter(lit(false)))
+    (if (files.nonEmpty) Artifacts.parquet(s, files.sorted: _*)
+     else Artifacts.parquet(s, schemaFile).filter(lit(false)))
       .join(broadcast(doomed.select(col("k"))), Seq("k"), "left_semi")
       .groupBy(col("nkd").cast("int").as("nk"))
       .agg(count(lit(1)).as("n"), sum(col("bal")).as("cents"))
@@ -232,18 +232,18 @@ object TxnDeletes {
     val dvAll = (dF ++ dT).distinct
     val buckets: Seq[Int] =
       if (dvAll.isEmpty) Seq.empty
-      else s.read.parquet(dvAll.sorted: _*).select(col("nk")).distinct()
+      else Artifacts.parquet(s, dvAll.sorted: _*).select(col("nk")).distinct()
         .collect().map(_.getInt(0)).toSeq // bounded: ≤ |buckets|
     def bucketFiles(m: Seq[String]): Seq[String] =
       m.filter(p => buckets.exists(nk => p.contains(s"${sep}nk=$nk$sep")))
     def side(files: Seq[String], dvs: Seq[String],
         alias: String): DataFrame = {
       val base =
-        if (files.nonEmpty) s.read.parquet(files.sorted: _*)
-        else s.read.parquet(schemaFile).filter(lit(false))
+        if (files.nonEmpty) Artifacts.parquet(s, files.sorted: _*)
+        else Artifacts.parquet(s, schemaFile).filter(lit(false))
       (if (dvs.isEmpty) base
        else base.join(
-         broadcast(s.read.parquet(dvs: _*).select(col("k"))),
+         broadcast(Artifacts.parquet(s, dvs: _*).select(col("k"))),
          Seq("k"), "left_anti"))
         .select(col("k"), col("bal").as(alias))
     }

@@ -140,7 +140,7 @@ object TxnPair {
   private[graft] def readAtHead(s: SparkSession, dir: String,
       table: String): DataFrame = {
     val vers = txnRead(dir, txnHead(dir))
-    s.read.parquet(
+    Artifacts.parquet(s,
       Snapshots.manifest(s"$dir/$table", vers(table)): _*)
   }
 

@@ -41,7 +41,7 @@ object WriteAuditPublish {
   private[graft] def audit(s: SparkSession, dir: String,
       stagedManifest: Seq[String], parentRows: Long)
       : (Long, Long, Long) = {
-    val t = s.read.parquet(stagedManifest: _*)
+    val t = Artifacts.parquet(s, stagedManifest: _*)
     val r = t.agg(
       (count(lit(1)) - countDistinct(col("k"))).as("dups"),
       sum(when(col("bal") < BalFloor, 1L).otherwise(0L)).as("oob"),
@@ -72,7 +72,7 @@ object WriteAuditPublish {
       claimWaitMs: Long = 10000L): Boolean = {
     while (true) {
       val h = Snapshots.head(dir)
-      val parentRows = s.read.parquet(Snapshots.manifest(dir, h): _*).count()
+      val parentRows = Artifacts.parquet(s, Snapshots.manifest(dir, h): _*).count()
       val n = h + 1
       val stage = java.nio.file.Paths.get(
         s"$dir/manifest_$n.txt.audit.${stageSeq.incrementAndGet()}")

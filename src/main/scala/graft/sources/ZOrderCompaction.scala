@@ -64,7 +64,7 @@ object ZOrderCompaction {
       attempt += 1
       val h = Snapshots.head(dir)
       val files = Snapshots.manifest(dir, h)
-      val df = s.read.parquet(files.sorted: _*)
+      val df = Artifacts.parquet(s, files.sorted: _*)
       val r = df.agg(min(col("k")), max(col("k")),
         min(col("bal")), max(col("bal"))).head() // domain probe: 1 row
       val z = interleave(
@@ -117,7 +117,7 @@ object ZOrderCompaction {
       val bucket = Snapshots.manifest(dir, h)
         .filter(_.contains(s"${sep}nk=$nk$sep")).toSet
       require(bucket.nonEmpty, s"no files for bucket nk=$nk at v$h")
-      val df = s.read.parquet(bucket.toSeq.sorted: _*)
+      val df = Artifacts.parquet(s, bucket.toSeq.sorted: _*)
       val r = df.agg(min(col("k")), max(col("k")),
         min(col("bal")), max(col("bal"))).head() // domain probe: 1 row
       val z = interleave(
@@ -204,8 +204,8 @@ object ZOrderCompaction {
       Seq(("bal", BalRange._1, BalRange._2))).size
     val box = keptFor(dir, 2, Seq(
       ("k", KRange._1, KRange._2), ("bal", BalRange._1, BalRange._2)))
-    (if (box.nonEmpty) s.read.parquet(box.sorted: _*)
-     else s.read.parquet(Snapshots.manifest(dir, 2).head)
+    (if (box.nonEmpty) Artifacts.parquet(s, box.sorted: _*)
+     else Artifacts.parquet(s, Snapshots.manifest(dir, 2).head)
        .filter(lit(false)))
       .filter(col("k").between(KRange._1, KRange._2) &&
         col("bal").between(BalRange._1, BalRange._2))
@@ -272,14 +272,14 @@ object ZOrderCompaction {
       ("k", KRange._1, KRange._2), ("bal", BalRange._1, BalRange._2)))
     val dvs = TxnDeletes.resolveDeletes(dir, 3)
     val kept =
-      (if (box.nonEmpty) s.read.parquet(box.sorted: _*)
-       else s.read.parquet(Snapshots.manifest(dir, 3).head)
+      (if (box.nonEmpty) Artifacts.parquet(s, box.sorted: _*)
+       else Artifacts.parquet(s, Snapshots.manifest(dir, 3).head)
          .filter(lit(false)))
         .filter(col("k").between(KRange._1, KRange._2) &&
           col("bal").between(BalRange._1, BalRange._2))
     (if (dvs.isEmpty) kept
      else kept.join(
-       broadcast(s.read.parquet(dvs: _*).select(col("k"))),
+       broadcast(Artifacts.parquet(s, dvs: _*).select(col("k"))),
        Seq("k"), "left_anti"))
       .agg(count(lit(1)).as("n_rows"), sum(col("bal")).as("bal_cents"))
       .select(col("n_rows"), col("bal_cents"),

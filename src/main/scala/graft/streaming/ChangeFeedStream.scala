@@ -86,8 +86,8 @@ object ChangeFeedStream {
     */
   private[graft] def aggOf(s: SparkSession, files: Seq[String],
       schemaFile: String): DataFrame =
-    (if (files.nonEmpty) s.read.parquet(files.sorted: _*)
-     else s.read.parquet(schemaFile).filter(lit(false)))
+    (if (files.nonEmpty) Artifacts.parquet(s, files.sorted: _*)
+     else Artifacts.parquet(s, schemaFile).filter(lit(false)))
       .groupBy(col("nkd").cast("int").as("nk"))
       .agg(count(lit(1)).as("n_rows"), sum(col("bal")).as("total_cents"))
 
@@ -119,7 +119,7 @@ object ChangeFeedStream {
           s"refresh gap: v${v - 1} not applied before v$v")
         val d = graft.sources.TxnDeletes.mv5Delta(s, store, v)
           .select(col("nk"), col("n").as("dn"), col("cents").as("dc"))
-        s.read.parquet(s"$mvDir/mv_${v - 1}")
+        Artifacts.parquet(s, s"$mvDir/mv_${v - 1}")
           .join(d, Seq("nk"), "full_outer")
           .select(col("nk"),
             (coalesce(col("n_rows"), lit(0L))
@@ -199,7 +199,7 @@ object ChangeFeedStream {
   private def mv4StreamingMv(s: SparkSession, d: String): DataFrame = {
     val dir = mv4Dir(s, d)
     val led = applied(s"$dir/mv")
-    s.read.parquet(s"$dir/mv/mv_${led.max}")
+    Artifacts.parquet(s, s"$dir/mv/mv_${led.max}")
       .filter(col("n_rows") > 0)
       .select(col("nk"), col("n_rows"), col("total_cents"),
         lit(led.size.toLong).as("n_commits_applied"))
@@ -235,7 +235,7 @@ object ChangeFeedStream {
   private def mv6StreamingMvMor(s: SparkSession, d: String): DataFrame = {
     val dir = mv6Dir(s, d)
     val led = applied(s"$dir/mv")
-    s.read.parquet(s"$dir/mv/mv_${led.max}")
+    Artifacts.parquet(s, s"$dir/mv/mv_${led.max}")
       .filter(col("n_rows") > 0)
       .select(col("nk"), col("n_rows"), col("total_cents"),
         lit(led.size.toLong).as("n_commits_applied"))
@@ -313,7 +313,7 @@ object ChangeFeedStream {
   private def cdc6StreamingRowCdc(s: SparkSession, d: String): DataFrame = {
     val dir = cdc6Dir(s, d)
     val log = (2 to 4).map(v =>
-        s.read.parquet(s"$dir/cdc/changes_$v").withColumn("v", lit(v)))
+        Artifacts.parquet(s, s"$dir/cdc/changes_$v").withColumn("v", lit(v)))
       .reduce(_.unionByName(_))
     // net fold: struct-min/max orders by v first (v is unique per key
     // per commit), so null before/after images ride through untouched

@@ -31,7 +31,7 @@ object EventStream {
   // builders call this per query build.
   private def rawSchemaUncached(spark: SparkSession, path: String): StructType = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = spark.read.parquet(path).schema("ts").dataType
+    val tsType = Artifacts.parquetSchema(spark, path)("ts").dataType
     StructType(Seq(
       StructField("event_id", LongType),
       StructField("ts", tsType),
@@ -259,7 +259,7 @@ object EventStream {
 
   def runEnrichedToCompletion(spark: SparkSession, dir: String,
       queryName: String = "stream_enriched"): DataFrame = {
-    val customer = spark.read.parquet(s"$dir/customer.parquet")
+    val customer = Artifacts.parquet(spark, s"$dir/customer.parquet")
     runScoped(spark, queryName, "complete")(
       enrichedSegmentAgg(readStream(spark, dir), customer))
   }
@@ -314,7 +314,7 @@ object EventStream {
       import java.nio.file.Files
       val staged = java.nio.file.Paths.get(out)
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/events.parquet")
+      val raw = Artifacts.parquet(spark, s"$dir/events.parquet")
       for (k <- 0 until 4) Artifacts.withScratchDir("graft_events_chunk") {
         tmpOut =>
           raw.filter(pmod(col("event_id"), lit(4)) === k)
@@ -387,7 +387,7 @@ object EventStream {
         .start()
       q.awaitTermination()
       // the log is landed in memory so neither directory outlives the call
-      spark.read.parquet(target).localCheckpoint(true)
+      Artifacts.parquet(spark, target).localCheckpoint(true)
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
       Artifacts.delete(ckp)
@@ -500,7 +500,7 @@ object EventStream {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("day"), col("event_type"))
       .orderBy(col("_batch").desc)
-    val compacted = spark.read.parquet(target)
+    val compacted = Artifacts.parquet(spark, target)
       .withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1).drop("_rn")
       .localCheckpoint(true)

@@ -49,7 +49,7 @@ object StreamMerge {
         "graft_orders_split") { out =>
       import java.nio.file.Files
       val staged = java.nio.file.Paths.get(out)
-      val raw = spark.read.parquet(s"$dir/orders.parquet")
+      val raw = Artifacts.parquet(spark, s"$dir/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       for (k <- 0 until 4) Artifacts.withScratchDir("graft_orders_chunk") {
         tmpOut =>
@@ -108,7 +108,7 @@ object StreamMerge {
     if (committedBatches(store).contains(marker))
       return // replay: this batch already committed in some version
     if (batch.isEmpty) return
-    val dim = s.read.parquet(
+    val dim = Artifacts.parquet(s,
         Snapshots.manifest(store, Snapshots.head(store)): _*)
       .select(col("k"), col("nkd").cast("int").as("nk"))
     val chg = batch.groupBy(col("o_custkey").as("k"))
@@ -187,7 +187,7 @@ object StreamMerge {
       spark.conf.set("spark.sql.shuffle.partitions", "4")
       try {
         val src = spark.readStream
-          .schema(spark.read.parquet(staged).schema)
+          .schema(Artifacts.parquetSchema(spark, staged))
           .option("maxFilesPerTrigger", 1)
           .parquet(staged)
         val q = src.writeStream.outputMode("append")
@@ -361,8 +361,8 @@ object StreamMerge {
     val mh = Snapshots.manifest(dir, h)
     val (fromSet, toSet) = (m1.toSet, mh.toSet)
     def aggOf(files: Seq[String]): DataFrame =
-      (if (files.nonEmpty) s.read.parquet(files.sorted: _*)
-       else s.read.parquet(m1.head).filter(lit(false)))
+      (if (files.nonEmpty) Artifacts.parquet(s, files.sorted: _*)
+       else Artifacts.parquet(s, m1.head).filter(lit(false)))
         .groupBy(col("nkd").cast("int").as("nk"))
         .agg(count(lit(1)).as("n"), sum(col("bal")).as("cents"))
     // the consumer's materialization at v1: landed once per store

@@ -8,10 +8,12 @@ import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** The one place that memoizes a derived artifact: a value (driver-side
   * scalar, fitted centroids, a parquet read plan), a frame (an eager
-  * `localCheckpoint`) or a directory (an on-disk layout or index).
+  * `localCheckpoint`) or a directory (an on-disk layout or index). It is
+  * also the one place that opens a batch parquet read ([[parquet]]).
   *
   * Key: a [[Key]] is a FAMILY — op tag, parameters, source paths — plus
   * a VERSION, normally the [[stamp]] of every source path. A rewritten
@@ -209,10 +211,85 @@ object Artifacts {
     }
 
   /** `spark.read.parquet(dir)`, kept per (session, dir version): the
-    * file-index build and footer reads are paid once per version.
+    * file-index build and footer read are paid once per version.
     */
   def read(spark: SparkSession, dir: String): DataFrame =
-    value(key("read", dir, spark))(spark.read.parquet(dir))
+    value(key("read", dir, spark))(parquet(spark, dir))
+
+  // ---- parquet reads -----------------------------------------------------
+
+  /** The schema of `spark.read.parquet(paths: _*)` with mergeSchema off,
+    * its data columns read from one footer on the driver. Spark's own
+    * inference picks the same file — `_common_metadata`, else `_metadata`,
+    * else the first data file by path — but reads it in a one-task Spark
+    * job. Paths are listed by Spark's `InMemoryFileIndex`, so hidden
+    * files, `_SUCCESS` and partition directories count exactly as in
+    * Spark's read, and partition columns are placed and typed as there.
+    * None when mergeSchema is on for the session, when the paths hold no
+    * data file, or when the chosen footer cannot be read: the caller then
+    * leaves the inference, and its error, to Spark.
+    */
+  def footerSchema(spark: SparkSession, paths: String*): Option[StructType] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled) return None
+    val index = new InMemoryFileIndex(spark, paths.map(new Path(_)), Map.empty, None)
+    val files = index.allFiles().sortBy(_.getPath.toString)
+    import ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE => Common,
+      PARQUET_METADATA_FILE => Summary}
+    def named(n: String) = files.find(_.getPath.getName == n)
+    val data = files.filterNot(f => Set(Common, Summary)(f.getPath.getName))
+    if (data.isEmpty) return None
+    val chosen = named(Common).orElse(named(Summary)).getOrElse(data.head)
+    scala.util.Try {
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(chosen, spark.sessionState.newHadoopConf()),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(chosen.getPath, footer),
+        new ParquetToSparkSchemaConverter(conf))
+    }.toOption.map { footerSchema =>
+      val dataSchema = nullable(footerSchema).asInstanceOf[StructType]
+      // a partition column keeps its data-column slot, with its inferred type
+      val parts = index.partitionSchema
+      def part(name: String) = parts.find(p => conf.resolver(p.name, name))
+      StructType(dataSchema.map(f => part(f.name).getOrElse(f)) ++
+        parts.filterNot(p => dataSchema.exists(f => conf.resolver(f.name, p.name))))
+    }
+  }
+
+  /** Spark's `asNullable`, which file sources apply to every data schema. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
+
+  /** The schema of `spark.read.parquet(paths: _*)`, for probes that need
+    * only the schema: [[footerSchema]], or where that gives None, Spark's
+    * own inference (and its error, for a path set with no data file).
+    */
+  def parquetSchema(spark: SparkSession, paths: String*): StructType =
+    footerSchema(spark, paths: _*).getOrElse(spark.read.parquet(paths: _*).schema)
+
+  /** `spark.read.parquet(paths: _*)` with its schema taken from
+    * [[footerSchema]]: the same DataFrame, without Spark's schema job.
+    * Every batch parquet read in graft goes through here, except reads
+    * that merge the schemas of all their files (`mergeSchema`).
+    */
+  def parquet(spark: SparkSession, paths: String*): DataFrame =
+    footerSchema(spark, paths: _*) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
 
   // ---- scratch directories -----------------------------------------------
 

@@ -67,7 +67,8 @@ class CoreOpsSpec extends SparkSpec {
       .findAllMatchIn(plan).size >= 2, plan.take(3000))
     // the oracle text is ANSI SQL and runs unchanged on Spark (sql1's
     // surface): same rows, same order
-    val want = spark.sql(SparkEntry.oracleSql("sql13_tpch_q21")).collect().toSeq
+    val want = graft.relational.CoreOps.sql(spark, Sf001,
+      SparkEntry.oracleSql("sql13_tpch_q21")).collect().toSeq
     assert(got.nonEmpty)
     assert(got === want)
   }
@@ -190,5 +191,61 @@ class CoreOpsSpec extends SparkSpec {
       assert(out === Set((1L, 0, 3L), (1L, 1, 5L), (1L, 2, 7L),
         (2L, 0, 9L)), s"parts=$parts")
     }
+  }
+
+  // ---- view binding: only the tables a SQL text names --------------------
+
+  import graft.relational.CoreOps
+
+  /** A session of its own: temp views are per session, and so are the
+    * view artifacts' keys. */
+  private def freshSession() = spark.newSession()
+
+  private def boundTables(s: org.apache.spark.sql.SparkSession): Set[String] =
+    s.catalog.listTables().collect().map(_.name).toSet.intersect(Tables.names.toSet)
+
+  test("views: a table named only inside EXISTS is bound") {
+    val text =
+      """SELECT COUNT(*) FROM orders WHERE EXISTS (
+        |  SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)""".stripMargin
+    assert(CoreOps.referencedTables(spark, text) === Seq("orders", "lineitem"))
+    val s = freshSession()
+    assert(CoreOps.sql(s, Sf0001, text).head().getLong(0) > 0L)
+    assert(boundTables(s) === Set("orders", "lineitem"))
+  }
+
+  test("views: a table named only in a CTE body is bound") {
+    val text =
+      """WITH r AS (SELECT l_suppkey FROM lineitem)
+        |SELECT COUNT(DISTINCT l_suppkey) FROM r""".stripMargin
+    assert(CoreOps.referencedTables(spark, text) === Seq("lineitem"))
+    val s = freshSession()
+    assert(CoreOps.sql(s, Sf0001, text).head().getLong(0) > 0L)
+    assert(boundTables(s) === Set("lineitem"))
+  }
+
+  test("views: an upper-case table name binds the table") {
+    val s = freshSession()
+    val n = CoreOps.sql(s, Sf0001, "SELECT COUNT(*) FROM NATION").head().getLong(0)
+    assert(n === Tables.nation(spark, Sf0001).count())
+    assert(boundTables(s) === Set("nation"))
+  }
+
+  test("views: a second dir rebinds the name, and so does the first again") {
+    val s = freshSession()
+    val text = "SELECT COUNT(*) FROM lineitem"
+    def rows(d: String) = CoreOps.sql(s, d, text).head().getLong(0)
+    val (small, large) = (Tables.lineitem(spark, Sf0001).count(),
+      Tables.lineitem(spark, Sf001).count())
+    assert(small !== large)
+    assert(rows(Sf0001) === small)
+    assert(rows(Sf001) === large)
+    assert(rows(Sf0001) === small, "the first dir's view was not rebound")
+  }
+
+  test("views: after sql1_tpch_q1 the session holds lineitem and no other table") {
+    val s = freshSession()
+    assert(SparkEntry.queries("sql1_tpch_q1")(s, Sf0001).collect().nonEmpty)
+    assert(boundTables(s) === Set("lineitem"))
   }
 }
