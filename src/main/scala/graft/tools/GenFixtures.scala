@@ -10,7 +10,7 @@ import graft.ext.{DedupOps, MultimodalOps}
 /** One-shot generator for the frozen test fixtures under
   * `src/test/resources/fixtures` — the hard gates for outputs DuckDB
   * cannot oracle (seeded-xxhash sketches d2/d3, approximate ANN top-k
-  * x2/x4/x5, the real-decode mm1 features).
+  * [[annBuilders]], the real-decode mm1 features).
   *
   * Freezing discipline: a fixture is generated ONCE from a verified
   * implementation and committed; regeneration is only legitimate after an
@@ -22,6 +22,53 @@ import graft.ext.{DedupOps, MultimodalOps}
   */
 object GenFixtures {
   private val OutBase = "src/test/resources/fixtures"
+
+  /** The raw ANN top-k builders, by query name: each runs the serve its
+    * registered gate wraps, on the 5-probe query set (`vec_id < 5`) at
+    * k = 10 (x7: the all-pairs join at k = 3). GenFixtures freezes their
+    * output, AnnFixtureSpec replays it at sf0.01 and sf0.1, and
+    * RecallProbe measures each one's recall.
+    */
+  val annBuilders: Seq[(String, (SparkSession, String) => DataFrame)] = {
+    import graft.ext.SimilarityOps._
+    def q5(serve: (SparkSession, String, DataFrame) => DataFrame)(
+        s: SparkSession, d: String): DataFrame =
+      serve(s, d, Tables.embeddings(s, d).filter(col("vec_id") < 5))
+        .select(col("q_id"), col("rank"), col("c_id"), col("sim"))
+        .orderBy(col("q_id"), col("rank"))
+    Seq(
+      "x2" -> x2LshTopK _,
+      "x4" -> x4IvfTopK _,
+      "x5" -> x5Sq8TopK _,
+      "x7" -> x7KnnJoin _,
+      "x8" -> x8IvfSq8TopK _,
+      "x9" -> x9PqTopK _,
+      "x18" -> x18BeamTopK _,
+      "x19" -> x19HnswTopK _,
+      "x21" -> x21Sq8TopK _,
+      "x22" -> x22FilteredTopK _,
+      "x10b" -> q5((s, d, q) =>
+        ivfTopK(Tables.embeddings(s, d), q, 10, matchLabel = true)),
+      "x11" -> q5 { (s, d, q) =>
+        val emb = Tables.embeddings(s, d)
+        ivfTopKIncremental(emb.filter(col("vec_id") % 10 =!= 0),
+          emb.filter(col("vec_id") % 10 === 0), q, 10)
+      },
+      "x11b" -> q5(ivfAppendedTopK(_, _, _, 10)),
+      "e20" -> q5(ivfStreamedTopK(_, _, _, 10)),
+      "x12" -> q5(ivfPersistedTopK(_, _, _, 10)),
+      "x15" -> q5(ivfCompactedTopK(_, _, _, 10)),
+      "x16" -> q5(ivfPqPersistedTopK(_, _, _, 10)),
+      "x17" -> q5(ivfPersistedFilteredTopK(_, _, _, 10)),
+      "x18b" -> q5((s, d, q) => beamSearchGraph(s, x18bDir(s, d), q, 10)),
+      "x20" -> q5((s, d, q) =>
+        beamSearchGraph(s, x20CompactDir(s, d), q, 10)),
+      "e26" -> q5((s, d, q) =>
+        beamSearchGraph(s, e26LayoutDir(s, d), q, 10)))
+  }
+
+  /** Builders whose exact reference is the label-filtered top-k. */
+  val filteredAnn: Set[String] = Set("x10b", "x17", "x22")
 
   def main(args: Array[String]): Unit = {
     val force = args.contains("--force")
@@ -60,17 +107,7 @@ object GenFixtures {
       // ANN raw top-k builders: frozen as data (AnnFixtureSpec). The
       // registered queries wrap these in bounded recall gates, so the
       // fixtures pin the builders directly.
-      for ((short, build) <- Seq(
-          "x2" -> (graft.ext.SimilarityOps.x2LshTopK _),
-          "x4" -> (graft.ext.SimilarityOps.x4IvfTopK _),
-          "x5" -> (graft.ext.SimilarityOps.x5Sq8TopK _),
-          "x7" -> (graft.ext.SimilarityOps.x7KnnJoin _),
-          "x8" -> (graft.ext.SimilarityOps.x8IvfSq8TopK _),
-          "x9" -> (graft.ext.SimilarityOps.x9PqTopK _),
-          "x18" -> (graft.ext.SimilarityOps.x18BeamTopK _),
-          "x19" -> (graft.ext.SimilarityOps.x19HnswTopK _),
-          "x21" -> (graft.ext.SimilarityOps.x21Sq8TopK _),
-          "x22" -> (graft.ext.SimilarityOps.x22FilteredTopK _)))
+      for ((short, build) <- annBuilders)
         write(s"${short}_topk_$tag") { build(spark, dir) }
     }
     // mm1: real-decode features over synthesized media (MultimodalSpec),

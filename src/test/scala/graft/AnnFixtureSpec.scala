@@ -28,22 +28,10 @@ class AnnFixtureSpec extends SparkSpec {
       s"$fixturePath: $missing fixture rows missing, $extra unexpected rows")
   }
 
-  // The REGISTERED x2/x4/x5/x7 queries emit bounded recall gates (driver
+  // The REGISTERED queries emit bounded recall gates (driver
   // hash-checked); the full approximate top-k outputs they gate are pinned
   // HERE, against the raw builders the gates run internally.
-  private val builders = Seq(
-    "x2" -> (ext.SimilarityOps.x2LshTopK _),
-    "x4" -> (ext.SimilarityOps.x4IvfTopK _),
-    "x5" -> (ext.SimilarityOps.x5Sq8TopK _),
-    "x7" -> (ext.SimilarityOps.x7KnnJoin _),
-    "x8" -> (ext.SimilarityOps.x8IvfSq8TopK _),
-    "x9" -> (ext.SimilarityOps.x9PqTopK _),
-    "x18" -> (ext.SimilarityOps.x18BeamTopK _),
-    "x19" -> (ext.SimilarityOps.x19HnswTopK _),
-    "x21" -> (ext.SimilarityOps.x21Sq8TopK _),
-    "x22" -> (ext.SimilarityOps.x22FilteredTopK _))
-
-  for ((short, build) <- builders;
+  for ((short, build) <- tools.GenFixtures.annBuilders;
       (dir, tag) <- Seq(Sf001 -> "sf0.01", Sf01 -> "sf0.1")) {
     test(s"$short top-k matches the frozen fixture at $tag") {
       assertSame(build(spark, dir), s"$FixtureDir/${short}_topk_$tag")

@@ -5,8 +5,10 @@ import graft.{SparkSpec, Tables}
 import graft.ext.SimilarityOps._
 
 /** Measurement harness for the ANN bounded-gate floors: prints per-query
-  * recall vs in-engine brute force for x2/x4/x5 and aggregate recall for
-  * x7, at sf0.01 and sf0.1. Run when (re)setting the recall floors the
+  * recall vs in-engine brute force for every builder in
+  * [[GenFixtures.annBuilders]] (aggregate as well for the label-filtered
+  * ones, against the exact filtered top-k) and aggregate recall for x7,
+  * at sf0.01 and sf0.1. Run when (re)setting the recall floors the
   * registered gate queries assert — the floors must sit below every value
   * printed here at BOTH SFs (the pipelines are deterministic, so any
   * floor under the measured minimum is a hard, non-flaky gate).
@@ -22,49 +24,24 @@ object RecallProbe {
     for (dir <- dirs) {
       val emb = Tables.embeddings(s, dir).cache()
       val q5 = emb.filter(col("vec_id") < 5)
-      val exact = bruteForceTopK(emb, q5, 10).select("q_id", "c_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      for ((nm, df) <- Seq(
-          "x2" -> lshTopK(emb, q5, 10, bits = 4,
-            probeFlips = graft.ext.SimilarityOps.X2ProbeFlips),
-          "x4" -> ivfTopK(emb, q5, 10),
-          "x5" -> sq8TopK(emb, q5, 10),
-          "x8" -> ivfSq8TopK(emb, q5, 10),
-          "x9" -> pqTopK(emb, q5, 10),
-          "x11" -> ivfTopKIncremental(emb.filter(col("vec_id") % 10 =!= 0),
-            emb.filter(col("vec_id") % 10 === 0), q5, 10),
-          "x11b" -> ivfAppendedTopK(s, dir, q5, 10),
-          "x12" -> ivfPersistedTopK(s, dir, q5, 10),
-          "x15" -> ivfCompactedTopK(s, dir, q5, 10),
-          "x16" -> ivfPqPersistedTopK(s, dir, q5, 10),
-          "x18" -> knnGraphBeamTopK(s, dir, q5, 10),
-          "x18b" -> beamSearchGraph(s, x18bDir(s, dir), q5, 10),
-          "x19" -> hnswTopK(s, dir, q5, 10),
-          "x20" -> beamSearchGraph(s, x20CompactDir(s, dir), q5, 10),
-          "x21" -> graphSq8TopK(s, dir, q5, 10),
-          "e26" -> beamSearchGraph(s, e26LayoutDir(s, dir), q5, 10))) {
-        val ap = df.select("q_id", "c_id").collect()
+      def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+        df.select("q_id", "c_id").collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
-        val per = (0L until 5L).map(q =>
-          (exact.filter(_._1 == q) & ap).size / 10.0)
-        println(s"[recall] $dir $nm per-query: ${per.mkString(", ")}")
+      val exact = pairs(bruteForceTopK(emb, q5, 10))
+      val exF = pairs(filteredBruteTopK(emb, q5, 10))
+      for ((nm, build) <- GenFixtures.annBuilders if nm != "x7") {
+        val ap = pairs(build(s, dir))
+        if (GenFixtures.filteredAnn(nm))
+          println(f"[recall] $dir $nm aggregate: ${(exF & ap).size.toDouble / exF.size}%.4f" +
+            s" per-query: ${(0L until 5L).map(q => (exF.filter(_._1 == q) & ap).size.toDouble / math.max(1, exF.count(_._1 == q))).mkString(", ")}")
+        else {
+          val per = (0L until 5L).map(q =>
+            (exact.filter(_._1 == q) & ap).size / 10.0)
+          println(s"[recall] $dir $nm per-query: ${per.mkString(", ")}")
+        }
       }
-      // x10b: filtered search through the IVF index vs exact filtered
-      val exF = filteredBruteTopK(emb, q5, 10).select("q_id", "c_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val apF = ivfTopK(emb, q5, 10, matchLabel = true).select("q_id", "c_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      println(f"[recall] $dir x10b aggregate: ${(exF & apF).size.toDouble / exF.size}%.4f" +
-        s" per-query: ${(0L until 5L).map(q => (exF.filter(_._1 == q) & apF).size.toDouble / math.max(1, exF.count(_._1 == q))).mkString(", ")}")
-      // x22: filtered search on the graph index vs the same exact filtered
-      val apG = graphFilteredTopK(s, dir, q5, 10).select("q_id", "c_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      println(f"[recall] $dir x22 aggregate: ${(exF & apG).size.toDouble / exF.size}%.4f" +
-        s" per-query: ${(0L until 5L).map(q => (exF.filter(_._1 == q) & apG).size.toDouble / math.max(1, exF.count(_._1 == q))).mkString(", ")}")
-      val exall = bruteForceTopK(emb, emb, 3).select("q_id", "c_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val kj = knnJoin(emb, 3).select("q_id", "c_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val exall = pairs(bruteForceTopK(emb, emb, 3))
+      val kj = pairs(knnJoin(emb, 3))
       println(f"[recall] $dir x7 aggregate: ${(exall & kj).size.toDouble / exall.size}%.4f")
       // x13b: indexed-fused doc-set overlap vs the exact-fused top-20
       val exFused = graft.ext.RetrievalOps.x13Hybrid(s, dir)
