@@ -30,25 +30,39 @@ object SimilarityOps {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Corpus projection with the norm precomputed once per row. */
-  private def withNorm(s: SparkSession, df: DataFrame, prefix: String): DataFrame =
-    df.select(col("vec_id").as(s"${prefix}_id"),
+  /** Corpus projection with the norm precomputed once per row; `extra`
+    * columns ride along after (id, emb, norm).
+    */
+  private def withNorm(s: SparkSession, df: DataFrame, prefix: String,
+      extra: Column*): DataFrame =
+    df.select(Seq(col("vec_id").as(s"${prefix}_id"),
       col("embedding").as(s"${prefix}_emb"),
-      VecOps.fnorm(s, col("embedding")).as(s"${prefix}_norm"))
+      VecOps.fnorm(s, col("embedding")).as(s"${prefix}_norm")) ++ extra: _*)
+
+  /** The exact score every serve ranks by: cosine of (q_emb, q_norm)
+    * against (c_emb, c_norm) through the codegen'd fdot kernel.
+    */
+  private def qcSim(s: SparkSession): Column =
+    VecOps.fdot(s, col("q_emb"), col("c_emb")) /
+      (col("q_norm") * col("c_norm"))
+
+  /** Per-query top k of a (q_id, c_id, sim) frame: `rank` orders by sim
+    * descending, then c_id.
+    */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(col("sim").desc, col("c_id"))
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+  }
 
   /** Brute-force top-k cosine neighbours for each query vector. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val s = corpus.sparkSession
     val q = withNorm(s, queries, "q")
     val c = withNorm(s, corpus, "c")
-    val scored = c.crossJoin(broadcast(q))
+    topK(c.crossJoin(broadcast(q))
       .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"),
-        (VecOps.fdot(s, col("q_emb"), col("c_emb")) /
-          (col("q_norm") * col("c_norm"))).as("sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("c_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+      .select(col("q_id"), col("c_id"), qcSim(s).as("sim")), k)
   }
 
   /** Ranks come from the raw double sims; the emitted sim is rounded to
@@ -140,11 +154,8 @@ object SimilarityOps {
       .select(col("q_id"), col("c_id"), col("q_emb"), col("c_emb"),
         col("q_norm"), col("c_norm"))
       .dropDuplicates("q_id", "c_id")
-      .select(col("q_id"), col("c_id"),
-        (VecOps.fdot(s, col("q_emb"), col("c_emb")) /
-          (col("q_norm") * col("c_norm"))).as("sim"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+      .select(col("q_id"), col("c_id"), qcSim(s).as("sim"))
+    topK(scored, k)
   }
 
   /** x2's registered shape: 4 bits × 2 tables, multi-probe over the 3
@@ -245,12 +256,19 @@ object SimilarityOps {
       .toDF("q_id", "c_id", "sim")
   }
 
-  private def fiveProbeGate(s: SparkSession, d: String, floor: Double)(
+  /** The 5-probe k = 10 gate: `approx(emb, q5)` against the exact top-k,
+    * or against the exact label-filtered top-k when `filtered`.
+    */
+  private def fiveProbeGate(s: SparkSession, d: String, floor: Double,
+      filtered: Boolean = false)(
       approx: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val q5 = emb.filter(col("vec_id") < 5)
     recallGate(approx(emb, q5),
-      memoExact(s, d, "probe5k10")(bruteForceTopK(emb, q5, 10)), floor)
+      if (filtered)
+        memoExact(s, d, "probe5k10filt")(filteredBruteTopK(emb, q5, 10))
+      else memoExact(s, d, "probe5k10")(bruteForceTopK(emb, q5, 10)),
+      floor)
   }
 
   // Floor discipline (one constant NEXT to each gate, measured value in
@@ -273,7 +291,7 @@ object SimilarityOps {
     * budgeted boundary spill (0.50/0.62 before spill); floor 0.39 =
     * 0.52 − 0.13. The sf0.01 value is routing-bound: the 500-vector
     * synthetic corpus is near-uniform, so neighbors spread over many
-    * cells and even a 1.9× spill only reaches 0.76 (SpillProbe sweep) —
+    * cells and even a 1.9× spill only reaches 0.76 (a one-off spill sweep) —
     * recall past that at fixed probe counts would mean scanning, not
     * indexing.
     */
@@ -332,12 +350,13 @@ object SimilarityOps {
   private def x12Gate(s: SparkSession, d: String): DataFrame =
     fiveProbeGate(s, d, X12Floor)((emb, q5) => ivfPersistedTopK(s, d, q5, 10))
 
+  /** x7 measured 0.84-0.86 on the 100-query md5 sample. */
+  private[graft] val X7Floor = 0.60
+
   /** x7's gate samples 100 queries by the m3 md5 rank (engine-portable,
     * so DuckDB derives the identical sample) and measures the kNN join's
     * recall against exact top-3 on that sample.
     */
-  /** x7 measured 0.84-0.86 on the 100-query md5 sample. */
-  private[graft] val X7Floor = 0.60
   private def x7Gate(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val sample = emb.orderBy(
@@ -509,9 +528,7 @@ object SimilarityOps {
       .select(col("q_id"), col("c_id"))
       .join(withNorm(s, df, "q").filter(col("q_norm") > 0), "q_id")
       .join(withNorm(s, df, "c").filter(col("c_norm") > 0), "c_id")
-      .select(col("q_id"), col("c_id"),
-        (VecOps.fdot(s, col("q_emb"), col("c_emb")) /
-          (col("q_norm") * col("c_norm"))).as("sim"))
+      .select(col("q_id"), col("c_id"), qcSim(s).as("sim"))
       .groupBy(col("q_id"))
       .agg(call_function(fn, col("sim"), col("c_id")).as("_tk"))
       .select(col("q_id"), posexplode(col("_tk")).as(Seq("_p", "_kv")))
@@ -742,6 +759,18 @@ object SimilarityOps {
       |ORDER BY id_a, id_b""".stripMargin
 
   // ---- D11: semantic dedup (SemDeDup) ------------------------------------
+  /** The τ=0.35 exact near-dup pair set, landed once per embeddings
+    * version: slim source-derived state in
+    * the d4/d7 shared-index class — d11, the d12 gate, and the d12
+    * coverage probe all consume the SAME pair list, and each was
+    * re-running the blocked n² verification per execution (~0.6 s each at
+    * sf0.1). Post-threshold output is orders of magnitude smaller than
+    * the corpus, so the pinned blocks stay tiny.
+    */
+  private def landedExactPairs(emb: DataFrame): DataFrame =
+    Artifacts.frame(emb.sparkSession, Artifacts.key("tau35pairs", emb))(
+      cosinePairsExact(emb, D12Tau).select(col("id_a"), col("id_b")))
+
   /** Semantic deduplication over the embedding space (SemDeDup, Abbas et
     * al. 2023): near-identical MEANING collapses to one keeper even when
     * the surface text shares no shingles — the dedup layer MinHash/SimHash
@@ -762,18 +791,6 @@ object SimilarityOps {
     * threshold output, orders of magnitude smaller than the corpus), and
     * the final left join broadcasts the component labels when they fit.
     */
-  /** The τ=0.35 exact near-dup pair set, landed once per embeddings
-    * version: slim source-derived state in
-    * the d4/d7 shared-index class — d11, the d12 gate, and the d12
-    * coverage probe all consume the SAME pair list, and each was
-    * re-running the blocked n² verification per execution (~0.6 s each at
-    * sf0.1). Post-threshold output is orders of magnitude smaller than
-    * the corpus, so the pinned blocks stay tiny.
-    */
-  private def landedExactPairs(emb: DataFrame): DataFrame =
-    Artifacts.frame(emb.sparkSession, Artifacts.key("tau35pairs", emb))(
-      cosinePairsExact(emb, D12Tau).select(col("id_a"), col("id_b")))
-
   private def d11SemDedup(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val edges = landedExactPairs(emb)
@@ -866,7 +883,7 @@ object SimilarityOps {
   private[graft] def d12Cells(n: Long): Int =
     math.max(8, math.ceil(n.toDouble / D12CellWidth).toInt)
 
-  /** Measured intra-top2-cell coverage with boundary spill (SpillProbe
+  /** Measured intra-top2-cell coverage with boundary spill (one-off spill
     * grid; the width-derived cell count resolves to 8 at all three
     * driver SFs): 0.81/0.79/0.75 (vs 0.37/0.36/0.32 single-assignment
     * — the same boundary-spill mechanism the IVF serving path uses,
@@ -1151,12 +1168,6 @@ object SimilarityOps {
        |  TRUE AS k_reached
        |FROM embeddings""".stripMargin
 
-  /** IVF (inverted-file) ANN: KMeans coarse quantizer over the corpus;
-    * each query probes the nProbe nearest centroids and exact-reranks only
-    * those cells. The scale path when the LSH bucket distribution is too
-    * coarse: cells ≈ sqrt(n), probe cost ≈ nProbe/cells of the corpus.
-    */
-
   /** Auto-derived IVF geometry (the x7 auto-bits idiom): `nCells ≤ 0` ⇒
     * `clamp(⌈√n⌉, 16, 1024)` from one metadata-cheap corpus count, so the
     * cell count GROWS with the corpus instead of freezing the pruning
@@ -1239,12 +1250,12 @@ object SimilarityOps {
     * index-build memo chain (count → sample → centroids): the round-10
     * state memoized the sample but re-ran the driver Lloyd at every call
     * site — ~0.2-0.4 s single-threaded per query at the auto geometry and
-    * "a few seconds" PER CALL at the 1024-cell cap, where the `:813`
-    * scaladoc promises one-time. The fit is a deterministic function of
-    * the memoized sample and (k), so memoization stays value-transparent;
-    * `k` is part of the family (km2's k=8 and x4's k=cells over one
-    * corpus must not evict each other). Payload ≤ 1024×64 floats
-    * ≈ 256 KB per family.
+    * "a few seconds" PER CALL at the 1024-cell cap, where the
+    * [[ivfGeometry]] scaladoc promises one-time. The fit is a
+    * deterministic function of the memoized sample and (k), so
+    * memoization stays value-transparent; `k` is part of the family
+    * (km2's k=8 and x4's k=cells over one corpus must not evict each
+    * other). Payload ≤ 1024×64 floats ≈ 256 KB per family.
     */
   private def memoCentroids(corpus: DataFrame, fitSample: Int, k: Int,
       tag: String = ""): Array[Array[Float]] = {
@@ -1288,7 +1299,45 @@ object SimilarityOps {
       }
     }
 
-  /** With `matchLabel = true` the candidate set is additionally
+  /** One IVF quantizer fit: the geometry, the centroids (empty for a
+    * corpus with no nonzero vector — callers then fall back to brute
+    * force) and the boundary-spill margin.
+    */
+  private[graft] final case class IvfFit(cells: Int, probe: Int,
+      cents: Array[Array[Float]], margin: Double) {
+    /** Selectivity-aware probe widening (the ACORN insight): a filter
+      * that keeps 1/|labels| of each cell starves the candidate pool, so
+      * filtered search probes deeper — scoring cost stays (probed
+      * fraction)/|labels|, still far under the plain-IVF budget, and
+      * recall recovers (measured 0.36→0.56+ at 2×).
+      */
+    def filteredProbe: Int = math.min(cells, probe * 2)
+  }
+
+  /** The IVF fit chain over `corpus` — count → geometry → sample →
+    * centroids → spill margin, each link memoized per corpus version in
+    * the `tag` family. The geometry count is skipped when both `nCells`
+    * and `nProbe` are given. Direction cells suit the cosine metric, and
+    * argmax-dot assignment is scale-invariant, so raw embeddings need no
+    * normalize pass.
+    */
+  private def ivfFit(corpus: DataFrame, tag: String = "", nCells: Int = 0,
+      nProbe: Int = 0): IvfFit = {
+    val (cells, probe) = ivfGeometry(
+      if (nCells > 0 && nProbe > 0) 0L else memoCount(corpus, tag),
+      nCells, nProbe)
+    val fs = ivfFitSample(0, cells)
+    val cents = memoCentroids(corpus, fs, cells, tag)
+    IvfFit(cells, probe, cents,
+      if (cents.isEmpty) 0.0 else memoSpillThreshold(corpus, fs, cents, tag))
+  }
+
+  /** IVF (inverted-file) ANN: KMeans coarse quantizer over the corpus;
+    * each query probes the nProbe nearest centroids and exact-reranks only
+    * those cells. The scale path when the LSH bucket distribution is too
+    * coarse: cells ≈ sqrt(n), probe cost ≈ nProbe/cells of the corpus.
+    *
+    * With `matchLabel = true` the candidate set is additionally
     * restricted to corpus rows sharing the query's `label` — filtered
     * vector search, the metadata-predicate + top-k shape every vector
     * store serves. The filter applies AT THE PROBE JOIN (before any
@@ -1296,29 +1345,16 @@ object SimilarityOps {
     * but the hash lookup; the index itself is label-agnostic (one IVF
     * serves every predicate — the post-filter strategy; per-label
     * partitioned indexes are the 100 TB alternative when one label
-    * dominates the query mix).
+    * dominates the query mix), and the probe widens to
+    * [[IvfFit.filteredProbe]].
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      nCells: Int = 0, nProbe: Int = 0, fitSample: Int = 0,
-      matchLabel: Boolean = false,
-      spillMargin: Double = -1.0): DataFrame = {
-    val (cells, probe0) = ivfGeometry(
-      if (nCells > 0 && nProbe > 0) 0L else memoCount(corpus), nCells, nProbe)
-    // Selectivity-aware probe widening (the ACORN insight): a filter
-    // that keeps 1/|labels| of each cell starves the candidate pool, so
-    // filtered search probes deeper — scoring cost stays (probed
-    // fraction)/|labels|, still far under the plain-IVF budget, and
-    // recall recovers (measured 0.36→0.56+ at 2×).
-    val probe = if (matchLabel) math.min(cells, probe0 * 2) else probe0
-    // Direction cells suit the cosine metric, and argmax-dot assignment
-    // is scale-invariant, so raw embeddings need no normalize pass.
-    val fs = ivfFitSample(fitSample, cells)
-    val cents = memoCentroids(corpus, fs, cells)
-    if (cents.isEmpty) return bruteForceTopK(corpus, queries, k)
-    val margin =
-      if (spillMargin >= 0) spillMargin
-      else memoSpillThreshold(corpus, fs, cents)
-    ivfSearch(corpus, queries, k, cents, probe, matchLabel, margin)
+      nCells: Int = 0, nProbe: Int = 0,
+      matchLabel: Boolean = false): DataFrame = {
+    val fit = ivfFit(corpus, nCells = nCells, nProbe = nProbe)
+    if (fit.cents.isEmpty) return bruteForceTopK(corpus, queries, k)
+    ivfSearch(corpus, queries, k, fit,
+      if (matchLabel) fit.filteredProbe else fit.probe, matchLabel)
   }
 
   /** X11: incremental index maintenance — the production append path. The
@@ -1333,14 +1369,11 @@ object SimilarityOps {
     */
   def ivfTopKIncremental(base: DataFrame, delta: DataFrame,
       queries: DataFrame, k: Int): DataFrame = {
-    val (cells, probe) = ivfGeometry(memoCount(base, tag = ":base"), 0, 0)
-    val fs = ivfFitSample(0, cells)
-    val cents = memoCentroids(base, fs, cells, tag = ":base")
-    if (cents.isEmpty)
+    val fit = ivfFit(base, tag = ":base")
+    if (fit.cents.isEmpty)
       return bruteForceTopK(base.unionByName(delta), queries, k)
-    ivfSearch(base.unionByName(delta), queries, k, cents, probe,
-      matchLabel = false,
-      spillMargin = memoSpillThreshold(base, fs, cents, tag = ":base"))
+    ivfSearch(base.unionByName(delta), queries, k, fit, fit.probe,
+      matchLabel = false)
   }
 
   /** IVF boundary multi-assignment (cell spill) BUDGET: the fraction of
@@ -1359,10 +1392,10 @@ object SimilarityOps {
     * aggregate 0.50/0.62 → 0.52/0.74, x11 0.62/0.68, filtered x10b
     * 0.66/0.78 → 0.80/0.84 — the sf0.01 plain-IVF value is bounded on
     * this deliberately near-uniform synthetic corpus by routing
-    * diffusion (neighbors spread over many cells; SpillProbe measures
-    * 0.76 even at 1.9× expansion; docs/SCALING.md discusses the
-    * clustered real-embedding case where boundary spill is the
-    * standard lever).
+    * diffusion (neighbors spread over many cells; a one-off margin
+    * sweep measured 0.76 even at 1.9× expansion; docs/SCALING.md
+    * discusses the clustered real-embedding case where boundary spill
+    * is the standard lever).
     */
   private[graft] val IvfSpillBudget = 0.25
 
@@ -1391,39 +1424,39 @@ object SimilarityOps {
         payload.map { case (n, _) => col(n) }: _*)
   }
 
-  /** Shared IVF search phase: assign the corpus to the given centroids
+  /** Shared IVF search phase: assign the corpus to the fit's centroids
     * map-side (with boundary spill), probe the `probe` nearest cells per
     * query, exact-rerank within probed cells.
     */
   private def ivfSearch(corpus: DataFrame, queries: DataFrame, k: Int,
-      cents: Array[Array[Float]], probe: Int,
-      matchLabel: Boolean, spillMargin: Double): DataFrame = {
+      fit: IvfFit, probe: Int, matchLabel: Boolean): DataFrame = {
     val s = corpus.sparkSession
     val cLabel = if (matchLabel) Seq("c_label" -> col("label")) else Nil
-    val assigned = spillAssigned(s, corpus, cents,
+    val assigned = spillAssigned(s, corpus, fit.cents,
       Seq("c_emb" -> col("embedding"),
         "c_norm" -> VecOps.fnorm(s, col("embedding"))) ++ cLabel,
-      spillMargin)
+      fit.margin)
     rerankProbed(s, assigned,
-      queryProbes(s, queries, cents, probe, matchLabel), k, matchLabel)
+      queryProbes(s, queries, fit.cents, probe, qLabel(matchLabel)), k,
+      matchLabel)
   }
 
+  private def qLabel(matchLabel: Boolean): Seq[Column] =
+    if (matchLabel) Seq(col("label").as("q_label")) else Nil
+
   /** Query → its nProbe nearest cells, via distance to the centroid table
-    * (tiny: nCells rows, crossJoin + top-k window).
+    * (tiny: nCells rows, crossJoin + top-k window). Rows carry (q_id,
+    * q_emb, q_norm, `extra`..., cell).
     */
   private def queryProbes(s: SparkSession, queries: DataFrame,
       cents: Array[Array[Float]], probe: Int,
-      matchLabel: Boolean): DataFrame = {
+      extra: Seq[Column]): DataFrame = {
     import s.implicits._
     val centDf = cents.toIndexedSeq.map(_.toSeq).zipWithIndex
       .map { case (c, i) => (i, c) }.toDF("cell", "centroid")
-    val qLabel = if (matchLabel) Seq(col("label").as("q_label")) else Nil
-    val q = queries.select(Seq(col("vec_id").as("q_id"),
-      col("embedding").as("q_emb"),
-      VecOps.fnorm(s, col("embedding")).as("q_norm")) ++ qLabel: _*)
     val wProbe = Window.partitionBy(col("q_id"))
       .orderBy(col("cdist"), col("cell"))
-    q.crossJoin(broadcast(centDf))
+    withNorm(s, queries, "q", extra: _*).crossJoin(broadcast(centDf))
       .withColumn("cdist", -VecOps.fdot(s, col("q_emb"), col("centroid")))
       .withColumn("pr", row_number().over(wProbe))
       .filter(col("pr") <= probe)
@@ -1441,15 +1474,11 @@ object SimilarityOps {
     // groupBy collapses duplicates (sim is identical, max is a no-op on
     // values) AND puts an Aggregate under the Window, the x7-proven safe
     // topology; it exchanges only bounded candidate rows
-    val scored = assigned.join(broadcast(probes), "cell")
+    topK(assigned.join(broadcast(probes), "cell")
       .filter(col("q_id") =!= col("c_id") && matchCond)
-      .select(col("q_id"), col("c_id"),
-        (VecOps.fdot(s, col("q_emb"), col("c_emb")) /
-          (col("q_norm") * col("c_norm"))).as("sim"))
+      .select(col("q_id"), col("c_id"), qcSim(s).as("sim"))
       .groupBy(col("q_id"), col("c_id"))
-      .agg(max(col("sim")).as("sim"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+      .agg(max(col("sim")).as("sim")), k)
   }
 
   // ---- X12: persisted IVF index (partition-pruned serve path) ------------
@@ -1460,25 +1489,117 @@ object SimilarityOps {
     * candidates stay spec-identical to x4's.
     */
   private[graft] def assignedForLanding(s: SparkSession, part: DataFrame,
-      cents: Array[Array[Float]], margin: Double): DataFrame =
-    spillAssigned(s, part, cents, Seq(
+      fit: IvfFit): DataFrame =
+    spillAssigned(s, part, fit.cents, Seq(
       "c_emb" -> col("embedding"),
       "c_norm" -> VecOps.fnorm(s, col("embedding")),
       // filterable metadata lives IN the index (the x17 serving shape:
       // a real vector store schema is id + vector + filter columns)
-      "c_label" -> col("label")), margin)
+      "c_label" -> col("label")), fit.margin)
+
+  /** Lands `rows` as a `partitionBy(part)` parquet layout in `dir`, after
+    * one shuffle so each partition lands as one file run, not one
+    * fragment per writer task (the compaction posture).
+    */
+  private def writeLayout(rows: DataFrame, dir: String, part: String,
+      mode: String = "overwrite"): Unit =
+    rows.repartition(col(part)).write.mode(mode).partitionBy(part)
+      .parquet(dir)
+
+  /** A `partitionBy(cell)` layout of `rows`, landed once per embeddings
+    * version under `op`.
+    */
+  private def cellLayoutDir(d: String, op: String)(
+      rows: => DataFrame): String =
+    Artifacts.dir(Artifacts.key(op, Tables.path(d, "embeddings")),
+      s"graft_$op")(writeLayout(rows, _, "cell"))
+
+  /** Streams `delta` into the landed layout `dir` — 3 staged files,
+    * `maxFilesPerTrigger = 1` + AvailableNow, so 3 micro-batches. Each
+    * batch's `rows` commit through
+    * [[graft.util.Landing.idempotentAppend]]'s replay-safe
+    * stage/clean/publish/marker protocol into the `part` partitions.
+    */
+  private def streamAppend(s: SparkSession, op: String, delta: DataFrame,
+      dir: String, part: String)(rows: DataFrame => DataFrame): Unit = {
+    val stage = Artifacts.scratchDir(s"graft_${op}_stage")
+    val ckpt = Artifacts.scratchDir(s"graft_${op}_ckpt")
+    delta.repartition(3).write.mode("overwrite").parquet(stage.toString)
+    // the file source replays files oldest-mtime first, and the 3 writer
+    // tasks finish in any order; stamping the parts in name order makes
+    // the batch order — which e26's order-dependent insert sees — the
+    // same on every run
+    stage.toFile.listFiles().filter(_.getName.startsWith("part-"))
+      .sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
+        f.setLastModified(System.currentTimeMillis() - 10000L + i * 1000L)
+      }
+    val schema = Artifacts.parquetSchema(s, stage.toString)
+    val q = s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(stage.toString)
+      .writeStream
+      .option("checkpointLocation", ckpt.toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        graft.util.Landing.idempotentAppend(
+          rows(batch).repartition(col(part)), dir, batchId, part)
+      }
+      .start()
+    q.awaitTermination()
+    Artifacts.delete(stage)
+    Artifacts.delete(ckpt)
+  }
 
   private def landedIndexDir(s: SparkSession, d: String,
-      cents: Array[Array[Float]], margin: Double): String =
-    Artifacts.dir(Artifacts.key("ivfidx", Tables.path(d, "embeddings")),
-        "graft_ivfidx") { dir =>
-      assignedForLanding(s, Tables.embeddings(s, d), cents, margin)
-        // one shuffle at BUILD time so each cell lands as one file run,
-        // not one fragment per writer task (the compaction posture)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(dir)
-    }
+      fit: IvfFit): String =
+    cellLayoutDir(d, "ivfidx")(
+      assignedForLanding(s, Tables.embeddings(s, d), fit))
+
+  /** Driver-known probed-cell set memoized per (query-set version, fit,
+    * probe count): the `collect()` is a driver job executing the probe
+    * plan at DataFrame-BUILD time on every fresh build — the per-build
+    * cost class the d13 and x13b fixes removed. The set is a
+    * deterministic function of the centroids and the query set, so
+    * memoization is value-transparent. The family holds a digest of the
+    * centroids themselves: two fits of one geometry (x12 on the corpus,
+    * x15 on the recovered layout) must not share a cell set.
+    */
+  private[graft] def memoProbedCells(queries: DataFrame, probes: DataFrame,
+      cents: Array[Array[Float]], probe: Int): IndexedSeq[Int] = {
+    val bytes = java.nio.ByteBuffer.allocate(4 * cents.map(_.length).sum)
+    cents.foreach(_.foreach(bytes.putFloat))
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(bytes.array()).map("%02x".format(_)).mkString
+    Artifacts.value(
+        Artifacts.key("pcells", queries, cents.length, probe, digest))(
+      probes.select(col("cell")).distinct()
+        .collect().map(_.getInt(0)).toIndexedSeq.sorted)
+  }
+
+  /** The probe part of a persisted serve: the queries' probes, and the
+    * landed cell layout in `dir` pruned to the probed cells. The probed
+    * cell set is driver-known (≤1024 centroids), so pruning is a static
+    * `cell IN (...)` partition filter — file-listing-level skipping,
+    * before any I/O.
+    */
+  private def probedLayout(s: SparkSession, dir: String, queries: DataFrame,
+      fit: IvfFit, probe: Int, extra: Seq[Column]): (DataFrame, DataFrame) = {
+    val landed = Artifacts.read(s, dir)
+    val probes = queryProbes(s, queries, fit.cents, probe, extra)
+    val probedCells = memoProbedCells(queries, probes, fit.cents, probe)
+    (landed.filter(col("cell").isin(probedCells: _*)), probes)
+  }
+
+  /** Partition-pruned serve over a landed cell layout: the probed cells'
+    * scan plus the exact rerank (label-matched when `matchLabel`).
+    */
+  private def servePersisted(s: SparkSession, dir: String,
+      queries: DataFrame, fit: IvfFit, probe: Int, k: Int,
+      matchLabel: Boolean = false): DataFrame = {
+    val (cells, probes) =
+      probedLayout(s, dir, queries, fit, probe, qLabel(matchLabel))
+    rerankProbed(s, cells, probes, k, matchLabel)
+  }
 
   /** X12: the index ON DISK — cell assignments landed once per corpus
     * version as a `partitionBy(cell)` parquet layout, so the serve path
@@ -1495,48 +1616,12 @@ object SimilarityOps {
     * bucketed landing — rep 1 pays the write, steady state measures the
     * pruned scan.
     */
-  /** Shared partition-pruned serve path over a landed cell layout: the
-    * probed cell set is driver-known (≤1024 centroids), so pruning is a
-    * static `cell IN (...)` partition filter — file-listing-level
-    * skipping, before any I/O.
-    */
-  /** Driver-known probed-cell set memoized per (query-set version,
-    * geometry): the `collect()` is a driver job executing the probe plan
-    * at DataFrame-BUILD time on every fresh build — the d13/PhaseProbe
-    * per-build cost class (round-13 advice; the x13b gate needed exactly
-    * this fix last round). The set is a deterministic function of the
-    * memoized centroids and the query set, so memoization is
-    * value-transparent; geometry is part of the family so different
-    * probe policies over one query set don't evict each other.
-    */
-  private def memoProbedCells(queries: DataFrame, probes: DataFrame,
-      cents: Array[Array[Float]], probe: Int): IndexedSeq[Int] =
-    Artifacts.value(
-        Artifacts.key("pcells", queries, cents.length, probe))(
-      probes.select(col("cell")).distinct()
-        .collect().map(_.getInt(0)).toIndexedSeq.sorted)
-
-  private def servePersisted(s: SparkSession, dir: String,
-      queries: DataFrame, cents: Array[Array[Float]], probe: Int,
-      k: Int): DataFrame = {
-    val landed = Artifacts.read(s, dir)
-    val probes = queryProbes(s, queries, cents, probe, matchLabel = false)
-    val probedCells = memoProbedCells(queries, probes, cents, probe)
-    rerankProbed(s,
-      landed.filter(col("cell").isin(probedCells: _*)),
-      probes, k, matchLabel = false)
-  }
-
   def ivfPersistedTopK(s: SparkSession, d: String, queries: DataFrame,
       k: Int): DataFrame = {
     val emb = Tables.embeddings(s, d)
-    val (cells, probe) = ivfGeometry(memoCount(emb), 0, 0)
-    val fs = ivfFitSample(0, cells)
-    val cents = memoCentroids(emb, fs, cells)
-    if (cents.isEmpty) return bruteForceTopK(emb, queries, k)
-    val margin = memoSpillThreshold(emb, fs, cents)
-    servePersisted(s, landedIndexDir(s, d, cents, margin), queries, cents,
-      probe, k)
+    val fit = ivfFit(emb)
+    if (fit.cents.isEmpty) return bruteForceTopK(emb, queries, k)
+    servePersisted(s, landedIndexDir(s, d, fit), queries, fit, fit.probe, k)
   }
 
   /** X17: filtered search through the PERSISTED index — x10b's
@@ -1554,37 +1639,23 @@ object SimilarityOps {
   def ivfPersistedFilteredTopK(s: SparkSession, d: String,
       queries: DataFrame, k: Int): DataFrame = {
     val emb = Tables.embeddings(s, d)
-    val (cells, probe0) = ivfGeometry(memoCount(emb), 0, 0)
-    val probe = math.min(cells, probe0 * 2)
-    val fs = ivfFitSample(0, cells)
-    val cents = memoCentroids(emb, fs, cells)
-    if (cents.isEmpty) return filteredBruteTopK(emb, queries, k)
-    val margin = memoSpillThreshold(emb, fs, cents)
-    val landed = Artifacts.read(s,
-      landedIndexDir(s, d, cents, margin))
-    val probes = queryProbes(s, queries, cents, probe, matchLabel = true)
-    val probedCells = memoProbedCells(queries, probes, cents, probe)
-    rerankProbed(s, landed.filter(col("cell").isin(probedCells: _*)),
-      probes, k, matchLabel = true)
+    val fit = ivfFit(emb)
+    if (fit.cents.isEmpty) return filteredBruteTopK(emb, queries, k)
+    servePersisted(s, landedIndexDir(s, d, fit), queries, fit,
+      fit.filteredProbe, k, matchLabel = true)
   }
 
-  private def x17Gate(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val q5 = emb.filter(col("vec_id") < 5)
-    recallGate(
-      ivfPersistedFilteredTopK(s, d, q5, 10),
-      memoExact(s, d, "probe5k10filt")(filteredBruteTopK(emb, q5, 10)),
-      X10bFloor)
-  }
+  private def x17Gate(s: SparkSession, d: String): DataFrame =
+    fiveProbeGate(s, d, X10bFloor, filtered = true)((_, q5) =>
+      ivfPersistedFilteredTopK(s, d, q5, 10))
 
   // ---- X18: k-NN-graph + greedy beam search -------------------------------
   /** X18 knobs. Degree/beam/hops are the classic graph-ANN triple
     * (HNSW's M/ef, DiskANN's R/L): recall rises with any of them at
     * linear cost. Hops is the only n-sensitive knob — greedy search
     * walks ~O(log n) hops on a navigable graph, so a 100 TB corpus
-    * raises it from 3 to ~10, not to thousands.
-    */
-  /** X18Probe sweep (both SFs): degree is the dominant lever on this
+    * raises it from 3 to ~10, not to thousands. A one-off sweep at both
+    * SFs (2026-08-14 testdata) found degree the dominant lever on this
     * routing-diffuse synthetic corpus — g=8 topped out at 0.68-0.86
     * aggregate however beam/hops grew (local minima in a sparse graph),
     * g=16 reaches 1.00/0.98 at (b=32, h=4, e=8); more hops/beam past
@@ -1602,19 +1673,14 @@ object SimilarityOps {
   private def x18Buckets(n: Long): Int =
     math.max(8, math.min(1024, (n / 250L).toInt))
 
-  /** X18 index BUILD, landed once per corpus version: the k-NN GRAPH —
-    * each node's [[X18Degree]] nearest neighbours from the existing x7
-    * [[knnJoin]] machinery (LSH-bucketed, never all-pairs), symmetrized
-    * (reverse edges make the graph navigable from any entry — the NSW
-    * practice), landed as one row per node (id, emb, nrm, nbrs)
-    * partitioned by id block, plus a sidecar `_entries.txt` freezing
-    * [[X18Entries]] deterministic md5-ranked entry points so serving
-    * never rescans the corpus to pick a start. This is the third
-    * production index family next to the hash (x2) and quantizer
-    * (x4–x17) suites: no cells, no fit — search QUALITY comes from edge
-    * locality, and the serve path reads only the node blocks the walk
-    * touches.
-    */
+  /** A node row's `pb` node-block partition. */
+  private def nodeBlock(nb: Int): Column =
+    pmod(col("id"), lit(nb.toLong)).cast("int").as("pb")
+
+  /** A node row's neighbour list, empty for a node with none. */
+  private def nbrsOrEmpty: Column =
+    coalesce(col("nbrs"), array().cast("array<bigint>")).as("nbrs")
+
   /** Graph-layout builder shared by the full-corpus (x18) and base-split
     * (x18b) indexes. Sidecars freeze everything the SERVE path needs —
     * entry points and the bucket count — so serving is index-only and
@@ -1630,14 +1696,12 @@ object SimilarityOps {
       .distinct()
     val nbrs = undirected.groupBy(col("src").as("id"))
       .agg(sort_array(collect_set(col("dst"))).as("nbrs"))
-    corpus.select(col("vec_id").as("id"), col("embedding").as("emb"),
+    writeLayout(corpus.select(col("vec_id").as("id"),
+        col("embedding").as("emb"),
         VecOps.fnorm(s, col("embedding")).as("nrm"))
       .join(nbrs, Seq("id"), "left")
-      .select(col("id"), col("emb"), col("nrm"),
-        coalesce(col("nbrs"), array().cast("array<bigint>")).as("nbrs"),
-        pmod(col("id"), lit(nb.toLong)).cast("int").as("pb"))
-      .repartition(col("pb"))
-      .write.mode("overwrite").partitionBy("pb").parquet(dir)
+      .select(col("id"), col("emb"), col("nrm"), nbrsOrEmpty, nodeBlock(nb)),
+      dir, "pb")
     // a generous frozen entry pool (serve takes its first
     // [[X18Entries]]; probe tooling can take more without re-landing)
     val entries = corpus.select(col("vec_id"))
@@ -1657,12 +1721,66 @@ object SimilarityOps {
     try src.mkString.trim.toInt finally src.close()
   }
 
-  private[graft] def knnGraphDir(s: SparkSession, d: String,
-      degree: Int = X18Degree): String =
-    Artifacts.dir(Artifacts.key("knngraph", Tables.path(d, "embeddings"), degree),
-      "graft_knng") { dir =>
+  /** Copies the serve sidecars (entries, bucket count) of the graph
+    * layout `src` into the derived layout `dir`.
+    */
+  private def copySidecars(src: String, dir: String): Unit =
+    for (sc <- Seq("_entries.txt", "_nbuckets.txt"))
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$src/$sc"),
+        java.nio.file.Paths.get(s"$dir/$sc"))
+
+  /** Id-pruned lookup of node rows in the graph layout `dir`: the ids
+    * are driver-known, so the read is a partition filter on their node
+    * blocks plus the id filter.
+    */
+  private def nodeLookup(s: SparkSession, dir: String): Seq[Long] => DataFrame = {
+    val nb = graphSidecarInt(dir, "_nbuckets.txt")
+    val nodes = Artifacts.read(s, dir)
+    ids => nodes.filter(
+      col("pb").isin(ids.map(i => (i % nb).toInt).distinct.sorted: _*) &&
+        col("id").isin(ids: _*))
+  }
+
+  /** The distinct `c_id`s of a bounded frame, collected sorted. */
+  private def idsOf(df: DataFrame): Seq[Long] =
+    df.select(col("c_id")).distinct()
+      .collect().map(_.getLong(0)).toSeq.sorted
+
+  /** Vector-bearing node rows as the (c_id, c_emb, c_norm) side. */
+  private def floatNodes(nodeRows: DataFrame): DataFrame =
+    nodeRows.filter(col("nrm").isNotNull && col("nrm") > 0)
+      .select(col("id").as("c_id"), col("emb").as("c_emb"),
+        col("nrm").as("c_norm"))
+
+  /** Full-precision scoring for [[graphBeamWalk]]: (q_id, c_id) pairs
+    * against the looked-up node rows and the (q_id, q_emb, q_norm)
+    * query side `q`.
+    */
+  private def floatScore(s: SparkSession, q: DataFrame)(
+      cand: DataFrame, nodeRows: DataFrame): DataFrame =
+    cand.join(broadcast(floatNodes(nodeRows)), "c_id")
+      .join(broadcast(q), "q_id")
+      .filter(col("q_id") =!= col("c_id"))
+      .select(col("q_id"), col("c_id"), qcSim(s).as("sim"))
+
+  /** X18 index BUILD, landed once per corpus version: the k-NN GRAPH —
+    * each node's [[X18Degree]] nearest neighbours from the existing x7
+    * [[knnJoin]] machinery (LSH-bucketed, never all-pairs), symmetrized
+    * (reverse edges make the graph navigable from any entry — the NSW
+    * practice), landed as one row per node (id, emb, nrm, nbrs)
+    * partitioned by id block, plus a sidecar `_entries.txt` freezing
+    * [[X18Entries]] deterministic md5-ranked entry points so serving
+    * never rescans the corpus to pick a start. This is the third
+    * production index family next to the hash (x2) and quantizer
+    * (x4–x17) suites: no cells, no fit — search QUALITY comes from edge
+    * locality, and the serve path reads only the node blocks the walk
+    * touches.
+    */
+  private[graft] def knnGraphDir(s: SparkSession, d: String): String =
+    Artifacts.dir(Artifacts.key("knngraph", Tables.path(d, "embeddings"),
+        X18Degree), "graft_knng") { dir =>
       val emb = Tables.embeddings(s, d)
-      buildGraphLayout(s, emb, dir, degree, x18Buckets(memoCount(emb)))
+      buildGraphLayout(s, emb, dir, X18Degree, x18Buckets(memoCount(emb)))
     }
 
   /** X18 SERVE: greedy beam search over the landed graph. Each hop is
@@ -1683,10 +1801,8 @@ object SimilarityOps {
     * reads a constant number of blocks wherever the corpus size goes).
     */
   def knnGraphBeamTopK(s: SparkSession, d: String, queries: DataFrame,
-      k: Int, beam: Int = X18Beam, hops: Int = X18Hops,
-      nEntries: Int = X18Entries, degree: Int = X18Degree): DataFrame =
-    beamSearchGraph(s, knnGraphDir(s, d, degree), queries, k, beam, hops,
-      nEntries)
+      k: Int): DataFrame =
+    beamSearchGraph(s, knnGraphDir(s, d), queries, k)
 
   /** The beam-search serve over an arbitrary landed graph dir —
     * index-only (bucket count and entry points come from the layout's
@@ -1700,21 +1816,8 @@ object SimilarityOps {
       hops: Int = X18Hops, nEntries: Int = X18Entries,
       seeds: Option[DataFrame] = None): DataFrame = {
     val q = withNorm(s, queries, "q").localCheckpoint(true)
-    graphBeamWalk(s, dir, beam, hops, nEntries, seeds,
-      (cand, nodeRows) => {
-        val cn = nodeRows.filter(col("nrm").isNotNull && col("nrm") > 0)
-          .select(col("id").as("c_id"), col("emb").as("c_emb"),
-            col("nrm").as("c_norm"))
-        cand.join(broadcast(cn), "c_id").join(broadcast(q), "q_id")
-          .filter(col("q_id") =!= col("c_id"))
-          .select(col("q_id"), col("c_id"),
-            (VecOps.fdot(s, col("q_emb"), col("c_emb")) /
-              (col("q_norm") * col("c_norm"))).as("sim"))
-      },
-      q.select(col("q_id")))
-      .withColumn("rank", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))))
-      .filter(col("rank") <= k)
+    topK(graphBeamWalk(s, dir, beam, hops, nEntries, seeds,
+      floatScore(s, q), q.select(col("q_id"))), k)
   }
 
   /** The scoring-agnostic greedy walk over a landed graph layout: the
@@ -1731,12 +1834,7 @@ object SimilarityOps {
       hops: Int, nEntries: Int, seeds: Option[DataFrame],
       score: (DataFrame, DataFrame) => DataFrame,
       qIds: DataFrame, keepAllScored: Boolean = false): DataFrame = {
-    val nb = graphSidecarInt(dir, "_nbuckets.txt")
-    val nodes = Artifacts.read(s, dir)
-    def lookup(ids: Seq[Long]): DataFrame = {
-      val pbs = ids.map(i => (i % nb).toInt).distinct.sorted
-      nodes.filter(col("pb").isin(pbs: _*) && col("id").isin(ids: _*))
-    }
+    val lookup = nodeLookup(s, dir)
     val entryIds = {
       val src = scala.io.Source.fromFile(s"$dir/_entries.txt")
       try src.getLines().filter(_.nonEmpty).map(_.toLong).toSeq
@@ -1753,9 +1851,7 @@ object SimilarityOps {
       case Some(sd) =>
         val pairs = sd.select(col("q_id"), col("c_id")).distinct()
           .localCheckpoint(true)
-        val ids = pairs.select(col("c_id")).distinct()
-          .collect().map(_.getLong(0)).toSeq.sorted
-        scoreOf(pairs, ids)
+        scoreOf(pairs, idsOf(pairs))
       case None =>
         scoreOf(
           qIds.crossJoin(
@@ -1769,8 +1865,7 @@ object SimilarityOps {
     // pool (x22): navigation stays unfiltered, results come from here
     var all = front
     for (_ <- 1 to hops) {
-      val beamIds = front.select(col("c_id")).distinct()
-        .collect().map(_.getLong(0)).toSeq.sorted
+      val beamIds = idsOf(front)
       if (beamIds.nonEmpty) {
         val nbrLists = lookup(beamIds)
           .groupBy(col("id").as("c_id"))
@@ -1782,8 +1877,7 @@ object SimilarityOps {
           .distinct()
           .join(visited, Seq("q_id", "c_id"), "left_anti")
           .localCheckpoint(true)
-        val candIds = cand.select(col("c_id")).distinct()
-          .collect().map(_.getLong(0)).toSeq.sorted
+        val candIds = idsOf(cand)
         if (candIds.nonEmpty) {
           // checkpoint `scored` only when it joins the keepAllScored
           // pool (round-14 advice): the common float walk already gets
@@ -1818,19 +1912,13 @@ object SimilarityOps {
       .select(col("q_id"), col("rank"), col("c_id"), col("sim"))
       .orderBy(col("q_id"), col("rank"))
 
-  /** Measured 1.00/0.98 aggregate at the registered knobs (X18Probe,
-    * 2026-08-14 testdata); floor = 0.98 − 0.13 regen slack.
+  /** Measured 1.00/0.98 aggregate at the registered knobs (one-off
+    * sweep, 2026-08-14 testdata); floor = 0.98 − 0.13 regen slack.
     */
   private[graft] val X18Floor = 0.85
 
-  private def x18Gate(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val q5 = emb.filter(col("vec_id") < 5)
-    val served = knnGraphBeamTopK(s, d, q5, 10)
-    recallGate(served,
-      memoExact(s, d, "probe5k10")(bruteForceTopK(emb, q5, 10)),
-      X18Floor)
-  }
+  private def x18Gate(s: SparkSession, d: String): DataFrame =
+    fiveProbeGate(s, d, X18Floor)((_, q5) => knnGraphBeamTopK(s, d, q5, 10))
 
   // ---- X18b: incremental append into the landed k-NN graph ---------------
   /** The x11b discipline applied to the GRAPH index — the insert path
@@ -1874,10 +1962,8 @@ object SimilarityOps {
     appendOnce("knngapnd_delta", d, dir) {
       // insert-by-search: each (nonzero-norm) delta vector's edges are
       // its beam-search neighbours over the BASE graph
-      graphInsertRows(s, dir, delta,
-          graphSidecarInt(dir, "_nbuckets.txt"))
-        .repartition(col("pb"))
-        .write.mode("append").partitionBy("pb").parquet(dir)
+      writeLayout(graphInsertRows(s, dir, delta,
+          graphSidecarInt(dir, "_nbuckets.txt")), dir, "pb", "append")
     }
   }
 
@@ -1891,14 +1977,12 @@ object SimilarityOps {
 
   /** E26: STREAMING graph-index maintenance — x18b's insert-by-search as
     * a Structured Streaming sink (the e20 shape for the graph family):
-    * newly-arrived vectors stream in (3 staged files, maxFilesPerTrigger
-    * = 1 + AvailableNow → 3 micro-batches), foreachBatch runs the SAME
-    * insert against the graph-so-far and commits through
-    * [[graft.util.Landing.idempotentAppend]]'s replay-safe protocol.
-    * Unlike e20 (cell assignment is slicing-invariant, so streamed ≡
-    * batch exactly), graph insertion is ORDER-DEPENDENT by nature — a
-    * later micro-batch's vectors may link to an earlier one's nodes,
-    * exactly the online-graph property (FreshDiskANN serves while
+    * newly-arrived vectors stream in through [[streamAppend]] (3
+    * micro-batches), and each batch runs the SAME insert against the
+    * graph-so-far. Unlike e20 (cell assignment is slicing-invariant, so
+    * streamed ≡ batch exactly), graph insertion is ORDER-DEPENDENT by
+    * nature — a later micro-batch's vectors may link to an earlier one's
+    * nodes, exactly the online-graph property (FreshDiskANN serves while
     * inserting) — so the gate is the family's recall floor over the
     * deterministic staged order, not row-equality with x18b. At 100 TB
     * a batch costs one beam search per arriving vector (bounded,
@@ -1914,25 +1998,8 @@ object SimilarityOps {
     }
     appendOnce("knngstrm_delta", d, dir) {
       val nb = graphSidecarInt(dir, "_nbuckets.txt")
-      val stage = Artifacts.scratchDir("graft_knngstrm_stage")
-      val ckpt = Artifacts.scratchDir("graft_knngstrm_ckpt")
-      delta.repartition(3).write.mode("overwrite").parquet(stage.toString)
-      val schema = Artifacts.parquetSchema(s, stage.toString)
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage.toString)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.util.Landing.idempotentAppend(
-            graphInsertRows(s, dir, batch, nb).repartition(col("pb")),
-            dir, batchId, "pb")
-        }
-        .start()
-      q.awaitTermination()
-      Artifacts.delete(stage)
-      Artifacts.delete(ckpt)
+      streamAppend(s, "knngstrm", delta, dir, "pb")(
+        graphInsertRows(s, dir, _, nb))
     }
   }
 
@@ -1941,14 +2008,9 @@ object SimilarityOps {
     */
   private[graft] val E26Floor = 0.85
 
-  private def e26Gate(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val q5 = emb.filter(col("vec_id") < 5)
-    val served = beamSearchGraph(s, e26LayoutDir(s, d), q5, 10)
-    recallGate(served,
-      memoExact(s, d, "probe5k10")(bruteForceTopK(emb, q5, 10)),
-      E26Floor)
-  }
+  private def e26Gate(s: SparkSession, d: String): DataFrame =
+    fiveProbeGate(s, d, E26Floor)((_, q5) =>
+      beamSearchGraph(s, e26LayoutDir(s, d), q5, 10))
 
   /** Measured 1.00/0.98 aggregate vs exact FULL-corpus top-k
     * (RecallProbe, 2026-08-14 testdata) — identical to the full-build
@@ -1974,26 +2036,18 @@ object SimilarityOps {
       .join(found.groupBy(col("q_id").as("id"))
         .agg(sort_array(collect_set(col("c_id"))).as("nbrs")),
         Seq("id"), "left")
-      .select(col("id"), col("emb"), col("nrm"),
-        coalesce(col("nbrs"), array().cast("array<bigint>")).as("nbrs"),
-        pmod(col("id"), lit(nb.toLong)).cast("int").as("pb"))
+      .select(col("id"), col("emb"), col("nrm"), nbrsOrEmpty, nodeBlock(nb))
     val reverseRows = found
       .groupBy(col("c_id").as("id"))
       .agg(sort_array(collect_set(col("q_id"))).as("nbrs"))
       .select(col("id"), lit(null).cast("array<float>").as("emb"),
-        lit(null).cast("double").as("nrm"), col("nbrs"),
-        pmod(col("id"), lit(nb.toLong)).cast("int").as("pb"))
+        lit(null).cast("double").as("nrm"), col("nbrs"), nodeBlock(nb))
     deltaRows.unionByName(reverseRows)
   }
 
-  private def x18bGate(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val q5 = emb.filter(col("vec_id") < 5)
-    val served = beamSearchGraph(s, x18bDir(s, d), q5, 10)
-    recallGate(served,
-      memoExact(s, d, "probe5k10")(bruteForceTopK(emb, q5, 10)),
-      X18bFloor)
-  }
+  private def x18bGate(s: SparkSession, d: String): DataFrame =
+    fiveProbeGate(s, d, X18bFloor)((_, q5) =>
+      beamSearchGraph(s, x18bDir(s, d), q5, 10))
 
   // ---- X19: hierarchical (HNSW-style) layered graph serve ----------------
   /** Layer thinning base: level ≥ l holds the nodes whose seeded xxhash64
@@ -2082,14 +2136,8 @@ object SimilarityOps {
     */
   private[graft] val X19Floor = 0.77
 
-  private def x19Gate(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val q5 = emb.filter(col("vec_id") < 5)
-    val served = hnswTopK(s, d, q5, 10)
-    recallGate(served,
-      memoExact(s, d, "probe5k10")(bruteForceTopK(emb, q5, 10)),
-      X19Floor)
-  }
+  private def x19Gate(s: SparkSession, d: String): DataFrame =
+    fiveProbeGate(s, d, X19Floor)((_, q5) => hnswTopK(s, d, q5, 10))
 
   // ---- X20: graph-index compaction ----------------------------------------
   /** Degree cap after compaction: 1.5× the build degree — reverse edges
@@ -2145,17 +2193,11 @@ object SimilarityOps {
         .groupBy(col("id"))
         .agg(sort_array(collect_list(col("nbr"))).as("nbrs"))
       // isolated nodes (empty lists) fall out of the explode — join back
-      merged.select(col("id"), col("emb"), col("nrm"))
+      writeLayout(merged.select(col("id"), col("emb"), col("nrm"))
         .join(pruned, Seq("id"), "left")
-        .select(col("id"), col("emb"), col("nrm"),
-          coalesce(col("nbrs"), array().cast("array<bigint>")).as("nbrs"),
-          pmod(col("id"), lit(nb.toLong)).cast("int").as("pb"))
-        .repartition(col("pb"))
-        .write.mode("overwrite").partitionBy("pb").parquet(dir)
-      for (sc <- Seq("_entries.txt", "_nbuckets.txt"))
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$srcDir/$sc"),
-          java.nio.file.Paths.get(s"$dir/$sc"))
+        .select(col("id"), col("emb"), col("nrm"), nbrsOrEmpty,
+          nodeBlock(nb)), dir, "pb")
+      copySidecars(srcDir, dir)
     }
 
   /** Measured 1.00/0.98 aggregate serving from the compacted layout
@@ -2165,14 +2207,9 @@ object SimilarityOps {
     */
   private[graft] val X20Floor = 0.85
 
-  private def x20Gate(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val q5 = emb.filter(col("vec_id") < 5)
-    val served = beamSearchGraph(s, x20CompactDir(s, d), q5, 10)
-    recallGate(served,
-      memoExact(s, d, "probe5k10")(bruteForceTopK(emb, q5, 10)),
-      X20Floor)
-  }
+  private def x20Gate(s: SparkSession, d: String): DataFrame =
+    fiveProbeGate(s, d, X20Floor)((_, q5) =>
+      beamSearchGraph(s, x20CompactDir(s, d), q5, 10))
 
   // ---- X21: SQ8-compressed graph serving -----------------------------------
   /** The COMPRESSED graph layout: x18's landed graph with every node
@@ -2187,18 +2224,10 @@ object SimilarityOps {
     Artifacts.dir(Artifacts.key("graphsq8", Tables.path(d, "embeddings")),
       "graft_gsq8") { dir =>
       val src = knnGraphDir(s, d)
-      val qp = VecOps.qparams8(s, col("emb"))
-      Artifacts.read(s, src).select(col("id"),
-          VecOps.quantize8(s, col("emb")).as("qb"),
-          element_at(qp, 1).cast("double").as("vmin"),
-          element_at(qp, 2).cast("double").as("step"),
-          col("nrm"), col("nbrs"), col("pb"))
-        .repartition(col("pb"))
-        .write.mode("overwrite").partitionBy("pb").parquet(dir)
-      for (sc <- Seq("_entries.txt", "_nbuckets.txt"))
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$src/$sc"),
-          java.nio.file.Paths.get(s"$dir/$sc"))
+      writeLayout(Artifacts.read(s, src).select(Seq(col("id")) ++
+          sq8Codes(s, col("emb")).map { case (n, c) => c.as(n) } ++
+          Seq(col("nrm"), col("nbrs"), col("pb")): _*), dir, "pb")
+      copySidecars(src, dir)
     }
 
   /** X21: the DiskANN serving architecture proper — WALK on compressed
@@ -2216,17 +2245,7 @@ object SimilarityOps {
       k: Int): DataFrame = {
     val codesDir = x21Sq8Dir(s, d)
     val floatDir = knnGraphDir(s, d)
-    graphSq8TopKBuild(s, codesDir, floatDir, queries, k)
-  }
-
-  private def graphSq8TopKBuild(s: SparkSession, codesDir: String,
-      floatDir: String, queries: DataFrame, k: Int): DataFrame = {
-    val qk = queries.select(col("vec_id").as("q_id"),
-        col("embedding").as("q_emb"),
-        VecOps.fnorm(s, col("embedding")).as("q_norm"),
-        // interpreted HOF is fine on the handful of query rows (x5 note)
-        aggregate(col("embedding"), lit(0.0),
-          (a, x) => a + x.cast("double")).as("q_sum"))
+    val qk = withNorm(s, queries, "q", qSum)
       .filter(col("q_norm") > 0)
       .localCheckpoint(true)
     val front = graphBeamWalk(s, codesDir, X18Beam, X18Hops, X18Entries,
@@ -2237,32 +2256,16 @@ object SimilarityOps {
             col("step"), col("nrm").as("c_norm"))
         cand.join(broadcast(cn), "c_id").join(broadcast(qk), "q_id")
           .filter(col("q_id") =!= col("c_id"))
-          .select(col("q_id"), col("c_id"),
-            ((col("vmin") * col("q_sum") +
-              col("step") * VecOps.qdot8(s, col("qb"), col("q_emb"))) /
-              (col("c_norm") * col("q_norm"))).as("sim"))
+          .select(col("q_id"), col("c_id"), sq8Sim(s).as("sim"))
       },
       qk.select(col("q_id")))
     // exact rerank of the beam finalists against the float layout —
     // ids are driver-known (≤ queries×beam), so the read is
     // partition-pruned exactly like a serve hop
-    val nbF = graphSidecarInt(floatDir, "_nbuckets.txt")
-    val ids = front.select(col("c_id")).distinct()
-      .collect().map(_.getLong(0)).toSeq.sorted
-    val pbs = ids.map(i => (i % nbF).toInt).distinct.sorted
-    val cn = Artifacts.read(s, floatDir)
-      .filter(col("pb").isin(pbs: _*) && col("id").isin(ids: _*))
-      .filter(col("nrm").isNotNull && col("nrm") > 0)
-      .select(col("id").as("c_id"), col("emb").as("c_emb"),
-        col("nrm").as("c_norm"))
-    front.select(col("q_id"), col("c_id"))
+    val cn = floatNodes(nodeLookup(s, floatDir)(idsOf(front)))
+    topK(front.select(col("q_id"), col("c_id"))
       .join(broadcast(cn), "c_id").join(broadcast(qk), "q_id")
-      .select(col("q_id"), col("c_id"),
-        (VecOps.fdot(s, col("q_emb"), col("c_emb")) /
-          (col("q_norm") * col("c_norm"))).as("sim"))
-      .withColumn("rank", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))))
-      .filter(col("rank") <= k)
+      .select(col("q_id"), col("c_id"), qcSim(s).as("sim")), k)
   }
 
   /** Raw x21 builder on the 5-probe set (fixture-pinned like x18/x19). */
@@ -2278,14 +2281,8 @@ object SimilarityOps {
     */
   private[graft] val X21Floor = 0.85
 
-  private def x21Gate(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val q5 = emb.filter(col("vec_id") < 5)
-    val served = graphSq8TopK(s, d, q5, 10)
-    recallGate(served,
-      memoExact(s, d, "probe5k10")(bruteForceTopK(emb, q5, 10)),
-      X21Floor)
-  }
+  private def x21Gate(s: SparkSession, d: String): DataFrame =
+    fiveProbeGate(s, d, X21Floor)((_, q5) => graphSq8TopK(s, d, q5, 10))
 
   // ---- X22: filtered graph search ------------------------------------------
   /** The labeled graph layout: x18's landed graph with the filterable
@@ -2299,15 +2296,10 @@ object SimilarityOps {
       val src = knnGraphDir(s, d)
       val lbl = Tables.embeddings(s, d)
         .select(col("vec_id").as("id"), col("label").as("lbl"))
-      Artifacts.read(s, src).join(broadcast(lbl), Seq("id"), "left")
+      writeLayout(Artifacts.read(s, src).join(broadcast(lbl), Seq("id"), "left")
         .select(col("id"), col("emb"), col("nrm"), col("lbl"),
-          col("nbrs"), col("pb"))
-        .repartition(col("pb"))
-        .write.mode("overwrite").partitionBy("pb").parquet(dir)
-      for (sc <- Seq("_entries.txt", "_nbuckets.txt"))
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$src/$sc"),
-          java.nio.file.Paths.get(s"$dir/$sc"))
+          col("nbrs"), col("pb")), dir, "pb")
+      copySidecars(src, dir)
     }
 
   /** X22: FILTERED search on the graph index — the graph family's
@@ -2328,51 +2320,25 @@ object SimilarityOps {
   def graphFilteredTopK(s: SparkSession, d: String, queries: DataFrame,
       k: Int): DataFrame = {
     val dir = x22LabeledDir(s, d)
-    graphFilteredTopKBuild(s, dir, queries, k)
-  }
-
-  private def graphFilteredTopKBuild(s: SparkSession, dir: String,
-      queries: DataFrame, k: Int): DataFrame = {
-    val qk = queries.select(col("vec_id").as("q_id"),
-        col("embedding").as("q_emb"),
-        VecOps.fnorm(s, col("embedding")).as("q_norm"),
-        col("label").as("q_label"))
+    val qk = withNorm(s, queries, "q", col("label").as("q_label"))
       .filter(col("q_norm") > 0)
       .localCheckpoint(true)
-    val qv = qk.select(col("q_id"), col("q_emb"), col("q_norm"))
     // wider walk than the unfiltered serve: the result pool must hold
     // ~1/selectivity × k same-label candidates, so the filtered family
-    // trades beam/hops/entries up (X22Probe: 32/4/8 pooled 0.96/0.76;
-    // 48/5/16 reaches 0.98/0.94)
+    // trades beam/hops/entries up (a one-off sweep: 32/4/8 pooled
+    // 0.96/0.76; 48/5/16 reaches 0.98/0.94)
     val scoredAll = graphBeamWalk(s, dir, beam = 48, hops = 5,
       nEntries = 16, None,
-      (cand, nodeRows) => {
-        val cn = nodeRows.filter(col("nrm").isNotNull && col("nrm") > 0)
-          .select(col("id").as("c_id"), col("emb").as("c_emb"),
-            col("nrm").as("c_norm"))
-        cand.join(broadcast(cn), "c_id").join(broadcast(qv), "q_id")
-          .filter(col("q_id") =!= col("c_id"))
-          .select(col("q_id"), col("c_id"),
-            (VecOps.fdot(s, col("q_emb"), col("c_emb")) /
-              (col("q_norm") * col("c_norm"))).as("sim"))
-      },
+      floatScore(s, qk.select(col("q_id"), col("q_emb"), col("q_norm"))),
       qk.select(col("q_id")), keepAllScored = true)
-    val nb = graphSidecarInt(dir, "_nbuckets.txt")
-    val ids = scoredAll.select(col("c_id")).distinct()
-      .collect().map(_.getLong(0)).toSeq.sorted
-    val pbs = ids.map(i => (i % nb).toInt).distinct.sorted
-    val lbls = Artifacts.read(s, dir)
-      .filter(col("pb").isin(pbs: _*) && col("id").isin(ids: _*))
+    val lbls = nodeLookup(s, dir)(idsOf(scoredAll))
       .filter(col("nrm").isNotNull)
       .select(col("id").as("c_id"), col("lbl"))
-    scoredAll.join(broadcast(lbls), "c_id")
+    topK(scoredAll.join(broadcast(lbls), "c_id")
       .join(broadcast(qk.select(col("q_id"), col("q_label"))), "q_id")
       .filter(col("lbl") === col("q_label"))
       .select(col("q_id"), col("q_label").as("label"), col("c_id"),
-        col("sim"))
-      .withColumn("rank", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))))
-      .filter(col("rank") <= k)
+        col("sim")), k)
   }
 
   /** Raw x22 builder on the 5-probe set (fixture-pinned). */
@@ -2389,16 +2355,46 @@ object SimilarityOps {
     */
   private[graft] val X22Floor = 0.81
 
-  private def x22Gate(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val q5 = emb.filter(col("vec_id") < 5)
-    val served = graphFilteredTopK(s, d, q5, 10)
-    recallGate(served,
-      memoExact(s, d, "probe5k10filt")(filteredBruteTopK(emb, q5, 10)),
-      X22Floor)
-  }
+  private def x22Gate(s: SparkSession, d: String): DataFrame =
+    fiveProbeGate(s, d, X22Floor, filtered = true)((_, q5) =>
+      graphFilteredTopK(s, d, q5, 10))
 
   // ---- X11b: incremental append into the persisted index -----------------
+  /** The x11b base/delta split and the base-fitted quantizer — shared by
+    * the build, append, and serve stages (all memoized per corpus
+    * version through the `:base` family).
+    */
+  private def x11bState(s: SparkSession, d: String)
+      : (DataFrame, DataFrame, IvfFit) = {
+    val emb = Tables.embeddings(s, d)
+    val base = emb.filter(col("vec_id") % 10 =!= 0)
+    (base, emb.filter(col("vec_id") % 10 === 0), ivfFit(base, tag = ":base"))
+  }
+
+  /** The exact frame the append job lands: delta rows only, assigned to
+    * the BASE-fitted cells. Exposed for the spec that pins the append
+    * contract — its plan reads the delta alone (one file relation, the
+    * `% 10 = 0` filter pushed), never a union with the base.
+    */
+  private[graft] def x11bDeltaFrame(s: SparkSession, d: String): DataFrame = {
+    val (_, delta, fit) = x11bState(s, d)
+    assignedForLanding(s, delta, fit)
+  }
+
+  /** Build-and-append: lands the base layout once per version, then
+    * commits the assigned delta as new files inside the existing cell
+    * partitions — also once per version. Returns the layout dir.
+    */
+  private[graft] def x11bLayoutDir(s: SparkSession, d: String): String = {
+    val (base, _, fit) = x11bState(s, d)
+    val dir = cellLayoutDir(d, "ivfapnd")(assignedForLanding(s, base, fit))
+    appendOnce("ivfapnd_delta", d, dir) {
+      // the append job's ONLY data-sized input is the delta scan — one
+      // map-only assignment, one file commit into existing partitions
+      writeLayout(x11bDeltaFrame(s, d), dir, "cell", "append")
+    }
+  }
+
   /** X11b: incremental append INTO the persisted index — x11's no-refit
     * delta assignment composed with x12's partition-pruned serving
     * layout, closing the gap between the two (round-10 verdict: x11's
@@ -2415,76 +2411,25 @@ object SimilarityOps {
     * rescanned, or reshuffled; quantizer refit stays an offline
     * compaction decision.
     */
-  /** The x11b base/delta split and the base-fitted quantizer state —
-    * shared by the build, append, and serve stages (all memoized per
-    * corpus version through the `:base` family).
-    */
-  private def x11bState(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, Array[Array[Float]], Int, Double) = {
-    val emb = Tables.embeddings(s, d)
-    val base = emb.filter(col("vec_id") % 10 =!= 0)
-    val delta = emb.filter(col("vec_id") % 10 === 0)
-    val (cells, probe) = ivfGeometry(memoCount(base, tag = ":base"), 0, 0)
-    val fs = ivfFitSample(0, cells)
-    val cents = memoCentroids(base, fs, cells, tag = ":base")
-    val margin =
-      if (cents.isEmpty) 0.0
-      else memoSpillThreshold(base, fs, cents, tag = ":base")
-    (base, delta, cents, probe, margin)
-  }
-
-  /** The exact frame the append job lands: delta rows only, assigned to
-    * the BASE-fitted cells. Exposed for the spec that pins the append
-    * contract — its plan reads the delta alone (one file relation, the
-    * `% 10 = 0` filter pushed), never a union with the base.
-    */
-  private[graft] def x11bDeltaFrame(s: SparkSession, d: String): DataFrame = {
-    val (_, delta, cents, _, margin) = x11bState(s, d)
-    assignedForLanding(s, delta, cents, margin)
-  }
-
-  /** Build-and-append: lands the base layout once per version, then
-    * commits the assigned delta as new files inside the existing cell
-    * partitions — also once per version. Returns the layout dir.
-    */
-  private[graft] def x11bLayoutDir(s: SparkSession, d: String): String = {
-    val (base, _, cents, _, margin) = x11bState(s, d)
-    val dir = Artifacts.dir(Artifacts.key("ivfapnd", Tables.path(d, "embeddings")),
-        "graft_ivfapnd") { p =>
-      assignedForLanding(s, base, cents, margin)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(p)
-    }
-    appendOnce("ivfapnd_delta", d, dir) {
-      // the append job's ONLY data-sized input is the delta scan — one
-      // map-only assignment, one file commit into existing partitions
-      x11bDeltaFrame(s, d)
-        .repartition(col("cell"))
-        .write.mode("append").partitionBy("cell").parquet(dir)
-    }
-  }
-
   def ivfAppendedTopK(s: SparkSession, d: String, queries: DataFrame,
       k: Int): DataFrame = {
-    val (_, _, cents, probe, _) = x11bState(s, d)
-    if (cents.isEmpty)
+    val (_, _, fit) = x11bState(s, d)
+    if (fit.cents.isEmpty)
       return bruteForceTopK(Tables.embeddings(s, d), queries, k)
-    servePersisted(s, x11bLayoutDir(s, d), queries, cents, probe, k)
+    servePersisted(s, x11bLayoutDir(s, d), queries, fit, fit.probe, k)
   }
 
   // ---- E20: STREAMING index maintenance -----------------------------------
   /** The x11b append job as a Structured Streaming sink — online vector
-    * ingest. Newly-arrived delta vectors stream in (staged as 3 files,
-    * `maxFilesPerTrigger=1` + AvailableNow → 3 micro-batches here), and
-    * `foreachBatch` runs the SAME map-side cell assignment the batch
-    * append uses and commits new files into the existing
-    * `partitionBy(cell)` layout. foreachBatch itself is AT-LEAST-ONCE (a
-    * failed-then-retried micro-batch re-runs the sink), so the commit
-    * goes through [[graft.util.Landing.idempotentAppend]]'s replay-safe
-    * stage/clean/publish/marker protocol — a replayed batchId converges
-    * on the same file set instead of duplicating delta rows, which keeps
-    * both the served top-k AND the file-snapshot contract exact under
-    * retry. The index is a SET of assigned rows,
+    * ingest. Newly-arrived delta vectors stream in through
+    * [[streamAppend]] (3 micro-batches), and each batch runs the SAME
+    * map-side cell assignment the batch append uses and commits new
+    * files into the existing `partitionBy(cell)` layout. foreachBatch
+    * itself is AT-LEAST-ONCE (a failed-then-retried micro-batch re-runs
+    * the sink), so the replay-safe commit protocol makes a replayed
+    * batchId converge on the same file set instead of duplicating delta
+    * rows, which keeps both the served top-k AND the file-snapshot
+    * contract exact under retry. The index is a SET of assigned rows,
     * invariant to micro-batch slicing, so the served candidates are
     * IDENTICAL to x11b's batch append (spec-asserted) and the same
     * recall floor gates it. At 100 TB this is the production online-
@@ -2494,43 +2439,20 @@ object SimilarityOps {
     * an offline compaction decision (x12's note).
     */
   private[graft] def e20LayoutDir(s: SparkSession, d: String): String = {
-    val (base, delta, cents, _, margin) = x11bState(s, d)
-    val dir = Artifacts.dir(Artifacts.key("ivfstrm", Tables.path(d, "embeddings")),
-        "graft_ivfstrm") { p =>
-      assignedForLanding(s, base, cents, margin)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(p)
-    }
+    val (base, delta, fit) = x11bState(s, d)
+    val dir = cellLayoutDir(d, "ivfstrm")(assignedForLanding(s, base, fit))
     appendOnce("ivfstrm_delta", d, dir) {
-      val stage = Artifacts.scratchDir("graft_ivfstrm_stage")
-      val ckpt = Artifacts.scratchDir("graft_ivfstrm_ckpt")
-      delta.repartition(3).write.mode("overwrite").parquet(stage.toString)
-      val schema = Artifacts.parquetSchema(s, stage.toString)
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage.toString)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.util.Landing.idempotentAppend(
-            assignedForLanding(s, batch, cents, margin)
-              .repartition(col("cell")),
-            dir, batchId, "cell")
-        }
-        .start()
-      q.awaitTermination()
-      Artifacts.delete(stage)
-      Artifacts.delete(ckpt)
+      streamAppend(s, "ivfstrm", delta, dir, "cell")(
+        assignedForLanding(s, _, fit))
     }
   }
 
   def ivfStreamedTopK(s: SparkSession, d: String, queries: DataFrame,
       k: Int): DataFrame = {
-    val (_, _, cents, probe, _) = x11bState(s, d)
-    if (cents.isEmpty)
+    val (_, _, fit) = x11bState(s, d)
+    if (fit.cents.isEmpty)
       return bruteForceTopK(Tables.embeddings(s, d), queries, k)
-    servePersisted(s, e20LayoutDir(s, d), queries, cents, probe, k)
+    servePersisted(s, e20LayoutDir(s, d), queries, fit, fit.probe, k)
   }
 
   // ---- X16: persisted IVF+PQ index (codes on disk) ------------------------
@@ -2549,37 +2471,25 @@ object SimilarityOps {
     * x4/x9; the layout lands once per version like x12.
     */
   def ivfPqPersistedTopK(s: SparkSession, d: String, queries: DataFrame,
-      k: Int, m: Int = 8, ks: Int = 16, expand: Int = 32): DataFrame = {
+      k: Int): DataFrame = {
     val emb = Tables.embeddings(s, d)
-    val (cells, probe) = ivfGeometry(memoCount(emb), 0, 0)
-    val fs = ivfFitSample(0, cells)
-    val cents = memoCentroids(emb, fs, cells)
-    if (cents.isEmpty) return bruteForceTopK(emb, queries, k)
-    val margin = memoSpillThreshold(emb, fs, cents)
-    val sampleUnit = memoUnitSample(emb, 4096)
-    val books = Artifacts.value(Artifacts.key("pqbooks", emb, m, ks, 4096))(
-      pqTrain(sampleUnit, m, ks, iters = 8))
-    val dir = Artifacts.dir(Artifacts.key("ivfpq", Tables.path(d, "embeddings")),
-        "graft_ivfpq") { p =>
+    val fit = ivfFit(emb)
+    if (fit.cents.isEmpty) return bruteForceTopK(emb, queries, k)
+    val books = pqBooks(emb, memoUnitSample(emb, PqFitSample))
+    val dir = cellLayoutDir(d, "ivfpq") {
       val pre = emb.select(col("vec_id"), col("embedding"),
           VecOps.fnorm(s, col("embedding")).as("_n"))
         .filter(col("_n") > 0)
-      spillAssigned(s, pre, cents, Seq(
-          "c_norm" -> col("_n"),
-          "codes" -> VecOps.pqEncode(s,
-            transform(col("embedding"), x => (x / col("_n")).cast("float")),
-            books)), margin)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(p)
+      spillAssigned(s, pre, fit.cents, Seq(
+          "c_norm" -> col("_n"), "codes" -> pqCodes(s, "_n", books)),
+        fit.margin)
     }
-    val landed = Artifacts.read(s, dir)
-    val probes = queryProbes(s, queries, cents, probe, matchLabel = false)
     // shared probed-cell memo (the d13 build-cost class): x16 was the one
     // persisted serve still collecting the probe plan per fresh build
-    val probedCells = memoProbedCells(queries, probes, cents, probe)
+    val (cells, probes) = probedLayout(s, dir, queries, fit, fit.probe, Nil)
     val qlut = queries.select(col("vec_id").as("q_id"),
       VecOps.pqLut(s, col("embedding"), books).as("lut"))
-    val approx = landed.filter(col("cell").isin(probedCells: _*))
+    val approx = cells
       .join(broadcast(probes
         .select(col("q_id"), col("cell"), col("q_norm"))), "cell")
       .join(broadcast(qlut), "q_id")
@@ -2590,24 +2500,7 @@ object SimilarityOps {
       // spill dedup — and the Aggregate-under-Window safe topology
       .groupBy(col("q_id"), col("c_id"))
       .agg(max(col("approx_sim")).as("approx_sim"))
-    val wA = Window.partitionBy(col("q_id"))
-      .orderBy(col("approx_sim").desc, col("c_id"))
-    val cands = approx.withColumn("r", row_number().over(wA))
-      .filter(col("r") <= k * expand).select(col("q_id"), col("c_id"))
-    val q = queries.select(col("vec_id").as("q_id"),
-      col("embedding").as("q_emb"),
-      VecOps.fnorm(s, col("embedding")).as("q_norm"))
-    val exact = emb.select(col("vec_id").as("c_id"),
-        col("embedding").as("c_emb"),
-        VecOps.fnorm(s, col("embedding")).as("c_norm"))
-      .join(broadcast(cands), "c_id")
-      .join(broadcast(q), "q_id")
-      .select(col("q_id"), col("c_id"),
-        (VecOps.fdot(s, col("q_emb"), col("c_emb")) /
-          (col("q_norm") * col("c_norm"))).as("sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("c_id"))
-    exact.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    rerankExact(s, emb, queries, approx, k, PqExpand)
   }
 
   /** x16's recall ceiling is the IVF routing (x4's family — PQ at
@@ -2641,35 +2534,24 @@ object SimilarityOps {
     * base), never per append or per query.
     */
   private[graft] def x15State(s: SparkSession, d: String)
-      : (String, Array[Array[Float]], Int) = {
-    val apDir = x11bLayoutDir(s, d)
-    val recovered = Artifacts.read(s, apDir)
+      : (String, IvfFit) = {
+    val recovered = Artifacts.read(s, x11bLayoutDir(s, d))
       // c_label rides through so the compacted layout keeps the
       // filterable metadata (assignedForLanding expects `label`)
       .select(col("c_id").as("vec_id"), col("c_emb").as("embedding"),
         col("c_label").as("label"))
       .dropDuplicates("vec_id")
-    val (cells, probe) = ivfGeometry(memoCount(recovered, tag = ":compact"),
-      0, 0)
-    val fs = ivfFitSample(0, cells)
-    val cents = memoCentroids(recovered, fs, cells, tag = ":compact")
-    if (cents.isEmpty) return ("", cents, probe)
-    val margin = memoSpillThreshold(recovered, fs, cents, tag = ":compact")
-    val dir = Artifacts.dir(Artifacts.key("ivfcomp", Tables.path(d, "embeddings")),
-        "graft_ivfcomp") { p =>
-      assignedForLanding(s, recovered, cents, margin)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(p)
-    }
-    (dir, cents, probe)
+    val fit = ivfFit(recovered, tag = ":compact")
+    if (fit.cents.isEmpty) return ("", fit)
+    (cellLayoutDir(d, "ivfcomp")(assignedForLanding(s, recovered, fit)), fit)
   }
 
   def ivfCompactedTopK(s: SparkSession, d: String, queries: DataFrame,
       k: Int): DataFrame = {
-    val (dir, cents, probe) = x15State(s, d)
-    if (cents.isEmpty)
+    val (dir, fit) = x15State(s, d)
+    if (fit.cents.isEmpty)
       return bruteForceTopK(Tables.embeddings(s, d), queries, k)
-    servePersisted(s, dir, queries, cents, probe, k)
+    servePersisted(s, dir, queries, fit, fit.probe, k)
   }
 
   /** x15 refits on the FULL recovered corpus, so its recall family is
@@ -2683,18 +2565,11 @@ object SimilarityOps {
   /** Measured storage expansion of boundary spill (RecallProbe): spilled
     * assignment rows / corpus rows at the auto geometry.
     */
-  private[graft] def spillExpansion(corpus: DataFrame,
-      margin: Double = -1.0): Double = {
-    val s = corpus.sparkSession
-    val n = memoCount(corpus)
-    val (cells, _) = ivfGeometry(n, 0, 0)
-    val fs = ivfFitSample(0, cells)
-    val cents = memoCentroids(corpus, fs, cells)
-    if (cents.isEmpty || n == 0L) 1.0
-    else {
-      val m = if (margin >= 0) margin else memoSpillThreshold(corpus, fs, cents)
-      spillAssigned(s, corpus, cents, Nil, m).count().toDouble / n
-    }
+  private[graft] def spillExpansion(corpus: DataFrame): Double = {
+    val fit = ivfFit(corpus)
+    if (fit.cents.isEmpty) 1.0
+    else spillAssigned(corpus.sparkSession, corpus, fit.cents, Nil,
+      fit.margin).count().toDouble / memoCount(corpus)
   }
 
   /** x4's registered shape runs the AUTO geometry ([[ivfGeometry]]) —
@@ -2712,61 +2587,80 @@ object SimilarityOps {
       .orderBy(col("q_id"), col("rank"))
   }
 
-  // ---- X5: SQ8 scalar-quantized top-k ------------------------------------
-  /** The storage-side ANN path: the corpus rides as 8-bit codes (4× less
-    * I/O and memory than float32 — at 100 TB of embeddings the scan IS
-    * the cost), queries stay float. Score phase reconstructs the dot
-    * product from the codes — dot(x,y) ≈ min·Σy + step·Σ(q_i·y_i), with
-    * Σ(q_i·y_i) a codegen kernel (VecKernels.qdot8) — takes the top
-    * k·expand candidates per query, then reranks them EXACTLY against
-    * the float corpus (the candidate list is tiny, so it broadcasts onto
-    * one corpus scan — the corpus itself never shuffles). SQ8 error is
-    * sub-1% of the similarity scale, so recall@k with a 4× expand is
-    * near-1 (spec-asserted ≥ 0.9 vs brute force).
+  // ---- Approximate score + exact rerank ----------------------------------
+  /** The exact rerank shared by the quantized serves (SQ8, IVF-SQ8, PQ,
+    * IVF-PQ): `approx` (q_id, c_id, approx_sim) keeps its top k·expand
+    * per query, and those candidates are rescored EXACTLY against the
+    * float corpus by id — the candidate list is tiny, so it broadcasts
+    * onto one corpus scan and the corpus never shuffles.
     */
-  def sq8TopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      expand: Int = 4): DataFrame = {
-    val s = corpus.sparkSession
-    // (min, step) come from the SAME kernel arithmetic the codes were
-    // quantized with (VecKernels.qparams8) — a column-side (max−min)/255
-    // recomputation promotes to double and can double-round a step the
-    // byte codes weren't built against
-    val qp = VecOps.qparams8(s, col("embedding"))
-    val c = corpus.select(col("vec_id").as("c_id"),
-      VecOps.fnorm(s, col("embedding")).as("c_norm"),
-      element_at(qp, 1).cast("double").as("vmin"),
-      element_at(qp, 2).cast("double").as("step"),
-      VecOps.quantize8(s, col("embedding")).as("qb"))
-      .filter(col("c_norm") > 0)
-    val q = queries.select(col("vec_id").as("q_id"),
-      col("embedding").as("q_emb"),
-      VecOps.fnorm(s, col("embedding")).as("q_norm"),
-      // interpreted HOF is fine HERE: the query side is a handful of rows
-      aggregate(col("embedding"), lit(0.0),
-        (a, x) => a + x.cast("double")).as("q_sum"))
-    val approx = c.crossJoin(broadcast(q))
-      .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"),
-        ((col("vmin") * col("q_sum") +
-          col("step") * VecOps.qdot8(s, col("qb"), col("q_emb"))) /
-          (col("c_norm") * col("q_norm"))).as("approx_sim"))
+  private def rerankExact(s: SparkSession, corpus: DataFrame,
+      queries: DataFrame, approx: DataFrame, k: Int,
+      expand: Int): DataFrame = {
     val wA = Window.partitionBy(col("q_id"))
       .orderBy(col("approx_sim").desc, col("c_id"))
     val cands = approx.withColumn("r", row_number().over(wA))
       .filter(col("r") <= k * expand)
       .select(col("q_id"), col("c_id"))
-    val exact = corpus.select(col("vec_id").as("c_id"),
-        col("embedding").as("c_emb"),
-        VecOps.fnorm(s, col("embedding")).as("c_norm"))
+    topK(withNorm(s, corpus, "c")
       .join(broadcast(cands), "c_id")
-      .join(broadcast(q.select(col("q_id"), col("q_emb"), col("q_norm"))),
-        "q_id")
-      .select(col("q_id"), col("c_id"),
-        (VecOps.fdot(s, col("q_emb"), col("c_emb")) /
-          (col("q_norm") * col("c_norm"))).as("sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("c_id"))
-    exact.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+      .join(broadcast(withNorm(s, queries, "q")), "q_id")
+      .select(col("q_id"), col("c_id"), qcSim(s).as("sim")), k)
+  }
+
+  /** SQ8 code columns of the float vector `v`: (vmin, step) come from the
+    * SAME kernel arithmetic the codes are quantized with
+    * (VecKernels.qparams8) — a column-side (max−min)/255 recomputation
+    * promotes to double and can double-round a step the byte codes
+    * weren't built against.
+    */
+  private def sq8Codes(s: SparkSession, v: Column): Seq[(String, Column)] = {
+    val qp = VecOps.qparams8(s, v)
+    Seq("vmin" -> element_at(qp, 1).cast("double"),
+      "step" -> element_at(qp, 2).cast("double"),
+      "qb" -> VecOps.quantize8(s, v))
+  }
+
+  /** The query's element sum, the Σq term of the SQ8 dot reconstruction;
+    * an interpreted HOF is fine here, the query side is a handful of rows.
+    */
+  private def qSum: Column =
+    aggregate(col("embedding"), lit(0.0),
+      (a, x) => a + x.cast("double")).as("q_sum")
+
+  /** Cosine reconstructed from SQ8 codes: dot(x,y) ≈ min·Σy +
+    * step·Σ(q_i·y_i), the second sum the codegen qdot8 kernel.
+    */
+  private def sq8Sim(s: SparkSession): Column =
+    (col("vmin") * col("q_sum") +
+      col("step") * VecOps.qdot8(s, col("qb"), col("q_emb"))) /
+      (col("c_norm") * col("q_norm"))
+
+  // ---- X5: SQ8 scalar-quantized top-k ------------------------------------
+  /** Rerank width of the SQ8 serves: SQ8 error is sub-1% of the
+    * similarity scale, so a 4× expand makes recall@k near-1.
+    */
+  private val Sq8Expand = 4
+
+  /** The storage-side ANN path: the corpus rides as 8-bit codes (4× less
+    * I/O and memory than float32 — at 100 TB of embeddings the scan IS
+    * the cost), queries stay float. Score phase reconstructs the dot
+    * product from the codes ([[sq8Sim]]), takes the top k·expand
+    * candidates per query, then reranks them EXACTLY against the float
+    * corpus ([[rerankExact]]). SQ8 error is sub-1% of the similarity
+    * scale, so recall@k with a 4× expand is near-1 (spec-asserted ≥ 0.9
+    * vs brute force).
+    */
+  def sq8TopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val s = corpus.sparkSession
+    val c = corpus.select(Seq(col("vec_id").as("c_id"),
+        VecOps.fnorm(s, col("embedding")).as("c_norm")) ++
+        sq8Codes(s, col("embedding")).map { case (n, c) => c.as(n) }: _*)
+      .filter(col("c_norm") > 0)
+    val approx = c.crossJoin(broadcast(withNorm(s, queries, "q", qSum)))
+      .filter(col("q_id") =!= col("c_id"))
+      .select(col("q_id"), col("c_id"), sq8Sim(s).as("approx_sim"))
+    rerankExact(s, corpus, queries, approx, k, Sq8Expand)
   }
 
   private[graft] def x5Sq8TopK(s: SparkSession, d: String): DataFrame = {
@@ -2792,69 +2686,24 @@ object SimilarityOps {
     * tiny candidate list back onto the float corpus by id (broadcast),
     * so the corpus never shuffles in either phase.
     */
-  def ivfSq8TopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      nCells: Int = 0, nProbe: Int = 0, expand: Int = 4,
-      fitSample: Int = 0): DataFrame = {
+  def ivfSq8TopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val s = corpus.sparkSession
-    val (cells, probe) = ivfGeometry(
-      if (nCells > 0 && nProbe > 0) 0L else memoCount(corpus), nCells, nProbe)
-    val fs = ivfFitSample(fitSample, cells)
-    val cents = memoCentroids(corpus, fs, cells)
-    if (cents.isEmpty) return bruteForceTopK(corpus, queries, k)
-    val qp = VecOps.qparams8(s, col("embedding"))
+    val fit = ivfFit(corpus)
+    if (fit.cents.isEmpty) return bruteForceTopK(corpus, queries, k)
     // spill-assigned like ivfSearch — the SQ8 payload (codes + qparams)
     // rides the explode instead of the float embedding
-    val assigned = spillAssigned(s, corpus, cents, Seq(
-        "c_norm" -> VecOps.fnorm(s, col("embedding")),
-        "vmin" -> element_at(qp, 1).cast("double"),
-        "step" -> element_at(qp, 2).cast("double"),
-        "qb" -> VecOps.quantize8(s, col("embedding"))),
-        memoSpillThreshold(corpus, fs, cents))
+    val assigned = spillAssigned(s, corpus, fit.cents,
+        ("c_norm" -> VecOps.fnorm(s, col("embedding"))) +:
+          sq8Codes(s, col("embedding")), fit.margin)
       .filter(col("c_norm") > 0)
-    import s.implicits._
-    val centDf = cents.toIndexedSeq.map(_.toSeq).zipWithIndex
-      .map { case (c, i) => (i, c) }.toDF("cell", "centroid")
-    val q = queries.select(col("vec_id").as("q_id"),
-      col("embedding").as("q_emb"),
-      VecOps.fnorm(s, col("embedding")).as("q_norm"),
-      aggregate(col("embedding"), lit(0.0),
-        (a, x) => a + x.cast("double")).as("q_sum"))
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("cdist"), col("cell"))
-    val probes = q.crossJoin(broadcast(centDf))
-      .select(col("q_id"), col("q_emb"), col("q_norm"), col("q_sum"),
-        col("cell"),
-        (-VecOps.fdot(s, col("q_emb"), col("centroid"))).as("cdist"))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= probe)
-      .select(col("q_id"), col("q_emb"), col("q_norm"), col("q_sum"),
-        col("cell"))
+    val probes = queryProbes(s, queries, fit.cents, fit.probe, Seq(qSum))
     val approx = assigned.join(broadcast(probes), "cell")
       .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"),
-        ((col("vmin") * col("q_sum") +
-          col("step") * VecOps.qdot8(s, col("qb"), col("q_emb"))) /
-          (col("c_norm") * col("q_norm"))).as("approx_sim"))
+      .select(col("q_id"), col("c_id"), sq8Sim(s).as("approx_sim"))
       // spill dedup (identical scores; Aggregate-under-Window topology)
       .groupBy(col("q_id"), col("c_id"))
       .agg(max(col("approx_sim")).as("approx_sim"))
-    val wA = Window.partitionBy(col("q_id"))
-      .orderBy(col("approx_sim").desc, col("c_id"))
-    val cands = approx.withColumn("r", row_number().over(wA))
-      .filter(col("r") <= k * expand)
-      .select(col("q_id"), col("c_id"))
-    val exact = corpus.select(col("vec_id").as("c_id"),
-        col("embedding").as("c_emb"),
-        VecOps.fnorm(s, col("embedding")).as("c_norm"))
-      .join(broadcast(cands), "c_id")
-      .join(broadcast(q.select(col("q_id"), col("q_emb"), col("q_norm"))),
-        "q_id")
-      .select(col("q_id"), col("c_id"),
-        (VecOps.fdot(s, col("q_emb"), col("c_emb")) /
-          (col("q_norm") * col("c_norm"))).as("sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("c_id"))
-    exact.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    rerankExact(s, corpus, queries, approx, k, Sq8Expand)
   }
 
   private[graft] def x8IvfSq8TopK(s: SparkSession, d: String): DataFrame = {
@@ -2876,6 +2725,14 @@ object SimilarityOps {
       ivfSq8TopK(emb, q5, 10))
 
   // ---- X9: product-quantized top-k (ADC) ---------------------------------
+  /** PQ shape: m = 8 sub-spaces of ks = 16 sub-centroids each, fitted on
+    * a 4096-vector unit sample; 32× rerank expand (see [[pqTopK]]).
+    */
+  private val PqM = 8
+  private val PqKs = 16
+  private val PqFitSample = 4096
+  private val PqExpand = 32
+
   /** The memory-floor ANN path: the corpus rides as m PQ code bytes per
     * vector (m=8 over dim=64 → 8 bytes, 32× below float32 and 8× below
     * SQ8 — at 10⁹ vectors the whole index fits ~8 GB where floats need
@@ -2897,54 +2754,45 @@ object SimilarityOps {
     * corpus either way, and the exact rerank stays bounded at
     * k·expand·|queries| rows — standard practice is 10-100×.
     */
-  def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      m: Int = 8, ks: Int = 16, expand: Int = 32,
-      fitSample: Int = 4096): DataFrame = {
+  def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val s = corpus.sparkSession
-    val sampleUnit = memoUnitSample(corpus, fitSample)
+    val sampleUnit = memoUnitSample(corpus, PqFitSample)
     if (sampleUnit.isEmpty) return bruteForceTopK(corpus, queries, k)
-    // codebooks follow the centroid-memo discipline: deterministic on the
-    // memoized sample, fitted once per corpus version
-    val books = Artifacts.value(
-        Artifacts.key("pqbooks", corpus, m, ks, fitSample))(
-      pqTrain(sampleUnit, m, ks, iters = 8))
-    // encode on unit vectors: norm hoisted OUTSIDE the transform lambda
-    // (interpreted-HOF doctrine), codes are one codegen kernel call
+    val books = pqBooks(corpus, sampleUnit)
     val c = corpus
       .select(col("vec_id").as("c_id"), col("embedding"),
         VecOps.fnorm(s, col("embedding")).as("c_norm"))
       .filter(col("c_norm") > 0)
       .select(col("c_id"), col("c_norm"),
-        VecOps.pqEncode(s,
-          transform(col("embedding"),
-            x => (x / col("c_norm")).cast("float")), books).as("codes"))
-    val q = queries.select(col("vec_id").as("q_id"),
-      col("embedding").as("q_emb"),
-      VecOps.fnorm(s, col("embedding")).as("q_norm"),
+        pqCodes(s, "c_norm", books).as("codes"))
+    val q = withNorm(s, queries, "q",
       VecOps.pqLut(s, col("embedding"), books).as("lut"))
     val approx = c.crossJoin(broadcast(q))
       .filter(col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id"),
         (VecOps.pqAdc(s, col("codes"), col("lut")) / col("q_norm"))
           .as("approx_sim"))
-    val wA = Window.partitionBy(col("q_id"))
-      .orderBy(col("approx_sim").desc, col("c_id"))
-    val cands = approx.withColumn("r", row_number().over(wA))
-      .filter(col("r") <= k * expand)
-      .select(col("q_id"), col("c_id"))
-    val exact = corpus.select(col("vec_id").as("c_id"),
-        col("embedding").as("c_emb"),
-        VecOps.fnorm(s, col("embedding")).as("c_norm"))
-      .join(broadcast(cands), "c_id")
-      .join(broadcast(q.select(col("q_id"), col("q_emb"), col("q_norm"))),
-        "q_id")
-      .select(col("q_id"), col("c_id"),
-        (VecOps.fdot(s, col("q_emb"), col("c_emb")) /
-          (col("q_norm") * col("c_norm"))).as("sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("c_id"))
-    exact.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    rerankExact(s, corpus, queries, approx, k, PqExpand)
   }
+
+  /** PQ codebooks over the unit `sample`, following the centroid-memo
+    * discipline: deterministic on the memoized sample, fitted once per
+    * corpus version.
+    */
+  private def pqBooks(corpus: DataFrame, sample: Array[Array[Float]])
+      : Array[Array[Array[Float]]] =
+    Artifacts.value(
+        Artifacts.key("pqbooks", corpus, PqM, PqKs, PqFitSample))(
+      pqTrain(sample, PqM, PqKs, iters = 8))
+
+  /** PQ codes of the unit vector `embedding / norm`: the norm is hoisted
+    * OUTSIDE the transform lambda (interpreted-HOF doctrine), the codes
+    * are one codegen kernel call.
+    */
+  private def pqCodes(s: SparkSession, norm: String,
+      books: Array[Array[Array[Float]]]): Column =
+    VecOps.pqEncode(s,
+      transform(col("embedding"), x => (x / col(norm)).cast("float")), books)
 
   /** Driver-local per-subspace Lloyd (plain L2) over the bounded unit
     * sample: subspace j covers dims [j·sub, (j+1)·sub) with sub = dim/m
@@ -3184,22 +3032,12 @@ object SimilarityOps {
   def filteredBruteTopK(corpus: DataFrame, queries: DataFrame,
       k: Int): DataFrame = {
     val s = corpus.sparkSession
-    val q = queries.select(col("vec_id").as("q_id"),
-      col("embedding").as("q_emb"),
-      VecOps.fnorm(s, col("embedding")).as("q_norm"),
-      col("label").as("q_label"))
-    val c = corpus.select(col("vec_id").as("c_id"),
-      col("embedding").as("c_emb"),
-      VecOps.fnorm(s, col("embedding")).as("c_norm"),
-      col("label").as("c_label"))
-    val scored = c.join(broadcast(q),
+    val q = withNorm(s, queries, "q", col("label").as("q_label"))
+    val c = withNorm(s, corpus, "c", col("label").as("c_label"))
+    topK(c.join(broadcast(q),
         col("q_label") === col("c_label") && col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("q_label").as("label"), col("c_id"),
-        (VecOps.fdot(s, col("q_emb"), col("c_emb")) /
-          (col("q_norm") * col("c_norm"))).as("sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("c_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+        qcSim(s).as("sim")), k)
   }
 
   private def x10FilteredTopK(s: SparkSession, d: String): DataFrame = {
@@ -3238,14 +3076,9 @@ object SimilarityOps {
     * Floors (measured via RecallProbe, regen slack −0.13): see the
     * floors block above [[x2Gate]].
     */
-  private def x10bGate(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val q5 = emb.filter(col("vec_id") < 5)
-    recallGate(
-      ivfTopK(emb, q5, 10, matchLabel = true),
-      memoExact(s, d, "probe5k10filt")(filteredBruteTopK(emb, q5, 10)),
-      X10bFloor)
-  }
+  private def x10bGate(s: SparkSession, d: String): DataFrame =
+    fiveProbeGate(s, d, X10bFloor, filtered = true)((emb, q5) =>
+      ivfTopK(emb, q5, 10, matchLabel = true))
 
   private val x10bGateSql =
     """WITH q AS (SELECT vec_id AS q_id, label,

@@ -67,9 +67,6 @@ object GenFixtures {
         beamSearchGraph(s, e26LayoutDir(s, d), q, 10)))
   }
 
-  /** Builders whose exact reference is the label-filtered top-k. */
-  val filteredAnn: Set[String] = Set("x10b", "x17", "x22")
-
   def main(args: Array[String]): Unit = {
     val force = args.contains("--force")
     // mirror SparkSpec's session shape — fixtures are consumed there

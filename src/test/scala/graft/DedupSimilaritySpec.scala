@@ -1330,8 +1330,8 @@ class DedupSimilaritySpec extends SparkSpec {
     "layout and rewrites one file run per cell") {
     import org.apache.spark.sql.functions.{col, countDistinct}
     val n = Tables.embeddings(spark, Sf0001).count()
-    val (dir, cents, _) = SimilarityOps.x15State(spark, Sf0001)
-    assert(cents.nonEmpty)
+    val (dir, fit) = SimilarityOps.x15State(spark, Sf0001)
+    assert(fit.cents.nonEmpty)
     val landed = spark.read.parquet(dir)
     // lossless recovery: every corpus id present exactly once pre-spill
     assert(landed.agg(countDistinct(col("c_id"))).first().getLong(0) === n)
@@ -1349,6 +1349,26 @@ class DedupSimilaritySpec extends SparkSpec {
       assert(files.length === 1,
         s"${pd.getName} has ${files.length} files after compaction")
     }
+  }
+
+  test("probed-cell memo: two equal-length centroid sets over one query " +
+    "frame each get their own cells") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    // x12 (fit on the corpus) and x15 (refit on the recovered layout)
+    // probe one query frame at one geometry; their cell sets must not
+    // be served from each other's memo entry
+    val q5 = Tables.embeddings(spark, Sf0001).filter(col("vec_id") < 5)
+    val basis = Array.tabulate(4)(i =>
+      Array.tabulate(64)(j => if (j == i) 1f else 0f))
+    val flipped = basis.map(_.map(x => -x))
+    assert(SimilarityOps.memoProbedCells(q5, Seq(0, 1).toDF("cell"),
+      basis, 2) === IndexedSeq(0, 1))
+    assert(SimilarityOps.memoProbedCells(q5, Seq(2, 3).toDF("cell"),
+      flipped, 2) === IndexedSeq(2, 3))
+    // the same centroids (an equal copy) still hit the first entry
+    assert(SimilarityOps.memoProbedCells(q5, Seq(3).toDF("cell"),
+      basis.map(_.clone()), 2) === IndexedSeq(0, 1))
   }
 
   test("d14: semantic decontamination flags high-cosine train/eval pairs " +
