@@ -176,14 +176,6 @@ object SimilarityOps {
     */
   private[graft] val X10bFloor = 0.53
 
-  private[graft] def x2LshTopK(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    lshTopK(emb, emb.filter(col("vec_id") < 5), 10, bits = 4,
-        probeFlips = X2ProbeFlips)
-      .select(col("q_id"), col("rank"), col("c_id"), col("sim"))
-      .orderBy(col("q_id"), col("rank"))
-  }
-
   // ---- ANN bounded gates (a7/a10 pattern) --------------------------------
   /** Driver-checkable gate for an approximate top-k: one row per query
     * carrying an EXACT payload DuckDB independently recomputes via
@@ -296,6 +288,15 @@ object SimilarityOps {
     * indexing.
     */
   private[graft] val X4Floor = 0.39
+
+  /** x4's registered shape runs the AUTO geometry ([[ivfGeometry]]) —
+    * round-10 replacement for the fixed 8-of-16 probe (which scanned
+    * half the corpus at every scale): 23 cells / 5 probes at sf0.01
+    * (500 vectors, 21.7% scanned), 45 / 11 at sf0.1 (2000 vectors,
+    * 24.4%). The nProbe/nCells fraction is IVF's recall knob at fixed
+    * index cost (the lever multi-probe is for x2); measured recall at
+    * these fractions is in [[X4Floor]].
+    */
   private def x4Gate(s: SparkSession, d: String): DataFrame =
     fiveProbeGate(s, d, X4Floor)((emb, q5) =>
       ivfTopK(emb, q5, 10))
@@ -940,12 +941,11 @@ object SimilarityOps {
     * measured quantity behind [[D12CoverageFloor]] (RecallProbe prints
     * it at both SFs).
     */
-  private[graft] def d12CoverageFrame(s: SparkSession, d: String,
-      nCells: Int = 0): DataFrame = {
+  private[graft] def d12CoverageFrame(s: SparkSession, d: String)
+      : DataFrame = {
     val emb = Tables.embeddings(s, d)
     val exactPairs = landedExactPairs(emb)
-    val cells =
-      if (nCells > 0) nCells else d12Cells(memoCount(emb))
+    val cells = d12Cells(memoCount(emb))
     val cents = memoCentroids(emb, ivfFitSample(0, cells), cells)
     val am = VecOps.centroidArgmax2(s, col("embedding"), cents)
     val cellOf = emb.select(col("vec_id"), am.as("_am"))
@@ -1304,7 +1304,14 @@ object SimilarityOps {
     * force) and the boundary-spill margin.
     */
   private[graft] final case class IvfFit(cells: Int, probe: Int,
-      cents: Array[Array[Float]], margin: Double) {
+      cents: Array[Array[Float]], margin: Double, corpus: DataFrame,
+      tag: String) {
+    /** The fit's memo identity: the corpus version, geometry and tag the
+      * centroids are a function of. A refit over a rewritten corpus is a
+      * new version of the same family.
+      */
+    def key: Artifacts.Key = Artifacts.key("ivf", corpus, cells, tag)
+
     /** Selectivity-aware probe widening (the ACORN insight): a filter
       * that keeps 1/|labels| of each cell starves the candidate pool, so
       * filtered search probes deeper — scoring cost stays (probed
@@ -1329,7 +1336,8 @@ object SimilarityOps {
     val fs = ivfFitSample(0, cells)
     val cents = memoCentroids(corpus, fs, cells, tag)
     IvfFit(cells, probe, cents,
-      if (cents.isEmpty) 0.0 else memoSpillThreshold(corpus, fs, cents, tag))
+      if (cents.isEmpty) 0.0 else memoSpillThreshold(corpus, fs, cents, tag),
+      corpus, tag)
   }
 
   /** IVF (inverted-file) ANN: KMeans coarse quantizer over the corpus;
@@ -1352,7 +1360,9 @@ object SimilarityOps {
       nCells: Int = 0, nProbe: Int = 0,
       matchLabel: Boolean = false): DataFrame = {
     val fit = ivfFit(corpus, nCells = nCells, nProbe = nProbe)
-    if (fit.cents.isEmpty) return bruteForceTopK(corpus, queries, k)
+    if (fit.cents.isEmpty)
+      return (if (matchLabel) filteredBruteTopK(corpus, queries, k)
+        else bruteForceTopK(corpus, queries, k))
     ivfSearch(corpus, queries, k, fit,
       if (matchLabel) fit.filteredProbe else fit.probe, matchLabel)
   }
@@ -1560,21 +1570,16 @@ object SimilarityOps {
     * plan at DataFrame-BUILD time on every fresh build — the per-build
     * cost class the d13 and x13b fixes removed. The set is a
     * deterministic function of the centroids and the query set, so
-    * memoization is value-transparent. The family holds a digest of the
-    * centroids themselves: two fits of one geometry (x12 on the corpus,
-    * x15 on the recovered layout) must not share a cell set.
+    * memoization is value-transparent. The key carries the fit's own
+    * identity ([[IvfFit.key]]): two fits of one geometry (x12 on the
+    * corpus, x15 on the recovered layout) must not share a cell set, and
+    * a refit over a rewritten corpus replaces the older entry.
     */
   private[graft] def memoProbedCells(queries: DataFrame, probes: DataFrame,
-      cents: Array[Array[Float]], probe: Int): IndexedSeq[Int] = {
-    val bytes = java.nio.ByteBuffer.allocate(4 * cents.map(_.length).sum)
-    cents.foreach(_.foreach(bytes.putFloat))
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(bytes.array()).map("%02x".format(_)).mkString
-    Artifacts.value(
-        Artifacts.key("pcells", queries, cents.length, probe, digest))(
+      fit: IvfFit, probe: Int): IndexedSeq[Int] =
+    Artifacts.value(Artifacts.key("pcells", queries, probe).and(fit.key))(
       probes.select(col("cell")).distinct()
         .collect().map(_.getInt(0)).toIndexedSeq.sorted)
-  }
 
   /** The probe part of a persisted serve: the queries' probes, and the
     * landed cell layout in `dir` pruned to the probed cells. The probed
@@ -1586,7 +1591,7 @@ object SimilarityOps {
       fit: IvfFit, probe: Int, extra: Seq[Column]): (DataFrame, DataFrame) = {
     val landed = Artifacts.read(s, dir)
     val probes = queryProbes(s, queries, fit.cents, probe, extra)
-    val probedCells = memoProbedCells(queries, probes, fit.cents, probe)
+    val probedCells = memoProbedCells(queries, probes, fit, probe)
     (landed.filter(col("cell").isin(probedCells: _*)), probes)
   }
 
@@ -1903,15 +1908,6 @@ object SimilarityOps {
     else front
   }
 
-  /** Raw x18 builder on the 5-probe query set (fixture-pinned like
-    * x2/x4/x7); the hop collects run at DataFrame-BUILD time.
-    */
-  private[graft] def x18BeamTopK(s: SparkSession, d: String): DataFrame =
-    knnGraphBeamTopK(s, d,
-        Tables.embeddings(s, d).filter(col("vec_id") < 5), 10)
-      .select(col("q_id"), col("rank"), col("c_id"), col("sim"))
-      .orderBy(col("q_id"), col("rank"))
-
   /** Measured 1.00/0.98 aggregate at the registered knobs (one-off
     * sweep, 2026-08-14 testdata); floor = 0.98 − 0.13 regen slack.
     */
@@ -2122,13 +2118,6 @@ object SimilarityOps {
       beam = X19Beam, hops = X19Hops, seeds = seeds)
   }
 
-  /** Raw x19 builder on the 5-probe query set (fixture-pinned like x18). */
-  private[graft] def x19HnswTopK(s: SparkSession, d: String): DataFrame =
-    hnswTopK(s, d,
-        Tables.embeddings(s, d).filter(col("vec_id") < 5), 10)
-      .select(col("q_id"), col("rank"), col("c_id"), col("sim"))
-      .orderBy(col("q_id"), col("rank"))
-
   /** Measured 1.00/0.90 aggregate at the registered knobs (RecallProbe,
     * 2026-08-16; seeds-per-layer 8, base hops 4 — the 4-seed/3-hop
     * descent sat at 0.80 on sf0.1's routing-diffuse corpus); floor =
@@ -2267,13 +2256,6 @@ object SimilarityOps {
       .join(broadcast(cn), "c_id").join(broadcast(qk), "q_id")
       .select(col("q_id"), col("c_id"), qcSim(s).as("sim")), k)
   }
-
-  /** Raw x21 builder on the 5-probe set (fixture-pinned like x18/x19). */
-  private[graft] def x21Sq8TopK(s: SparkSession, d: String): DataFrame =
-    graphSq8TopK(s, d,
-        Tables.embeddings(s, d).filter(col("vec_id") < 5), 10)
-      .select(col("q_id"), col("rank"), col("c_id"), col("sim"))
-      .orderBy(col("q_id"), col("rank"))
 
   /** Measured 1.00/0.98 aggregate (RecallProbe, 2026-08-16) — the SQ8
     * walk navigates like the float walk (sub-1% code error) and the
@@ -2572,21 +2554,6 @@ object SimilarityOps {
       fit.margin).count().toDouble / memoCount(corpus)
   }
 
-  /** x4's registered shape runs the AUTO geometry ([[ivfGeometry]]) —
-    * round-10 replacement for the fixed 8-of-16 probe (which scanned
-    * half the corpus at every scale): 23 cells / 5 probes at sf0.01
-    * (500 vectors, 21.7% scanned), 45 / 11 at sf0.1 (2000 vectors,
-    * 24.4%). The nProbe/nCells fraction is IVF's recall knob at fixed
-    * index cost (the lever multi-probe is for x2); measured recall at
-    * these fractions is in the floors block above [[x2Gate]].
-    */
-  private[graft] def x4IvfTopK(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    ivfTopK(emb, emb.filter(col("vec_id") < 5), 10)
-      .select(col("q_id"), col("rank"), col("c_id"), col("sim"))
-      .orderBy(col("q_id"), col("rank"))
-  }
-
   // ---- Approximate score + exact rerank ----------------------------------
   /** The exact rerank shared by the quantized serves (SQ8, IVF-SQ8, PQ,
     * IVF-PQ): `approx` (q_id, c_id, approx_sim) keeps its top k·expand
@@ -2663,13 +2630,6 @@ object SimilarityOps {
     rerankExact(s, corpus, queries, approx, k, Sq8Expand)
   }
 
-  private[graft] def x5Sq8TopK(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    sq8TopK(emb, emb.filter(col("vec_id") < 5), 10)
-      .select(col("q_id"), col("rank"), col("c_id"), col("sim"))
-      .orderBy(col("q_id"), col("rank"))
-  }
-
   // ---- X8: IVF-SQ composed index -----------------------------------------
   /** The standard billion-vector layout: IVF coarse cells bound WHICH
     * rows are scored (probe nProbe/nCells of the corpus) and SQ8 codes
@@ -2704,16 +2664,6 @@ object SimilarityOps {
       .groupBy(col("q_id"), col("c_id"))
       .agg(max(col("approx_sim")).as("approx_sim"))
     rerankExact(s, corpus, queries, approx, k, Sq8Expand)
-  }
-
-  private[graft] def x8IvfSq8TopK(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    // same AUTO geometry as x4: the composed path's recall ceiling is
-    // the IVF routing (SQ8 scoring error is sub-1%), so the same knob
-    // moves it identically and the same 0.37 floor bites
-    ivfSq8TopK(emb, emb.filter(col("vec_id") < 5), 10)
-      .select(col("q_id"), col("rank"), col("c_id"), col("sim"))
-      .orderBy(col("q_id"), col("rank"))
   }
 
   /** x8 shares x4's routing (and so its spill lift) — measured with
@@ -2835,13 +2785,6 @@ object SimilarityOps {
       }
       cents
     }
-  }
-
-  private[graft] def x9PqTopK(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    pqTopK(emb, emb.filter(col("vec_id") < 5), 10)
-      .select(col("q_id"), col("rank"), col("c_id"), col("sim"))
-      .orderBy(col("q_id"), col("rank"))
   }
 
   // RecallProbe aggregate: 1.0 at sf0.01, 0.82 at sf0.1 (expand=32;

@@ -37,15 +37,16 @@ object GenFixtures {
         .select(col("q_id"), col("rank"), col("c_id"), col("sim"))
         .orderBy(col("q_id"), col("rank"))
     Seq(
-      "x2" -> x2LshTopK _,
-      "x4" -> x4IvfTopK _,
-      "x5" -> x5Sq8TopK _,
+      "x2" -> q5((s, d, q) => lshTopK(Tables.embeddings(s, d), q, 10,
+        bits = 4, probeFlips = X2ProbeFlips)),
+      "x4" -> q5((s, d, q) => ivfTopK(Tables.embeddings(s, d), q, 10)),
+      "x5" -> q5((s, d, q) => sq8TopK(Tables.embeddings(s, d), q, 10)),
       "x7" -> x7KnnJoin _,
-      "x8" -> x8IvfSq8TopK _,
-      "x9" -> x9PqTopK _,
-      "x18" -> x18BeamTopK _,
-      "x19" -> x19HnswTopK _,
-      "x21" -> x21Sq8TopK _,
+      "x8" -> q5((s, d, q) => ivfSq8TopK(Tables.embeddings(s, d), q, 10)),
+      "x9" -> q5((s, d, q) => pqTopK(Tables.embeddings(s, d), q, 10)),
+      "x18" -> q5(knnGraphBeamTopK(_, _, _, 10)),
+      "x19" -> q5(hnswTopK(_, _, _, 10)),
+      "x21" -> q5(graphSq8TopK(_, _, _, 10)),
       "x22" -> x22FilteredTopK _,
       "x10b" -> q5((s, d, q) =>
         ivfTopK(Tables.embeddings(s, d), q, 10, matchLabel = true)),

@@ -46,6 +46,12 @@ object Artifacts {
   final case class Key(op: String, params: Seq[Any], sources: Seq[String],
       version: Any) {
     def family: (String, Seq[Any], Seq[String]) = (op, params, sources)
+
+    /** This key joined with `other`: the family holds both families, the
+      * version both versions, so a new version of either source evicts.
+      */
+    def and(other: Key): Key = Key(op, params ++ (other.op +: other.params),
+      sources ++ other.sources, (version, other.version))
   }
 
   final case class Stats(hits: Long, misses: Long, pinnedBytes: Long)

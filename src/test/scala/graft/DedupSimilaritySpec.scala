@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ext.{DedupOps, SimilarityOps}
+import graft.util.Artifacts
 
 class DedupSimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -1358,17 +1359,47 @@ class DedupSimilaritySpec extends SparkSpec {
     // x12 (fit on the corpus) and x15 (refit on the recovered layout)
     // probe one query frame at one geometry; their cell sets must not
     // be served from each other's memo entry
-    val q5 = Tables.embeddings(spark, Sf0001).filter(col("vec_id") < 5)
+    val emb = Tables.embeddings(spark, Sf0001)
+    val q5 = emb.filter(col("vec_id") < 5)
     val basis = Array.tabulate(4)(i =>
       Array.tabulate(64)(j => if (j == i) 1f else 0f))
     val flipped = basis.map(_.map(x => -x))
+    def fit(cents: Array[Array[Float]], tag: String) =
+      SimilarityOps.IvfFit(4, 2, cents, 0.0, emb, tag)
     assert(SimilarityOps.memoProbedCells(q5, Seq(0, 1).toDF("cell"),
-      basis, 2) === IndexedSeq(0, 1))
+      fit(basis, ""), 2) === IndexedSeq(0, 1))
     assert(SimilarityOps.memoProbedCells(q5, Seq(2, 3).toDF("cell"),
-      flipped, 2) === IndexedSeq(2, 3))
-    // the same centroids (an equal copy) still hit the first entry
+      fit(flipped, ":compact"), 2) === IndexedSeq(2, 3))
+    // the same fit (an equal copy) still hits the first entry
     assert(SimilarityOps.memoProbedCells(q5, Seq(3).toDF("cell"),
-      basis.map(_.clone()), 2) === IndexedSeq(0, 1))
+      fit(basis.map(_.clone()), ""), 2) === IndexedSeq(0, 1))
+  }
+
+  test("probed-cell memo: a refit over a rewritten corpus replaces the " +
+    "older entry") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val q5 = Tables.embeddings(spark, Sf0001).filter(col("vec_id") < 5)
+    val tmp = Files.createTempDirectory("graft_pcells")
+    try {
+      val p = tmp.resolve("emb.parquet").toString
+      def mine = Artifacts.entriesOf("pcells")
+        .filter(_._1.sources.exists(_.contains(p)))
+      def cells(n: Int, cell: Int): IndexedSeq[Int] = {
+        Seq.tabulate(n)(i => (i.toLong, Array(1f, 0f)))
+          .toDF("vec_id", "embedding").write.mode("overwrite").parquet(p)
+        val fit = SimilarityOps.IvfFit(2, 1, Array(Array(1f, 0f),
+          Array(0f, 1f)), 0.0, spark.read.parquet(p), "")
+        SimilarityOps.memoProbedCells(q5, Seq(cell).toDF("cell"), fit, 1)
+      }
+      assert(cells(3, 0) === IndexedSeq(0))
+      assert(mine.size === 1)
+      // regenerated at the same path: the fresh cell set is served and
+      // the superseded entry evicted (no growth)
+      assert(cells(5, 1) === IndexedSeq(1))
+      assert(mine.size === 1)
+    } finally Artifacts.delete(tmp)
   }
 
   test("d14: semantic decontamination flags high-cosine train/eval pairs " +

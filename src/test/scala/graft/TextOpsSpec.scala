@@ -125,6 +125,23 @@ class TextOpsSpec extends SparkSpec {
     assert((ex & ap).size.toDouble / ex.size > 0.3)
   }
 
+  test("x10: filtered IVF over a corpus with no nonzero vector falls back " +
+    "to the filtered exact search") {
+    import spark.implicits._
+    // no nonzero vector: the fit has no centroids, so the serve is the
+    // brute-force fallback, which must keep the label predicate. Compared
+    // as plans: over zero norms the cosine divides by zero, so neither
+    // exact search can run on this corpus.
+    val emb = Seq.tabulate(6)(i => (i.toLong, s"l${i % 2}",
+      Array.fill(4)(0f))).toDF("vec_id", "label", "embedding")
+    val q = emb.filter(col("vec_id") < 2)
+    def plan(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed
+    val exact = plan(SimilarityOps.filteredBruteTopK(emb, q, 5))
+    assert(plan(SimilarityOps.ivfTopK(emb, q, 5, matchLabel = true))
+      .sameResult(exact))
+    assert(!plan(SimilarityOps.ivfTopK(emb, q, 5)).sameResult(exact))
+  }
+
   test("t17: BM25 matches the hand-computed formula on a tiny corpus") {
     import spark.implicits._
     // 3 docs, all length 4 → avgdl = 4, length norm = 1.0 everywhere
