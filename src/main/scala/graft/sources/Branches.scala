@@ -33,22 +33,14 @@ import graft.util.Artifacts
 object Branches {
 
   /** Resolve a named ref to its pinned version. */
-  private[graft] def refVersion(dir: String, name: String): Int = {
-    val src = scala.io.Source.fromFile(s"$dir/ref_$name.txt")
-    try src.mkString.trim.toInt finally src.close()
-  }
+  private[graft] def refVersion(dir: String, name: String): Int =
+    Store.readLines(s"$dir/ref_$name.txt").head.toInt
 
   /** Create or move a ref — one atomic rename, the only mutation refs
     * ever see.
     */
-  private[graft] def moveRef(dir: String, name: String, v: Int): Unit = {
-    val tmp = java.nio.file.Paths.get(s"$dir/ref_$name.tmp")
-    java.nio.file.Files.write(tmp, v.toString.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp,
-      java.nio.file.Paths.get(s"$dir/ref_$name.txt"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private[graft] def moveRef(dir: String, name: String, v: Int): Unit =
+    Store.writeLinesAtomic(s"$dir/ref_$name.txt", Seq(v.toString))
 
   private[graft] def readRef(s: SparkSession, dir: String,
       name: String): DataFrame =
@@ -88,15 +80,7 @@ object Branches {
           round(col("c_acctbal") * 100).cast("long").as("bal"))
       base.repartition(col("nk"))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      val m1 = Option(new java.io.File(s"$dir/v1").listFiles())
-        .getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("nk="))
-        .flatMap(pd => pd.listFiles().filter(_.getName.endsWith(".parquet"))
-          .map(_.getAbsolutePath))
-        .toSeq.sorted
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        m1.mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1, Store.bucketedLeafFiles(dir, "v1"))
       moveRef(dir, "main", 1)
       val log = new StringBuilder
       // branch etl: two staged commits, main pinned at 1 throughout
@@ -121,9 +105,7 @@ object Branches {
       moveRef(dir, "bad", 4)
       require(!auditedFastForward(s, dir, "bad", log),
         "the dirty branch must be rejected")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/_branch_log.txt"),
-        log.toString.getBytes("UTF-8"))
+      Store.writeLines(s"$dir/_branch_log.txt", Seq(log.toString))
     }
 
   /** S35: the registered branch read — `main` resolved AFTER the green
@@ -135,10 +117,7 @@ object Branches {
   private def s35BranchFastForward(s: SparkSession, d: String)
       : DataFrame = {
     val dir = s35Dir(s, d)
-    val log = {
-      val src = scala.io.Source.fromFile(s"$dir/_branch_log.txt")
-      try src.mkString finally src.close()
-    }
+    val log = Store.readLines(s"$dir/_branch_log.txt").mkString("\n")
     readRef(s, dir, "main")
       .agg(count(lit(1)).as("n_rows"), sum(col("bal")).as("bal_cents"))
       .select(lit(refVersion(dir, "main").toLong).as("main_version"),

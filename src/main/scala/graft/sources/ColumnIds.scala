@@ -182,15 +182,12 @@ object ColumnIds {
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
       writeColmap(dir, 1,
         Seq((1, "k", "bigint"), (2, "nkd", "bigint"), (3, "bal", "bigint")))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        Store.bucketedLeafFiles(dir, "v1").mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1, Store.bucketedLeafFiles(dir, "v1"))
       require(commitColmap(dir, renameCol(3, "balance")) == 2,
         "the rename must land as v2")
       // post-rename write: physical ids, logical names irrelevant
-      val sep = java.io.File.separator
       val replaced = Snapshots.manifest(dir, 2)
-        .filter(_.contains(s"${sep}nk=2$sep")).toSet
+        .filter(Store.inBucket(_, 2)).toSet
       Artifacts.parquet(s, replaced.toSeq.sorted: _*)
         .withColumn("c3", col("c3") + lit(100L))
         .withColumn("nk", col("c2"))
@@ -248,9 +245,7 @@ object ColumnIds {
       writeColmap(dir, 1,
         Seq((1, "k", "bigint"), (2, "score", "bigint"),
           (3, "bal", "bigint")))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        Store.flatLeafFiles(dir, "v1").mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1, Store.flatLeafFiles(dir, "v1"))
       require(commitColmap(dir, dropCol(2)) == 2)
       require(reclaimDroppedColumns(s, dir, "rc")._1 == 3)
       require(commitColmap(dir, addCol(4, "score", "bigint")) == 4)

@@ -33,12 +33,8 @@ import graft.util.Artifacts
 object DeletionVectors {
 
   private[graft] def deletesOf(dir: String, v: Int): Seq[String] = {
-    val f = new java.io.File(dir, s"deletes_$v.txt")
-    if (!f.exists()) Seq.empty
-    else {
-      val src = scala.io.Source.fromFile(f)
-      try src.getLines().filter(_.nonEmpty).toList finally src.close()
-    }
+    val f = s"$dir/deletes_$v.txt"
+    if (new java.io.File(f).exists()) Store.readLines(f) else Seq.empty
   }
 
   /** Merge-on-read snapshot: data files minus the version's delete set
@@ -71,28 +67,17 @@ object DeletionVectors {
         .repartition(col("nk"))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
       val m1 = Store.bucketedLeafFiles(dir, "v1")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        m1.mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1, m1)
       val doomed = base.filter(col("nk") % 5 === 4 && col("k") % 13 === 0)
       // v2: the delete file — data manifest UNCHANGED
       doomed.select(col("k")).coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/dv2")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/deletes_2.txt"),
-        Option(new java.io.File(s"$dir/dv2").listFiles())
-          .getOrElse(Array.empty)
-          .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath)
-          .sorted.mkString("\n").getBytes("UTF-8"))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_2.txt"),
-        m1.mkString("\n").getBytes("UTF-8"))
+      Store.writeSidecar(dir, "deletes_", 2, Store.flatLeafFiles(dir, "dv2"))
+      Store.writeManifest(dir, 2, m1)
       // v3: the purge — rewrite ONLY buckets holding deleted keys
       val touched = doomed.select(col("nk").cast("int")).distinct()
         .collect().map(_.getInt(0)).toSeq.sorted
-      val sep = java.io.File.separator
-      val replaced = m1.filter(p =>
-        touched.exists(nk => p.contains(s"${sep}nk=$nk$sep")))
+      val replaced = m1.filter(p => touched.exists(Store.inBucket(p, _)))
       if (replaced.nonEmpty) {
         Artifacts.parquet(s, replaced: _*)
           .join(broadcast(doomed.select(col("k"))), Seq("k"), "left_anti")
@@ -100,10 +85,8 @@ object DeletionVectors {
           .repartition(col("nk"))
           .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/purge3")
       }
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_3.txt"),
-        (m1.filterNot(replaced.toSet) ++ Store.bucketedLeafFiles(dir, "purge3"))
-          .sorted.mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 3, (m1.filterNot(replaced.toSet) ++
+        Store.bucketedLeafFiles(dir, "purge3")).sorted)
     }
 
   /** S25: the registered read — the post-delete aggregate served MERGE

@@ -61,20 +61,15 @@ object FileStats {
         .collect()
         .map(r => s"${r.getString(0)}|${r.getString(1)}|${r.getString(2)}|${r.getLong(3)}")
         .sorted
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/stats_1.txt"),
-        lines.mkString("\n").getBytes("UTF-8"))
+      Store.writeLines(s"$dir/stats_1.txt", lines.toSeq)
     }
 
   /** Parsed stats manifest: (path, min_od, max_od, rows) per live file. */
-  private[graft] def stats(dir: String): Seq[(String, String, String, Long)] = {
-    val src = scala.io.Source.fromFile(s"$dir/stats_1.txt")
-    try src.getLines().filter(_.nonEmpty).map { l =>
+  private[graft] def stats(dir: String): Seq[(String, String, String, Long)] =
+    Store.readLines(s"$dir/stats_1.txt").map { l =>
       val p = l.split('|')
       (p(0), p(1), p(2), p(3).toLong)
-    }.toList
-    finally src.close()
-  }
+    }
 
   /** The data-skipping read: keep exactly the files whose [min,max]
     * interval intersects [loIncl, hiExcl). Returns the pruned frame plus

@@ -42,48 +42,22 @@ object ManifestTree {
 
   private[graft] val CreditCents = 777L
 
-  private[graft] def mlist(dir: String, v: Int): Seq[BucketRef] = {
-    val src = scala.io.Source.fromFile(s"$dir/mlist_$v.txt")
-    try src.getLines().filter(_.nonEmpty).map { l =>
+  private[graft] def mlist(dir: String, v: Int): Seq[BucketRef] =
+    Store.readLines(s"$dir/mlist_$v.txt").map { l =>
       val p = l.split('|')
       BucketRef(p(0).toInt, p(1), p(2).toLong, p(3).toLong, p(4).toLong)
-    }.toList
-    finally src.close()
-  }
+    }
+
+  /** The manifest-list line of a bucket ref. */
+  private def listLine(r: BucketRef): String =
+    s"${r.nk}|${r.bm}|${r.rows}|${r.balLo}|${r.balHi}"
 
   /** One bucket manifest's file list (entry paths, stats stripped). */
-  private[graft] def bucketFiles(bm: String): Seq[String] = {
-    val src = scala.io.Source.fromFile(bm)
-    try src.getLines().filter(_.nonEmpty)
-      .map(Snapshots.pathOf).toList
-    finally src.close()
-  }
-
-  private def writeLines(path: String, lines: Seq[String]): Unit =
-    java.nio.file.Files.write(java.nio.file.Paths.get(path),
-      lines.mkString("\n").getBytes("UTF-8"))
-
-  /** The manifest LIST is the commit point — it must appear fully
-    * written or not at all (bucket manifests are inert until a list
-    * names them, so plain writes suffice for those). Used only for the
-    * v1 bootstrap; every subsequent version publishes through
-    * [[treeOccCommit]]'s claim discipline.
-    */
-  private def publishLines(path: String, lines: Seq[String]): Unit = {
-    val tmp = java.nio.file.Paths.get(path + ".tmp")
-    java.nio.file.Files.write(tmp,
-      lines.mkString("\n").getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(path),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  private[graft] def bucketFiles(bm: String): Seq[String] =
+    Store.readLines(bm).map(Snapshots.pathOf)
 
   /** Highest committed tree version: max N with a published mlist_N. */
-  private[graft] def treeHead(dir: String): Int =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .map(_.getName)
-      .collect { case n if n.startsWith("mlist_") && n.endsWith(".txt") =>
-        n.stripPrefix("mlist_").stripSuffix(".txt").toInt }
-      .foldLeft(0)(math.max)
+  private[graft] def treeHead(dir: String): Int = Store.head(dir, "mlist_")
 
   /** BUCKETS tree version `v` replaced relative to its parent — the
     * tree's conflict-detection metadata, one granularity coarser than
@@ -91,13 +65,9 @@ object ManifestTree {
     * so bucket identity IS the conflict unit).
     */
   private[graft] def treeReplacedOf(dir: String, v: Int): Set[Int] = {
-    val f = new java.io.File(dir, s"treplaced_$v.txt")
-    if (!f.exists()) Set.empty
-    else {
-      val src = scala.io.Source.fromFile(f)
-      try src.getLines().filter(_.nonEmpty).map(_.toInt).toSet
-      finally src.close()
-    }
+    val f = s"$dir/treplaced_$v.txt"
+    if (new java.io.File(f).exists()) Store.readLines(f).map(_.toInt).toSet
+    else Set.empty
   }
 
   /** OCC commit on the manifest TREE (round-16 verdict #4: the list
@@ -142,34 +112,16 @@ object ManifestTree {
           s"concurrent tree commit rewrote bucket(s) ${overlap.mkString(",")}" +
             s" this commit also touches (read v$readV, head v$h)")
       val n = h + 1
-      val claim = new java.io.File(dir, s"mlist_$n.txt.claim")
-      try {
-        java.nio.file.Files.createFile(claim.toPath) // atomic test-and-set
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$dir/treplaced_$n.txt"),
-          touched.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
+      val published = Store.claimSlot(dir, "mlist", n, claimWaitMs,
+          s"tree claim for version $n") {
+        Store.writeLines(s"$dir/treplaced_$n.txt",
+          touched.toSeq.sorted.map(_.toString))
         val rebased = (mlist(dir, h).filterNot(r => touched(r.nk)) ++
           newRefs).sortBy(_.nk)
-        val tmp = java.nio.file.Paths.get(s"$dir/mlist_$n.tmp")
-        java.nio.file.Files.write(tmp,
-          rebased.map(r => s"${r.nk}|${r.bm}|${r.rows}|${r.balLo}|${r.balHi}")
-            .mkString("\n").getBytes("UTF-8"))
-        java.nio.file.Files.move(tmp,
-          java.nio.file.Paths.get(s"$dir/mlist_$n.txt"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        return (n, retries)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          retries += 1
-          val mf = new java.io.File(dir, s"mlist_$n.txt")
-          val deadline = System.nanoTime() + claimWaitMs * 1000000L
-          while (!mf.exists() && System.nanoTime() < deadline)
-            Thread.sleep(2)
-          if (!mf.exists())
-            throw new Snapshots.CommitConflictException(
-              s"orphaned tree claim for version $n; manual recovery: " +
-                "remove " + claim.getPath)
+        Store.writeLinesAtomic(s"$dir/mlist_$n.txt", rebased.map(listLine))
       }
+      if (published) return (n, retries)
+      retries += 1
     }
     throw new IllegalStateException("unreachable")
   }
@@ -206,7 +158,7 @@ object ManifestTree {
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/$sub")
       val entries = Snapshots.statsEntries(s, Store.bucketedLeafFiles(dir, sub))
       val bm = s"$dir/bm_nk${nk}_$sub.txt"
-      writeLines(bm, entries)
+      Store.writeLines(bm, entries)
       try return (treeOccCommit(dir, h,
         Seq(bucketRef(nk, bm, entries)))._1, attempt)
       catch {
@@ -254,19 +206,19 @@ object ManifestTree {
       val v1ByBucket = byBucket(Snapshots.statsEntries(s, Store.bucketedLeafFiles(dir, "v1")))
       val refs1 = v1ByBucket.toSeq.sortBy(_._1).map { case (nk, entries) =>
         val bm = s"$dir/bm_nk${nk}_v1.txt"
-        writeLines(bm, entries)
+        Store.writeLines(bm, entries)
         bucketRef(nk, bm, entries)
       }
-      publishLines(s"$dir/mlist_1.txt",
-        refs1.map(r => s"${r.nk}|${r.bm}|${r.rows}|${r.balLo}|${r.balHi}"))
+      // the list is the commit point; bucket manifests are inert until
+      // a list names them, so plain writes suffice for those
+      Store.writeLinesAtomic(s"$dir/mlist_1.txt", refs1.map(listLine))
       // ---- the v2 commit, resolved through the TREE -------------------
       val touched = refs1.map(_.nk).filter(_ % 5 == 2).toSet
       // merge-side metadata fetch: ONLY the touched buckets' manifests
       val touchedRefs = mlist(dir, 1).filter(r => touched(r.nk))
       val inputFiles = touchedRefs.flatMap(r => bucketFiles(r.bm))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/_merge_bm_fetched"),
-        touchedRefs.size.toString.getBytes("UTF-8"))
+      Store.writeLines(s"$dir/_merge_bm_fetched",
+        Seq(touchedRefs.size.toString))
       Artifacts.parquet(s, inputFiles.sorted: _*)
         .withColumn("bal", col("bal") + lit(CreditCents))
         .select(col("k"), col("nkd"), col("bal"), col("nkd").as("nk"))
@@ -279,7 +231,7 @@ object ManifestTree {
       val refs2touched = v2ByBucket.toSeq.sortBy(_._1)
         .map { case (nk, entries) =>
           val bm = s"$dir/bm_nk${nk}_v2.txt"
-          writeLines(bm, entries)
+          Store.writeLines(bm, entries)
           bucketRef(nk, bm, entries)
         }
       require(treeOccCommit(dir, 1, refs2touched)._1 == 2,

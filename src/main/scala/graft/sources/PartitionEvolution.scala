@@ -32,18 +32,6 @@ object PartitionEvolution {
   // (4 year dirs), spec 2 the ~32 months from 1999 on
   private val Cut = "1999-01-01"
 
-  private def leaves(root: String): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    val p = java.nio.file.Paths.get(root)
-    if (!java.nio.file.Files.exists(p)) Seq.empty
-    else {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.iterator().asScala.map(_.toString)
-        .filter(_.endsWith(".parquet")).toSeq.sorted
-      finally walk.close()
-    }
-  }
-
   /** Lands the evolved table once per orders version: spec-1 files
     * (year dirs, pre-cut), spec-2 files (year/month dirs, post-cut),
     * manifest_1 (pre-evolution: spec-1 only) and manifest_2 (the
@@ -66,25 +54,18 @@ object PartitionEvolution {
         .repartition(col("y"), col("m"))
         .write.mode("overwrite").partitionBy("y", "m")
         .parquet(s"$dir/spec2")
-      val m1 = leaves(s"$dir/spec1").map(p => s"1|$p")
-      val m2 = m1 ++ leaves(s"$dir/spec2").map(p => s"2|$p")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        m1.mkString("\n").getBytes("UTF-8"))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_2.txt"),
-        m2.mkString("\n").getBytes("UTF-8"))
+      val m1 = Store.walkLeafFiles(dir, "spec1").map(p => s"1|$p")
+      Store.writeManifest(dir, 1, m1)
+      Store.writeManifest(dir, 2,
+        m1 ++ Store.walkLeafFiles(dir, "spec2").map(p => s"2|$p"))
     }
 
   private[graft] def specManifest(dir: String, v: Int)
-      : Seq[(Int, String)] = {
-    val src = scala.io.Source.fromFile(s"$dir/manifest_$v.txt")
-    try src.getLines().filter(_.nonEmpty).map { l =>
+      : Seq[(Int, String)] =
+    Snapshots.manifestLines(dir, v).map { l =>
       val i = l.indexOf('|')
       (l.substring(0, i).toInt, l.substring(i + 1))
-    }.toList
-    finally src.close()
-  }
+    }
 
   /** The dir-encoded time period of a file under its spec: spec 1 =
     * [y-01-01, (y+1)-01-01), spec 2 = [y-m-01, next month). ISO-string

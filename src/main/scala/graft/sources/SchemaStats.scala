@@ -129,19 +129,15 @@ object SchemaStats {
         .repartition(col("nk"))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
       val m1 = entries(s, Store.walkLeafFiles(dir, "v1"))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        m1.mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1, m1)
       val ordc = Tables.orders(s, d)
         .groupBy(col("o_custkey").as("k"))
         .agg(count(lit(1)).as("ordc"))
       base.filter(col("nkd") >= 12).join(ordc, "k")
         .repartitionByRange(4, col("ordc"))
         .write.mode("overwrite").parquet(s"$dir/v2add")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_2.txt"),
-        (m1 ++ entries(s, Store.walkLeafFiles(dir, "v2add")))
-          .mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 2,
+        m1 ++ entries(s, Store.walkLeafFiles(dir, "v2add")))
     }
 
   /** S39: the registered read — a selective range aggregate ON THE

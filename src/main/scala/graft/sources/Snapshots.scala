@@ -58,24 +58,10 @@ object Snapshots {
       .withColumn("bal", col("bal") + lit(1000L))
       .repartition(col("nk"))
       .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v2delta")
-    def files(sub: String, skipNk: Option[Int]): Seq[String] = {
-      val root = new java.io.File(s"$dir/$sub")
-      Option(root.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("nk=") &&
-          !skipNk.exists(n => f.getName == s"nk=$n"))
-        .flatMap(pd => pd.listFiles()
-          .filter(_.getName.endsWith(".parquet"))
-          .map(_.getAbsolutePath))
-        .toSeq.sorted
-    }
-    val m1 = files("v1", skipNk = None)
-    val m2 = files("v1", skipNk = Some(3)) ++ files("v2delta", None)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-      m1.mkString("\n").getBytes("UTF-8"))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/manifest_2.txt"),
-      m2.mkString("\n").getBytes("UTF-8"))
+    val m1 = Store.bucketedLeafFiles(dir, "v1")
+    Store.writeManifest(dir, 1, m1)
+    Store.writeManifest(dir, 2, m1.filterNot(Store.inBucket(_, 3)) ++
+      Store.bucketedLeafFiles(dir, "v2delta"))
   }
 
   private[graft] def s16Dir(s: SparkSession, d: String): String =
@@ -89,10 +75,8 @@ object Snapshots {
     * manifest-entry / Delta add-action-stats shape). A bounded driver
     * read (≤ |files| lines), the manifest-fetch cost model.
     */
-  private[graft] def manifestLines(dir: String, v: Int): Seq[String] = {
-    val src = scala.io.Source.fromFile(s"$dir/manifest_$v.txt")
-    try src.getLines().toList finally src.close()
-  }
+  private[graft] def manifestLines(dir: String, v: Int): Seq[String] =
+    Store.readLines(s"$dir/manifest_$v.txt")
 
   /** Path of a manifest entry (paths never contain '|'). Prefer
     * [[ManifestEntry.parse]] when more than the path is needed — set
@@ -189,15 +173,8 @@ object Snapshots {
     Artifacts.dir(Artifacts.key("snapvac", Tables.path(d, "customer")),
       "graft_snapvac") { dir =>
       buildVersioned(s, d, dir)
-      val live = manifest(dir, 2).toSet
-      val expired = manifest(dir, 1).filterNot(live)
-      expired.foreach(f =>
-        java.nio.file.Files.delete(java.nio.file.Paths.get(f)))
-      java.nio.file.Files.delete(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/_expired_count"),
-        expired.length.toString.getBytes("UTF-8"))
+      val (_, nExpired) = expireVersions(dir, Set(2))
+      Store.writeLines(s"$dir/_expired_count", Seq(nExpired.toString))
     }
 
   /** S18: snapshot EXPIRY — the vacuum/retention job every manifest
@@ -218,10 +195,7 @@ object Snapshots {
     */
   private def s18SnapshotVacuum(s: SparkSession, d: String): DataFrame = {
     val dir = s18Dir(s, d)
-    val nExpired = {
-      val src = scala.io.Source.fromFile(s"$dir/_expired_count")
-      try src.mkString.trim.toLong finally src.close()
-    }
+    val nExpired = Store.readLines(s"$dir/_expired_count").head.toLong
     val nLive = manifest(dir, 2).length.toLong
     readVersion(s, dir, 2)
       .agg(count(lit(1)).as("n_rows_after"),
@@ -251,12 +225,7 @@ object Snapshots {
   /** Highest committed version: max N with a published `manifest_N.txt`.
     * A driver-side directory listing — the metastore-head fetch.
     */
-  private[graft] def head(dir: String): Int =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .map(_.getName)
-      .collect { case n if n.startsWith("manifest_") && n.endsWith(".txt") =>
-        n.stripPrefix("manifest_").stripSuffix(".txt").toInt }
-      .foldLeft(0)(math.max)
+  private[graft] def head(dir: String): Int = Store.head(dir, "manifest_")
 
   /** Files commit `v` REPLACED relative to its parent — the conflict-
     * detection metadata every OCC table format records per snapshot
@@ -264,12 +233,8 @@ object Snapshots {
     * (the base) and pre-OCC manifests have none.
     */
   private[graft] def replacedOf(dir: String, v: Int): Set[String] = {
-    val f = new java.io.File(dir, s"replaced_$v.txt")
-    if (!f.exists()) Set.empty
-    else {
-      val src = scala.io.Source.fromFile(f)
-      try src.getLines().filter(_.nonEmpty).toSet finally src.close()
-    }
+    val f = s"$dir/replaced_$v.txt"
+    if (new java.io.File(f).exists()) Store.readLines(f).toSet else Set.empty
   }
 
   /** Optimistic-concurrency commit (the Iceberg/Delta protocol): the
@@ -282,11 +247,10 @@ object Snapshots {
     *  - an overlap at FILE granularity throws [[CommitConflictException]]
     *    — our base rows were rewritten under us, a rebase would silently
     *    drop the other writer's update (lost update);
-    *  - the version slot itself is claimed with an atomic O_EXCL file
-    *    create (`manifest_N.txt.claim` — the only true test-and-set the
-    *    filesystem gives; an ATOMIC_MOVE onto an existing target is a
-    *    silent POSIX rename replace). A loser of the claim race waits for
-    *    the winner's manifest to publish, then retries from the new head.
+    *  - the version slot itself is claimed through [[Store.claimSlot]]
+    *    (an O_EXCL `manifest_N.txt.claim`). A loser of the claim race
+    *    waits for the winner's manifest to publish, then retries from
+    *    the new head.
     *
     * Readers are never torn: they key on `manifest_N.txt`, which appears
     * only via an atomic rename of a fully-written temp file, AFTER
@@ -338,39 +302,21 @@ object Snapshots {
           s"concurrent commit rewrote ${overlap.size} file(s) this commit " +
             s"also replaces (read v$readV, head v$h): ${overlap.take(3)}")
       val n = h + 1
-      val claim = new java.io.File(dir, s"manifest_$n.txt.claim")
-      try {
-        java.nio.file.Files.createFile(claim.toPath) // atomic test-and-set
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$dir/replaced_$n.txt"),
-          replaced.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
+      val published = Store.claimSlot(dir, "manifest", n, claimWaitMs,
+          s"claim for version $n (claimant died mid-publish)") {
+        Store.writeLines(s"$dir/replaced_$n.txt", replaced.toSeq.sorted)
         // rebase over ENTRIES: parent lines (with their stats) survive
         // untouched unless replaced by path; `added` may carry stats
         val newManifest =
           (manifestLines(dir, h).filterNot(l => replaced(pathOf(l))) ++
             added).sortBy(pathOf)
-        val tmp = java.nio.file.Paths.get(s"$dir/manifest_$n.tmp")
-        java.nio.file.Files.write(tmp,
-          newManifest.mkString("\n").getBytes("UTF-8"))
         beforePublish(n) // sidecars durable before the version is visible
-        java.nio.file.Files.move(tmp,
-          java.nio.file.Paths.get(s"$dir/manifest_$n.txt"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        return (n, retries)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          // lost the slot-N claim race: wait for the winner's manifest,
-          // then retry the whole conflict check from the new head
-          retries += 1
-          val mf = new java.io.File(dir, s"manifest_$n.txt")
-          val deadline = System.nanoTime() + claimWaitMs * 1000000L
-          while (!mf.exists() && System.nanoTime() < deadline)
-            Thread.sleep(2)
-          if (!mf.exists())
-            throw new CommitConflictException(
-              s"orphaned claim for version $n (claimant died mid-publish); " +
-                "manual recovery: remove " + claim.getPath)
+        Store.writeLinesAtomic(s"$dir/manifest_$n.txt", newManifest)
       }
+      if (published) return (n, retries)
+      // lost the slot-n claim race and the winner published: retry the
+      // whole conflict check from the new head
+      retries += 1
     }
     throw new IllegalStateException("unreachable")
   }
@@ -385,20 +331,12 @@ object Snapshots {
   private[graft] def prepareCredit(dir: String, readV: Int, base: DataFrame,
       nation: Int, creditCents: Long, sub: String)
       : (Set[String], Seq[String]) = {
-    val sep = java.io.File.separator
-    val replaced = manifest(dir, readV)
-      .filter(_.contains(s"${sep}nk=$nation$sep")).toSet
+    val replaced = manifest(dir, readV).filter(Store.inBucket(_, nation)).toSet
     base.filter(col("nk") === nation)
       .withColumn("bal", col("bal") + lit(creditCents))
       .repartition(col("nk"))
       .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/$sub")
-    val added = Option(new java.io.File(s"$dir/$sub").listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("nk="))
-      .flatMap(pd => pd.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(_.getAbsolutePath))
-      .toSeq.sorted
-    (replaced, added)
+    (replaced, Store.bucketedLeafFiles(dir, sub))
   }
 
   /** Lands the OCC demo once per source version: v1 base, then TWO
@@ -415,15 +353,7 @@ object Snapshots {
           balCents.as("bal"))
       base.repartition(col("nk"))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      val m1 = Option(new java.io.File(s"$dir/v1").listFiles())
-        .getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("nk="))
-        .flatMap(pd => pd.listFiles().filter(_.getName.endsWith(".parquet"))
-          .map(_.getAbsolutePath))
-        .toSeq.sorted
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        m1.mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1, Store.bucketedLeafFiles(dir, "v1"))
       // both writers prepare against v1 BEFORE either commits — the
       // optimistic part; B's read version is stale by publish time
       val (repA, addA) = prepareCredit(dir, 1, base, 1, 500L, "wA")
@@ -487,12 +417,8 @@ object Snapshots {
         .repartition(col("nk"))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v2add")
       val m1 = Store.bucketedLeafFiles(dir, "v1")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        m1.mkString("\n").getBytes("UTF-8"))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_2.txt"),
-        (m1 ++ Store.bucketedLeafFiles(dir, "v2add")).mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1, m1)
+      Store.writeManifest(dir, 2, m1 ++ Store.bucketedLeafFiles(dir, "v2add"))
     }
 
   /** Version read under MIXED schemas: `mergeSchema` unions the file
@@ -579,10 +505,8 @@ object Snapshots {
   private[graft] def mergeAttempt(s: SparkSession, dir: String,
       changes: DataFrame, touched: Seq[Int], readV: Int,
       sub: String): Int = {
-    val sep = java.io.File.separator
     val replaced = manifest(dir, readV)
-      .filter(p => touched.exists(nk => p.contains(s"${sep}nk=$nk$sep")))
-      .toSet
+      .filter(p => touched.exists(Store.inBucket(p, _))).toSet
     val current =
       if (replaced.isEmpty)
         changes.select(col("k"), col("nk").as("nkd"), col("val").as("bal"))
@@ -667,13 +591,11 @@ object Snapshots {
     */
   private[graft] def compactBucket(s: SparkSession, dir: String, nk: Int,
       tag: String, maxAttempts: Int = 10): (Int, Int) = {
-    val sep = java.io.File.separator
     var attempt = 0
     while (true) {
       attempt += 1
       val h = head(dir)
-      val bucket = manifest(dir, h)
-        .filter(_.contains(s"${sep}nk=$nk$sep")).toSet
+      val bucket = manifest(dir, h).filter(Store.inBucket(_, nk)).toSet
       require(bucket.nonEmpty, s"no files for bucket nk=$nk at v$h")
       val sub = s"$tag${h}a${attempt}u${stagingSeq.incrementAndGet()}"
       Artifacts.parquet(s, bucket.toSeq.sorted: _*)
@@ -733,10 +655,8 @@ object Snapshots {
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
       // the bootstrap commit carries stats too, so a pruned read of any
       // head covers untouched buckets as well as rewritten ones
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        statsEntries(s, Store.bucketedLeafFiles(dir, "v1"))
-          .mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1,
+        statsEntries(s, Store.bucketedLeafFiles(dir, "v1")))
       val (v, _) = cowMerge(s, dir, s22Changes(s, d, base), "m")
       require(v == 2, s"MERGE demo expected v2, committed v$v")
     }
@@ -1131,15 +1051,7 @@ object Snapshots {
           balCents.as("bal"))
       base.repartition(col("nk"))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      val m1 = Option(new java.io.File(s"$dir/v1").listFiles())
-        .getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("nk="))
-        .flatMap(pd => pd.listFiles().filter(_.getName.endsWith(".parquet"))
-          .map(_.getAbsolutePath))
-        .toSeq.sorted
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        m1.mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1, Store.bucketedLeafFiles(dir, "v1"))
       val (rep, add) = prepareCredit(dir, 1, base, 6, 9999L, "oops")
       val (v2, _) = occCommit(dir, 1, rep, add)
       require(v2 == 2)
@@ -1184,23 +1096,15 @@ object Snapshots {
     * Tags are what make "keep the quarter-close snapshot" a metadata
     * operation instead of a data copy.
     */
-  private[graft] def writeTag(dir: String, name: String, v: Int): Unit = {
-    val tmp = java.nio.file.Paths.get(s"$dir/tag_$name.tmp")
-    java.nio.file.Files.write(tmp, v.toString.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp,
-      java.nio.file.Paths.get(s"$dir/tag_$name.txt"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  private[graft] def writeTag(dir: String, name: String, v: Int): Unit =
+    Store.writeLinesAtomic(s"$dir/tag_$name.txt", Seq(v.toString))
 
   private[graft] def tags(dir: String): Map[String, Int] =
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.startsWith("tag_") &&
         f.getName.endsWith(".txt"))
-      .map { f =>
-        val src = scala.io.Source.fromFile(f)
-        val v = try src.mkString.trim.toInt finally src.close()
-        f.getName.stripPrefix("tag_").stripSuffix(".txt") -> v
-      }.toMap
+      .map(f => f.getName.stripPrefix("tag_").stripSuffix(".txt") ->
+        Store.readLines(f.getPath).head.toInt).toMap
 
   /** Read a snapshot by tag name. */
   private[graft] def readTag(s: SparkSession, dir: String,
@@ -1215,16 +1119,29 @@ object Snapshots {
     * nearly free until the table churns away from it. Returns
     * (expiredVersions, filesDeleted).
     */
-  private[graft] def tagVacuum(dir: String): (Seq[Int], Int) = {
-    val h = head(dir)
-    val retained = tags(dir).values.toSet + h
-    val expired = (1 to h).filterNot(retained).filter(v =>
+  private[graft] def tagVacuum(dir: String): (Seq[Int], Int) =
+    expireVersions(dir, tags(dir).values.toSet + head(dir))
+
+  /** The one expiry routine behind every retention job (s18's vacuum,
+    * [[tagVacuum]], the streaming store's ledger vacuum): expire every
+    * version up to the head that is not `retained` — delete the data
+    * files only expired manifests reference, then the expired
+    * `manifest_`/`replaced_` files, then sweep the sidecars no retained
+    * version resolves to. A version whose manifest is already gone (an
+    * earlier run expired it, or crashed part-way) has no files left to
+    * read, so re-running converges. Returns (expiredVersions — those
+    * whose manifest this run removed — and filesDeleted).
+    */
+  private[graft] def expireVersions(dir: String,
+      retained: Set[Int]): (Seq[Int], Int) = {
+    val gone = (1 to head(dir)).filterNot(retained)
+    val expired = gone.filter(v =>
       new java.io.File(dir, s"manifest_$v.txt").exists())
     val keep = retained.toSeq.flatMap(v => manifest(dir, v)).toSet
     val drop = expired.flatMap(v => manifest(dir, v)).toSet -- keep
     drop.foreach(f =>
       java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f)))
-    expired.foreach { v =>
+    gone.foreach { v =>
       java.nio.file.Files.deleteIfExists(
         java.nio.file.Paths.get(s"$dir/manifest_$v.txt"))
       java.nio.file.Files.deleteIfExists(
@@ -1251,7 +1168,7 @@ object Snapshots {
       retained: Set[Int]): Unit = {
     val h = head(dir)
     Store.sidecarPrefixes.foreach { prefix =>
-      val vs = Store.sidecarVersions(dir, prefix)
+      val vs = Store.versions(dir, prefix)
       def target(v: Int): Option[Int] = vs.filter(_ <= v).lastOption
       val before = retained.map(v => v -> target(v)).toMap
       val needed = retained.flatMap(target)
@@ -1259,7 +1176,7 @@ object Snapshots {
         java.nio.file.Files.deleteIfExists(
           java.nio.file.Paths.get(s"$dir/$prefix$m.txt")))
       val after = retained.map(v =>
-        v -> Store.sidecarVersions(dir, prefix).filter(_ <= v).lastOption).toMap
+        v -> Store.versions(dir, prefix).filter(_ <= v).lastOption).toMap
       require(before == after,
         s"sidecar retention broke a retained version's $prefix" +
           s"resolution: $before -> $after")
@@ -1278,9 +1195,7 @@ object Snapshots {
           balCents.as("bal"))
       base.repartition(col("nk"))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        Store.bucketedLeafFiles(dir, "v1").mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1, Store.bucketedLeafFiles(dir, "v1"))
       val (rep2, add2) = prepareCredit(dir, 1, base, 4, 250L, "t2")
       require(occCommit(dir, 1, rep2, add2)._1 == 2)
       writeTag(dir, "q2close", 2)
@@ -1290,9 +1205,7 @@ object Snapshots {
       require(occCommit(dir, 2, rep3, add3)._1 == 3)
       val (expired, nDropped) = tagVacuum(dir)
       require(expired == Seq(1), s"tag vacuum expired $expired")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/_dropped_count"),
-        nDropped.toString.getBytes("UTF-8"))
+      Store.writeLines(s"$dir/_dropped_count", Seq(nDropped.toString))
     }
 
   /** S33: the registered tag read — the TAGGED snapshot and the head,
@@ -1305,10 +1218,7 @@ object Snapshots {
     */
   private def s33TaggedSnapshots(s: SparkSession, d: String): DataFrame = {
     val dir = s33Dir(s, d)
-    val nDropped = {
-      val src = scala.io.Source.fromFile(s"$dir/_dropped_count")
-      try src.mkString.trim.toLong finally src.close()
-    }
+    val nDropped = Store.readLines(s"$dir/_dropped_count").head.toLong
     def agg(label: String, df: DataFrame): DataFrame =
       df.agg(count(lit(1)).as("n_rows"), sum(col("bal")).as("bal_cents"))
         .select(lit(label).as("snap"), col("n_rows"), col("bal_cents"))
@@ -1365,21 +1275,12 @@ object Snapshots {
     * Store registry, never here.
     */
   private[graft] def sidecarPayloadFiles(dir: String): Set[String] =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => Store.fileListSidecarPrefixes.exists(p =>
-        f.getName.startsWith(p)) && f.getName.endsWith(".txt"))
-      .flatMap { f =>
-        val src = scala.io.Source.fromFile(f)
-        try src.getLines().filter(_.nonEmpty).toList finally src.close()
-      }
+    Store.fileListSidecarPrefixes.flatMap(p => Store.versions(dir, p)
+        .flatMap(v => Store.readLines(s"$dir/$p$v.txt")))
       .map(l => canonicalPath(dir, l)).toSet
 
   private[graft] def referencedFiles(dir: String): Set[String] =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("manifest_") &&
-        f.getName.endsWith(".txt"))
-      .flatMap(f => manifestLines(dir,
-        f.getName.stripPrefix("manifest_").stripSuffix(".txt").toInt))
+    Store.versions(dir, "manifest_").flatMap(manifestLines(dir, _))
       .map(l => canonicalPath(dir, pathOf(l))).toSet ++
       sidecarPayloadFiles(dir)
 
@@ -1436,10 +1337,9 @@ object Snapshots {
         p.getFileName.toString match {
           case ClaimRe(slot) if !new java.io.File(
               p.getParent.toString, s"manifest_$slot.txt").exists() =>
-            Seq(s"deletes_$slot.txt", s"colmap_$slot.txt",
-                s"replaced_$slot.txt").foreach(n =>
+            (Store.sidecarPrefixes :+ "replaced_").foreach(prefix =>
               java.nio.file.Files.deleteIfExists(
-                p.getParent.resolve(n)))
+                p.getParent.resolve(s"$prefix$slot.txt")))
           case _ => ()
         }
         java.nio.file.Files.deleteIfExists(p)
@@ -1469,10 +1369,8 @@ object Snapshots {
       base.select(col("k"), col("nk").as("nkd"), col("bal"), col("nk"))
         .repartition(col("nk"))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        statsEntries(s, Store.bucketedLeafFiles(dir, "v1"))
-          .mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1,
+        statsEntries(s, Store.bucketedLeafFiles(dir, "v1")))
       import s.implicits._
       val k5 = base.filter(col("nk") === 5)
         .agg(min(col("k")), max(col("k"))).first()
@@ -1502,9 +1400,7 @@ object Snapshots {
       }
       val (deleted, young) = deleteOrphanFiles(dir, 60000L)
       require(deleted >= 1, s"cleanup deleted $deleted")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/_orphan_stats"),
-        s"$deleted|$young".getBytes("UTF-8"))
+      Store.writeLines(s"$dir/_orphan_stats", Seq(s"$deleted|$young"))
     }
 
   /** S34: the registered post-cleanup read — the head snapshot (both
@@ -1515,10 +1411,8 @@ object Snapshots {
     */
   private def s34OrphanCleanup(s: SparkSession, d: String): DataFrame = {
     val dir = s34Dir(s, d)
-    val Array(deleted, young) = {
-      val src = scala.io.Source.fromFile(s"$dir/_orphan_stats")
-      try src.mkString.trim.split('|').map(_.toLong) finally src.close()
-    }
+    val Array(deleted, young) =
+      Store.readLines(s"$dir/_orphan_stats").head.split('|').map(_.toLong)
     val headAgg = readVersion(s, dir, head(dir))
       .agg(count(lit(1)).as("n_rows"), sum(col("bal")).as("bal_cents"))
     val v1Agg = readVersion(s, dir, 1)

@@ -31,13 +31,12 @@ object SortedCompaction {
   private[graft] def sortedCompactBucket(s: SparkSession, dir: String,
       nk: Int, tag: String, nFiles: Int,
       maxAttempts: Int = 10): (Int, Int) = {
-    val sep = java.io.File.separator
     var attempt = 0
     while (true) {
       attempt += 1
       val h = Snapshots.head(dir)
       val bucket = Snapshots.manifest(dir, h)
-        .filter(_.contains(s"${sep}nk=$nk$sep")).toSet
+        .filter(Store.inBucket(_, nk)).toSet
       require(bucket.nonEmpty, s"no files for bucket nk=$nk at v$h")
       val sub = s"$tag${h}a$attempt"
       Artifacts.parquet(s, bucket.toSeq.sorted: _*)
@@ -78,10 +77,8 @@ object SortedCompaction {
       base.withColumn("nk", col("nkd"))
         .repartition(6, col("k")) // value-unsorted ingest splits
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        Snapshots.statsEntries(s, Store.bucketedLeafFiles(dir, "v1"))
-          .mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1,
+        Snapshots.statsEntries(s, Store.bucketedLeafFiles(dir, "v1")))
       require(sortedCompactBucket(s, dir, CompactedNk, "sc",
         RangeFiles)._1 == 2)
     }

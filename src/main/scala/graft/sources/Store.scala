@@ -1,30 +1,64 @@
 package graft.sources
 
-/** Shared store PLUMBING — the typed module the round-16/17 verdicts
-  * asked for (#5 / #4): every manifest store in this package had grown
-  * its own copy of the same three mechanisms, and a copy is where a
-  * protocol detail silently diverges. One home for each:
+/** The manifest stores' ON-DISK PROTOCOL, below the commit logic: every
+  * store in `sources/` and `streaming/` reads and writes its metadata
+  * through this module, so each protocol detail is decided once
+  * (OneStoreIoLintSpec keeps it that way). It owns:
   *
-  *  - LEAF-FILE LISTINGS of a staged write (bucketed `nk=` layout,
-  *    flat layout, or an arbitrary-depth walk) — nine modules carried
-  *    byte-identical private copies;
+  *  - METADATA FILE I/O: [[writeLines]] for bootstrap files no reader
+  *    can see yet, [[writeLinesAtomic]] (temp + atomic rename) for
+  *    anything a reader may already watch, [[readLines]] for both;
+  *  - LEAF-FILE LISTINGS of a staged write (bucketed `nk=` layout, flat
+  *    layout, or an arbitrary-depth walk);
+  *  - the VERSION SEQUENCE of a `<prefix><v>.txt` family — its committed
+  *    versions and its [[head]] (`manifest_`, `mlist_`, `txn_`, and the
+  *    sidecar dialects);
+  *  - the SLOT CLAIM every publisher takes ([[claimSlot]]: O_EXCL
+  *    `<name>_<n>.txt.claim`, publish while holding it, bounded wait for
+  *    a winner, orphaned-claim error);
   *  - VERSION-ADDRESSED SIDECARS (`<prefix><v>.txt`, resolved
-  *    nearest-at-or-below — the Iceberg sequence-number rule): the
-  *    read/write/resolve mechanics TxnDeletes (`deletes_`) and
-  *    ColumnIds (`colmap_`) each re-implemented, now one code path.
-  *    The DIALECT REGISTRY lives here too: which prefixes exist, and
-  *    which of them carry file lists (payloads the orphan sweep must
-  *    treat as referenced) — maintenance in [[Snapshots]] consumes the
-  *    registry instead of hardcoding names;
-  *  - METADATA FILE WRITES: plain write for bootstrap manifests (no
-  *    readers yet) and temp + atomic rename for anything a reader may
-  *    already be watching.
+  *    nearest-at-or-below — the Iceberg sequence-number rule) and their
+  *    DIALECT REGISTRY, which the orphan sweep and sidecar retention in
+  *    [[Snapshots]] consume instead of naming dialects themselves.
   *
-  * The COMMIT PROTOCOL itself (head / manifest / occCommit / vacuum)
-  * stays in [[Snapshots]], which every module and spec already
-  * addresses by that name; this module is the layer below it.
+  * What a commit means (conflict checks, rebase, retry rules) and
+  * retention stay in [[Snapshots]] and the stores that extend it; this
+  * module is the layer below them.
   */
 object Store {
+
+  // ---- metadata file I/O ----------------------------------------------------
+
+  /** Plain metadata write — for BOOTSTRAP files only (manifest_1 of a
+    * store being built in place, before any reader exists, or a file
+    * written while its slot claim is held). Anything a reader may
+    * already watch goes through [[writeLinesAtomic]].
+    */
+  private[graft] def writeLines(path: String, lines: Seq[String]): Unit =
+    java.nio.file.Files.write(java.nio.file.Paths.get(path),
+      lines.mkString("\n").getBytes("UTF-8"))
+
+  /** Temp + atomic rename — readers never see a torn file. */
+  private[graft] def writeLinesAtomic(path: String,
+      lines: Seq[String]): Unit = {
+    val target = java.nio.file.Paths.get(path)
+    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
+    writeLines(tmp.toString, lines)
+    java.nio.file.Files.move(tmp, target,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** The non-empty lines of a metadata file (throws if it is missing). */
+  private[graft] def readLines(path: String): Seq[String] = {
+    val src = scala.io.Source.fromFile(path, "UTF-8")
+    try src.getLines().filter(_.nonEmpty).toList finally src.close()
+  }
+
+  /** Bootstrap manifest write (entries may carry stats). */
+  private[graft] def writeManifest(dir: String, v: Int,
+      entries: Seq[String]): Unit =
+    writeLines(s"$dir/manifest_$v.txt", entries)
 
   // ---- leaf-file listings ---------------------------------------------------
 
@@ -48,43 +82,71 @@ object Store {
       .toSeq.sorted
 
   /** Every parquet under `dir/sub`, any depth — for layouts whose
-    * partitioning shape isn't known to the caller.
+    * partitioning shape isn't known to the caller. Empty if `dir/sub`
+    * does not exist, like the other listers.
     */
   private[graft] def walkLeafFiles(dir: String, sub: String): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(
-      java.nio.file.Paths.get(s"$dir/$sub"))
+    val root = java.nio.file.Paths.get(s"$dir/$sub")
+    if (!java.nio.file.Files.exists(root)) return Seq.empty
+    val walk = java.nio.file.Files.walk(root)
     try walk.iterator().asScala.map(_.toString)
       .filter(_.endsWith(".parquet")).toSeq.sorted
     finally walk.close()
   }
 
-  // ---- metadata file writes -------------------------------------------------
-
-  /** Plain metadata write — for BOOTSTRAP files only (manifest_1 of a
-    * store being built in place, before any reader exists). Anything a
-    * reader may already watch goes through [[writeLinesAtomic]].
-    */
-  private[graft] def writeLines(path: String, lines: Seq[String]): Unit =
-    java.nio.file.Files.write(java.nio.file.Paths.get(path),
-      lines.mkString("\n").getBytes("UTF-8"))
-
-  /** Temp + atomic rename — readers never see a torn file. */
-  private[graft] def writeLinesAtomic(path: String,
-      lines: Seq[String]): Unit = {
-    val target = java.nio.file.Paths.get(path)
-    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    java.nio.file.Files.write(tmp,
-      lines.mkString("\n").getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, target,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  /** Whether a data-file path sits in bucket `nk` of a bucketed layout. */
+  private[graft] def inBucket(path: String, nk: Int): Boolean = {
+    val sep = java.io.File.separator
+    path.contains(s"${sep}nk=$nk$sep")
   }
 
-  /** Bootstrap manifest write (entries may carry stats). */
-  private[graft] def writeManifest(dir: String, v: Int,
-      entries: Seq[String]): Unit =
-    writeLines(s"$dir/manifest_$v.txt", entries)
+  // ---- version sequences and the slot claim ---------------------------------
+
+  /** Committed versions of a `<prefix><v>.txt` family, ascending. */
+  private[graft] def versions(dir: String, prefix: String): Seq[Int] =
+    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      .map(_.getName)
+      .collect { case n if n.startsWith(prefix) && n.endsWith(".txt") =>
+        n.stripPrefix(prefix).stripSuffix(".txt") }
+      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toInt)
+      .toSeq.sorted
+
+  /** Highest published version of a family (0 = none): a driver-side
+    * directory listing, the metastore-head fetch.
+    */
+  private[graft] def head(dir: String, prefix: String): Int =
+    versions(dir, prefix).lastOption.getOrElse(0)
+
+  /** Claim slot `n` of the `<name>_<n>.txt` family and publish it. The
+    * claim is an atomic O_EXCL create of `<name>_<n>.txt.claim` — the
+    * only true test-and-set the filesystem gives (an atomic rename onto
+    * an existing target silently replaces it). The winner runs `publish`
+    * while holding the claim and gets true. A loser waits up to
+    * `claimWaitMs` for the winner's `<name>_<n>.txt` and gets false (the
+    * caller re-checks and retries); if the file never appears the
+    * claimant died mid-publish, and the [[Snapshots.CommitConflictException]]
+    * names the claim to remove (`what` describes it). Claims stay on
+    * disk after a publish; the orphan sweep collects them.
+    */
+  private[graft] def claimSlot(dir: String, name: String, n: Int,
+      claimWaitMs: Long, what: String)(publish: => Unit): Boolean = {
+    val claim = new java.io.File(dir, s"${name}_$n.txt.claim")
+    val won =
+      try { java.nio.file.Files.createFile(claim.toPath); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    if (won) publish
+    else {
+      val published = new java.io.File(dir, s"${name}_$n.txt")
+      val deadline = System.nanoTime() + claimWaitMs * 1000000L
+      while (!published.exists() && System.nanoTime() < deadline)
+        Thread.sleep(2)
+      if (!published.exists())
+        throw new Snapshots.CommitConflictException(
+          s"orphaned $what; manual recovery: remove ${claim.getPath}")
+    }
+    won
+  }
 
   // ---- version-addressed sidecars -------------------------------------------
 
@@ -94,16 +156,6 @@ object Store {
     */
   private[graft] val sidecarPrefixes = Seq("deletes_", "colmap_")
   private[graft] val fileListSidecarPrefixes = Seq("deletes_")
-
-  /** Committed sidecar versions of one dialect, ascending. */
-  private[graft] def sidecarVersions(dir: String,
-      prefix: String): Seq[Int] =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .map(_.getName)
-      .collect { case n if n.startsWith(prefix) && n.endsWith(".txt") =>
-        n.stripPrefix(prefix).stripSuffix(".txt") }
-      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toInt)
-      .toSeq.sorted
 
   /** Nearest sidecar version at or below `v` (the Iceberg
     * sequence-number rule: a sparse metadata commit applies to every
@@ -117,10 +169,8 @@ object Store {
   /** Lines of the nearest sidecar at or below `v`; None = none yet. */
   private[graft] def readSidecar(dir: String, prefix: String,
       v: Int): Option[Seq[String]] =
-    resolveSidecarVersion(dir, prefix, v).map { m =>
-      val src = scala.io.Source.fromFile(s"$dir/$prefix$m.txt")
-      try src.getLines().filter(_.nonEmpty).toList finally src.close()
-    }
+    resolveSidecarVersion(dir, prefix, v).map(m =>
+      readLines(s"$dir/$prefix$m.txt"))
 
   /** Publish a sidecar for version `v`. Called from occCommit's
     * `beforePublish` while the slot claim is held — a visible version

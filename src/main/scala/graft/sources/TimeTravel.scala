@@ -31,10 +31,8 @@ import graft.util.Artifacts
   */
 object TimeTravel {
 
-  private[graft] def watermark(dir: String, v: Int): String = {
-    val src = scala.io.Source.fromFile(s"$dir/watermark_$v.txt")
-    try src.mkString.trim finally src.close()
-  }
+  private[graft] def watermark(dir: String, v: Int): String =
+    Store.readLines(s"$dir/watermark_$v.txt").head
 
   /** Largest committed version whose watermark ≤ `date` (ISO string;
     * lexicographic = chronological). Throws if no snapshot is old
@@ -69,27 +67,19 @@ object TimeTravel {
           round(col("o_totalprice") * 100).cast("long").as("cents"))
       val years = slim.select(substring(col("od"), 1, 4).as("y"))
         .distinct().collect().map(_.getString(0)).sorted
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_0.txt"),
-        Array.empty[Byte]) // the empty base every append rebases onto
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/watermark_0.txt"),
-        "0000-00-00".getBytes("UTF-8"))
+      // the empty base every append rebases onto
+      Store.writeManifest(dir, 0, Nil)
+      Store.writeLines(s"$dir/watermark_0.txt", Seq("0000-00-00"))
       years.zipWithIndex.foreach { case (y, i) =>
         val sub = s"y$y"
         val slice = slim.filter(substring(col("od"), 1, 4) === y)
         slice.coalesce(1).write.mode("overwrite").parquet(s"$dir/$sub")
-        val files = Option(new java.io.File(s"$dir/$sub").listFiles())
-          .getOrElse(Array.empty)
-          .filter(_.getName.endsWith(".parquet"))
-          .map(_.getAbsolutePath).toSeq.sorted
         val wm = slice.agg(max(col("od"))).first().getString(0)
         // watermark durable BEFORE the version publishes (the occCommit
         // replaced-metadata ordering discipline)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$dir/watermark_${i + 1}.txt"),
-          wm.getBytes("UTF-8"))
-        val (v, _) = Snapshots.occCommit(dir, i, Set.empty, files)
+        Store.writeLines(s"$dir/watermark_${i + 1}.txt", Seq(wm))
+        val (v, _) = Snapshots.occCommit(dir, i, Set.empty,
+          Store.flatLeafFiles(dir, sub))
         require(v == i + 1, s"year $y expected v${i + 1}, got v$v")
       }
     }

@@ -102,7 +102,6 @@ object TxnDeletes {
     */
   private[graft] def purgeDeletes(s: SparkSession, dir: String,
       tag: String, maxAttempts: Int = 10): (Int, Int) = {
-    val sep = java.io.File.separator
     var attempt = 0
     while (true) {
       attempt += 1
@@ -113,8 +112,7 @@ object TxnDeletes {
       val touched = doomed.select(col("nk")).distinct()
         .collect().map(_.getInt(0)).toSeq.sorted // bounded: ≤ |buckets|
       val replaced = Snapshots.manifest(dir, h)
-        .filter(p => touched.exists(nk => p.contains(s"${sep}nk=$nk$sep")))
-        .toSet
+        .filter(p => touched.exists(Store.inBucket(p, _))).toSet
       val sub = s"${tag}purge${h}a$attempt"
       Artifacts.parquet(s, replaced.toSeq.sorted: _*)
         .join(broadcast(doomed.select(col("k"))), Seq("k"), "left_anti")
@@ -183,7 +181,6 @@ object TxnDeletes {
     */
   private def delTerm(s: SparkSession, m: Seq[String],
       dvs: Seq[String], schemaFile: String): DataFrame = {
-    val sep = java.io.File.separator
     if (dvs.isEmpty)
       return Artifacts.parquet(s, schemaFile).filter(lit(false))
         .groupBy(col("nkd").cast("int").as("nk"))
@@ -191,8 +188,7 @@ object TxnDeletes {
     val doomed = Artifacts.parquet(s, dvs: _*)
     val buckets = doomed.select(col("nk")).distinct()
       .collect().map(_.getInt(0)) // bounded: ≤ |buckets|
-    val files = m.filter(p =>
-      buckets.exists(nk => p.contains(s"${sep}nk=$nk$sep")))
+    val files = m.filter(p => buckets.exists(Store.inBucket(p, _)))
     (if (files.nonEmpty) Artifacts.parquet(s, files.sorted: _*)
      else Artifacts.parquet(s, schemaFile).filter(lit(false)))
       .join(broadcast(doomed.select(col("k"))), Seq("k"), "left_semi")
@@ -221,7 +217,6 @@ object TxnDeletes {
   private[graft] def morChangeFeed(s: SparkSession, dir: String,
       vFrom: Int, vTo: Int): DataFrame = {
     require(vFrom < vTo, s"need vFrom < vTo, got $vFrom >= $vTo")
-    val sep = java.io.File.separator
     val mF = Snapshots.manifest(dir, vFrom)
     val mT = Snapshots.manifest(dir, vTo)
     val dF = resolveDeletes(dir, vFrom)
@@ -235,7 +230,7 @@ object TxnDeletes {
       else Artifacts.parquet(s, dvAll.sorted: _*).select(col("nk")).distinct()
         .collect().map(_.getInt(0)).toSeq // bounded: ≤ |buckets|
     def bucketFiles(m: Seq[String]): Seq[String] =
-      m.filter(p => buckets.exists(nk => p.contains(s"${sep}nk=$nk$sep")))
+      m.filter(p => buckets.exists(Store.inBucket(p, _)))
     def side(files: Seq[String], dvs: Seq[String],
         alias: String): DataFrame = {
       val base =
@@ -419,10 +414,8 @@ object TxnDeletes {
       base.select(col("k"), col("nk").as("nkd"), col("bal"), col("nk"))
         .repartition(col("nk"))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        Snapshots.statsEntries(s, Store.bucketedLeafFiles(dir, "v1"))
-          .mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1,
+        Snapshots.statsEntries(s, Store.bucketedLeafFiles(dir, "v1")))
       def credit(cents: Long): DataFrame =
         base.filter(col("nk") % 7 === 3)
           .select(col("nk").cast("int").as("nk"), col("k"),

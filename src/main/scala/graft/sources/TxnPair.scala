@@ -38,22 +38,14 @@ import graft.util.Artifacts
 object TxnPair {
 
   /** Highest published transaction: max N with a `txn_N.txt`. */
-  private[graft] def txnHead(dir: String): Int =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .map(_.getName)
-      .collect { case n if n.startsWith("txn_") && n.endsWith(".txt") =>
-        n.stripPrefix("txn_").stripSuffix(".txt").toInt }
-      .foldLeft(0)(math.max)
+  private[graft] def txnHead(dir: String): Int = Store.head(dir, "txn_")
 
   /** The table→version pinning of transaction `n`. */
-  private[graft] def txnRead(dir: String, n: Int): Map[String, Int] = {
-    val src = scala.io.Source.fromFile(s"$dir/txn_$n.txt")
-    try src.getLines().filter(_.nonEmpty).map { l =>
+  private[graft] def txnRead(dir: String, n: Int): Map[String, Int] =
+    Store.readLines(s"$dir/txn_$n.txt").map { l =>
       val Array(t, v) = l.split('=')
       t -> v.toInt
     }.toMap
-    finally src.close()
-  }
 
   /** Atomically publish a transaction pinning `vers` (every member
     * table's manifest must already be durable — the caller's prepare
@@ -94,47 +86,15 @@ object TxnPair {
     val h0 = txnHead(dir)
     requireSupersedes(dir, vers, h0)
     var n = h0 + 1
-    while (true) {
-      val claim = new java.io.File(dir, s"txn_$n.txt.claim")
-      try {
-        java.nio.file.Files.createFile(claim.toPath)
-        val tmp = java.nio.file.Paths.get(s"$dir/txn_$n.tmp")
-        java.nio.file.Files.write(tmp,
-          vers.toSeq.sorted.map { case (t, v) => s"$t=$v" }
-            .mkString("\n").getBytes("UTF-8"))
-        java.nio.file.Files.move(tmp,
-          java.nio.file.Paths.get(s"$dir/txn_$n.txt"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        return n
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          val tf = new java.io.File(dir, s"txn_$n.txt")
-          val deadline = System.nanoTime() + claimWaitMs * 1000000L
-          while (!tf.exists() && System.nanoTime() < deadline)
-            Thread.sleep(2)
-          if (!tf.exists())
-            throw new Snapshots.CommitConflictException(
-              s"orphaned txn claim for slot $n (claimant died mid-" +
-                "publish); manual recovery: remove " + claim.getPath)
-          requireSupersedes(dir, vers, n)
-          n += 1
-      }
+    while (!Store.claimSlot(dir, "txn", n, claimWaitMs,
+        s"txn claim for slot $n (claimant died mid-publish)")(
+        Store.writeLinesAtomic(s"$dir/txn_$n.txt",
+          vers.toSeq.sorted.map { case (t, v) => s"$t=$v" }))) {
+      requireSupersedes(dir, vers, n)
+      n += 1
     }
-    throw new IllegalStateException("unreachable")
+    n
   }
-
-  private[graft] def writeManifest(tableDir: String, v: Int,
-      files: Seq[String]): Unit = {
-    new java.io.File(tableDir).mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$tableDir/manifest_$v.txt"),
-      files.mkString("\n").getBytes("UTF-8"))
-  }
-
-  private[graft] def leaves(sub: String): Seq[String] =
-    Option(new java.io.File(sub).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath)
-      .toSeq.sorted
 
   /** Read a member table at the CURRENT transaction head. */
   private[graft] def readAtHead(s: SparkSession, dir: String,
@@ -167,17 +127,18 @@ object TxnPair {
       "graft_txnpair") { dir =>
       val fact = factSlim(s, d)
       val f1 = fact.filter(col("sd") < Cut)
-      f1.write.mode("overwrite").parquet(s"$dir/A/v1")
-      writeManifest(s"$dir/A", 1, leaves(s"$dir/A/v1"))
-      rollup(f1).write.mode("overwrite").parquet(s"$dir/B/v1")
-      writeManifest(s"$dir/B", 1, leaves(s"$dir/B/v1"))
+      val (a, b) = (s"$dir/A", s"$dir/B")
+      f1.write.mode("overwrite").parquet(s"$a/v1")
+      Store.writeManifest(a, 1, Store.flatLeafFiles(a, "v1"))
+      rollup(f1).write.mode("overwrite").parquet(s"$b/v1")
+      Store.writeManifest(b, 1, Store.flatLeafFiles(b, "v1"))
       require(commitTxn(dir, Map("A" -> 1, "B" -> 1)) == 1)
       fact.filter(col("sd") >= Cut)
-        .write.mode("overwrite").parquet(s"$dir/A/v2delta")
-      writeManifest(s"$dir/A", 2,
-        leaves(s"$dir/A/v1") ++ leaves(s"$dir/A/v2delta"))
-      rollup(fact).write.mode("overwrite").parquet(s"$dir/B/v2")
-      writeManifest(s"$dir/B", 2, leaves(s"$dir/B/v2"))
+        .write.mode("overwrite").parquet(s"$a/v2delta")
+      Store.writeManifest(a, 2,
+        Store.flatLeafFiles(a, "v1") ++ Store.flatLeafFiles(a, "v2delta"))
+      rollup(fact).write.mode("overwrite").parquet(s"$b/v2")
+      Store.writeManifest(b, 2, Store.flatLeafFiles(b, "v2"))
       require(commitTxn(dir, Map("A" -> 2, "B" -> 2)) == 2)
     }
 

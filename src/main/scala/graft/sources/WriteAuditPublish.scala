@@ -57,10 +57,11 @@ object WriteAuditPublish {
   /** Stage → audit → publish-or-reject. The staged manifest lives at
     * `manifest_<n>.txt.audit.<tok>` (invisible: [[Snapshots.head]]
     * matches only `.txt`); publish takes the version slot with the
-    * occCommit O_EXCL claim FIRST (round-15 advice: a bare ATOMIC_MOVE
-    * onto `manifest_N.txt` is a silent POSIX rename replace — two
+    * [[Store.claimSlot]] O_EXCL claim FIRST (round-15 advice: a bare
+    * atomic rename onto `manifest_N.txt` is a silent POSIX replace — two
     * concurrent publishers picking the same N would lose one audited-
-    * green commit), then renames the stage in. A publisher that loses
+    * green commit), then publishes the audited lines by atomic rename.
+    * The stage is deleted when the attempt ends. A publisher that loses
     * the claim race waits for the winner's manifest and re-runs the
     * WHOLE stage+audit from the new head — the audit's row-conservation
     * premise is against the parent snapshot, so a moved head invalidates
@@ -74,61 +75,36 @@ object WriteAuditPublish {
       val h = Snapshots.head(dir)
       val parentRows = Artifacts.parquet(s, Snapshots.manifest(dir, h): _*).count()
       val n = h + 1
-      val stage = java.nio.file.Paths.get(
-        s"$dir/manifest_$n.txt.audit.${stageSeq.incrementAndGet()}")
-      java.nio.file.Files.write(stage,
-        files.sorted.mkString("\n").getBytes("UTF-8"))
-      val (dups, oob, delta) = audit(s, dir, files, parentRows)
-      val ok = dups == 0 && oob == 0 && delta == 0
-      auditLog.append(s"candidate $n: dups=$dups outOfDomain=$oob " +
-        s"rowDelta=$delta -> ${if (ok) "PUBLISH" else "REJECT"}\n")
-      if (!ok) {
-        // a rejected candidate's stage file is garbage NOW, not vacuum
-        // fodder later (round-16 advice: metadata orphans accumulated
-        // unbounded in long-lived stores)
-        java.nio.file.Files.deleteIfExists(stage)
-        return false
-      }
-      val claim = new java.io.File(dir, s"manifest_$n.txt.claim")
+      val candidate = files.sorted
+      val stage = s"$dir/manifest_$n.txt.audit.${stageSeq.incrementAndGet()}"
+      Store.writeLines(stage, candidate)
+      // the stage is garbage once this attempt ends, whatever the outcome
+      // (round-16 advice: metadata orphans accumulated unbounded in
+      // long-lived stores); a retry stages afresh
       try {
-        java.nio.file.Files.createFile(claim.toPath) // atomic test-and-set
-        // conflict metadata durable BEFORE the manifest is visible (the
-        // occCommit ordering discipline): a WAP version replaces exactly
-        // the parent files its candidate no longer lists, and recording
-        // that lets a later occCommit detect conflicts across WAP
-        // versions instead of failing on missing metadata
-        val candidate = files.toSet
-        val replaced = Snapshots.manifest(dir, h).filterNot(candidate)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$dir/replaced_$n.txt"),
-          replaced.sorted.mkString("\n").getBytes("UTF-8"))
-        java.nio.file.Files.move(stage,
-          java.nio.file.Paths.get(s"$dir/manifest_$n.txt"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        return true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          // lost the slot: drop our stage file (a fresh one is staged on
-          // retry), wait for the winner's publish (claims here are only
-          // ever taken by green candidates about to rename), then
-          // re-stage and RE-AUDIT against the new head
-          java.nio.file.Files.deleteIfExists(stage)
-          val mf = new java.io.File(dir, s"manifest_$n.txt")
-          val deadline = System.nanoTime() + claimWaitMs * 1000000L
-          while (!mf.exists() && System.nanoTime() < deadline)
-            Thread.sleep(2)
-          if (!mf.exists())
-            throw new Snapshots.CommitConflictException(
-              s"orphaned claim for version $n (claimant died mid-" +
-                "publish); manual recovery: remove " + claim.getPath)
-      }
+        val (dups, oob, delta) = audit(s, dir, files, parentRows)
+        val ok = dups == 0 && oob == 0 && delta == 0
+        auditLog.append(s"candidate $n: dups=$dups outOfDomain=$oob " +
+          s"rowDelta=$delta -> ${if (ok) "PUBLISH" else "REJECT"}\n")
+        if (!ok) return false
+        // a loser waits for the winner's publish (claims here are only
+        // ever taken by green candidates about to publish), then re-stages
+        // and RE-AUDITS against the new head
+        if (Store.claimSlot(dir, "manifest", n, claimWaitMs,
+            s"claim for version $n (claimant died mid-publish)") {
+          // conflict metadata durable BEFORE the manifest is visible (the
+          // occCommit ordering discipline): a WAP version replaces exactly
+          // the parent files its candidate no longer lists, and recording
+          // that lets a later occCommit detect conflicts across WAP
+          // versions instead of failing on missing metadata
+          Store.writeLines(s"$dir/replaced_$n.txt",
+            Snapshots.manifest(dir, h).filterNot(files.toSet).sorted)
+          Store.writeLinesAtomic(s"$dir/manifest_$n.txt", candidate)
+        }) return true
+      } finally java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(stage))
     }
     throw new IllegalStateException("unreachable")
-  }
-
-  private def nkFiles(m: Seq[String], nk: Int): Seq[String] = {
-    val sep = java.io.File.separator
-    m.filter(_.contains(s"${sep}nk=$nk$sep"))
   }
 
   /** Lands the WAP demo once per customer version: v1 base; a CLEAN
@@ -148,9 +124,7 @@ object WriteAuditPublish {
         .repartition(col("nk"))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
       val m1 = Store.bucketedLeafFiles(dir, "v1")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        m1.mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1, m1)
       val log = new StringBuilder
       // clean candidate: COW rewrite of the nation-5 bucket, +500
       base.filter(col("nk") === 5)
@@ -158,7 +132,7 @@ object WriteAuditPublish {
           (col("bal") + 500L).as("bal"), col("nk"))
         .repartition(col("nk"))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/clean")
-      val clean = (m1.filterNot(nkFiles(m1, 5).toSet) ++
+      val clean = (m1.filterNot(Store.inBucket(_, 5)) ++
         Store.bucketedLeafFiles(dir, "clean")).sorted
       require(auditedPublish(s, dir, clean, log),
         "clean candidate must publish")
@@ -173,13 +147,11 @@ object WriteAuditPublish {
         .repartition(col("nk"))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/dirty")
       val m2 = Snapshots.manifest(dir, 2)
-      val dirty = (m2.filterNot(nkFiles(m2, 8).toSet) ++
+      val dirty = (m2.filterNot(Store.inBucket(_, 8)) ++
         Store.bucketedLeafFiles(dir, "dirty")).sorted
       require(!auditedPublish(s, dir, dirty, log),
         "dirty candidate must be rejected")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/_audit_log.txt"),
-        log.toString.getBytes("UTF-8"))
+      Store.writeLines(s"$dir/_audit_log.txt", Seq(log.toString))
     }
 
   /** S27: the registered WAP read — the head snapshot (clean credit
@@ -194,10 +166,7 @@ object WriteAuditPublish {
       : DataFrame = {
     val dir = s27Dir(s, d)
     val h = Snapshots.head(dir)
-    val log = {
-      val src = scala.io.Source.fromFile(s"$dir/_audit_log.txt")
-      try src.mkString finally src.close()
-    }
+    val log = Store.readLines(s"$dir/_audit_log.txt").mkString("\n")
     Snapshots.readVersion(s, dir, h)
       .agg(count(lit(1)).as("n_rows"), sum(col("bal")).as("bal_cents"))
       .select(lit(h.toLong).as("n_published"), col("n_rows"),

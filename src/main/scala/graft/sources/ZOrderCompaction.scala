@@ -109,13 +109,12 @@ object ZOrderCompaction {
   private[graft] def zOrderCompactBucket(s: SparkSession, dir: String,
       nk: Int, tag: String, nFiles: Int, maxAttempts: Int = 10)
       : (Int, Int) = {
-    val sep = java.io.File.separator
     var attempt = 0
     while (true) {
       attempt += 1
       val h = Snapshots.head(dir)
       val bucket = Snapshots.manifest(dir, h)
-        .filter(_.contains(s"${sep}nk=$nk$sep")).toSet
+        .filter(Store.inBucket(_, nk)).toSet
       require(bucket.nonEmpty, s"no files for bucket nk=$nk at v$h")
       val df = Artifacts.parquet(s, bucket.toSeq.sorted: _*)
       val r = df.agg(min(col("k")), max(col("k")),
@@ -176,10 +175,8 @@ object ZOrderCompaction {
           round(col("c_acctbal") * 100).cast("long").as("bal"))
       base.repartition(NFiles, col("k"))
         .write.mode("overwrite").parquet(s"$dir/v1")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        SchemaStats.entries(s, Store.walkLeafFiles(dir, "v1"))
-          .mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1,
+        SchemaStats.entries(s, Store.walkLeafFiles(dir, "v1")))
       require(zOrderCompact(s, dir, "zo", NFiles)._1 == 2)
     }
 
@@ -236,10 +233,8 @@ object ZOrderCompaction {
           round(col("c_acctbal") * 100).cast("long").as("bal"))
       base.repartition(NFiles, col("k"))
         .write.mode("overwrite").parquet(s"$dir/v1")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_1.txt"),
-        SchemaStats.entries(s, Store.walkLeafFiles(dir, "v1"))
-          .mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(dir, 1,
+        SchemaStats.entries(s, Store.walkLeafFiles(dir, "v1")))
       val doomed = base.filter(col("nkd") % 7 === 5 && col("k") % 19 === 0)
         .select(col("k"), col("nkd").as("nk"))
       require(TxnDeletes.commitEqualityDelete(s, dir, doomed, "d") == 2)

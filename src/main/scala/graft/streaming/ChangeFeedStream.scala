@@ -54,12 +54,8 @@ object ChangeFeedStream {
     * per-version marker makes each append its own atomic test-and-set;
     * losing the create race means the version is already applied.
     */
-  private val AppliedRe = raw"applied_(\d+)\.txt".r
-
   private[graft] def applied(mvDir: String): Seq[Int] =
-    Option(new java.io.File(mvDir).listFiles()).getOrElse(Array.empty)
-      .map(_.getName)
-      .collect { case AppliedRe(v) => v.toInt }.toSeq.sorted
+    graft.sources.Store.versions(mvDir, "applied_")
 
   /** Append `v` to the ledger: O_EXCL marker create; an existing marker
     * (concurrent tailer won) is convergent — the landed state at

@@ -435,12 +435,9 @@ object EventStream {
     if (graft.sources.Snapshots.manifest(dir, h)
         .exists(_.contains(s"$sep$sub$sep"))) return // replay: committed
     if (batch.isEmpty) return
-    val out = new java.io.File(dir, sub)
-    batch.write.mode("overwrite").parquet(out.toString)
-    val added = Option(out.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath)
-      .toSeq.sorted
-    graft.sources.Snapshots.occCommit(dir, h, Set.empty, added)
+    batch.write.mode("overwrite").parquet(s"$dir/$sub")
+    graft.sources.Snapshots.occCommit(dir, h, Set.empty,
+      graft.sources.Store.flatLeafFiles(dir, sub))
     ()
   }
 
@@ -457,9 +454,7 @@ object EventStream {
   private[graft] def e27Dir(spark: SparkSession, dir: String): String =
     Artifacts.dir(Artifacts.key("txnsink", graft.Tables.path(dir, "events")),
         "graft_txnsink") { out =>
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$out/manifest_1.txt"),
-        Array.emptyByteArray)
+      graft.sources.Store.writeManifest(out, 1, Nil)
       val ckp = Artifacts.scratchDir("graft_txnsink_ckp").toString
       val prev = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions", "4")

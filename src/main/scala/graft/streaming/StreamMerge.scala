@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.{Q, Tables}
-import graft.sources.Snapshots
+import graft.sources.{Snapshots, Store}
 import graft.util.Artifacts
 
 /** E28: STREAMING CDC MERGE — the change-capture stream applied to the
@@ -74,12 +74,8 @@ object StreamMerge {
     * (Delta keeps txn actions alive the same way). Absent file = empty.
     */
   private[graft] def ledger(store: String): Set[String] = {
-    val f = new java.io.File(store, "_batches.txt")
-    if (!f.exists()) Set.empty
-    else {
-      val src = scala.io.Source.fromFile(f)
-      try src.getLines().filter(_.nonEmpty).toSet finally src.close()
-    }
+    val f = s"$store/_batches.txt"
+    if (new java.io.File(f).exists()) Store.readLines(f).toSet else Set.empty
   }
 
   /** Every batch marker with commit evidence: the ledger plus all
@@ -119,40 +115,23 @@ object StreamMerge {
     ()
   }
 
-  /** S31's retention job: expire every version below the head, DELETE
-    * the data files only they reference, drop their manifests — but
+  /** S31's retention job: expire every version below the head through
+    * [[Snapshots.expireVersions]] (the files only they reference, their
+    * manifests, the sidecars only the head no longer resolves to) — but
     * FIRST compact every committed batch marker into `_batches.txt`
     * (temp + atomic rename, durable before any delete), so the
     * exactly-once replay check stays sound after the manifests that
     * carried the evidence are gone. Crash anywhere mid-delete leaves
-    * extra files and a complete ledger — replays stay no-ops, re-running
-    * the vacuum converges. Returns (manifestsExpired, filesDeleted).
+    * extra files and a complete ledger — replays stay no-ops, and
+    * re-running the vacuum converges (versions already expired are
+    * skipped). Returns (manifestsExpired, filesDeleted) for this run.
     */
   private[graft] def ledgerVacuum(store: String): (Int, Int) = {
-    val h = Snapshots.head(store)
-    val batches = committedBatches(store)
-    val tmp = java.nio.file.Paths.get(s"$store/_batches.tmp")
-    java.nio.file.Files.write(tmp,
-      batches.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp,
-      java.nio.file.Paths.get(s"$store/_batches.txt"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val live = Snapshots.manifest(store, h).toSet
-    val expired = (1 until h).flatMap(v => Snapshots.manifest(store, v))
-      .toSet -- live
-    expired.foreach(f =>
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f)))
-    (1 until h).foreach { v =>
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(s"$store/manifest_$v.txt"))
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(s"$store/replaced_$v.txt"))
-    }
-    // sidecar retention (checked): only the head survives this vacuum,
-    // so its resolution target is the one sidecar per dialect to keep
-    Snapshots.retainSidecars(store, Set(h))
-    (h - 1, expired.size)
+    Store.writeLinesAtomic(s"$store/_batches.txt",
+      committedBatches(store).toSeq.sorted)
+    val (expired, deleted) =
+      Snapshots.expireVersions(store, Set(Snapshots.head(store)))
+    (expired.size, deleted)
   }
 
   /** The landed streaming-MERGE store, once per source version: v1 =
@@ -177,10 +156,7 @@ object StreamMerge {
       base.select(col("k"), col("nk").as("nkd"), col("bal"), col("nk"))
         .repartition(col("nk"))
         .write.mode("overwrite").partitionBy("nk").parquet(s"$out/v1")
-      val m1 = graft.sources.Store.walkLeafFiles(out, "v1")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$out/manifest_1.txt"),
-        m1.mkString("\n").getBytes("UTF-8"))
+      Store.writeManifest(out, 1, Store.walkLeafFiles(out, "v1"))
       val staged = stageOrders(spark, dir).toString
       val ckp = Artifacts.scratchDir("graft_smerge_ckp").toString
       val prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -241,9 +217,7 @@ object StreamMerge {
       "graft_smergevac") { out =>
       buildMergeStore(spark, dir, out)
       val (nExp, nDel) = ledgerVacuum(out)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$out/_vacuum_stats"),
-        s"$nExp|$nDel".getBytes("UTF-8"))
+      Store.writeLines(s"$out/_vacuum_stats", Seq(s"$nExp|$nDel"))
     }
 
   /** S31: LEDGER-PRESERVING VACUUM on the merge store (round-15 verdict
@@ -268,10 +242,8 @@ object StreamMerge {
   private def s31LedgerVacuum(s: SparkSession, d: String): DataFrame = {
     val dir = s31Dir(s, d)
     val h = Snapshots.head(dir)
-    val Array(nExp, nDel) = {
-      val src = scala.io.Source.fromFile(s"$dir/_vacuum_stats")
-      try src.mkString.trim.split('|').map(_.toLong) finally src.close()
-    }
+    val Array(nExp, nDel) =
+      Store.readLines(s"$dir/_vacuum_stats").head.split('|').map(_.toLong)
     Snapshots.readVersion(s, dir, h)
       .agg(count(lit(1)).as("n_rows"), sum(col("bal")).as("bal_cents"))
       .select(col("n_rows"), col("bal_cents"),

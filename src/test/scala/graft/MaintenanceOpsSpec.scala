@@ -258,6 +258,60 @@ class MaintenanceOpsSpec extends SparkSpec {
     assert(ex.getMessage.contains("orphaned claim"))
   }
 
+  // every other publisher takes the same slot claim: a claim left by a
+  // claimant that died before publishing must fail loudly, naming the
+  // claim, instead of hanging or silently taking the slot
+  private def assertOrphaned(dir: String, claim: String)(publish: => Any) = {
+    val ex = intercept[graft.sources.Snapshots.CommitConflictException](publish)
+    assert(ex.getMessage.contains("orphaned") &&
+      ex.getMessage.contains(new java.io.File(dir, claim).getPath), ex.getMessage)
+  }
+
+  test("s32: an orphaned mlist claim fails the tree publish, naming the claim") {
+    import graft.sources.{ManifestTree => MT, Store}
+    val dir = graft.util.Artifacts.scratchDir("graft_treeorphan").toString
+    Store.writeLines(s"$dir/mlist_1.txt", Seq(s"0|$dir/bm_nk0_v1.txt|1|5|5"))
+    java.nio.file.Files.createFile(
+      java.nio.file.Paths.get(s"$dir/mlist_2.txt.claim"))
+    assertOrphaned(dir, "mlist_2.txt.claim") {
+      MT.treeOccCommit(dir, 1, Seq(MT.BucketRef(0, s"$dir/bm_nk0_v2.txt",
+        1, 7, 7)), claimWaitMs = 200L)
+    }
+    assert(MT.treeHead(dir) === 1, "nothing may publish past the orphan")
+  }
+
+  test("s24: an orphaned txn claim fails the transaction publish, naming the claim") {
+    import graft.sources.TxnPair
+    val dir = graft.util.Artifacts.scratchDir("graft_txnorphan").toString
+    java.nio.file.Files.createFile(
+      java.nio.file.Paths.get(s"$dir/txn_1.txt.claim"))
+    assertOrphaned(dir, "txn_1.txt.claim") {
+      TxnPair.commitTxn(dir, Map("A" -> 1), claimWaitMs = 200L)
+    }
+    assert(TxnPair.txnHead(dir) === 0)
+  }
+
+  test("s27: an orphaned manifest claim fails the audited publish, naming the claim") {
+    import graft.sources.{Snapshots, Store, WriteAuditPublish => WAP}
+    import spark.implicits._
+    val dir = graft.util.Artifacts.scratchDir("graft_waporphan").toString
+    (0 until 8).map(k => (k.toLong, k.toLong * 10L)).toDF("k", "bal")
+      .write.mode("overwrite").parquet(s"$dir/v1")
+    val m1 = Store.flatLeafFiles(dir, "v1")
+    Store.writeManifest(dir, 1, m1)
+    java.nio.file.Files.createFile(
+      java.nio.file.Paths.get(s"$dir/manifest_2.txt.claim"))
+    val log = new StringBuilder
+    // a green candidate (same rows) reaches the claim
+    assertOrphaned(dir, "manifest_2.txt.claim") {
+      WAP.auditedPublish(spark, dir, m1, log, claimWaitMs = 200L)
+    }
+    assert(log.toString.contains("PUBLISH"), log.toString)
+    assert(Snapshots.head(dir) === 1)
+    assert(!new java.io.File(dir).list().exists(_.contains(".txt.audit.")),
+      "the failed attempt must not leave its stage file behind")
+  }
+
   test("s19: eight RACING disjoint writers all land exactly once through " +
       "rebase; overlapping racers serialize to exactly one winner") {
     import graft.sources.Snapshots
@@ -965,19 +1019,19 @@ class MaintenanceOpsSpec extends SparkSpec {
     val dir = graft.util.Artifacts.scratchDir("graft_txnpairspec").toString
     def land(sub: String, df: org.apache.spark.sql.DataFrame): Seq[String] = {
       df.write.mode("overwrite").parquet(s"$dir/$sub")
-      TxnPair.leaves(s"$dir/$sub")
+      graft.sources.Store.flatLeafFiles(dir, sub)
     }
     // txn 1: a consistent fact/MV pair
     val f1 = Seq(("a", 1L), ("a", 2L), ("b", 5L)).toDF("rf", "qty")
     val m1 = Seq(("a", 2L, 3L), ("b", 1L, 5L)).toDF("rf", "n_rows", "sum_qty")
-    TxnPair.writeManifest(s"$dir/A", 1, land("A/v1", f1))
-    TxnPair.writeManifest(s"$dir/B", 1, land("B/v1", m1))
+    graft.sources.Store.writeManifest(s"$dir/A", 1, land("A/v1", f1))
+    graft.sources.Store.writeManifest(s"$dir/B", 1, land("B/v1", m1))
     assert(TxnPair.commitTxn(dir, Map("A" -> 1, "B" -> 1)) === 1)
     // prepare txn 2 — the fact manifest lands, then the writer CRASHES
     // before the MV manifest (and the txn publish) are written
     val f2 = Seq(("a", 1L), ("a", 2L), ("b", 5L), ("b", 7L))
       .toDF("rf", "qty")
-    TxnPair.writeManifest(s"$dir/A", 2, land("A/v2", f2))
+    graft.sources.Store.writeManifest(s"$dir/A", 2, land("A/v2", f2))
     // readers are untorn: the txn head still pins the OLD pair — the new
     // fact manifest is invisible because no transaction names it
     assert(TxnPair.txnHead(dir) === 1)
@@ -989,7 +1043,7 @@ class MaintenanceOpsSpec extends SparkSpec {
     // in one atomic rename
     val m2 = Seq(("a", 2L, 3L), ("b", 2L, 12L))
       .toDF("rf", "n_rows", "sum_qty")
-    TxnPair.writeManifest(s"$dir/B", 2, land("B/v2", m2))
+    graft.sources.Store.writeManifest(s"$dir/B", 2, land("B/v2", m2))
     assert(TxnPair.commitTxn(dir, Map("A" -> 2, "B" -> 2)) === 2)
     assert(TxnPair.readAtHead(spark, dir, "A").count() === 4)
     val mv = TxnPair.readAtHead(spark, dir, "B")
@@ -1015,11 +1069,11 @@ class MaintenanceOpsSpec extends SparkSpec {
     val dir = graft.util.Artifacts.scratchDir("graft_txnstale").toString
     def land(sub: String, df: org.apache.spark.sql.DataFrame): Seq[String] = {
       df.write.mode("overwrite").parquet(s"$dir/$sub")
-      TxnPair.leaves(s"$dir/$sub")
+      graft.sources.Store.flatLeafFiles(dir, sub)
     }
     val t1 = Seq(("a", 1L)).toDF("rf", "qty")
-    TxnPair.writeManifest(s"$dir/A", 1, land("A/v1", t1))
-    TxnPair.writeManifest(s"$dir/A", 2, land("A/v2", t1))
+    graft.sources.Store.writeManifest(s"$dir/A", 1, land("A/v1", t1))
+    graft.sources.Store.writeManifest(s"$dir/A", 2, land("A/v2", t1))
     assert(TxnPair.commitTxn(dir, Map("A" -> 1)) === 1)
     // simulate losing the slot-2 claim race to a writer that pinned the
     // NEWER A->2: claim exists, winner's txn published
@@ -1034,7 +1088,7 @@ class MaintenanceOpsSpec extends SparkSpec {
     }
     assert(TxnPair.txnHead(dir) === 2, "stale commit must not publish")
     // a commit whose pins SUPERSEDE the winner's proceeds to slot 3
-    TxnPair.writeManifest(s"$dir/A", 3, land("A/v3", t1))
+    graft.sources.Store.writeManifest(s"$dir/A", 3, land("A/v3", t1))
     assert(TxnPair.commitTxn(dir, Map("A" -> 3)) === 3)
     assert(TxnPair.txnRead(dir, TxnPair.txnHead(dir)) === Map("A" -> 3))
   }
@@ -1446,6 +1500,41 @@ class MaintenanceOpsSpec extends SparkSpec {
     assert(Snapshots.readVersion(spark, dir, 5)
       .agg(count(lit(1)), sum(col("bal"))).first() === before,
       "replay after vacuum re-applied increments — ledger check broken")
+  }
+
+  test("s31: the ledger vacuum converges when re-run, and after a crash " +
+      "that had already removed one expired manifest") {
+    import graft.sources.Snapshots
+    import graft.streaming.StreamMerge
+    def store(): String = {
+      val out = graft.util.Artifacts.scratchDir("graft_ledgerrerun").toString
+      StreamMerge.buildMergeStore(spark, Sf0001, out)
+      out
+    }
+    def headAgg(dir: String) = Snapshots.readVersion(spark, dir,
+      Snapshots.head(dir)).agg(count(lit(1)), sum(col("bal"))).first()
+    def ledgerBytes(dir: String) = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dir/_batches.txt")).toSeq
+    // a second run over an already-vacuumed store
+    val a = store()
+    val want = headAgg(a)
+    assert(StreamMerge.ledgerVacuum(a)._1 === 4)
+    val ledger = ledgerBytes(a)
+    assert(StreamMerge.ledgerVacuum(a) === ((0, 0)),
+      "a re-run has nothing left to expire")
+    assert(ledgerBytes(a) === ledger, "a re-run must not change the ledger")
+    assert(Snapshots.head(a) === 5 && headAgg(a) === want)
+    // a run whose predecessor crashed after deleting manifest_1 only
+    val b = store()
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$b/manifest_1.txt"))
+    assert(StreamMerge.ledgerVacuum(b)._1 === 3)
+    assert(ledgerBytes(b) === ledger,
+      "the ledger must carry the same four batches")
+    assert(Snapshots.head(b) === 5 && headAgg(b) === want)
+    (1 until 5).foreach(v => assert(
+      !new java.io.File(s"$b/manifest_$v.txt").exists() &&
+        !new java.io.File(s"$b/replaced_$v.txt").exists(),
+      s"version $v must be expired"))
   }
 
   test("mv3: the incremental refresh equals the full head recompute " +
