@@ -173,9 +173,15 @@ object RangeBinRule extends Rule[LogicalPlan] with PredicateHelper {
   * registry path (`KernelRegistry.ensure`) stays as the fallback for
   * sessions built without the extension, and its lookup-before-create makes
   * the two paths compose (the injected entry short-circuits the ensure).
+  * It also binds `file://` to the fork-free [[graft.util.LocalFs]] classes
+  * on the context's Hadoop conf: extensions are applied after the
+  * SparkContext starts and before the session's shared state caches a
+  * FileSystem, so the first cached `file://` FileSystem is the new one.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    graft.util.LocalFs.install(
+      org.apache.spark.SparkContext.getOrCreate().hadoopConfiguration)
     ext.injectOptimizerRule(_ => RangeBinRule)
     val kernels = graft.functions.VecOps.kernels ++
       graft.functions.TextKernelFns.kernels

@@ -16,6 +16,7 @@ object ParityRun {
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
       .config("spark.sql.shuffle.partitions", "16")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
