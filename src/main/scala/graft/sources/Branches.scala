@@ -75,12 +75,9 @@ object Branches {
   private[graft] def s35Dir(s: SparkSession, d: String): String =
     Artifacts.dir(Artifacts.key("snapbranch", Tables.path(d, "customer")),
       "graft_snapbranch") { dir =>
-      val base = Tables.customer(s, d)
-        .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),
-          round(col("c_acctbal") * 100).cast("long").as("bal"))
-      base.repartition(col("nk"))
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      Store.writeManifest(dir, 1, Store.bucketedLeafFiles(dir, "v1"))
+      val base = Snapshots.customerBase(s, d)
+      Store.writeManifest(dir, 1,
+        Store.stageBuckets(base.repartition(col("nk")), dir, "v1"))
       moveRef(dir, "main", 1)
       val log = new StringBuilder
       // branch etl: two staged commits, main pinned at 1 throughout

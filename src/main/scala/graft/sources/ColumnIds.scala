@@ -126,11 +126,8 @@ object ColumnIds {
     * pre-drop manifests expire, no reference to the bytes remains.
     */
   private[graft] def reclaimDroppedColumns(s: SparkSession, dir: String,
-      tag: String, maxAttempts: Int = 10): (Int, Int) = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val h = Snapshots.head(dir)
+      tag: String): (Int, Int) =
+    Snapshots.retryOnConflict(Snapshots.head(dir)) { (h, attempt) =>
       val mapped = resolveColmap(dir, h).map(c => s"c${c._1}").toSet
       val files = Snapshots.manifest(dir, h)
       val raw = s.read.option("mergeSchema", "true")
@@ -151,15 +148,9 @@ object ColumnIds {
         .select(keep: _*)
         .coalesce(2)
         .write.mode("overwrite").parquet(s"$dir/$sub")
-      try return (Snapshots.occCommit(dir, h, replaced,
-        Store.flatLeafFiles(dir, sub))._1, attempt)
-      catch {
-        case e: Snapshots.CommitConflictException =>
-          if (attempt >= maxAttempts) throw e
-      }
+      Snapshots.occCommit(dir, h, replaced,
+        Store.flatLeafFiles(dir, sub))._1
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Lands the rename demo once per customer version:
     *  v1 = the base written under PHYSICAL ids (c1=key, c2=nation,
@@ -177,24 +168,22 @@ object ColumnIds {
         .select(col("c_custkey").as("c1"),
           col("c_nationkey").as("c2"),
           round(col("c_acctbal") * 100).cast("long").as("c3"))
-      base.withColumn("nk", col("c2"))
-        .repartition(col("nk"))
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
+      val m1 = Store.stageBuckets(
+        base.withColumn("nk", col("c2")).repartition(col("nk")), dir, "v1")
       writeColmap(dir, 1,
         Seq((1, "k", "bigint"), (2, "nkd", "bigint"), (3, "bal", "bigint")))
-      Store.writeManifest(dir, 1, Store.bucketedLeafFiles(dir, "v1"))
+      Store.writeManifest(dir, 1, m1)
       require(commitColmap(dir, renameCol(3, "balance")) == 2,
         "the rename must land as v2")
       // post-rename write: physical ids, logical names irrelevant
       val replaced = Snapshots.manifest(dir, 2)
         .filter(Store.inBucket(_, 2)).toSet
-      Artifacts.parquet(s, replaced.toSeq.sorted: _*)
-        .withColumn("c3", col("c3") + lit(100L))
-        .withColumn("nk", col("c2"))
-        .repartition(col("nk"))
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/w3")
-      require(Snapshots.occCommit(dir, 2, replaced,
-        Store.bucketedLeafFiles(dir, "w3"))._1 == 3)
+      val added = Store.stageBuckets(
+        Artifacts.parquet(s, replaced.toSeq.sorted: _*)
+          .withColumn("c3", col("c3") + lit(100L))
+          .withColumn("nk", col("c2"))
+          .repartition(col("nk")), dir, "w3")
+      require(Snapshots.occCommit(dir, 2, replaced, added)._1 == 3)
     }
 
   /** S40: the registered read — the head through the renamed schema and

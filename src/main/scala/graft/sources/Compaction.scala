@@ -52,15 +52,31 @@ object Compaction {
     }
 
   /** Compact `inDir` to ~`targetBytes`-sized files; returns the output
-    * dir. File count = ceil(actual bytes / target), floor 1.
+    * dir. File count = ceil(actual bytes / target), floor 1. The input
+    * is read as its parquet files in NAME order (the writing job's task
+    * order), not as a directory: Spark packs equal-length splits in
+    * listing order, and a directory's listing order changes with each
+    * write's random part-file names — so a directory read made the
+    * output's row order, and with it the compressed bytes, differ
+    * between two landings of the same table.
     */
   def compact(s: SparkSession, inDir: String, outDir: String,
       targetBytes: Long): Unit = {
     require(targetBytes > 0, "targetBytes must be positive")
-    val bytes = parquetFiles(inDir).map(_.length()).sum
+    val files = parquetFiles(inDir)
+    val bytes = files.map(_.length()).sum
     val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    Artifacts.parquet(s, inDir).repartition(n)
-      .write.mode("overwrite").parquet(outDir)
+    // Past Spark's parallel-listing threshold (32 paths) each explicit-
+    // path read would run a listing JOB per file index; these paths are
+    // already listed, so they are indexed serially, as the one directory
+    // path they replace was.
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val threshold = s.conf.get(key)
+    s.conf.set(key, math.max(files.length, 1).toString)
+    val in =
+      try Artifacts.parquet(s, files.map(_.getPath).sorted.toSeq: _*)
+      finally s.conf.set(key, threshold)
+    in.repartition(n).write.mode("overwrite").parquet(outDir)
   }
 
   private def s13Compaction(s: SparkSession, d: String): DataFrame = {

@@ -41,14 +41,9 @@ object DeletionVectors {
     * (broadcast anti-join — the DV-apply plan shape).
     */
   private[graft] def readMergeOnRead(s: SparkSession, dir: String,
-      v: Int): DataFrame = {
-    val data = Artifacts.parquet(s, Snapshots.manifest(dir, v): _*)
-    val dvs = deletesOf(dir, v)
-    if (dvs.isEmpty) data
-    else data.join(
-      broadcast(Artifacts.parquet(s, dvs: _*).select(col("k"))),
-      Seq("k"), "left_anti")
-  }
+      v: Int): DataFrame =
+    TxnDeletes.withoutDeleted(s,
+      Artifacts.parquet(s, Snapshots.manifest(dir, v): _*), deletesOf(dir, v))
 
   /** Lands the DV store once per customer version:
     *  v1 = the nation-bucketed base (nkd data column — the s20 lesson);
@@ -60,13 +55,8 @@ object DeletionVectors {
   private[graft] def s25Dir(s: SparkSession, d: String): String =
     Artifacts.dir(Artifacts.key("dvstore", Tables.path(d, "customer")),
       "graft_dvstore") { dir =>
-      val base = Tables.customer(s, d)
-        .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),
-          round(col("c_acctbal") * 100).cast("long").as("bal"))
-      base.select(col("k"), col("nk").as("nkd"), col("bal"), col("nk"))
-        .repartition(col("nk"))
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      val m1 = Store.bucketedLeafFiles(dir, "v1")
+      val base = Snapshots.customerBase(s, d)
+      val m1 = Snapshots.stageNkdBase(base, dir)
       Store.writeManifest(dir, 1, m1)
       val doomed = base.filter(col("nk") % 5 === 4 && col("k") % 13 === 0)
       // v2: the delete file — data manifest UNCHANGED
@@ -78,15 +68,14 @@ object DeletionVectors {
       val touched = doomed.select(col("nk").cast("int")).distinct()
         .collect().map(_.getInt(0)).toSeq.sorted
       val replaced = m1.filter(p => touched.exists(Store.inBucket(p, _)))
-      if (replaced.nonEmpty) {
-        Artifacts.parquet(s, replaced: _*)
-          .join(broadcast(doomed.select(col("k"))), Seq("k"), "left_anti")
-          .select(col("k"), col("nkd"), col("bal"), col("nkd").as("nk"))
-          .repartition(col("nk"))
-          .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/purge3")
-      }
-      Store.writeManifest(dir, 3, (m1.filterNot(replaced.toSet) ++
-        Store.bucketedLeafFiles(dir, "purge3")).sorted)
+      val purged =
+        if (replaced.isEmpty) Nil
+        else Store.stageBuckets(Snapshots.asBuckets(
+          Artifacts.parquet(s, replaced: _*)
+            .join(broadcast(doomed.select(col("k"))), Seq("k"), "left_anti"))
+          .repartition(col("nk")), dir, "purge3")
+      Store.writeManifest(dir, 3,
+        (m1.filterNot(replaced.toSet) ++ purged).sorted)
     }
 
   /** S25: the registered read — the post-delete aggregate served MERGE

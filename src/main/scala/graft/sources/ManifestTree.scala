@@ -56,118 +56,71 @@ object ManifestTree {
   private[graft] def bucketFiles(bm: String): Seq[String] =
     Store.readLines(bm).map(Snapshots.pathOf)
 
+  /** The tree's version family: `mlist_<V>.txt` lists, conflict
+    * metadata `treplaced_<V>.txt` keyed by BUCKET — one granularity
+    * coarser than the flat manifests' file sets (a tree commit swaps
+    * whole bucket manifests, so bucket identity IS the conflict unit).
+    * A bucket rewrite commits by writing the bucket's new manifest
+    * `bm_nk<k>_<sub>.txt` and swapping its ref into the list.
+    */
+  private[graft] object Tree
+      extends Snapshots.Family("mlist", "treplaced_", "bucket") {
+    def bucketFiles(dir: String, v: Int, nk: Int): Seq[String] =
+      mlist(dir, v).find(_.nk == nk).toSeq
+        .flatMap(r => ManifestTree.bucketFiles(r.bm))
+
+    def commitBucket(dir: String, h: Int, nk: Int, files: Seq[String],
+        entries: Seq[String], sub: String): Int = {
+      val bm = s"$dir/bm_nk${nk}_$sub.txt"
+      Store.writeLines(bm, entries)
+      treeOccCommit(dir, h, Seq(bucketRef(nk, bm, entries)))._1
+    }
+  }
+
   /** Highest committed tree version: max N with a published mlist_N. */
-  private[graft] def treeHead(dir: String): Int = Store.head(dir, "mlist_")
+  private[graft] def treeHead(dir: String): Int = Tree.head(dir)
 
   /** BUCKETS tree version `v` replaced relative to its parent — the
-    * tree's conflict-detection metadata, one granularity coarser than
-    * occCommit's file sets (a tree commit swaps whole bucket manifests,
-    * so bucket identity IS the conflict unit).
+    * tree's conflict-detection metadata.
     */
-  private[graft] def treeReplacedOf(dir: String, v: Int): Set[Int] = {
-    val f = s"$dir/treplaced_$v.txt"
-    if (new java.io.File(f).exists()) Store.readLines(f).map(_.toInt).toSet
-    else Set.empty
-  }
+  private[graft] def treeReplacedOf(dir: String, v: Int): Set[Int] =
+    Tree.replacedOf(dir, v).map(_.toInt)
 
   /** OCC commit on the manifest TREE (round-16 verdict #4: the list
     * publish previously bypassed the claim discipline — single-writer
-    * only). The [[Snapshots.occCommit]] protocol at bucket granularity:
-    *
-    *  - conflict check over the intervening versions' replaced-BUCKET
-    *    sets (missing metadata = conflict, the fail-on-expired-base
-    *    rule); disjoint buckets REBASE — the new list is the CURRENT
-    *    head's with our touched refs swapped in, every untouched
-    *    bucket's manifest file reused verbatim (line-identical, the
-    *    O(touched) commit-metadata contract);
-    *  - the slot is claimed with an O_EXCL `mlist_N.txt.claim`;
-    *    `treplaced_N.txt` is durable before the list's atomic rename;
-    *  - a loser of the claim race waits for the winner's list and
-    *    retries the whole check from the new head.
-    *
-    * New buckets (nk absent from the head's list) append. Returns
-    * (committedVersion, claimRetries).
+    * only): [[Snapshots.publish]] on the [[Tree]] family. Disjoint
+    * buckets REBASE — the new list is the CURRENT head's with our
+    * touched refs swapped in, every untouched bucket's manifest file
+    * reused verbatim (line-identical, the O(touched) commit-metadata
+    * contract); new buckets (nk absent from the head's list) append.
+    * Returns (committedVersion, claimRetries).
     */
   private[graft] def treeOccCommit(dir: String, readV: Int,
       newRefs: Seq[BucketRef], claimWaitMs: Long = 10000L): (Int, Int) = {
     val touched = newRefs.map(_.nk).toSet
-    val byNk = newRefs.map(r => r.nk -> r).toMap
-    var retries = 0
-    while (true) {
-      val h = treeHead(dir)
-      if (!new java.io.File(dir, s"mlist_$readV.txt").exists())
-        throw new Snapshots.CommitConflictException(
-          s"stale base: tree snapshot v$readV expired")
-      val metaGone = ((readV + 1) to h).filter(v =>
-        !new java.io.File(dir, s"treplaced_$v.txt").exists())
-      if (metaGone.nonEmpty)
-        throw new Snapshots.CommitConflictException(
-          s"stale base: tree conflict metadata expired for " +
-            s"version(s) ${metaGone.mkString(",")}")
-      val concurrent =
-        ((readV + 1) to h).flatMap(treeReplacedOf(dir, _)).toSet
-      val overlap = concurrent.intersect(touched)
-      if (overlap.nonEmpty)
-        throw new Snapshots.CommitConflictException(
-          s"concurrent tree commit rewrote bucket(s) ${overlap.mkString(",")}" +
-            s" this commit also touches (read v$readV, head v$h)")
-      val n = h + 1
-      val published = Store.claimSlot(dir, "mlist", n, claimWaitMs,
-          s"tree claim for version $n") {
-        Store.writeLines(s"$dir/treplaced_$n.txt",
-          touched.toSeq.sorted.map(_.toString))
-        val rebased = (mlist(dir, h).filterNot(r => touched(r.nk)) ++
-          newRefs).sortBy(_.nk)
-        Store.writeLinesAtomic(s"$dir/mlist_$n.txt", rebased.map(listLine))
-      }
-      if (published) return (n, retries)
-      retries += 1
-    }
-    throw new IllegalStateException("unreachable")
+    Snapshots.publish(Tree, dir, readV, touched.toSeq.sorted.map(_.toString),
+      claimWaitMs, _ => ())(h =>
+      (mlist(dir, h).filterNot(r => touched(r.nk)) ++ newRefs)
+        .sortBy(_.nk).map(listLine))
   }
 
   /** Tree-resolved bucket rewrite (the tree-level cowMerge): credit one
-    * bucket's rows, publish through [[treeOccCommit]] with the standard
-    * conflict-retry. Returns (version, attempts).
+    * bucket's rows through [[Snapshots.rewriteBucket]] on the [[Tree]]
+    * family. Returns (version, attempts).
     */
   private[graft] def treeCredit(s: SparkSession, dir: String, nk: Int,
-      cents: Long, tag: String, maxAttempts: Int = 10): (Int, Int) =
-    treeRewrite(s, dir, nk, tag, maxAttempts)(df =>
-      df.withColumn("bal", col("bal") + lit(cents)))
+      cents: Long, tag: String): (Int, Int) =
+    Snapshots.rewriteBucket(s, dir, nk, (h, a) => s"$tag${h}a$a", Tree)(df =>
+      Snapshots.asBuckets(df.withColumn("bal", col("bal") + lit(cents)))
+        .repartition(col("nk")))
 
   /** Tree-resolved bucket compaction (the tree-level compactBucket):
     * rewrite the bucket's files as one, content unchanged.
     */
   private[graft] def treeCompactBucket(s: SparkSession, dir: String,
-      nk: Int, tag: String, maxAttempts: Int = 10): (Int, Int) =
-    treeRewrite(s, dir, nk, tag, maxAttempts, coalesce1 = true)(identity)
-
-  private def treeRewrite(s: SparkSession, dir: String, nk: Int,
-      tag: String, maxAttempts: Int, coalesce1: Boolean = false)(
-      xform: DataFrame => DataFrame): (Int, Int) = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val h = treeHead(dir)
-      val ref = mlist(dir, h).find(_.nk == nk).getOrElse(
-        throw new IllegalArgumentException(s"no bucket nk=$nk at tree v$h"))
-      val sub = s"$tag${h}a$attempt"
-      val base = xform(Artifacts.parquet(s, bucketFiles(ref.bm).sorted: _*))
-        .select(col("k"), col("nkd"), col("bal"), col("nkd").as("nk"))
-      (if (coalesce1) base.coalesce(1) else base.repartition(col("nk")))
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/$sub")
-      val entries = Snapshots.statsEntries(s, Store.bucketedLeafFiles(dir, sub))
-      val bm = s"$dir/bm_nk${nk}_$sub.txt"
-      Store.writeLines(bm, entries)
-      try return (treeOccCommit(dir, h,
-        Seq(bucketRef(nk, bm, entries)))._1, attempt)
-      catch {
-        case e: Snapshots.CommitConflictException =>
-          if (attempt >= maxAttempts) throw e
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+      nk: Int, tag: String): (Int, Int) =
+    Snapshots.rewriteBucket(s, dir, nk, (h, a) => s"$tag${h}a$a", Tree)(
+      Snapshots.asBuckets(_).coalesce(1))
 
   /** Bucket-level stats roll up from the bucket's file entries: row
     * count plus the value column's [lo, hi] — so a VALUE predicate can
@@ -197,13 +150,8 @@ object ManifestTree {
   private[graft] def s32Dir(s: SparkSession, d: String): String =
     Artifacts.dir(Artifacts.key("mtree2", Tables.path(d, "customer")),
       "graft_mtree") { dir =>
-      val base = Tables.customer(s, d)
-        .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),
-          round(col("c_acctbal") * 100).cast("long").as("bal"))
-      base.select(col("k"), col("nk").as("nkd"), col("bal"), col("nk"))
-        .repartition(col("nk"))
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      val v1ByBucket = byBucket(Snapshots.statsEntries(s, Store.bucketedLeafFiles(dir, "v1")))
+      val v1ByBucket = byBucket(Snapshots.statsEntries(s,
+        Snapshots.stageNkdBase(Snapshots.customerBase(s, d), dir)))
       val refs1 = v1ByBucket.toSeq.sortBy(_._1).map { case (nk, entries) =>
         val bm = s"$dir/bm_nk${nk}_v1.txt"
         Store.writeLines(bm, entries)
@@ -219,12 +167,10 @@ object ManifestTree {
       val inputFiles = touchedRefs.flatMap(r => bucketFiles(r.bm))
       Store.writeLines(s"$dir/_merge_bm_fetched",
         Seq(touchedRefs.size.toString))
-      Artifacts.parquet(s, inputFiles.sorted: _*)
-        .withColumn("bal", col("bal") + lit(CreditCents))
-        .select(col("k"), col("nkd"), col("bal"), col("nkd").as("nk"))
-        .repartition(col("nk"))
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/m2")
-      val v2ByBucket = byBucket(Snapshots.statsEntries(s, Store.bucketedLeafFiles(dir, "m2")))
+      val v2ByBucket = byBucket(Snapshots.statsEntries(s, Store.stageBuckets(
+        Snapshots.asBuckets(Artifacts.parquet(s, inputFiles.sorted: _*)
+          .withColumn("bal", col("bal") + lit(CreditCents)))
+          .repartition(col("nk")), dir, "m2")))
       // the v2 publish goes through the tree's OCC claim discipline
       // (round-16 verdict #4): only the TOUCHED buckets' refs ride the
       // commit; untouched refs rebase verbatim inside treeOccCommit

@@ -121,14 +121,9 @@ object SchemaStats {
     Artifacts.dir(Artifacts.key("genstats",
         Seq("customer", "orders").map(Tables.path(d, _))),
       "graft_genstats") { dir =>
-      val base = Tables.customer(s, d)
-        .select(col("c_custkey").as("k"), col("c_nationkey").as("nkd"),
-          round(col("c_acctbal") * 100).cast("long").as("bal"))
-      base.filter(col("nkd") < 12)
-        .withColumn("nk", col("nkd"))
-        .repartition(col("nk"))
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      val m1 = entries(s, Store.walkLeafFiles(dir, "v1"))
+      val base = Snapshots.customerBase(s, d, "nkd")
+      val m1 = entries(s, Store.stageBuckets(base.filter(col("nkd") < 12)
+        .withColumn("nk", col("nkd")).repartition(col("nk")), dir, "v1"))
       Store.writeManifest(dir, 1, m1)
       val ordc = Tables.orders(s, d)
         .groupBy(col("o_custkey").as("k"))

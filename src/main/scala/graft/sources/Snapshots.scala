@@ -39,6 +39,31 @@ object Snapshots {
 
   private def balCents = round(col("c_acctbal") * 100).cast("long")
 
+  /** The customer frame every demo store starts from: (k, the nation
+    * under the name `nation`, bal = balance cents).
+    */
+  private[graft] def customerBase(s: SparkSession, d: String,
+      nation: String = "nk"): DataFrame =
+    Tables.customer(s, d)
+      .select(col("c_custkey").as("k"), col("c_nationkey").as(nation),
+        balCents.as("bal"))
+
+  /** Stages `base` (k, nk, bal) as the v1 buckets of a store whose data
+    * files carry the bucket key as the DATA column `nkd` (explicit
+    * leaf-file reads lose `partitionBy` columns — the s20 lesson).
+    */
+  private[graft] def stageNkdBase(base: DataFrame,
+      dir: String): Seq[String] =
+    Store.stageBuckets(
+      base.select(col("k"), col("nk").as("nkd"), col("bal"), col("nk"))
+        .repartition(col("nk")), dir, "v1")
+
+  /** (k, nkd, bal) plus the bucket column `nk` = `nkd`: the frame a
+    * rewrite of an nkd-carrying store hands to [[Store.stageBuckets]].
+    */
+  private[graft] def asBuckets(df: DataFrame): DataFrame =
+    df.select(col("k"), col("nkd"), col("bal"), col("nkd").as("nk"))
+
   /** Lands the versioned table once per source version: v1 data files
     * (bucketed by nation), the v2 copy-on-write commit (nation-3 files
     * rewritten), and the two manifests.
@@ -48,20 +73,14 @@ object Snapshots {
     */
   private[graft] def buildVersioned(s: SparkSession, d: String,
       dir: String): Unit = {
-    val base = Tables.customer(s, d)
-      .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),
-        balCents.as("bal"))
-    base.repartition(col("nk"))
-      .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
+    val base = customerBase(s, d)
+    val m1 = Store.stageBuckets(base.repartition(col("nk")), dir, "v1")
     // v2 COW commit: rewrite ONLY the nation-3 bucket with the credit
-    base.filter(col("nk") === 3)
+    val delta = Store.stageBuckets(base.filter(col("nk") === 3)
       .withColumn("bal", col("bal") + lit(1000L))
-      .repartition(col("nk"))
-      .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v2delta")
-    val m1 = Store.bucketedLeafFiles(dir, "v1")
+      .repartition(col("nk")), dir, "v2delta")
     Store.writeManifest(dir, 1, m1)
-    Store.writeManifest(dir, 2, m1.filterNot(Store.inBucket(_, 3)) ++
-      Store.bucketedLeafFiles(dir, "v2delta"))
+    Store.writeManifest(dir, 2, m1.filterNot(Store.inBucket(_, 3)) ++ delta)
   }
 
   private[graft] def s16Dir(s: SparkSession, d: String): String =
@@ -222,40 +241,90 @@ object Snapshots {
   final class CommitConflictException(msg: String)
     extends RuntimeException(msg)
 
+  /** A version family an OCC [[publish]] advances: `<list>_<v>.txt` is
+    * the version's commit point (published by atomic rename under the
+    * slot-v claim), `<replaced><v>.txt` its conflict metadata — one
+    * `unit` per line, the keys the version replaced relative to its
+    * parent. Version 1 (the base) and pre-OCC versions have none. A
+    * family also says how [[rewriteBucket]] finds a bucket's files and
+    * commits their replacement.
+    */
+  private[graft] abstract class Family(val list: String,
+      val replaced: String, val unit: String) {
+    /** Highest committed version (0 = none): the metastore-head fetch. */
+    def head(dir: String): Int = Store.head(dir, s"${list}_")
+
+    def replacedOf(dir: String, v: Int): Set[String] = {
+      val f = s"$dir/$replaced$v.txt"
+      if (new java.io.File(f).exists()) Store.readLines(f).toSet
+      else Set.empty
+    }
+
+    /** Data files of bucket `nk` at version `v`. */
+    def bucketFiles(dir: String, v: Int, nk: Int): Seq[String]
+
+    /** Commit `entries` (bucket `nk` rewritten into staging dir `sub`)
+      * over version `h`, replacing the bucket's `files`; the version.
+      */
+    def commitBucket(dir: String, h: Int, nk: Int, files: Seq[String],
+        entries: Seq[String], sub: String): Int
+  }
+
+  /** The flat manifests, keyed by data-file path (Iceberg's snapshot
+    * summary / Delta's remove actions).
+    */
+  private[graft] object Manifests
+      extends Family("manifest", "replaced_", "file") {
+    def bucketFiles(dir: String, v: Int, nk: Int): Seq[String] =
+      manifest(dir, v).filter(Store.inBucket(_, nk))
+
+    def commitBucket(dir: String, h: Int, nk: Int, files: Seq[String],
+        entries: Seq[String], sub: String): Int =
+      occCommit(dir, h, files.toSet, entries)._1
+  }
+
   /** Highest committed version: max N with a published `manifest_N.txt`.
     * A driver-side directory listing — the metastore-head fetch.
     */
-  private[graft] def head(dir: String): Int = Store.head(dir, "manifest_")
+  private[graft] def head(dir: String): Int = Manifests.head(dir)
 
   /** Files commit `v` REPLACED relative to its parent — the conflict-
-    * detection metadata every OCC table format records per snapshot
-    * (Iceberg's snapshot summary / Delta's remove actions). Version 1
-    * (the base) and pre-OCC manifests have none.
+    * detection metadata every OCC table format records per snapshot.
     */
-  private[graft] def replacedOf(dir: String, v: Int): Set[String] = {
-    val f = s"$dir/replaced_$v.txt"
-    if (new java.io.File(f).exists()) Store.readLines(f).toSet else Set.empty
-  }
+  private[graft] def replacedOf(dir: String, v: Int): Set[String] =
+    Manifests.replacedOf(dir, v)
 
-  /** Optimistic-concurrency commit (the Iceberg/Delta protocol): the
-    * writer prepared `added` files against the snapshot it READ
-    * (`readV`); publication re-reads the head, and
+  /** THE OCC publish (the Iceberg/Delta protocol), for every [[Family]]:
+    * the writer prepared a version against the one it READ (`readV`),
+    * replacing the keys `replaced` (on-disk order); publication re-reads
+    * the head, and
     *
-    *  - a concurrent advance whose replaced files are DISJOINT from ours
-    *    REBASES: the new manifest is recomputed from the CURRENT head
-    *    (keeping the other writer's files) — both updates land;
-    *  - an overlap at FILE granularity throws [[CommitConflictException]]
-    *    — our base rows were rewritten under us, a rebase would silently
-    *    drop the other writer's update (lost update);
-    *  - the version slot itself is claimed through [[Store.claimSlot]]
-    *    (an O_EXCL `manifest_N.txt.claim`). A loser of the claim race
-    *    waits for the winner's manifest to publish, then retries from
-    *    the new head.
+    *  - fail-on-expired-base (Iceberg semantics): retention may have
+    *    deleted the base list or an intervening version's replaced
+    *    metadata; treating missing metadata as no-conflict would let a
+    *    stale writer rebase past rewrites it cannot see — a silent lost
+    *    update. Missing metadata IS a conflict;
+    *  - a concurrent advance whose replaced keys are DISJOINT from ours
+    *    REBASES: `rebase(h)` recomputes the new list from the CURRENT
+    *    head `h` (keeping the other writer's entries) — both updates
+    *    land;
+    *  - an overlap throws [[CommitConflictException]] — our base rows
+    *    were rewritten under us, a rebase would silently drop the other
+    *    writer's update (lost update);
+    *  - the version slot itself is claimed through [[Store.claimSlot]].
+    *    A loser of the claim race waits for the winner's list to
+    *    publish, then retries from the new head.
     *
-    * Readers are never torn: they key on `manifest_N.txt`, which appears
+    * Readers are never torn: they key on `<list>_N.txt`, which appears
     * only via an atomic rename of a fully-written temp file, AFTER
-    * `replaced_N.txt` is durable (so conflict metadata is never missing
-    * for a visible version). Returns (committedVersion, claimRetries).
+    * `<replaced>N.txt` is durable (so conflict metadata is never missing
+    * for a visible version). `beforePublish(n)` runs while HOLDING the
+    * slot-n claim, after the replaced metadata is durable and before the
+    * list's rename — the hook for version-addressed sidecars (delete
+    * files, colmaps) that must never be missing for a visible version.
+    * It must be idempotent; a crash between it and the rename orphans
+    * the claim (same recovery path as any mid-publish death). Returns
+    * (committedVersion, claimRetries).
     *
     * At 100 TB this is the production commit: cost is one head fetch +
     * one conflict intersection over the intervening snapshots' replaced
@@ -265,60 +334,81 @@ object Snapshots {
     * real stores close that gap with a metastore CAS / conditional put;
     * the protocol above it is identical.
     */
-  /** `beforePublish(n)` runs while HOLDING the slot-n claim, after the
-    * replaced-file metadata is durable and before the manifest's atomic
-    * rename — the hook for version-addressed sidecars (delete files,
-    * watermarks) that must never be missing for a visible version. It
-    * must be idempotent; a crash between it and the rename orphans the
-    * claim (same recovery path as any mid-publish death).
-    */
-  private[graft] def occCommit(dir: String, readV: Int,
-      replaced: Set[String], added: Seq[String],
-      claimWaitMs: Long = 10000L,
-      beforePublish: Int => Unit = _ => ()): (Int, Int) = {
-    var retries = 0
-    while (true) {
-      val h = head(dir)
-      // Fail-on-expired-base (Iceberg semantics): retention may have
-      // deleted the base manifest or an intervening version's
-      // replaced-file metadata; treating missing metadata as no-conflict
-      // would let a stale writer rebase past rewrites it cannot see —
-      // a silent lost update. Missing metadata IS a conflict.
-      if (!new java.io.File(dir, s"manifest_$readV.txt").exists())
+  private[graft] def publish(f: Family, dir: String, readV: Int,
+      replaced: Seq[String], claimWaitMs: Long,
+      beforePublish: Int => Unit)(rebase: Int => Seq[String]): (Int, Int) = {
+    val mine = replaced.toSet
+    var retries = -1
+    var n = 0
+    // each pass re-reads the head; a pass whose claim is lost (the
+    // winner published slot n) re-runs the whole conflict check
+    while ({
+      retries += 1
+      val h = f.head(dir)
+      if (!new java.io.File(dir, s"${f.list}_$readV.txt").exists())
         throw new CommitConflictException(
           s"stale base: snapshot v$readV expired " +
-            s"(manifest_$readV.txt missing — re-read the current head)")
+            s"(${f.list}_$readV.txt missing — re-read the current head)")
       val metaGone = ((readV + 1) to h).filter(v =>
-        !new java.io.File(dir, s"replaced_$v.txt").exists())
+        !new java.io.File(dir, s"${f.replaced}$v.txt").exists())
       if (metaGone.nonEmpty)
         throw new CommitConflictException(
           s"stale base: conflict metadata expired for version(s) " +
             s"${metaGone.mkString(",")} (read v$readV, head v$h) — " +
             "re-read the current head")
-      val concurrent = ((readV + 1) to h).flatMap(replacedOf(dir, _)).toSet
-      val overlap = concurrent.intersect(replaced)
+      val overlap = ((readV + 1) to h).flatMap(f.replacedOf(dir, _))
+        .toSet.intersect(mine)
       if (overlap.nonEmpty)
         throw new CommitConflictException(
-          s"concurrent commit rewrote ${overlap.size} file(s) this commit " +
-            s"also replaces (read v$readV, head v$h): ${overlap.take(3)}")
-      val n = h + 1
-      val published = Store.claimSlot(dir, "manifest", n, claimWaitMs,
+          s"concurrent commit rewrote ${f.unit}(s) " +
+            s"${overlap.toSeq.sorted.take(3).mkString(",")} this commit " +
+            s"also replaces (read v$readV, head v$h)")
+      n = h + 1
+      !Store.claimSlot(dir, f.list, n, claimWaitMs,
           s"claim for version $n (claimant died mid-publish)") {
-        Store.writeLines(s"$dir/replaced_$n.txt", replaced.toSeq.sorted)
-        // rebase over ENTRIES: parent lines (with their stats) survive
-        // untouched unless replaced by path; `added` may carry stats
-        val newManifest =
-          (manifestLines(dir, h).filterNot(l => replaced(pathOf(l))) ++
-            added).sortBy(pathOf)
+        Store.writeLines(s"$dir/${f.replaced}$n.txt", replaced)
         beforePublish(n) // sidecars durable before the version is visible
-        Store.writeLinesAtomic(s"$dir/manifest_$n.txt", newManifest)
+        Store.writeLinesAtomic(s"$dir/${f.list}_$n.txt", rebase(h))
       }
-      if (published) return (n, retries)
-      // lost the slot-n claim race and the winner published: retry the
-      // whole conflict check from the new head
-      retries += 1
-    }
-    throw new IllegalStateException("unreachable")
+    }) ()
+    (n, retries)
+  }
+
+  /** [[publish]] on the flat manifests: `added` entries (which may carry
+    * stats) replace the `replaced` paths; every other parent entry
+    * survives the rebase untouched, stats included.
+    */
+  private[graft] def occCommit(dir: String, readV: Int,
+      replaced: Set[String], added: Seq[String],
+      claimWaitMs: Long = 10000L,
+      beforePublish: Int => Unit = _ => ()): (Int, Int) =
+    publish(Manifests, dir, readV, replaced.toSeq.sorted, claimWaitMs,
+      beforePublish)(h =>
+      (manifestLines(dir, h).filterNot(l => replaced(pathOf(l))) ++
+        added).sortBy(pathOf))
+
+  /** Attempts a store rewrite gets before its conflict is rethrown. */
+  private[graft] val MaxAttempts = 10
+
+  /** THE conflict-retry loop every store rewrite runs: select files at
+    * the head, stage the replacement, commit under the slot claim — one
+    * `attempt(head, n)` returning the committed version. On
+    * [[CommitConflictException]] (a concurrent writer rewrote what this
+    * attempt replaces) it retries from the new head, and rethrows after
+    * [[MaxAttempts]]. Returns (committedVersion, attempts).
+    */
+  private[graft] def retryOnConflict(head: => Int)(
+      attempt: (Int, Int) => Int): (Int, Int) = {
+    var n = 1
+    var committed: Option[Int] = None
+    while (committed.isEmpty)
+      committed =
+        try Some(attempt(head, n))
+        catch { case _: CommitConflictException if n < MaxAttempts =>
+          n += 1
+          None
+        }
+    (committed.get, n)
   }
 
   /** One writer's prepare step: rewrite a single nation's bucket with a
@@ -332,11 +422,9 @@ object Snapshots {
       nation: Int, creditCents: Long, sub: String)
       : (Set[String], Seq[String]) = {
     val replaced = manifest(dir, readV).filter(Store.inBucket(_, nation)).toSet
-    base.filter(col("nk") === nation)
+    (replaced, Store.stageBuckets(base.filter(col("nk") === nation)
       .withColumn("bal", col("bal") + lit(creditCents))
-      .repartition(col("nk"))
-      .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/$sub")
-    (replaced, Store.bucketedLeafFiles(dir, sub))
+      .repartition(col("nk")), dir, sub))
   }
 
   /** Lands the OCC demo once per source version: v1 base, then TWO
@@ -348,12 +436,9 @@ object Snapshots {
   private[graft] def s19Dir(s: SparkSession, d: String): String =
     Artifacts.dir(Artifacts.key("snapocc", Tables.path(d, "customer")),
       "graft_snapocc") { dir =>
-      val base = Tables.customer(s, d)
-        .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),
-          balCents.as("bal"))
-      base.repartition(col("nk"))
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      Store.writeManifest(dir, 1, Store.bucketedLeafFiles(dir, "v1"))
+      val base = customerBase(s, d)
+      Store.writeManifest(dir, 1,
+        Store.stageBuckets(base.repartition(col("nk")), dir, "v1"))
       // both writers prepare against v1 BEFORE either commits — the
       // optimistic part; B's read version is stale by publish time
       val (repA, addA) = prepareCredit(dir, 1, base, 1, 500L, "wA")
@@ -406,19 +491,16 @@ object Snapshots {
     Artifacts.dir(Artifacts.key("snapevo", Tables.path(d, "customer")),
       "graft_snapevo") { dir =>
       val cust = Tables.customer(s, d)
-      cust.filter(col("c_nationkey") < 12)
+      val m1 = Store.stageBuckets(cust.filter(col("c_nationkey") < 12)
         .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),
           balCents.as("bal"))
-        .repartition(col("nk"))
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      cust.filter(col("c_nationkey") >= 12)
+        .repartition(col("nk")), dir, "v1")
+      val added = Store.stageBuckets(cust.filter(col("c_nationkey") >= 12)
         .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),
           balCents.as("bal"), col("c_mktsegment").as("seg"))
-        .repartition(col("nk"))
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v2add")
-      val m1 = Store.bucketedLeafFiles(dir, "v1")
+        .repartition(col("nk")), dir, "v2add")
       Store.writeManifest(dir, 1, m1)
-      Store.writeManifest(dir, 2, m1 ++ Store.bucketedLeafFiles(dir, "v2add"))
+      Store.writeManifest(dir, 2, m1 ++ added)
     }
 
   /** Version read under MIXED schemas: `mergeSchema` unions the file
@@ -523,14 +605,12 @@ object Snapshots {
         when(col("op").isNull, col("bal"))
           .when(col("op") === "A", coalesce(col("bal"), lit(0L)) + col("val"))
           .otherwise(col("val")).as("bal"))
-    merged.select(col("k"), col("nkd"), col("bal"), col("nkd").as("nk"))
-      .repartition(col("nk"))
-      .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/$sub")
     // stats are written BY THE COMMIT PATH (round-15 verdict #1): every
     // file this commit adds enters the manifest with its min/max —
     // selective reads of any later head prune driver-side, no separate
     // stats pass to forget
-    val added = statsEntries(s, Store.bucketedLeafFiles(dir, sub))
+    val added = statsEntries(s,
+      Store.stageBuckets(asBuckets(merged).repartition(col("nk")), dir, sub))
     occCommit(dir, readV, replaced, added)._1
   }
 
@@ -553,22 +633,14 @@ object Snapshots {
   private val stagingSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
   private[graft] def cowMerge(s: SparkSession, dir: String,
-      changes: DataFrame, tag: String, maxAttempts: Int = 5): (Int, Int) = {
+      changes: DataFrame, tag: String): (Int, Int) = {
     val chg = changes.localCheckpoint(true)
     val touched = chg.select(col("nk")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted // bounded: ≤ |buckets|
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val h = head(dir)
-      val sub = s"$tag${h}a${attempt}u${stagingSeq.incrementAndGet()}"
-      try return (mergeAttempt(s, dir, chg, touched, h, sub), attempt)
-      catch {
-        case e: CommitConflictException =>
-          if (attempt >= maxAttempts) throw e
-      }
+    retryOnConflict(head(dir)) { (h, attempt) =>
+      mergeAttempt(s, dir, chg, touched, h,
+        s"$tag${h}a${attempt}u${stagingSeq.incrementAndGet()}")
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Maintenance: compact one bucket's files into a single file through
@@ -590,27 +662,35 @@ object Snapshots {
     * rather than operational.
     */
   private[graft] def compactBucket(s: SparkSession, dir: String, nk: Int,
-      tag: String, maxAttempts: Int = 10): (Int, Int) = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val h = head(dir)
-      val bucket = manifest(dir, h).filter(Store.inBucket(_, nk)).toSet
-      require(bucket.nonEmpty, s"no files for bucket nk=$nk at v$h")
-      val sub = s"$tag${h}a${attempt}u${stagingSeq.incrementAndGet()}"
-      Artifacts.parquet(s, bucket.toSeq.sorted: _*)
-        .select(col("k"), col("nkd"), col("bal"), col("nkd").as("nk"))
-        .coalesce(1)
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/$sub")
-      val added = statsEntries(s, Store.bucketedLeafFiles(dir, sub))
-      try return (occCommit(dir, h, bucket, added)._1, attempt)
-      catch {
-        case e: CommitConflictException =>
-          if (attempt >= maxAttempts) throw e
-      }
+      tag: String): (Int, Int) =
+    rewriteBucket(s, dir, nk,
+      (h, attempt) => s"$tag${h}a${attempt}u${stagingSeq.incrementAndGet()}")(
+      asBuckets(_).coalesce(1))
+
+  /** THE bucket rewrite behind every compaction and tree credit, under
+    * [[retryOnConflict]]: each attempt takes bucket `nk`'s files at
+    * family `f`'s head, lays them out with `layout` (which must yield
+    * the bucket column `nk`), stages the result through
+    * [[Store.stageBuckets]] into `sub(head, attempt)`, turns the staged
+    * files into manifest entries with `stats` (the positional
+    * [[statsEntries]] or the named [[SchemaStats.entries]]) and commits
+    * them through `f`, replacing exactly the bucket's files. A
+    * concurrent commit over the same bucket conflicts and the rewrite
+    * retries from the new head (derived state — it can lose only its
+    * own work, never an update). Returns (committedVersion, attempts).
+    */
+  private[graft] def rewriteBucket(s: SparkSession, dir: String, nk: Int,
+      sub: (Int, Int) => String, f: Family = Manifests,
+      stats: (SparkSession, Seq[String]) => Seq[String] = statsEntries)(
+      layout: DataFrame => DataFrame): (Int, Int) =
+    retryOnConflict(f.head(dir)) { (h, attempt) =>
+      val files = f.bucketFiles(dir, h, nk)
+      require(files.nonEmpty, s"no files for bucket nk=$nk at v$h")
+      val name = sub(h, attempt)
+      val staged = Store.stageBuckets(
+        layout(Artifacts.parquet(s, files.sorted: _*)), dir, name)
+      f.commitBucket(dir, h, nk, files, stats(s, staged), name)
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** The MERGE demo's change batch, fully engine-derivable: per-customer
     * order totals as upserts (`D` on k%23==0, else `U`), restricted to
@@ -647,16 +727,10 @@ object Snapshots {
     Artifacts.dir(Artifacts.key("snapmerge",
         Seq("customer", "orders").map(Tables.path(d, _))),
       "graft_snapmerge") { dir =>
-      val base = Tables.customer(s, d)
-        .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),
-          balCents.as("bal"))
-      base.select(col("k"), col("nk").as("nkd"), col("bal"), col("nk"))
-        .repartition(col("nk"))
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
+      val base = customerBase(s, d)
       // the bootstrap commit carries stats too, so a pruned read of any
       // head covers untouched buckets as well as rewritten ones
-      Store.writeManifest(dir, 1,
-        statsEntries(s, Store.bucketedLeafFiles(dir, "v1")))
+      Store.writeManifest(dir, 1, statsEntries(s, stageNkdBase(base, dir)))
       val (v, _) = cowMerge(s, dir, s22Changes(s, d, base), "m")
       require(v == 2, s"MERGE demo expected v2, committed v$v")
     }
@@ -836,20 +910,35 @@ object Snapshots {
         s"changeFeed($vFrom,$vTo) on $dir: both manifests are empty — " +
           "no schema source for the feed"))
     def readOr(files: Seq[String], alias: String): DataFrame =
-      (if (files.nonEmpty) Artifacts.parquet(s, files.sorted: _*)
-       else Artifacts.parquet(s, schemaFile).filter(lit(false)))
+      readOrEmpty(s, files, schemaFile)
         .select(col("k"), col("bal").as(alias))
-    val pre = readOr(mFrom.filterNot(toSet), "bal_before")
-    val post = readOr(mTo.filterNot(fromSet), "bal_after")
-    pre.join(post, Seq("k"), "full_outer")
-      .filter(col("bal_before").isNull || col("bal_after").isNull ||
+    netChanges(readOr(mFrom.filterNot(toSet), "bal_before")
+      .join(readOr(mTo.filterNot(fromSet), "bal_after"), Seq("k"),
+        "full_outer"))
+  }
+
+  /** The NET row-level changes of a (k, bal_before, bal_after) frame:
+    * rows that merely rode a rewrite unchanged are dropped, the rest
+    * classified insert | update | delete — the fold every change feed
+    * ends in.
+    */
+  private[graft] def netChanges(df: DataFrame): DataFrame =
+    df.filter(col("bal_before").isNull || col("bal_after").isNull ||
         col("bal_before") =!= col("bal_after"))
       .select(col("k"),
         when(col("bal_after").isNull, "delete")
           .when(col("bal_before").isNull, "insert")
           .otherwise("update").as("change_type"),
         col("bal_before"), col("bal_after"))
-  }
+
+  /** `files` read as one frame (sorted), or `schemaFile`'s schema with
+    * no rows when there are none — a delta side or a pruned read that
+    * kept nothing still has a schema.
+    */
+  private[graft] def readOrEmpty(s: SparkSession, files: Seq[String],
+      schemaFile: String): DataFrame =
+    if (files.nonEmpty) Artifacts.parquet(s, files.sorted: _*)
+    else Artifacts.parquet(s, schemaFile).filter(lit(false))
 
   private def cdc3ChangeFeed(s: SparkSession, d: String): DataFrame =
     changeFeed(s, s22Dir(s, d), 1, 2).orderBy(col("k"))
@@ -902,20 +991,11 @@ object Snapshots {
       throw new IllegalArgumentException(
         s"changeFeedPruned($vFrom,$vTo) on $dir: both manifests empty"))
     def readOr(files: Seq[String], alias: String): DataFrame =
-      (if (files.nonEmpty) Artifacts.parquet(s, files.sorted: _*)
-       else Artifacts.parquet(s, schemaFile).filter(lit(false)))
+      readOrEmpty(s, files, schemaFile)
         .filter(col("nkd").between(nkLo, nkHi))
         .select(col("k"), col("bal").as(alias))
-    val pre = readOr(preKept, "bal_before")
-    val post = readOr(postKept, "bal_after")
-    val feed = pre.join(post, Seq("k"), "full_outer")
-      .filter(col("bal_before").isNull || col("bal_after").isNull ||
-        col("bal_before") =!= col("bal_after"))
-      .select(col("k"),
-        when(col("bal_after").isNull, "delete")
-          .when(col("bal_before").isNull, "insert")
-          .otherwise("update").as("change_type"),
-        col("bal_before"), col("bal_after"))
+    val feed = netChanges(readOr(preKept, "bal_before")
+      .join(readOr(postKept, "bal_after"), Seq("k"), "full_outer"))
     (feed, preKept.size + postKept.size, preDelta.size + postDelta.size)
   }
 
@@ -1046,12 +1126,9 @@ object Snapshots {
   private[graft] def s29Dir(s: SparkSession, d: String): String =
     Artifacts.dir(Artifacts.key("snaprollback", Tables.path(d, "customer")),
       "graft_snapback") { dir =>
-      val base = Tables.customer(s, d)
-        .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),
-          balCents.as("bal"))
-      base.repartition(col("nk"))
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      Store.writeManifest(dir, 1, Store.bucketedLeafFiles(dir, "v1"))
+      val base = customerBase(s, d)
+      Store.writeManifest(dir, 1,
+        Store.stageBuckets(base.repartition(col("nk")), dir, "v1"))
       val (rep, add) = prepareCredit(dir, 1, base, 6, 9999L, "oops")
       val (v2, _) = occCommit(dir, 1, rep, add)
       require(v2 == 2)
@@ -1190,12 +1267,9 @@ object Snapshots {
   private[graft] def s33Dir(s: SparkSession, d: String): String =
     Artifacts.dir(Artifacts.key("snaptags", Tables.path(d, "customer")),
       "graft_snaptags") { dir =>
-      val base = Tables.customer(s, d)
-        .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),
-          balCents.as("bal"))
-      base.repartition(col("nk"))
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      Store.writeManifest(dir, 1, Store.bucketedLeafFiles(dir, "v1"))
+      val base = customerBase(s, d)
+      Store.writeManifest(dir, 1,
+        Store.stageBuckets(base.repartition(col("nk")), dir, "v1"))
       val (rep2, add2) = prepareCredit(dir, 1, base, 4, 250L, "t2")
       require(occCommit(dir, 1, rep2, add2)._1 == 2)
       writeTag(dir, "q2close", 2)
@@ -1308,11 +1382,12 @@ object Snapshots {
     val (all, staleMeta) = {
       val lst = try walk.iterator().asScala.toList finally walk.close()
       (lst.filter(_.toString.endsWith(".parquet")),
-        // metadata orphans (round-16 advice): consumed claim files and
-        // abandoned WAP stage files accumulate unbounded otherwise. An
-        // aged claim whose manifest never published is a crashed
-        // claimant — deleting it IS occCommit's documented manual
-        // recovery. Swept silently; the returned counts stay the
+        // metadata orphans (round-16 advice): a publish removes its own
+        // claim, so a claim left on disk is a crashed claimant's (or a
+        // live one's, hence the age threshold), and abandoned WAP stage
+        // files accumulate unbounded otherwise. Deleting an aged claim
+        // whose manifest never published IS occCommit's documented
+        // manual recovery. Swept silently; the returned counts stay the
         // data-file contract the s34 gate pins.
         lst.filter { p =>
           val n = p.getFileName.toString
@@ -1363,14 +1438,8 @@ object Snapshots {
   private[graft] def s34Dir(s: SparkSession, d: String): String =
     Artifacts.dir(Artifacts.key("snaporphan", Tables.path(d, "customer")),
       "graft_snaporphan") { dir =>
-      val base = Tables.customer(s, d)
-        .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),
-          balCents.as("bal"))
-      base.select(col("k"), col("nk").as("nkd"), col("bal"), col("nk"))
-        .repartition(col("nk"))
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      Store.writeManifest(dir, 1,
-        statsEntries(s, Store.bucketedLeafFiles(dir, "v1")))
+      val base = customerBase(s, d)
+      Store.writeManifest(dir, 1, statsEntries(s, stageNkdBase(base, dir)))
       import s.implicits._
       val k5 = base.filter(col("nk") === 5)
         .agg(min(col("k")), max(col("k"))).first()

@@ -26,33 +26,14 @@ object SortedCompaction {
 
   /** Compact one bucket into `nFiles` bal-range files (sorted within
     * each) through the standard OCC publish — [[Snapshots.compactBucket]]
-    * with a sort order. Returns (committedVersion, attempts).
+    * with a sort order, both [[Snapshots.rewriteBucket]]. Returns
+    * (committedVersion, attempts).
     */
   private[graft] def sortedCompactBucket(s: SparkSession, dir: String,
-      nk: Int, tag: String, nFiles: Int,
-      maxAttempts: Int = 10): (Int, Int) = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val h = Snapshots.head(dir)
-      val bucket = Snapshots.manifest(dir, h)
-        .filter(Store.inBucket(_, nk)).toSet
-      require(bucket.nonEmpty, s"no files for bucket nk=$nk at v$h")
-      val sub = s"$tag${h}a$attempt"
-      Artifacts.parquet(s, bucket.toSeq.sorted: _*)
-        .repartitionByRange(nFiles, col("bal"))
-        .sortWithinPartitions(col("bal"))
-        .select(col("k"), col("nkd"), col("bal"), col("nkd").as("nk"))
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/$sub")
-      val added = Snapshots.statsEntries(s, Store.bucketedLeafFiles(dir, sub))
-      try return (Snapshots.occCommit(dir, h, bucket, added)._1, attempt)
-      catch {
-        case e: Snapshots.CommitConflictException =>
-          if (attempt >= maxAttempts) throw e
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+      nk: Int, tag: String, nFiles: Int): (Int, Int) =
+    Snapshots.rewriteBucket(s, dir, nk, (h, a) => s"$tag${h}a$a")(df =>
+      Snapshots.asBuckets(df.repartitionByRange(nFiles, col("bal"))
+        .sortWithinPartitions(col("bal"))))
 
   private[graft] val BalMin = 500000L // the selective read's floor
   // nk=11: the bucket with the most rows at the 2026-08-19-regen
@@ -71,14 +52,10 @@ object SortedCompaction {
   private[graft] def s41Dir(s: SparkSession, d: String): String =
     Artifacts.dir(Artifacts.key("sortcompact2", Tables.path(d, "customer")),
       "graft_sortcompact") { dir =>
-      val base = Tables.customer(s, d)
-        .select(col("c_custkey").as("k"), col("c_nationkey").as("nkd"),
-          round(col("c_acctbal") * 100).cast("long").as("bal"))
-      base.withColumn("nk", col("nkd"))
-        .repartition(6, col("k")) // value-unsorted ingest splits
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      Store.writeManifest(dir, 1,
-        Snapshots.statsEntries(s, Store.bucketedLeafFiles(dir, "v1")))
+      val base = Snapshots.customerBase(s, d, "nkd")
+      Store.writeManifest(dir, 1, Snapshots.statsEntries(s,
+        Store.stageBuckets(base.withColumn("nk", col("nkd"))
+          .repartition(6, col("k")), dir, "v1"))) // value-unsorted splits
       require(sortedCompactBucket(s, dir, CompactedNk, "sc",
         RangeFiles)._1 == 2)
     }

@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.spark.sql.DataFrame
+
 /** The manifest stores' ON-DISK PROTOCOL, below the commit logic: every
   * store in `sources/` and `streaming/` reads and writes its metadata
   * through this module, so each protocol detail is decided once
@@ -8,22 +10,28 @@ package graft.sources
   *  - METADATA FILE I/O: [[writeLines]] for bootstrap files no reader
   *    can see yet, [[writeLinesAtomic]] (temp + atomic rename) for
   *    anything a reader may already watch, [[readLines]] for both;
-  *  - LEAF-FILE LISTINGS of a staged write (bucketed `nk=` layout, flat
-  *    layout, or an arbitrary-depth walk);
+  *  - the BUCKET STAGE every bucketed write goes through
+  *    ([[stageBuckets]]: `partitionBy("nk")` into `dir/sub`, the staged
+  *    files back), and the LEAF-FILE LISTINGS of a staged write
+  *    (bucketed `nk=` layout, flat layout, or an arbitrary-depth walk);
   *  - the VERSION SEQUENCE of a `<prefix><v>.txt` family — its committed
   *    versions and its [[head]] (`manifest_`, `mlist_`, `txn_`, and the
   *    sidecar dialects);
   *  - the SLOT CLAIM every publisher takes ([[claimSlot]]: O_EXCL
-  *    `<name>_<n>.txt.claim`, publish while holding it, bounded wait for
-  *    a winner, orphaned-claim error);
+  *    `<name>_<n>.txt.claim`, publish while holding it, remove it once
+  *    the publish returned, bounded wait for a winner, orphaned-claim
+  *    error);
   *  - VERSION-ADDRESSED SIDECARS (`<prefix><v>.txt`, resolved
   *    nearest-at-or-below — the Iceberg sequence-number rule) and their
   *    DIALECT REGISTRY, which the orphan sweep and sidecar retention in
   *    [[Snapshots]] consume instead of naming dialects themselves.
   *
-  * What a commit means (conflict checks, rebase, retry rules) and
-  * retention stay in [[Snapshots]] and the stores that extend it; this
-  * module is the layer below them.
+  * What a commit means stays in [[Snapshots]], one layer up: the one
+  * conflict-retry loop every store rewrite runs
+  * ([[Snapshots.retryOnConflict]]), the one bucket rewrite
+  * ([[Snapshots.rewriteBucket]]) and the one OCC publish
+  * ([[Snapshots.publish]]) that both the flat manifests and the
+  * manifest tree commit through, plus retention.
   */
 object Store {
 
@@ -60,7 +68,18 @@ object Store {
       entries: Seq[String]): Unit =
     writeLines(s"$dir/manifest_$v.txt", entries)
 
-  // ---- leaf-file listings ---------------------------------------------------
+  // ---- the bucket stage and leaf-file listings ------------------------------
+
+  /** THE bucket stage: write `df` — laid out by the caller
+    * (`repartition(col("nk"))`, `coalesce(1)`, a range sort) and
+    * carrying the bucket column `nk` — as `nk=<k>` dirs under
+    * `dir/sub`, and return the staged data files.
+    */
+  private[graft] def stageBuckets(df: DataFrame, dir: String,
+      sub: String): Seq[String] = {
+    df.write.mode("overwrite").partitionBy("nk").parquet(s"$dir/$sub")
+    bucketedLeafFiles(dir, sub)
+  }
 
   /** Data files of a `partitionBy(bucket)` staged write: one level of
     * `<prefix><value>=`-style dirs, parquet leaves inside.
@@ -122,30 +141,39 @@ object Store {
     * claim is an atomic O_EXCL create of `<name>_<n>.txt.claim` — the
     * only true test-and-set the filesystem gives (an atomic rename onto
     * an existing target silently replaces it). The winner runs `publish`
-    * while holding the claim and gets true. A loser waits up to
-    * `claimWaitMs` for the winner's `<name>_<n>.txt` and gets false (the
-    * caller re-checks and retries); if the file never appears the
-    * claimant died mid-publish, and the [[Snapshots.CommitConflictException]]
-    * names the claim to remove (`what` describes it). Claims stay on
-    * disk after a publish; the orphan sweep collects them.
+    * while holding the claim, removes the claim once `publish` returned,
+    * and gets true. Because consumed claims are removed, a create can
+    * succeed on a slot that is already published: the winner then finds
+    * `<name>_<n>.txt`, drops the claim it just took, runs nothing and
+    * gets false, like any loser. A loser waits up to `claimWaitMs` for
+    * the winner's `<name>_<n>.txt` and gets false (the caller re-reads
+    * the head and retries); if the file never appears the claimant died
+    * mid-publish, and the [[Snapshots.CommitConflictException]] names
+    * the claim to remove (`what` describes it). A `publish` that throws
+    * leaves its claim on disk — the same orphaned-claim state, which
+    * the orphan sweep's aged-claim path recovers.
     */
   private[graft] def claimSlot(dir: String, name: String, n: Int,
       claimWaitMs: Long, what: String)(publish: => Unit): Boolean = {
     val claim = new java.io.File(dir, s"${name}_$n.txt.claim")
+    val published = new java.io.File(dir, s"${name}_$n.txt")
     val won =
       try { java.nio.file.Files.createFile(claim.toPath); true }
       catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    if (won) publish
-    else {
-      val published = new java.io.File(dir, s"${name}_$n.txt")
+    if (won) {
+      val fresh = !published.exists()
+      if (fresh) publish
+      java.nio.file.Files.delete(claim.toPath)
+      fresh
+    } else {
       val deadline = System.nanoTime() + claimWaitMs * 1000000L
       while (!published.exists() && System.nanoTime() < deadline)
         Thread.sleep(2)
       if (!published.exists())
         throw new Snapshots.CommitConflictException(
           s"orphaned $what; manual recovery: remove ${claim.getPath}")
+      false
     }
-    won
   }
 
   // ---- version-addressed sidecars -------------------------------------------

@@ -56,19 +56,23 @@ object TxnDeletes {
       files: Seq[String]): Unit =
     Store.writeSidecar(dir, "deletes_", n, files.sorted)
 
-  /** Merge-on-read snapshot: the version's data files anti-joined with
-    * its resolved delete keys (broadcast — delete sets are tiny relative
+  /** `df` without the rows whose key a delete file in `dvs` lists — the
+    * merge-on-read anti-join (broadcast: delete sets are tiny relative
     * to the table; production DVs apply inside the scan, same shape).
     */
-  private[graft] def readMoR(s: SparkSession, dir: String,
-      v: Int): DataFrame = {
-    val data = Artifacts.parquet(s, Snapshots.manifest(dir, v): _*)
-    val dvs = resolveDeletes(dir, v)
-    if (dvs.isEmpty) data
-    else data.join(
-      broadcast(Artifacts.parquet(s, dvs: _*).select(col("k"))),
+  private[graft] def withoutDeleted(s: SparkSession, df: DataFrame,
+      dvs: Seq[String]): DataFrame =
+    if (dvs.isEmpty) df
+    else df.join(broadcast(Artifacts.parquet(s, dvs: _*).select(col("k"))),
       Seq("k"), "left_anti")
-  }
+
+  /** Merge-on-read snapshot: the version's data files anti-joined with
+    * its resolved delete keys.
+    */
+  private[graft] def readMoR(s: SparkSession, dir: String,
+      v: Int): DataFrame =
+    withoutDeleted(s, Artifacts.parquet(s, Snapshots.manifest(dir, v): _*),
+      resolveDeletes(dir, v))
 
   /** Commit an equality delete: one tiny (k, nk) parquet write + one
     * metadata publish. Replaces NO data file (always rebases cleanly);
@@ -101,11 +105,8 @@ object TxnDeletes {
     * derived state, safe to redo). Returns (version, attempts).
     */
   private[graft] def purgeDeletes(s: SparkSession, dir: String,
-      tag: String, maxAttempts: Int = 10): (Int, Int) = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val h = Snapshots.head(dir)
+      tag: String): (Int, Int) =
+    Snapshots.retryOnConflict(Snapshots.head(dir)) { (h, attempt) =>
       val dvs = resolveDeletes(dir, h)
       require(dvs.nonEmpty, s"nothing to purge at v$h")
       val doomed = Artifacts.parquet(s, dvs: _*)
@@ -113,29 +114,20 @@ object TxnDeletes {
         .collect().map(_.getInt(0)).toSeq.sorted // bounded: ≤ |buckets|
       val replaced = Snapshots.manifest(dir, h)
         .filter(p => touched.exists(Store.inBucket(p, _))).toSet
-      val sub = s"${tag}purge${h}a$attempt"
-      Artifacts.parquet(s, replaced.toSeq.sorted: _*)
-        .join(broadcast(doomed.select(col("k"))), Seq("k"), "left_anti")
-        .select(col("k"), col("nkd"), col("bal"), col("nkd").as("nk"))
-        .repartition(col("nk"))
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/$sub")
-      val added = Snapshots.statsEntries(s, Store.bucketedLeafFiles(dir, sub))
+      val added = Snapshots.statsEntries(s, Store.stageBuckets(
+        Snapshots.asBuckets(Artifacts.parquet(s, replaced.toSeq.sorted: _*)
+          .join(broadcast(doomed.select(col("k"))), Seq("k"), "left_anti"))
+          .repartition(col("nk")), dir, s"${tag}purge${h}a$attempt"))
       // Same publish-time discipline as commitEqualityDelete: the purge
       // drops exactly the delete files it APPLIED — a concurrent delete
       // landing between head read and claim (replaced = ∅, invisible to
       // OCC) keeps its files in the sidecar instead of being silently
       // emptied away; its keys stay masked until the next purge.
       val purged = dvs.toSet
-      try return (Snapshots.occCommit(dir, h, replaced, added,
+      Snapshots.occCommit(dir, h, replaced, added,
         beforePublish = n => writeSidecar(dir, n,
-          resolveDeletes(dir, n - 1).filterNot(purged)))._1, attempt)
-      catch {
-        case e: Snapshots.CommitConflictException =>
-          if (attempt >= maxAttempts) throw e
-      }
+          resolveDeletes(dir, n - 1).filterNot(purged)))._1
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Stats-pruned MERGE-ON-READ snapshot: [[Snapshots.readVersionPruned]]
     * composed with the sidecar anti-join — the two reader-side
@@ -149,30 +141,17 @@ object TxnDeletes {
       nkLo: Long, nkHi: Long): (DataFrame, Int, Int) = {
     val (df, kept, total) =
       Snapshots.readVersionPruned(s, dir, v, nkLo, nkHi)
-    val dvs = resolveDeletes(dir, v)
-    val mor =
-      if (dvs.isEmpty) df
-      else df.join(
-        broadcast(Artifacts.parquet(s, dvs: _*).select(col("k"))),
-        Seq("k"), "left_anti")
-    (mor, kept, total)
+    (withoutDeleted(s, df, resolveDeletes(dir, v)), kept, total)
   }
 
   /** Per-nation rollup of `files` with delete set `dvs` MoR-applied —
     * the aggregation unit of the MoR-aware differential below.
     */
   private[graft] def morAgg(s: SparkSession, files: Seq[String],
-      dvs: Seq[String], schemaFile: String): DataFrame = {
-    val base =
-      (if (files.nonEmpty) Artifacts.parquet(s, files.sorted: _*)
-       else Artifacts.parquet(s, schemaFile).filter(lit(false)))
-    (if (dvs.isEmpty) base
-     else base.join(
-       broadcast(Artifacts.parquet(s, dvs: _*).select(col("k"))),
-       Seq("k"), "left_anti"))
+      dvs: Seq[String], schemaFile: String): DataFrame =
+    withoutDeleted(s, Snapshots.readOrEmpty(s, files, schemaFile), dvs)
       .groupBy(col("nkd").cast("int").as("nk"))
       .agg(count(lit(1)).as("n"), sum(col("bal")).as("cents"))
-  }
 
   /** Rows of manifest `m` whose key is in delete-file set `dvs`,
     * rolled up per nation — the `del(m, D)` correction term. Cost is
@@ -181,16 +160,12 @@ object TxnDeletes {
     */
   private def delTerm(s: SparkSession, m: Seq[String],
       dvs: Seq[String], schemaFile: String): DataFrame = {
-    if (dvs.isEmpty)
-      return Artifacts.parquet(s, schemaFile).filter(lit(false))
-        .groupBy(col("nkd").cast("int").as("nk"))
-        .agg(count(lit(1)).as("n"), sum(col("bal")).as("cents"))
+    if (dvs.isEmpty) return morAgg(s, Nil, Nil, schemaFile)
     val doomed = Artifacts.parquet(s, dvs: _*)
     val buckets = doomed.select(col("nk")).distinct()
       .collect().map(_.getInt(0)) // bounded: ≤ |buckets|
     val files = m.filter(p => buckets.exists(Store.inBucket(p, _)))
-    (if (files.nonEmpty) Artifacts.parquet(s, files.sorted: _*)
-     else Artifacts.parquet(s, schemaFile).filter(lit(false)))
+    Snapshots.readOrEmpty(s, files, schemaFile)
       .join(broadcast(doomed.select(col("k"))), Seq("k"), "left_semi")
       .groupBy(col("nkd").cast("int").as("nk"))
       .agg(count(lit(1)).as("n"), sum(col("bal")).as("cents"))
@@ -232,26 +207,12 @@ object TxnDeletes {
     def bucketFiles(m: Seq[String]): Seq[String] =
       m.filter(p => buckets.exists(Store.inBucket(p, _)))
     def side(files: Seq[String], dvs: Seq[String],
-        alias: String): DataFrame = {
-      val base =
-        if (files.nonEmpty) Artifacts.parquet(s, files.sorted: _*)
-        else Artifacts.parquet(s, schemaFile).filter(lit(false))
-      (if (dvs.isEmpty) base
-       else base.join(
-         broadcast(Artifacts.parquet(s, dvs: _*).select(col("k"))),
-         Seq("k"), "left_anti"))
+        alias: String): DataFrame =
+      withoutDeleted(s, Snapshots.readOrEmpty(s, files, schemaFile), dvs)
         .select(col("k"), col("bal").as(alias))
-    }
     val pre = side((preDelta ++ bucketFiles(mF)).distinct, dF, "bal_before")
     val post = side((postDelta ++ bucketFiles(mT)).distinct, dT, "bal_after")
-    pre.join(post, Seq("k"), "full_outer")
-      .filter(col("bal_before").isNull || col("bal_after").isNull ||
-        col("bal_before") =!= col("bal_after"))
-      .select(col("k"),
-        when(col("bal_after").isNull, "delete")
-          .when(col("bal_before").isNull, "insert")
-          .otherwise("update").as("change_type"),
-        col("bal_before"), col("bal_after"))
+    Snapshots.netChanges(pre.join(post, Seq("k"), "full_outer"))
   }
 
   /** CDC5 registered: the net MoR feed over (1, 4] of the s38 store —
@@ -408,14 +369,9 @@ object TxnDeletes {
   private[graft] def s38Dir(s: SparkSession, d: String): String =
     Artifacts.dir(Artifacts.key("txndel", Tables.path(d, "customer")),
       "graft_txndel") { dir =>
-      val base = Tables.customer(s, d)
-        .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),
-          round(col("c_acctbal") * 100).cast("long").as("bal"))
-      base.select(col("k"), col("nk").as("nkd"), col("bal"), col("nk"))
-        .repartition(col("nk"))
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
+      val base = Snapshots.customerBase(s, d)
       Store.writeManifest(dir, 1,
-        Snapshots.statsEntries(s, Store.bucketedLeafFiles(dir, "v1")))
+        Snapshots.statsEntries(s, Snapshots.stageNkdBase(base, dir)))
       def credit(cents: Long): DataFrame =
         base.filter(col("nk") % 7 === 3)
           .select(col("nk").cast("int").as("nk"), col("k"),

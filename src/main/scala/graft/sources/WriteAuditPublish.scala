@@ -117,38 +117,29 @@ object WriteAuditPublish {
   private[graft] def s27Dir(s: SparkSession, d: String): String =
     Artifacts.dir(Artifacts.key("wapstore2", Tables.path(d, "customer")),
       "graft_wap") { dir =>
-      val base = Tables.customer(s, d)
-        .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),
-          round(col("c_acctbal") * 100).cast("long").as("bal"))
-      base.select(col("k"), col("nk").as("nkd"), col("bal"), col("nk"))
-        .repartition(col("nk"))
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/v1")
-      val m1 = Store.bucketedLeafFiles(dir, "v1")
+      val base = Snapshots.customerBase(s, d)
+      val m1 = Snapshots.stageNkdBase(base, dir)
       Store.writeManifest(dir, 1, m1)
       val log = new StringBuilder
       // clean candidate: COW rewrite of the nation-5 bucket, +500
-      base.filter(col("nk") === 5)
-        .select(col("k"), col("nk").as("nkd"),
-          (col("bal") + 500L).as("bal"), col("nk"))
-        .repartition(col("nk"))
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/clean")
       val clean = (m1.filterNot(Store.inBucket(_, 5)) ++
-        Store.bucketedLeafFiles(dir, "clean")).sorted
+        Store.stageBuckets(base.filter(col("nk") === 5)
+          .select(col("k"), col("nk").as("nkd"),
+            (col("bal") + 500L).as("bal"), col("nk"))
+          .repartition(col("nk")), dir, "clean")).sorted
       require(auditedPublish(s, dir, clean, log),
         "clean candidate must publish")
       // dirty candidate: nation-8 bucket rewritten with out-of-domain
       // balances plus a duplicated key — violations on every audit axis
       // (rows also grow by one)
       val n8 = base.filter(col("nk") === 8)
-      n8.select(col("k"), col("nk").as("nkd"),
+      val staged = Store.stageBuckets(n8.select(col("k"), col("nk").as("nkd"),
           (col("bal") - 10000000L).as("bal"), col("nk"))
         .unionByName(n8.limit(1).select(col("k"), col("nk").as("nkd"),
           (col("bal") - 10000000L).as("bal"), col("nk")))
-        .repartition(col("nk"))
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/dirty")
-      val m2 = Snapshots.manifest(dir, 2)
-      val dirty = (m2.filterNot(Store.inBucket(_, 8)) ++
-        Store.bucketedLeafFiles(dir, "dirty")).sorted
+        .repartition(col("nk")), dir, "dirty")
+      val dirty = (Snapshots.manifest(dir, 2).filterNot(Store.inBucket(_, 8))
+        ++ staged).sorted
       require(!auditedPublish(s, dir, dirty, log),
         "dirty candidate must be rejected")
       Store.writeLines(s"$dir/_audit_log.txt", Seq(log.toString))

@@ -18,7 +18,7 @@ import graft.util.Artifacts
   * other's.
   *
   * Mechanics kept Spark-first: the z-value is a pure codegen column
-  * expression (shift/mask interleave of 8-bit grid coordinates), the
+  * expression ([[ZOrderLanding.zValue]] of 8-bit grid coordinates), the
   * layout is `repartitionByRange(n, z)` + `sortWithinPartitions`, the
   * publish is the standard [[Snapshots.occCommit]] with
   * [[SchemaStats.entries]]' NAMED stats (schema-driven, so `k` bounds
@@ -36,70 +36,57 @@ object ZOrderCompaction {
 
   private val Bits = 8 // 256×256 z-grid: plenty below per-file row counts
 
-  /** Bit-interleave two `[0, 2^Bits)` grid coordinates — a static
-    * shift/mask expression tree, fully inside whole-stage codegen.
-    */
-  private[graft] def interleave(a: Column, b: Column): Column =
-    (0 until Bits).foldLeft(lit(0L)) { (acc, i) =>
-      acc
-        .bitwiseOR(shiftleft(shiftright(a, i).bitwiseAND(lit(1L)), 2 * i))
-        .bitwiseOR(shiftleft(shiftright(b, i).bitwiseAND(lit(1L)),
-          2 * i + 1))
-    }
-
   // Column./ is DOUBLE division (CLAUDE.md int-div gotcha) — floor it
   // back to the grid; operands stay ≤ 2^28, far inside double-exactness.
   private def gridCoord(c: Column, lo: Long, hi: Long): Column =
     floor(((c - lit(lo)) * lit(1L << Bits)) / lit(hi - lo + 1))
       .cast("long")
 
+  /** `df` laid out z-ordered on (k, bal) into `nFiles` z-range
+    * partitions, each sorted — the z-value ([[ZOrderLanding.zValue]]
+    * over the grid coordinates of the frame's own (k, bal) domain)
+    * rides as `_z` for the caller to project away.
+    */
+  private def zOrdered(df: DataFrame, nFiles: Int): DataFrame = {
+    val r = df.agg(min(col("k")), max(col("k")),
+      min(col("bal")), max(col("bal"))).head() // domain probe: 1 row
+    df.withColumn("_z", ZOrderLanding.zValue(
+        gridCoord(col("k"), r.getLong(0), r.getLong(1)),
+        gridCoord(col("bal"), r.getLong(2), r.getLong(3))))
+      .repartitionByRange(nFiles, col("_z"))
+      .sortWithinPartitions(col("_z"), col("k"))
+  }
+
   /** Rewrite the head's files z-ordered on (k, bal) into `nFiles`
-    * z-range files, published through OCC with schema-driven named
-    * stats. Returns (committedVersion, attempts).
+    * z-range files (a flat layout), published through OCC with
+    * schema-driven named stats. Returns (committedVersion, attempts).
     */
   private[graft] def zOrderCompact(s: SparkSession, dir: String,
-      tag: String, nFiles: Int, maxAttempts: Int = 10): (Int, Int) = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val h = Snapshots.head(dir)
+      tag: String, nFiles: Int): (Int, Int) =
+    Snapshots.retryOnConflict(Snapshots.head(dir)) { (h, attempt) =>
       val files = Snapshots.manifest(dir, h)
-      val df = Artifacts.parquet(s, files.sorted: _*)
-      val r = df.agg(min(col("k")), max(col("k")),
-        min(col("bal")), max(col("bal"))).head() // domain probe: 1 row
-      val z = interleave(
-        gridCoord(col("k"), r.getLong(0), r.getLong(1)),
-        gridCoord(col("bal"), r.getLong(2), r.getLong(3)))
       val sub = s"$tag${h}a$attempt"
-      df.withColumn("_z", z)
-        .repartitionByRange(nFiles, col("_z"))
-        .sortWithinPartitions(col("_z"), col("k"))
+      zOrdered(Artifacts.parquet(s, files.sorted: _*), nFiles)
         .select(col("k"), col("nkd"), col("bal"))
         .write.mode("overwrite").parquet(s"$dir/$sub")
-      val added = SchemaStats.entries(s, Store.walkLeafFiles(dir, sub))
-      try return (Snapshots.occCommit(dir, h, files.toSet, added)._1,
-        attempt)
-      catch {
-        case e: Snapshots.CommitConflictException =>
-          if (attempt >= maxAttempts) throw e
-      }
+      Snapshots.occCommit(dir, h, files.toSet,
+        SchemaStats.entries(s, Store.walkLeafFiles(dir, sub)))._1
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** BUCKET-SCOPED z-order rewrite — OPTIMIZE ZORDER BY racing live
     * writers, the production shape of s44's one-shot demo: each attempt
     * reads the CURRENT head's files for bucket `nk` (the nkd-bucketed
     * store layout s22/s38/e28 share), rewrites them as `nFiles` z-range
     * files over the BUCKET's own (k, bal) domain, and publishes through
-    * [[Snapshots.occCommit]] with replaced = exactly those files — the
-    * [[Snapshots.compactBucket]] race discipline: a concurrent commit
-    * over the same bucket raises the conflict and the rewrite RETRIES
-    * from the new head (derived state, always safe to redo — it can
-    * lose only its own work, never an update); commits over disjoint
-    * buckets rebase past it untouched. Added entries are schema-driven
-    * NAMED stats, so k and bal bounds ride the manifest and selective
-    * in-bucket reads prune per column. Returns (version, attempts).
+    * [[Snapshots.rewriteBucket]] with replaced = exactly those files —
+    * the [[Snapshots.compactBucket]] race discipline: a concurrent
+    * commit over the same bucket raises the conflict and the rewrite
+    * RETRIES from the new head (derived state, always safe to redo — it
+    * can lose only its own work, never an update); commits over
+    * disjoint buckets rebase past it untouched. Added entries are
+    * schema-driven NAMED stats, so k and bal bounds ride the manifest
+    * and selective in-bucket reads prune per column. Returns (version,
+    * attempts).
     *
     * At 100 TB this is how z-ordering actually runs: bucket-by-bucket
     * maintenance passes against live ingest, each pass O(bucket), the
@@ -107,36 +94,10 @@ object ZOrderCompaction {
     * ingest, ingest never corrupts maintenance" structural.
     */
   private[graft] def zOrderCompactBucket(s: SparkSession, dir: String,
-      nk: Int, tag: String, nFiles: Int, maxAttempts: Int = 10)
-      : (Int, Int) = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val h = Snapshots.head(dir)
-      val bucket = Snapshots.manifest(dir, h)
-        .filter(Store.inBucket(_, nk)).toSet
-      require(bucket.nonEmpty, s"no files for bucket nk=$nk at v$h")
-      val df = Artifacts.parquet(s, bucket.toSeq.sorted: _*)
-      val r = df.agg(min(col("k")), max(col("k")),
-        min(col("bal")), max(col("bal"))).head() // domain probe: 1 row
-      val z = interleave(
-        gridCoord(col("k"), r.getLong(0), r.getLong(1)),
-        gridCoord(col("bal"), r.getLong(2), r.getLong(3)))
-      val sub = s"$tag${h}a$attempt"
-      df.withColumn("_z", z)
-        .repartitionByRange(nFiles, col("_z"))
-        .sortWithinPartitions(col("_z"), col("k"))
-        .select(col("k"), col("nkd"), col("bal"), col("nkd").as("nk"))
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$dir/$sub")
-      val added = SchemaStats.entries(s, Store.walkLeafFiles(dir, sub))
-      try return (Snapshots.occCommit(dir, h, bucket, added)._1, attempt)
-      catch {
-        case e: Snapshots.CommitConflictException =>
-          if (attempt >= maxAttempts) throw e
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+      nk: Int, tag: String, nFiles: Int): (Int, Int) =
+    Snapshots.rewriteBucket(s, dir, nk, (h, a) => s"$tag${h}a$a",
+      stats = SchemaStats.entries)(df =>
+      Snapshots.asBuckets(zOrdered(df, nFiles)))
 
   /** Paths of version `v` whose named bounds intersect EVERY queried
     * column's range — the multi-column prune (per-column logic exactly
@@ -161,6 +122,38 @@ object ZOrderCompaction {
   private[graft] val KRange = (40L, 70L)
   private[graft] val BalRange = (500000L, 999999L)
   private[graft] val NFiles = 16
+  private val KBox = ("k", KRange._1, KRange._2)
+  private val BalBox = ("bal", BalRange._1, BalRange._2)
+
+  /** Lands v1 of a z-order demo store: the customer base (k, nkd, bal)
+    * hash-partitioned into [[NFiles]] files with named stats. Returns
+    * the base frame.
+    */
+  private def landIngest(s: SparkSession, d: String,
+      dir: String): DataFrame = {
+    val base = Snapshots.customerBase(s, d, "nkd")
+    base.repartition(NFiles, col("k"))
+      .write.mode("overwrite").parquet(s"$dir/v1")
+    Store.writeManifest(dir, 1,
+      SchemaStats.entries(s, Store.walkLeafFiles(dir, "v1")))
+    base
+  }
+
+  /** The 2-D box read of version `v`: the kept files' rows inside the
+    * (k, bal) box (a schema-carrying empty frame when no file is kept),
+    * whether k alone and bal alone prune files, and whether any file
+    * was kept.
+    */
+  private def boxRead(s: SparkSession, dir: String, v: Int)
+      : (DataFrame, Boolean, Boolean, Boolean) = {
+    val files = Snapshots.manifest(dir, v)
+    val box = keptFor(dir, v, Seq(KBox, BalBox))
+    val df = Snapshots.readOrEmpty(s, box, files.head)
+        .filter(col("k").between(KRange._1, KRange._2) &&
+          col("bal").between(BalRange._1, BalRange._2))
+    (df, keptFor(dir, v, Seq(KBox)).size < files.size,
+      keptFor(dir, v, Seq(BalBox)).size < files.size, box.nonEmpty)
+  }
 
   /** Lands the demo once per customer version: v1 = hash-partitioned
     * ingest (16 files, each spanning essentially the full k AND bal
@@ -170,13 +163,7 @@ object ZOrderCompaction {
   private[graft] def s44Dir(s: SparkSession, d: String): String =
     Artifacts.dir(Artifacts.key("zorder", Tables.path(d, "customer")),
       "graft_zorder") { dir =>
-      val base = Tables.customer(s, d)
-        .select(col("c_custkey").as("k"), col("c_nationkey").as("nkd"),
-          round(col("c_acctbal") * 100).cast("long").as("bal"))
-      base.repartition(NFiles, col("k"))
-        .write.mode("overwrite").parquet(s"$dir/v1")
-      Store.writeManifest(dir, 1,
-        SchemaStats.entries(s, Store.walkLeafFiles(dir, "v1")))
+      landIngest(s, d, dir)
       require(zOrderCompact(s, dir, "zo", NFiles)._1 == 2)
     }
 
@@ -192,26 +179,15 @@ object ZOrderCompaction {
   private def s44ZorderCompaction(s: SparkSession, d: String): DataFrame = {
     val dir = s44Dir(s, d)
     val totV1 = Snapshots.manifest(dir, 1).size
-    val totV2 = Snapshots.manifest(dir, 2).size
-    val ingestUnprunable =
-      keptFor(dir, 1, Seq(("k", KRange._1, KRange._2))).size == totV1 &&
-        keptFor(dir, 1, Seq(("bal", BalRange._1, BalRange._2))).size == totV1
-    val keptK = keptFor(dir, 2, Seq(("k", KRange._1, KRange._2))).size
-    val keptBal = keptFor(dir, 2,
-      Seq(("bal", BalRange._1, BalRange._2))).size
-    val box = keptFor(dir, 2, Seq(
-      ("k", KRange._1, KRange._2), ("bal", BalRange._1, BalRange._2)))
-    (if (box.nonEmpty) Artifacts.parquet(s, box.sorted: _*)
-     else Artifacts.parquet(s, Snapshots.manifest(dir, 2).head)
-       .filter(lit(false)))
-      .filter(col("k").between(KRange._1, KRange._2) &&
-        col("bal").between(BalRange._1, BalRange._2))
-      .agg(count(lit(1)).as("n_rows"), sum(col("bal")).as("bal_cents"))
+    val ingestUnprunable = keptFor(dir, 1, Seq(KBox)).size == totV1 &&
+      keptFor(dir, 1, Seq(BalBox)).size == totV1
+    val (box, prunesK, prunesBal, readSome) = boxRead(s, dir, 2)
+    box.agg(count(lit(1)).as("n_rows"), sum(col("bal")).as("bal_cents"))
       .select(col("n_rows"), col("bal_cents"),
         lit(ingestUnprunable).as("ingest_unprunable"),
-        lit(keptK < totV2).as("zorder_prunes_k"),
-        lit(keptBal < totV2).as("zorder_prunes_bal"),
-        lit(box.nonEmpty).as("read_some"))
+        lit(prunesK).as("zorder_prunes_k"),
+        lit(prunesBal).as("zorder_prunes_bal"),
+        lit(readSome).as("read_some"))
   }
 
   /** Lands the z-order + MoR composition store once per customer
@@ -228,14 +204,8 @@ object ZOrderCompaction {
   private[graft] def s45Dir(s: SparkSession, d: String): String =
     Artifacts.dir(Artifacts.key("zordermor", Tables.path(d, "customer")),
       "graft_zordermor") { dir =>
-      val base = Tables.customer(s, d)
-        .select(col("c_custkey").as("k"), col("c_nationkey").as("nkd"),
-          round(col("c_acctbal") * 100).cast("long").as("bal"))
-      base.repartition(NFiles, col("k"))
-        .write.mode("overwrite").parquet(s"$dir/v1")
-      Store.writeManifest(dir, 1,
-        SchemaStats.entries(s, Store.walkLeafFiles(dir, "v1")))
-      val doomed = base.filter(col("nkd") % 7 === 5 && col("k") % 19 === 0)
+      val doomed = landIngest(s, d, dir)
+        .filter(col("nkd") % 7 === 5 && col("k") % 19 === 0)
         .select(col("k"), col("nkd").as("nk"))
       require(TxnDeletes.commitEqualityDelete(s, dir, doomed, "d") == 2)
       require(zOrderCompact(s, dir, "zo", NFiles)._1 == 3)
@@ -259,29 +229,15 @@ object ZOrderCompaction {
     */
   private def s45ZorderMorRead(s: SparkSession, d: String): DataFrame = {
     val dir = s45Dir(s, d)
-    val totV3 = Snapshots.manifest(dir, 3).size
-    val keptK = keptFor(dir, 3, Seq(("k", KRange._1, KRange._2))).size
-    val keptBal = keptFor(dir, 3,
-      Seq(("bal", BalRange._1, BalRange._2))).size
-    val box = keptFor(dir, 3, Seq(
-      ("k", KRange._1, KRange._2), ("bal", BalRange._1, BalRange._2)))
+    val (kept, prunesK, prunesBal, readSome) = boxRead(s, dir, 3)
     val dvs = TxnDeletes.resolveDeletes(dir, 3)
-    val kept =
-      (if (box.nonEmpty) Artifacts.parquet(s, box.sorted: _*)
-       else Artifacts.parquet(s, Snapshots.manifest(dir, 3).head)
-         .filter(lit(false)))
-        .filter(col("k").between(KRange._1, KRange._2) &&
-          col("bal").between(BalRange._1, BalRange._2))
-    (if (dvs.isEmpty) kept
-     else kept.join(
-       broadcast(Artifacts.parquet(s, dvs: _*).select(col("k"))),
-       Seq("k"), "left_anti"))
+    TxnDeletes.withoutDeleted(s, kept, dvs)
       .agg(count(lit(1)).as("n_rows"), sum(col("bal")).as("bal_cents"))
       .select(col("n_rows"), col("bal_cents"),
-        lit(keptK < totV3).as("zorder_prunes_k"),
-        lit(keptBal < totV3).as("zorder_prunes_bal"),
+        lit(prunesK).as("zorder_prunes_k"),
+        lit(prunesBal).as("zorder_prunes_bal"),
         lit(dvs.nonEmpty).as("deletes_applied"),
-        lit(box.nonEmpty).as("read_some"))
+        lit(readSome).as("read_some"))
   }
 
   private val s45Sql =

@@ -82,8 +82,7 @@ object ChangeFeedStream {
     */
   private[graft] def aggOf(s: SparkSession, files: Seq[String],
       schemaFile: String): DataFrame =
-    (if (files.nonEmpty) Artifacts.parquet(s, files.sorted: _*)
-     else Artifacts.parquet(s, schemaFile).filter(lit(false)))
+    Snapshots.readOrEmpty(s, files, schemaFile)
       .groupBy(col("nkd").cast("int").as("nk"))
       .agg(count(lit(1)).as("n_rows"), sum(col("bal")).as("total_cents"))
 
@@ -166,6 +165,32 @@ object ChangeFeedStream {
     } finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
+  /** Copies `store`'s committed manifests into `out/feed` — the commit
+    * log a tailer watches — and returns that dir.
+    */
+  private def feedOf(store: String, out: String): String = {
+    val feed = java.nio.file.Paths.get(s"$out/feed")
+    java.nio.file.Files.createDirectories(feed)
+    (1 to Snapshots.head(store)).foreach { v =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$store/manifest_$v.txt"),
+        feed.resolve(s"manifest_$v.txt"))
+    }
+    feed.toString
+  }
+
+  /** A tailed MV at its latest refreshed state (empty nations dropped),
+    * with the applied-version count as the exactly-once pin.
+    */
+  private def latestMv(s: SparkSession, dir: String): DataFrame = {
+    val led = applied(s"$dir/mv")
+    Artifacts.parquet(s, s"$dir/mv/mv_${led.max}")
+      .filter(col("n_rows") > 0)
+      .select(col("nk"), col("n_rows"), col("total_cents"),
+        lit(led.size.toLong).as("n_commits_applied"))
+      .orderBy(col("nk"))
+  }
+
   /** Lands the tailed MV once per source version: the e28 merge store's
     * manifests copied into a feed dir (the commit log the tailer
     * watches), then one tail run — 5 micro-batches, 5 ledgered
@@ -176,14 +201,7 @@ object ChangeFeedStream {
         Seq("customer", "orders").map(Tables.path(d, _))),
       "graft_mvstream") { out =>
       val store = StreamMerge.e28Dir(s, d)
-      val feed = java.nio.file.Paths.get(s"$out/feed")
-      java.nio.file.Files.createDirectories(feed)
-      (1 to Snapshots.head(store)).foreach { v =>
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$store/manifest_$v.txt"),
-          feed.resolve(s"manifest_$v.txt"))
-      }
-      runTail(s, feed.toString, store, s"$out/mv", s"$out/ckp")
+      runTail(s, feedOf(store, out), store, s"$out/mv", s"$out/ckp")
     }
 
   /** MV4: the registered read — the tailed MV at its latest refreshed
@@ -192,15 +210,8 @@ object ChangeFeedStream {
     * gate), with the applied-version count as the structural
     * exactly-once pin (base + one refresh per commit).
     */
-  private def mv4StreamingMv(s: SparkSession, d: String): DataFrame = {
-    val dir = mv4Dir(s, d)
-    val led = applied(s"$dir/mv")
-    Artifacts.parquet(s, s"$dir/mv/mv_${led.max}")
-      .filter(col("n_rows") > 0)
-      .select(col("nk"), col("n_rows"), col("total_cents"),
-        lit(led.size.toLong).as("n_commits_applied"))
-      .orderBy(col("nk"))
-  }
+  private def mv4StreamingMv(s: SparkSession, d: String): DataFrame =
+    latestMv(s, mv4Dir(s, d))
 
   /** Lands the MoR-tailed MV once per source version: the s38 delete
     * store's commit log tailed by the SAME machinery as mv4 — the
@@ -211,14 +222,7 @@ object ChangeFeedStream {
     Artifacts.dir(Artifacts.key("mvstreammor2", Tables.path(d, "customer")),
       "graft_mvstreammor") { out =>
       val store = graft.sources.TxnDeletes.s38Dir(s, d)
-      val feed = java.nio.file.Paths.get(s"$out/feed")
-      java.nio.file.Files.createDirectories(feed)
-      (1 to Snapshots.head(store)).foreach { v =>
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$store/manifest_$v.txt"),
-          feed.resolve(s"manifest_$v.txt"))
-      }
-      runTail(s, feed.toString, store, s"$out/mv", s"$out/ckp")
+      runTail(s, feedOf(store, out), store, s"$out/mv", s"$out/ckp")
     }
 
   /** MV6: the registered MoR tail — the continuously maintained MV over
@@ -228,15 +232,8 @@ object ChangeFeedStream {
     * subtracts at the purge fails it too), with the applied-version
     * count as the exactly-once pin.
     */
-  private def mv6StreamingMvMor(s: SparkSession, d: String): DataFrame = {
-    val dir = mv6Dir(s, d)
-    val led = applied(s"$dir/mv")
-    Artifacts.parquet(s, s"$dir/mv/mv_${led.max}")
-      .filter(col("n_rows") > 0)
-      .select(col("nk"), col("n_rows"), col("total_cents"),
-        lit(led.size.toLong).as("n_commits_applied"))
-      .orderBy(col("nk"))
-  }
+  private def mv6StreamingMvMor(s: SparkSession, d: String): DataFrame =
+    latestMv(s, mv6Dir(s, d))
 
   private val mv6Sql =
     """SELECT CAST(c_nationkey AS INTEGER) AS nk,
@@ -283,14 +280,7 @@ object ChangeFeedStream {
     Artifacts.dir(Artifacts.key("cdcstream", Tables.path(d, "customer")),
       "graft_cdcstream") { out =>
       val store = graft.sources.TxnDeletes.s38Dir(s, d)
-      val feed = java.nio.file.Paths.get(s"$out/feed")
-      java.nio.file.Files.createDirectories(feed)
-      (1 to Snapshots.head(store)).foreach { v =>
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$store/manifest_$v.txt"),
-          feed.resolve(s"manifest_$v.txt"))
-      }
-      runTail(s, feed.toString, store, s"$out/cdc", s"$out/ckp",
+      runTail(s, feedOf(store, out), store, s"$out/cdc", s"$out/ckp",
         Some(v => applyCdcVersion(s, store, s"$out/cdc", v)))
     }
 
@@ -313,19 +303,12 @@ object ChangeFeedStream {
       .reduce(_.unionByName(_))
     // net fold: struct-min/max orders by v first (v is unique per key
     // per commit), so null before/after images ride through untouched
-    log.groupBy(col("k"))
+    Snapshots.netChanges(log.groupBy(col("k"))
       .agg(
         min(struct(col("v"), col("bal_before")))
           .getField("bal_before").as("bal_before"),
         max(struct(col("v"), col("bal_after")))
-          .getField("bal_after").as("bal_after"))
-      .filter(col("bal_before").isNull || col("bal_after").isNull ||
-        col("bal_before") =!= col("bal_after"))
-      .select(col("k"),
-        when(col("bal_after").isNull, "delete")
-          .when(col("bal_before").isNull, "insert")
-          .otherwise("update").as("change_type"),
-        col("bal_before"), col("bal_after"))
+          .getField("bal_after").as("bal_after")))
       .orderBy(col("k"))
   }
 

@@ -150,13 +150,8 @@ object StreamMerge {
     */
   private[graft] def buildMergeStore(spark: SparkSession, dir: String,
       out: String): Unit = {
-      val base = Tables.customer(spark, dir)
-        .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),
-          round(col("c_acctbal") * 100).cast("long").as("bal"))
-      base.select(col("k"), col("nk").as("nkd"), col("bal"), col("nk"))
-        .repartition(col("nk"))
-        .write.mode("overwrite").partitionBy("nk").parquet(s"$out/v1")
-      Store.writeManifest(out, 1, Store.walkLeafFiles(out, "v1"))
+      Store.writeManifest(out, 1,
+        Snapshots.stageNkdBase(Snapshots.customerBase(spark, dir), out))
       val staged = stageOrders(spark, dir).toString
       val ckp = Artifacts.scratchDir("graft_smerge_ckp").toString
       val prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -333,8 +328,7 @@ object StreamMerge {
     val mh = Snapshots.manifest(dir, h)
     val (fromSet, toSet) = (m1.toSet, mh.toSet)
     def aggOf(files: Seq[String]): DataFrame =
-      (if (files.nonEmpty) Artifacts.parquet(s, files.sorted: _*)
-       else Artifacts.parquet(s, m1.head).filter(lit(false)))
+      Snapshots.readOrEmpty(s, files, m1.head)
         .groupBy(col("nkd").cast("int").as("nk"))
         .agg(count(lit(1)).as("n"), sum(col("bal")).as("cents"))
     // the consumer's materialization at v1: landed once per store

@@ -2575,7 +2575,11 @@ class MaintenanceOpsSpec extends SparkSpec {
     assert(ex.getMessage.contains("rewrote"),
       "occCommit must SEE the WAP version's rewrites, not miss them")
     // aged claim + abandoned audit files are swept as metadata orphans;
-    // the returned counts stay the data-file contract
+    // the returned counts stay the data-file contract. A publish removes
+    // its own claim, so the young claim is planted: an in-flight
+    // publisher's claim on the next slot
+    val youngClaim = java.nio.file.Paths.get(s"$dir/manifest_3.txt.claim")
+    java.nio.file.Files.createFile(youngClaim)
     val oldClaim = java.nio.file.Paths.get(s"$dir/manifest_9.txt.claim")
     val oldAudit = java.nio.file.Paths.get(s"$dir/manifest_9.txt.audit.77")
     java.nio.file.Files.createFile(oldClaim)
@@ -2591,9 +2595,11 @@ class MaintenanceOpsSpec extends SparkSpec {
       "aged metadata orphans must be swept")
     assert(deleted === 0 && young === dirty.size,
       s"metadata sweep must not leak into data counts: ($deleted, $young)")
-    // the fresh (young) claim from the green publish survives
-    assert(java.nio.file.Files.exists(
+    // the green publish left no claim; the young one survives the sweep
+    assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$dir/manifest_2.txt.claim")),
+      "a publish must remove its consumed claim")
+    assert(java.nio.file.Files.exists(youngClaim),
       "a young claim (possible in-flight publisher) must be kept")
   }
 
