@@ -3,6 +3,7 @@ package graft.balance
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.util.Ranks
 
 /** SparkEntry registrations for class balancing (SMOTE / k-NN), exercised
   * on the embeddings table (label as class, embedding as features —
@@ -111,18 +112,18 @@ object BalanceQueries {
 
   private[graft] def tomekLinks(f: DataFrame): DataFrame = {
     val s = f.sparkSession
+    // each ai's 1-NN bi by squared distance, ties to the smaller bi
+    def nearest(pairs: DataFrame): DataFrame =
+      Ranks.topK(pairs.withColumn("_d",
+          graft.functions.VecOps.dsqdist(s, col("af"), col("bf"))),
+        Seq(col("ai")), Seq(col("_d"), col("bi")), lit(1), "rn")
+        .select(col("ai"), col("bi"), col("_d"))
     val small = f.limit(TomekExactCap.toInt + 1).count() <= TomekExactCap
     val n1raw =
       if (small) {
         val a = f.select(col("vec_id").as("ai"), col("features").as("af"))
         val b = f.select(col("vec_id").as("bi"), col("features").as("bf"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("ai")).orderBy(col("_d"), col("bi"))
-        a.crossJoin(b).filter(col("ai") =!= col("bi"))
-          .withColumn("_d",
-            graft.functions.VecOps.dsqdist(s, col("af"), col("bf")))
-          .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-          .select(col("ai"), col("bi"), col("_d"))
+        nearest(a.crossJoin(b).filter(col("ai") =!= col("bi")))
       } else {
         // Candidate generator = x7's knnJoin: sign-bit LSH with
         // auto-scaled bits and hot-bucket refine/salt, the machinery
@@ -141,17 +142,11 @@ object BalanceQueries {
           transform(col("features"), x => x.cast("float")).as("embedding"))
         val cand = graft.ext.SimilarityOps.knnJoin(embF, 3)
           .select(col("q_id").as("ai"), col("c_id").as("bi"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("ai")).orderBy(col("_d"), col("bi"))
-        cand
+        nearest(cand
           .join(f.select(col("vec_id").as("ai"),
             col("features").as("af")), "ai")
           .join(f.select(col("vec_id").as("bi"),
-            col("features").as("bf")), "bi")
-          .withColumn("_d",
-            graft.functions.VecOps.dsqdist(s, col("af"), col("bf")))
-          .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-          .select(col("ai"), col("bi"), col("_d"))
+            col("features").as("bf")), "bi"))
       }
     val n1 = n1raw
       .join(f.select(col("vec_id").as("ai"), col("cls").as("ac")), "ai")

@@ -1,8 +1,8 @@
 package graft.balance
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.util.Ranks
 
 /** k-nearest-neighbour search over array<double> feature columns.
   *
@@ -16,6 +16,13 @@ import org.apache.spark.sql.functions._
   */
 object Knn {
 
+  /** The k pairs of each `_a_id` with the smallest `_dist`, numbered in
+    * `_rank`; ties go to the smaller `_b_id`.
+    */
+  private def nearestFirst(pairs: DataFrame, k: Int): DataFrame =
+    Ranks.topK(pairs, Seq(col("_a_id")), Seq(col("_dist"), col("_b_id")),
+      lit(k), "_rank")
+
   /** Exact k nearest neighbours (excluding self) of every row among the
     * input. Returns (id, neighbors: array<array<double>>) ordered nearest
     * first, ties broken by neighbour id for determinism.
@@ -24,17 +31,13 @@ object Knn {
       k: Int): DataFrame = {
     val a = df.select(col(idCol).as("_a_id"), col(featCol).as("_a_f"))
     val b = df.select(col(idCol).as("_b_id"), col(featCol).as("_b_f"))
-    val w = Window.partitionBy(col("_a_id"))
-      .orderBy(col("_dist"), col("_b_id"))
-    a.crossJoin(b)
-      .filter(col("_a_id") =!= col("_b_id"))
-      // codegen'd kernel in the O(n²)-pair loop; bit-identical to the
-      // Smote.sqDist expression form (same left-to-right double sums)
-      .withColumn("_dist",
-        graft.functions.VecOps.dsqdist(df.sparkSession,
-          col("_a_f"), col("_b_f")))
-      .withColumn("_rank", row_number().over(w))
-      .filter(col("_rank") <= k)
+    nearestFirst(a.crossJoin(b)
+        .filter(col("_a_id") =!= col("_b_id"))
+        // codegen'd kernel in the O(n²)-pair loop; bit-identical to the
+        // Smote.sqDist expression form (same left-to-right double sums)
+        .withColumn("_dist",
+          graft.functions.VecOps.dsqdist(df.sparkSession,
+            col("_a_f"), col("_b_f"))), k)
       .groupBy(col("_a_id").as(idCol))
       .agg(collect_list(struct(col("_rank"), col("_b_f"))).as("_nn"))
       .select(col(idCol),
@@ -79,9 +82,7 @@ object Knn {
         col(s"datasetB.$featCol").as("_b_f"),
         col("_dist"))
       .filter(col("_a_id") =!= col("_b_id"))
-    val w = Window.partitionBy(col("_a_id")).orderBy(col("_dist"), col("_b_id"))
-    val nnRep = pairs.withColumn("_rank", row_number().over(w))
-      .filter(col("_rank") <= k)
+    val nnRep = nearestFirst(pairs, k)
       .groupBy(col("_a_f").as(featCol))
       .agg(collect_list(struct(col("_rank"), col("_b_f"))).as("_nn"))
     vecs.join(nnRep, Seq(featCol))

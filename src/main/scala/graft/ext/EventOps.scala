@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.util.Det._
+import graft.util.Ranks
 
 /** Event-stream analytics over the `events` table: tumbling windows,
   * sessionization. The same aggregations run under Structured Streaming in
@@ -474,10 +475,8 @@ object EventOps {
       p("user_id") === t("user_id") &&
         col("t_ts") <= col("p_ts") &&
         col("t_ts") >= col("p_ts") - expr("INTERVAL 3 DAYS"), "left")
-    val w = Window.partitionBy(col("p_id"))
-      .orderBy(col("t_ts").desc, col("t_id").desc)
-    val credited = joined
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+    val credited = Ranks.topK(joined, Seq(col("p_id")),
+        Seq(col("t_ts").desc, col("t_id").desc), lit(1), "rn")
       .select(coalesce(col("touch"), lit("unattributed")).as("touch"))
     val total = p.agg(count(lit(1)).as("n_total"))
     credited.groupBy(col("touch")).agg(count(lit(1)).as("n_purchases"))

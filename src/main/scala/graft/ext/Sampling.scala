@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.util.Ranks
 
 /** Deterministic uniform sampling for training-data pipelines.
   *
@@ -76,19 +77,23 @@ object Sampling {
     */
   def quotaSample(df: DataFrame, groupCol: String, keyCols: Seq[String],
       quota: Int, seed: Long = 42L, preSplit: Int = 32): DataFrame = {
-    val rank = rankMd5(keyCols, seed)
     val reduced =
       quotaPreReduce(df, groupCol, keyCols, lit(quota), seed, preSplit)
-    val w = Window.partitionBy(col(groupCol))
-      .orderBy((rank +: keyCols.map(col)): _*)
-    reduced.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= quota)
+    md5TopK(reduced, Seq(col(groupCol)), keyCols, seed, lit(quota))
       .drop("_rn")
   }
 
   private def rankMd5(keyCols: Seq[String], seed: Long): Column =
     md5(concat_ws("|",
       (keyCols.map(c => col(c).cast("string")) :+ lit(seed.toString)): _*))
+
+  /** The rows of each `by` group that rank ≤ `quota` in the portable md5
+    * order (then the key columns), numbered in `_rn`.
+    */
+  private def md5TopK(df: DataFrame, by: Seq[Column], keyCols: Seq[String],
+      seed: Long, quota: Column): DataFrame =
+    Ranks.topK(df, by, rankMd5(keyCols, seed) +: keyCols.map(col), quota,
+      "_rn")
 
   /** Level-1 skew pre-reduce for [[quotaSample]] and [[stratifiedSample]]
     * (visible for the skew spec): top-`quota` within every (group, salt)
@@ -100,18 +105,14 @@ object Sampling {
       keyCols: Seq[String], quota: Column, seed: Long,
       preSplit: Int): DataFrame = {
     if (preSplit <= 1) return df
-    val rank = rankMd5(keyCols, seed)
     // salt from the key hash, not spark_partition_id: deterministic and
     // layout-independent, so the reduce (and thus the plan) is stable
     // under any input partitioning
     val salt = pmod(xxhash64((keyCols.map(col) :+ lit(seed)): _*),
       lit(preSplit.toLong))
-    val w1 = Window.partitionBy(col(groupCol), col("_salt"))
-      .orderBy((rank +: keyCols.map(col)): _*)
-    df.withColumn("_salt", salt)
-      .withColumn("_rn1", row_number().over(w1))
-      .filter(col("_rn1") <= quota)
-      .drop("_salt", "_rn1")
+    md5TopK(df.withColumn("_salt", salt), Seq(col(groupCol), col("_salt")),
+        keyCols, seed, quota)
+      .drop("_salt", "_rn")
   }
 
   /** Exact stratified sampling: per stratum, keep exactly
@@ -131,17 +132,13 @@ object Sampling {
     */
   def stratifiedSample(df: DataFrame, groupCol: String, keyCols: Seq[String],
       fracExpr: Column, seed: Long = 42L, preSplit: Int = 32): DataFrame = {
-    val rank = rankMd5(keyCols, seed)
     val counts = df.groupBy(col(groupCol)).agg(count(lit(1)).as("_n_str"))
     val withQuota = df
       .join(broadcast(counts), groupCol)
       .withColumn("_quota", floor(fracExpr * col("_n_str")))
     val reduced = quotaPreReduce(withQuota, groupCol, keyCols,
       col("_quota"), seed, preSplit)
-    val w = Window.partitionBy(col(groupCol))
-      .orderBy((rank +: keyCols.map(col)): _*)
-    reduced.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= col("_quota"))
+    md5TopK(reduced, Seq(col(groupCol)), keyCols, seed, col("_quota"))
       .drop("_n_str", "_quota", "_rn")
   }
 
@@ -206,7 +203,6 @@ object Sampling {
   def temperatureMix(df: DataFrame, groupCol: String, keyCols: Seq[String],
       budget: Long, seed: Long = 42L, preSplit: Int = 32): DataFrame = {
     require(budget > 0, "budget must be positive")
-    val rank = rankMd5(keyCols, seed)
     // The apportionment lives entirely on the |groups|-row count frame;
     // global windows over it are the same accepted tiny-frame cost as the
     // remainder rank below (and avoid the self-join lineage ambiguity an
@@ -235,10 +231,7 @@ object Sampling {
     val withQuota = df.join(broadcast(targets), groupCol)
     val reduced = quotaPreReduce(withQuota, groupCol, keyCols,
       col("_target"), seed, preSplit)
-    val w = Window.partitionBy(col(groupCol))
-      .orderBy((rank +: keyCols.map(col)): _*)
-    reduced.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= col("_target"))
+    md5TopK(reduced, Seq(col(groupCol)), keyCols, seed, col("_target"))
       .drop("_target", "_rn")
   }
 

@@ -1,11 +1,10 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.functions.VecOps
-import graft.util.Artifacts
+import graft.util.{Artifacts, Ranks}
 
 /** Similarity search over the `embeddings` table (north-star extension).
   *
@@ -49,11 +48,9 @@ object SimilarityOps {
   /** Per-query top k of a (q_id, c_id, sim) frame: `rank` orders by sim
     * descending, then c_id.
     */
-  private def topK(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("c_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    Ranks.topK(scored, Seq(col("q_id")), Seq(col("sim").desc, col("c_id")),
+      lit(k), "rank")
 
   /** Brute-force top-k cosine neighbours for each query vector. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
@@ -510,32 +507,30 @@ object SimilarityOps {
     val q = bucketTable
     val c = bucketTable.withColumnRenamed("q_id", "c_id")
     // Candidates are scored MAP-SIDE (the vector+norm sides broadcast
-    // when they fit; past the cap they fall back to the same id-keyed
-    // shuffle the old dedup path paid) and reduced by the bounded-state
-    // `topk_dpairs_k` aggregate — payload-DISTINCT, so the multi-table
-    // duplicate sightings of a (q, c) pair collapse inside the k-slot
-    // buffer instead of riding a corpus-sized dropDuplicates exchange.
-    // r18 rewrite: the old shape shuffled every candidate pair twice
-    // (dedup exchange + the top-k window's repartition-and-sort); now
-    // ≤ k rows per (query, map partition) reach the one exchange
-    // (guide §2.3 "aggregate before you shuffle"). Zero-norm vectors
-    // are still DROPPED from both sides (their sim is NaN, which the
-    // buffer's IEEE ranking cannot order). Results are identical: the
-    // buffer's (key DESC, payload ASC) rule is the window's exact
-    // (sim DESC, c_id ASC) tie rule over the same distinct pair set.
-    val fn = graft.functions.TopKDPairsAgg.ensure(s, k)
-    q.join(c, Seq("table", "bucketL", "salt"))
-      .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"))
-      .join(withNorm(s, df, "q").filter(col("q_norm") > 0), "q_id")
-      .join(withNorm(s, df, "c").filter(col("c_norm") > 0), "c_id")
-      .select(col("q_id"), col("c_id"), qcSim(s).as("sim"))
-      .groupBy(col("q_id"))
-      .agg(call_function(fn, col("sim"), col("c_id")).as("_tk"))
-      .select(col("q_id"), posexplode(col("_tk")).as(Seq("_p", "_kv")))
-      .select(col("q_id"), col("_kv.payload").as("c_id"),
-        col("_kv.key").as("sim"),
-        (col("_p") + 1).cast("int").as("rank"))
+    // when they fit; past the cap they fall back to an id-keyed shuffle)
+    // and ranked by `dense_rank` over (sim DESC, c_id): the multi-table
+    // duplicate sightings of a (q, c) pair tie on both order columns, so
+    // they share one rank and `dense_rank <= k` keeps every copy of the
+    // k best DISTINCT pairs. Spark plans that filter as a partial
+    // WindowGroupLimit before the one exchange — ≤ k distinct pairs per
+    // (query, map partition) cross it — and the distinct that collapses
+    // the copies (equal in all four columns) runs in the window's stage,
+    // over ≤ k·tables rows per query, with no corpus-sized dedup
+    // exchange. The result is row_number's over the distinct pair set:
+    // ranks 1..k, ties broken by c_id. A full-row distinct, not
+    // dropDuplicates("q_id", "c_id"): Spark 4.1.2 fails to bind an
+    // exceptAll over the latter's first() columns. Zero-norm vectors are
+    // DROPPED from both sides: their sim is NaN, which sorts first under
+    // DESC.
+    Ranks.topK(q.join(c, Seq("table", "bucketL", "salt"))
+        .filter(col("q_id") =!= col("c_id"))
+        .select(col("q_id"), col("c_id"))
+        .join(withNorm(s, df, "q").filter(col("q_norm") > 0), "q_id")
+        .join(withNorm(s, df, "c").filter(col("c_norm") > 0), "c_id")
+        .select(col("q_id"), col("c_id"), qcSim(s).as("sim")),
+        Seq(col("q_id")), Seq(col("sim").desc, col("c_id")), lit(k), "rank",
+        dense_rank())
+      .distinct()
   }
 
   private[graft] def x7KnnJoin(s: SparkSession, d: String): DataFrame =
@@ -623,16 +618,9 @@ object SimilarityOps {
     // Pair similarity on the ORIGINAL embeddings (double accumulate /
     // norms) — bit-identical between both adaptive paths and the brute
     // baseline.
-    def side(df: DataFrame, sfx: String): DataFrame =
-      df.select(col("vec_id").as(s"id_$sfx"),
-        col("embedding").as(s"e_$sfx"), col("_n").as(s"n_$sfx"))
-    def simPairs(joined: DataFrame): DataFrame =
-      joined
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"),
-          (VecOps.fdot(s, col("e_a"), col("e_b")) /
-            (col("n_a") * col("n_b"))).as("sim"))
-        .filter(col("sim") >= minSim)
+    def side(df: DataFrame, sfx: String, extra: Column*): DataFrame =
+      pairSide(df, sfx, col("_n"), extra: _*)
+    def simPairs(joined: DataFrame): DataFrame = pairSims(s, joined, minSim)
     // The LIMIT doubles as a free size probe: fewer rows back than the cap
     // proves the corpus is ≤ fitSample rows, where the all-pairs broadcast
     // product beats any blocking (no extra stats pass, no blocking jobs)
@@ -675,12 +663,30 @@ object SimilarityOps {
       if cd - radii(i) - radii(j) <= distThresh
     } yield (i, j)).toDF("cell_a", "cell_b")
 
-    val a = assigned.select(col("cell").as("cell_a"), col("vec_id").as("id_a"),
-      col("embedding").as("e_a"), col("_n").as("n_a"))
-    val b = assigned.select(col("cell").as("cell_b"), col("vec_id").as("id_b"),
-      col("embedding").as("e_b"), col("_n").as("n_b"))
+    val a = side(assigned, "a", col("cell").as("cell_a"))
+    val b = side(assigned, "b", col("cell").as("cell_b"))
     simPairs(a.join(broadcast(cellPairs), "cell_a").join(b, "cell_b"))
   }
+
+  /** One side of a vector pair join: `extra`, then (id_<sfx>, e_<sfx>,
+    * n_<sfx>) from (vec_id, embedding, `norm`).
+    */
+  private def pairSide(df: DataFrame, sfx: String, norm: Column,
+      extra: Column*): DataFrame =
+    df.select(extra ++ Seq(col("vec_id").as(s"id_$sfx"),
+      col("embedding").as(s"e_$sfx"), norm.as(s"n_$sfx")): _*)
+
+  /** (id_a, id_b, sim) of the joined pair sides with id_a < id_b and
+    * cosine sim = fdot(e_a, e_b) / (n_a · n_b) at least `minSim`.
+    */
+  private def pairSims(s: SparkSession, joined: DataFrame,
+      minSim: Double): DataFrame =
+    joined
+      .filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"),
+        (VecOps.fdot(s, col("e_a"), col("e_b")) /
+          (col("n_a") * col("n_b"))).as("sim"))
+      .filter(col("sim") >= minSim)
 
   /** Driver-local spherical k-means over a bounded sample: init = first k
     * hash-ordered points, `iters` Lloyd rounds, centroids re-normalized to
@@ -728,15 +734,10 @@ object SimilarityOps {
     // zero-norm filter matches cosinePairsExact: without it a zero vector
     // yields sim = 0/0 = NaN, and Spark's NaN ordering treats NaN as
     // GREATER than every double, so `sim >= minSim` would KEEP the pair
-    val a = withNorm(s, corpus, "a").withColumnRenamed("a_id", "id_a")
-      .filter(col("a_norm") > 0)
-    val b = withNorm(s, corpus, "b").withColumnRenamed("b_id", "id_b")
-      .filter(col("b_norm") > 0)
-    a.crossJoin(broadcast(b)).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (VecOps.fdot(s, col("a_emb"), col("b_emb")) /
-          (col("a_norm") * col("b_norm"))).as("sim"))
-      .filter(col("sim") >= minSim)
+    def side(sfx: String) =
+      pairSide(corpus, sfx, VecOps.fnorm(s, col("embedding")))
+        .filter(col(s"n_$sfx") > 0)
+    pairSims(s, side("a").crossJoin(broadcast(side("b"))), minSim)
   }
 
   /** Threshold filtering runs on the raw double sim (oracle agrees to
@@ -794,15 +795,21 @@ object SimilarityOps {
     */
   private def d11SemDedup(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
-    val edges = landedExactPairs(emb)
-    val comps = DedupOps.connectedComponents(edges)
+    keeperDecisions(emb, landedExactPairs(emb)).orderBy(col("vec_id"))
+  }
+
+  /** The decision table (vec_id, rep_id, kept) of a near-dup pair list
+    * (id_a, id_b): each vector's keeper is its component's minimum id;
+    * a vector in no pair keeps itself.
+    */
+  private def keeperDecisions(emb: DataFrame, pairs: DataFrame): DataFrame = {
+    val comps = DedupOps.connectedComponents(pairs)
       .select(col("id").as("vec_id"), col("label").as("rep_id"))
     emb.select(col("vec_id"))
       .join(comps, Seq("vec_id"), "left")
       .select(col("vec_id"),
         coalesce(col("rep_id"), col("vec_id")).as("rep_id"))
       .withColumn("kept", col("vec_id") === col("rep_id"))
-      .orderBy(col("vec_id"))
   }
 
   /** Same component semantics as the Spark side: min-reachable-id via a
@@ -916,24 +923,12 @@ object SimilarityOps {
       .select(col("vec_id"), col("embedding"), col("_n"),
         explode(array_distinct(
           array(col("_am.cell"), col("_am.cell2")))).as("cell"))
-    def side(sfx: String): DataFrame = assigned.select(col("cell"),
-      col("vec_id").as(s"id_$sfx"), col("embedding").as(s"e_$sfx"),
-      col("_n").as(s"n_$sfx"))
-    val pairs = side("a").join(side("b"), "cell")
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (VecOps.fdot(s, col("e_a"), col("e_b")) /
-          (col("n_a") * col("n_b"))).as("sim"))
-      .filter(col("sim") >= D12Tau)
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-    val comps = DedupOps.connectedComponents(pairs)
-      .select(col("id").as("vec_id"), col("label").as("rep_id"))
-    emb.select(col("vec_id"))
-      .join(comps, Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        coalesce(col("rep_id"), col("vec_id")).as("rep_id"))
-      .withColumn("kept", col("vec_id") === col("rep_id"))
+    def side(sfx: String): DataFrame =
+      pairSide(assigned, sfx, col("_n"), col("cell"))
+    keeperDecisions(emb,
+      pairSims(s, side("a").join(side("b"), "cell"), D12Tau)
+        .select(col("id_a"), col("id_b"))
+        .distinct())
   }
 
   /** 1-row (_cov): intra-cell fraction of the EXACT near-dup pair set
@@ -1019,7 +1014,15 @@ object SimilarityOps {
   private[graft] def km2Assigned(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val (cells, _) = ivfGeometry(memoCount(emb), 0, 0)
-    val cents = memoCentroids(emb, ivfFitSample(0, cells), Km2K)
+    clusterAssigned(s, d, emb,
+      memoCentroids(emb, ivfFitSample(0, cells), Km2K))
+  }
+
+  /** Per vector of `emb`: (vec_id, dim, cluster, a_sim, sim_0..sim_k-1),
+    * its argmax centroid and its cosine to each of `cents`.
+    */
+  private def clusterAssigned(s: SparkSession, d: String, emb: DataFrame,
+      cents: Array[Array[Float]]): DataFrame = {
     require(cents.nonEmpty, s"empty embedding corpus at $d")
     val st = VecOps.centroidArgmax(s, col("embedding"), cents)
     val norm = VecOps.fnorm(s, col("embedding"))
@@ -1032,8 +1035,13 @@ object SimilarityOps {
       (st.getField("best") / norm).as("a_sim")) ++ simJ: _*)
   }
 
-  private def km2Gate(s: SparkSession, d: String): DataFrame = {
-    val assigned = km2Assigned(s, d)
+  private def km2Gate(s: SparkSession, d: String): DataFrame =
+    clusterGate(km2Assigned(s, d))
+
+  /** The one-row km gate over a [[clusterAssigned]] frame: (n, dim, k,
+    * argmax_gain_ok, multi_cluster), then `extra`.
+    */
+  private def clusterGate(assigned: DataFrame, extra: Column*): DataFrame = {
     val nSim = assigned.columns.count(_.startsWith("sim_"))
     val g = assigned.groupBy(col("cluster")).agg(
       count(lit(1)).as("sz"),
@@ -1050,10 +1058,10 @@ object SimilarityOps {
     g.agg(sum(col("sz")).as("_n"), max(col("dim")).as("_dim"),
         (sum(col("ssim")) / sum(col("sz"))).as("_ma"),
         bestSingle.as("_bs"), count(lit(1)).as("_k"))
-      .select(col("_n").as("n"), col("_dim").as("dim"),
+      .select(Seq(col("_n").as("n"), col("_dim").as("dim"),
         lit(nSim).as("k"),
         (col("_ma") >= col("_bs") - lit(1e-9)).as("argmax_gain_ok"),
-        (col("_k") >= 2).as("multi_cluster"))
+        (col("_k") >= 2).as("multi_cluster")) ++ extra: _*)
   }
 
   private val km2Sql =
@@ -1128,36 +1136,9 @@ object SimilarityOps {
     * early and trip it).
     */
   private def km3Gate(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
     val cents = km3Cents(s, d)
-    require(cents.nonEmpty, s"empty embedding corpus at $d")
-    val st = VecOps.centroidArgmax(s, col("embedding"), cents)
-    val norm = VecOps.fnorm(s, col("embedding"))
-    val simJ = cents.toIndexedSeq.zipWithIndex.map { case (c, j) =>
-      (VecOps.fdot(s, col("embedding"), typedLit(c.toSeq)) / norm)
-        .as(s"sim_$j")
-    }
-    val assigned = emb.select(Seq(col("vec_id"),
-      size(col("embedding")).as("dim"),
-      st.getField("cell").as("cluster"),
-      (st.getField("best") / norm).as("a_sim")) ++ simJ: _*)
-    val nSim = cents.length
-    val g = assigned.groupBy(col("cluster")).agg(
-      count(lit(1)).as("sz"),
-      Seq(sum(col("a_sim")).as("ssim"), max(col("dim")).as("dim")) ++
-        (0 until nSim).map(j => sum(col(s"sim_$j")).as(s"s_$j")): _*)
-    val bestSingle =
-      if (nSim == 1) sum(col("s_0")) / sum(col("sz"))
-      else greatest(
-        (0 until nSim).map(j => sum(col(s"s_$j")) / sum(col("sz"))): _*)
-    g.agg(sum(col("sz")).as("_n"), max(col("dim")).as("_dim"),
-        (sum(col("ssim")) / sum(col("sz"))).as("_ma"),
-        bestSingle.as("_bs"), count(lit(1)).as("_k"))
-      .select(col("_n").as("n"), col("_dim").as("dim"),
-        lit(nSim).as("k"),
-        (col("_ma") >= col("_bs") - lit(1e-9)).as("argmax_gain_ok"),
-        (col("_k") >= 2).as("multi_cluster"),
-        lit(nSim == Km2K).as("k_reached"))
+    clusterGate(clusterAssigned(s, d, Tables.embeddings(s, d), cents),
+      lit(cents.length == Km2K).as("k_reached"))
   }
 
   private val km3Sql =
@@ -1464,12 +1445,9 @@ object SimilarityOps {
     import s.implicits._
     val centDf = cents.toIndexedSeq.map(_.toSeq).zipWithIndex
       .map { case (c, i) => (i, c) }.toDF("cell", "centroid")
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("cdist"), col("cell"))
-    withNorm(s, queries, "q", extra: _*).crossJoin(broadcast(centDf))
-      .withColumn("cdist", -VecOps.fdot(s, col("q_emb"), col("centroid")))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= probe)
+    Ranks.topK(withNorm(s, queries, "q", extra: _*).crossJoin(broadcast(centDf))
+        .withColumn("cdist", -VecOps.fdot(s, col("q_emb"), col("centroid"))),
+        Seq(col("q_id")), Seq(col("cdist"), col("cell")), lit(probe), "pr")
       .drop("cdist", "pr", "centroid")
   }
 
@@ -1848,8 +1826,6 @@ object SimilarityOps {
     }
     def scoreOf(cand: DataFrame, ids: Seq[Long]): DataFrame =
       score(cand, lookup(ids))
-    val wBeam = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("c_id"))
     // per-query seeds (the x19 layered descent) replace the global entry
     // points: the walk starts from each query's OWN upper-layer result
     var front = (seeds match {
@@ -1893,11 +1869,10 @@ object SimilarityOps {
             all = all.unionByName(scored).localCheckpoint(true)
           // Aggregate-under-Window (the x7-proven safe topology; also
           // collapses a candidate reached via two beam members)
-          front = front.unionByName(scored)
-            .groupBy(col("q_id"), col("c_id"))
-            .agg(max(col("sim")).as("sim"))
-            .withColumn("_r", row_number().over(wBeam))
-            .filter(col("_r") <= beam).drop("_r")
+          front = topK(front.unionByName(scored)
+              .groupBy(col("q_id"), col("c_id"))
+              .agg(max(col("sim")).as("sim")), beam)
+            .drop("rank")
             .localCheckpoint(true)
           visited = visited.unionByName(cand).localCheckpoint(true)
         }
@@ -2168,17 +2143,15 @@ object SimilarityOps {
         .localCheckpoint(true)
       val vecs = merged.select(col("id").as("nbr"),
         col("emb").as("n_emb"), col("nrm").as("n_nrm"))
-      val w = Window.partitionBy(col("id"))
-        .orderBy(col("sim").desc, col("nbr"))
-      val pruned = merged
-        .select(col("id"), col("emb"), col("nrm"),
-          explode(col("nbrs")).as("nbr"))
-        .join(vecs, "nbr")
-        .select(col("id"), col("nbr"),
-          (VecOps.fdot(s, col("emb"), col("n_emb")) /
-            (col("nrm") * col("n_nrm"))).as("sim"))
-        .withColumn("_r", row_number().over(w))
-        .filter(col("_r") <= X20MaxDegree)
+      val pruned = Ranks.topK(merged
+          .select(col("id"), col("emb"), col("nrm"),
+            explode(col("nbrs")).as("nbr"))
+          .join(vecs, "nbr")
+          .select(col("id"), col("nbr"),
+            (VecOps.fdot(s, col("emb"), col("n_emb")) /
+              (col("nrm") * col("n_nrm"))).as("sim")),
+          Seq(col("id")), Seq(col("sim").desc, col("nbr")),
+          lit(X20MaxDegree), "_r")
         .groupBy(col("id"))
         .agg(sort_array(collect_list(col("nbr"))).as("nbrs"))
       // isolated nodes (empty lists) fall out of the explode — join back
@@ -2564,10 +2537,8 @@ object SimilarityOps {
   private def rerankExact(s: SparkSession, corpus: DataFrame,
       queries: DataFrame, approx: DataFrame, k: Int,
       expand: Int): DataFrame = {
-    val wA = Window.partitionBy(col("q_id"))
-      .orderBy(col("approx_sim").desc, col("c_id"))
-    val cands = approx.withColumn("r", row_number().over(wA))
-      .filter(col("r") <= k * expand)
+    val cands = Ranks.topK(approx, Seq(col("q_id")),
+        Seq(col("approx_sim").desc, col("c_id")), lit(k * expand), "r")
       .select(col("q_id"), col("c_id"))
     topK(withNorm(s, corpus, "c")
       .join(broadcast(cands), "c_id")

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
-import graft.util.Artifacts
+import graft.util.{Artifacts, Ranks}
 
 /** Text-analysis operators for LLM training-data pipelines (north-star
   * extension; BASELINE.json). All operate on the `documents` table and are
@@ -667,11 +667,8 @@ object TextOps {
       .withColumn("score",
         round(col("tf") * log(col("n_docs").cast("double") / col("df_docs")),
           6))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id"))
-      .orderBy(col("score").desc, col("tok"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
+    Ranks.topK(scored, Seq(col("doc_id")), Seq(col("score").desc, col("tok")),
+        lit(5), "rank")
       .select(col("doc_id"), col("rank").cast("long").as("rank"),
         col("tok"), col("tf"), col("df_docs"), col("score"))
       .orderBy(col("doc_id"), col("rank"))

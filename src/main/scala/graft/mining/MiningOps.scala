@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
-import graft.util.Artifacts
+import graft.util.{Artifacts, Ranks}
 
 /** Classic data-mining operators the reference course (Data-warehouse-
   * data-mining) teaches alongside classification: association rules,
@@ -977,13 +977,11 @@ object MiningOps {
     var labels = sym.select(col("a").as("node")).distinct()
       .select(col("node"), col("node").as("lab"))
       .localCheckpoint(true)
-    val w = Window.partitionBy(col("a"))
-      .orderBy(col("c").desc, col("lab"))
     for (_ <- 1 to rounds) {
-      labels = sym
-        .join(labels.select(col("node").as("b"), col("lab")), "b")
-        .groupBy(col("a"), col("lab")).agg(count(lit(1)).as("c"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      labels = Ranks.topK(sym
+          .join(labels.select(col("node").as("b"), col("lab")), "b")
+          .groupBy(col("a"), col("lab")).agg(count(lit(1)).as("c")),
+          Seq(col("a")), Seq(col("c").desc, col("lab")), lit(1), "rn")
         .select(col("a").as("node"), col("lab"))
         .localCheckpoint(true)
     }
@@ -1366,11 +1364,8 @@ object MiningOps {
     */
   private[graft] def prefixPatterns(events: DataFrame,
       minSupport: Double = 0.02): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val seqs = events
-      .withColumn("pos", row_number().over(w))
-      .filter(col("pos") <= Fm5PrefixLen)
+    val seqs = Ranks.topK(events, Seq(col("user_id")),
+        Seq(col("ts"), col("event_id")), lit(Fm5PrefixLen), "pos")
       .groupBy(col("user_id"))
       .agg(sort_array(collect_list(struct(col("pos"), col("event_type"))))
         .as("st"))

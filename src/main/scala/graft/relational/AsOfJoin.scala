@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
-import graft.util.Artifacts
+import graft.util.{Artifacts, Ranks}
 
 /** As-of join — "for each left row, the most recent right row at or
   * before its timestamp, per key". Spark has no native operator for this;
@@ -189,9 +189,8 @@ object AsOfJoin {
     */
   private def af5FeatureSkew(s: SparkSession, d: String): DataFrame = {
     val vers = weeklyVersions(s, d)
-    val latest = vers.withColumn("_rn", row_number().over(
-        Window.partitionBy(col("user_id")).orderBy(col("eff_from").desc)))
-      .filter(col("_rn") === 1)
+    val latest = Ranks.topK(vers, Seq(col("user_id")),
+        Seq(col("eff_from").desc), lit(1), "_rn")
       .select(col("user_id"), col("ver_cents").as("latest_cents"))
     skewAudit(pitEnrich(s, d, Tables.events(s, d)), latest)
   }

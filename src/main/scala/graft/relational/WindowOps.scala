@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.{Q, Tables}
+import graft.util.Ranks
 
 /** Window-function operators (SURVEY.md §2.4 extensions; the reference has
   * no windows, but top-k-per-group and running totals are core warehouse
@@ -15,15 +16,12 @@ import graft.{Q, Tables}
 object WindowOps {
 
   // ---- W1: top-k per group via row_number --------------------------------
-  private def w1TopKPerGroup(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    Tables.orders(s, d)
-      .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
+  private def w1TopKPerGroup(s: SparkSession, d: String): DataFrame =
+    Ranks.topK(Tables.orders(s, d)
+        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice")),
+        Seq(col("o_custkey")), Seq(col("o_totalprice").desc, col("o_orderkey")),
+        lit(3), "rn")
       .orderBy(col("o_custkey"), col("rn"))
-  }
 
   private val w1Sql =
     """SELECT * FROM (
@@ -100,33 +98,24 @@ object WindowOps {
       |               ORDER BY o_totalprice DESC, o_orderkey)
       |) WHERE dr <= 50 ORDER BY o_orderstatus, dr, o_orderkey""".stripMargin
 
-  // ---- W5: top-k per group as a bounded-state AGGREGATE ------------------
+  // ---- W5: top-k per group over exact cents -----------------------------
   /** Same result contract as w1 (top-3 orders per customer, w1's exact
-    * tie rule), but computed by the custom `topk_pairs_k`
-    * TypedImperativeAggregate ([[graft.functions.TopKPairsAgg]]) instead
-    * of sort + row_number: an aggregate with bounded per-group state gets
-    * Spark's partial/final split for free, so each map partition ships at
-    * most k rows per group into the exchange — w1's window form shuffles
-    * and sorts EVERY row. At 100 TB that is the difference between
-    * shuffling the fact table and shuffling k·groups slivers; locally the
-    * plan shows `partial_topk_pairs_3` under ObjectHashAggregate
-    * (spec-asserted). Money ranks as exact cents (Det doctrine); the
-    * cents↔totalprice order is identical because prices are 2-decimal
-    * doubles.
+    * tie rule), ranked over exact cents (Det doctrine: ranking money
+    * means ranking cents; the cents↔totalprice order is identical because
+    * prices are 2-decimal doubles). Spark plans the `rn <= 3` filter as a
+    * WindowGroupLimit whose partial pass runs before the exchange, so each
+    * map partition ships at most 3 rows per customer into it
+    * (spec-asserted), not every row.
     */
-  private def w5TopKAgg(s: SparkSession, d: String): DataFrame = {
-    val fn = graft.functions.TopKPairsAgg.ensure(s, 3)
-    Tables.orders(s, d)
-      .select(col("o_custkey"), col("o_orderkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-      .groupBy(col("o_custkey"))
-      .agg(call_function(fn, col("cents"), col("o_orderkey")).as("top"))
-      .select(col("o_custkey"),
-        posexplode(col("top")).as(Seq("pos", "kv")))
-      .select(col("o_custkey"), (col("pos") + 1).cast("long").as("rn"),
-        col("kv.payload").as("o_orderkey"), col("kv.key").as("price_cents"))
+  private def w5TopKAgg(s: SparkSession, d: String): DataFrame =
+    Ranks.topK(Tables.orders(s, d)
+        .select(col("o_custkey"), col("o_orderkey"),
+          round(col("o_totalprice") * 100).cast("long").as("price_cents")),
+        Seq(col("o_custkey")), Seq(col("price_cents").desc, col("o_orderkey")),
+        lit(3), "rn")
+      .select(col("o_custkey"), col("rn").cast("long").as("rn"),
+        col("o_orderkey"), col("price_cents"))
       .orderBy(col("o_custkey"), col("rn"))
-  }
 
   private val w5Sql =
     """SELECT o_custkey, rn, o_orderkey, price_cents FROM (

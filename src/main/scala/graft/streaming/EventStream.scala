@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.Trigger
-import graft.util.Artifacts
+import graft.util.{Artifacts, Ranks}
 
 /** Structured Streaming surface over the events table.
   *
@@ -492,15 +492,15 @@ object EventStream {
     * |MV| per compaction, never |log|.
     */
   def compactUpsertLog(spark: SparkSession, target: String): Unit = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("day"), col("event_type"))
-      .orderBy(col("_batch").desc)
-    val compacted = Artifacts.parquet(spark, target)
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn")
+    val compacted = lastWrite(Artifacts.parquet(spark, target)).drop("_rn")
       .localCheckpoint(true)
     compacted.coalesce(1).write.mode("overwrite").parquet(target)
   }
+
+  /** The latest-batch row of each (day, event_type) key of an upsert log. */
+  private def lastWrite(log: DataFrame): DataFrame =
+    Ranks.topK(log, Seq(col("day"), col("event_type")),
+      Seq(col("_batch").desc), lit(1), "_rn")
 
   /** The maintained MV: last-writer-wins per key over the upsert log —
     * what the MERGE target would hold after the final batch. Must equal
@@ -512,11 +512,7 @@ object EventStream {
   def runUpsertRollupToCompletion(spark: SparkSession, dir: String)
       : DataFrame = {
     val log = runUpsertLogToCompletion(spark, dir, compactEvery = 2)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("day"), col("event_type"))
-      .orderBy(col("_batch").desc)
-    log.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
+    lastWrite(log)
       .select(col("day"), col("event_type"), col("n"), col("sum_value"))
   }
 

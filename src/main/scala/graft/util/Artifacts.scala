@@ -8,6 +8,8 @@ import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** The one place that memoizes a derived artifact: a value (driver-side
@@ -235,17 +237,29 @@ object Artifacts {
     * data file, or when the chosen footer cannot be read: the caller then
     * leaves the inference, and its error, to Spark.
     */
-  def footerSchema(spark: SparkSession, paths: String*): Option[StructType] = {
-    import org.apache.hadoop.fs.Path
+  def footerSchema(spark: SparkSession, paths: String*): Option[StructType] =
+    footer(spark, paths).map(_._2)
+
+  /** [[footerSchema]] with the file index it listed: the paths qualified
+    * as Spark's read qualifies them (no globbing, as before), listed once.
+    */
+  private def footer(spark: SparkSession, paths: Seq[String])
+      : Option[(InMemoryFileIndex, StructType)] = {
     import org.apache.parquet.format.converter.ParquetMetadataConverter
     import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+    import org.apache.spark.sql.execution.datasources.FileStatusCache
     import org.apache.spark.sql.execution.datasources.parquet.{
-      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+      ParquetFooterReader, ParquetToSparkSchemaConverter}
     val conf = spark.sessionState.conf
     if (conf.isParquetSchemaMergingEnabled) return None
-    val index = new InMemoryFileIndex(spark, paths.map(new Path(_)), Map.empty, None)
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val roots = paths.map { p =>
+      val h = new org.apache.hadoop.fs.Path(p)
+      h.getFileSystem(hadoopConf).makeQualified(h)
+    }
+    val index = new InMemoryFileIndex(spark, roots, Map.empty, None,
+      FileStatusCache.getOrCreate(spark))
     val files = index.allFiles().sortBy(_.getPath.toString)
     import ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE => Common,
       PARQUET_METADATA_FILE => Summary}
@@ -255,7 +269,7 @@ object Artifacts {
     val chosen = named(Common).orElse(named(Summary)).getOrElse(data.head)
     scala.util.Try {
       val footer = ParquetFooterReader.readFooter(
-        HadoopInputFile.fromStatus(chosen, spark.sessionState.newHadoopConf()),
+        HadoopInputFile.fromStatus(chosen, hadoopConf),
         ParquetMetadataConverter.SKIP_ROW_GROUPS)
       ParquetFileFormat.readSchemaFromFooter(new Footer(chosen.getPath, footer),
         new ParquetToSparkSchemaConverter(conf))
@@ -264,7 +278,7 @@ object Artifacts {
       // a partition column keeps its data-column slot, with its inferred type
       val parts = index.partitionSchema
       def part(name: String) = parts.find(p => conf.resolver(p.name, name))
-      StructType(dataSchema.map(f => part(f.name).getOrElse(f)) ++
+      index -> StructType(dataSchema.map(f => part(f.name).getOrElse(f)) ++
         parts.filterNot(p => dataSchema.exists(f => conf.resolver(f.name, p.name))))
     }
   }
@@ -286,14 +300,20 @@ object Artifacts {
   def parquetSchema(spark: SparkSession, paths: String*): StructType =
     footerSchema(spark, paths: _*).getOrElse(spark.read.parquet(paths: _*).schema)
 
-  /** `spark.read.parquet(paths: _*)` with its schema taken from
-    * [[footerSchema]]: the same DataFrame, without Spark's schema job.
-    * Every batch parquet read in graft goes through here, except reads
-    * that merge the schemas of all their files (`mergeSchema`).
+  /** `spark.read.schema(footerSchema).parquet(paths: _*)`: the relation
+    * that read builds, over the file index [[footerSchema]] listed, so the
+    * paths are listed once and no schema job runs. Every batch parquet
+    * read in graft goes through here, except reads that merge the schemas
+    * of all their files (`mergeSchema`).
     */
   def parquet(spark: SparkSession, paths: String*): DataFrame =
-    footerSchema(spark, paths: _*) match {
-      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+    footer(spark, paths) match {
+      case Some((index, schema)) =>
+        val parts = index.partitionSchema
+        val resolver = spark.sessionState.conf.resolver
+        spark.baseRelationToDataFrame(HadoopFsRelation(index, parts,
+          StructType(schema.filterNot(f => parts.exists(p => resolver(p.name, f.name)))),
+          None, new ParquetFileFormat, Map.empty)(spark))
       case None => spark.read.parquet(paths: _*)
     }
 

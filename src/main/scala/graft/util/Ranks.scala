@@ -20,6 +20,21 @@ import org.apache.spark.sql.functions._
   */
 object Ranks {
 
+  /** The `k` best rows of each `by` group under `order`, numbered in
+    * `rankCol` by `rank` (1-based): `rank.over(partitionBy(by)
+    * .orderBy(order))`, then `rankCol <= k`. Spark plans the filter as a
+    * `WindowGroupLimit`: a partial limit before the exchange ships at most
+    * k rows per group per map partition, and the final one after it.
+    * `k` may be a per-row column. With `rank = dense_rank()`, rows that
+    * tie on every `order` column share a rank, so a frame holding repeated
+    * copies of a row keeps every copy of the k best distinct ones.
+    */
+  def topK(df: DataFrame, by: Seq[Column], order: Seq[Column], k: Column,
+      rankCol: String, rank: Column = row_number()): DataFrame =
+    df.withColumn(rankCol,
+        rank.over(Window.partitionBy(by: _*).orderBy(order: _*)))
+      .filter(col(rankCol) <= k)
+
   /** Exact global `row_number` over (score ASC, ties ASC..., id ASC),
     * distributed. The whole plan is free of partition-less WindowExec:
     * even the ≤`bands`-row prefix sum runs as a triangular self-join, so

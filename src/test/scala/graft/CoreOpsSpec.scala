@@ -134,7 +134,7 @@ class CoreOpsSpec extends SparkSpec {
     assert(SparkEntry.queries.size === names.size)
   }
 
-  // ---- w5: bounded-state top-k aggregate ---------------------------------
+  // ---- w5: top-k per group over exact cents -----------------------------
 
   test("w5: topk aggregate equals the w1 window form row-for-row") {
     val w5 = SparkEntry.queries("w5_topk_agg")(spark, Sf001)
@@ -145,12 +145,12 @@ class CoreOpsSpec extends SparkSpec {
       "topk_pairs aggregate disagrees with row_number")
   }
 
-  test("w5: plan aggregates with a partial topk pass (map-side k rows/group)") {
-    val plan = planString("w5_topk_agg")
-    assert(plan.contains("partial_topk_pairs_3"),
-      "no partial topk aggregate in the plan:\n" + plan.take(2000))
-    assert(!plan.contains("WindowExec"),
-      "w5 must not fall back to a window")
+  test("w5: plan limits each group to k rows before the one hash exchange " +
+      "(map-side partial WindowGroupLimit)") {
+    val df = SparkEntry.queries("w5_topk_agg")(spark, Sf001)
+    assert(PlanChecks.groupLimitedExchanges(df, "o_custkey") === Seq(true),
+      "no partial WindowGroupLimit under the o_custkey exchange:\n" +
+        df.queryExecution.executedPlan.toString.take(2000))
   }
 
   test("sql21: parts filter joins BELOW the per-part min window") {
@@ -173,24 +173,6 @@ class CoreOpsSpec extends SparkSpec {
       "part scan not below the window:\n" + w.toString.take(1500))
     assert(subtreeHas(w.child, { case _: Aggregate => true; case _ => false }),
       "psupp aggregate not below the window")
-  }
-
-  test("w5: ties break exactly like w1 and survive partitioning changes") {
-    import spark.implicits._
-    // planted ties: equal keys resolve by smaller payload first
-    val rows = Seq((1L, 100L, 7L), (1L, 100L, 3L), (1L, 100L, 5L),
-      (1L, 90L, 1L), (2L, 50L, 9L))
-    for (parts <- Seq(1, 7)) {
-      val df = rows.toDF("g", "cents", "ok").repartition(parts)
-      val fn = graft.functions.TopKPairsAgg.ensure(spark, 3)
-      val out = df.groupBy(col("g"))
-        .agg(call_function(fn, col("cents"), col("ok")).as("top"))
-        .select(col("g"), posexplode(col("top")).as(Seq("pos", "kv")))
-        .select(col("g"), col("pos"), col("kv.payload").as("ok"))
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-      assert(out === Set((1L, 0, 3L), (1L, 1, 5L), (1L, 2, 7L),
-        (2L, 0, 9L)), s"parts=$parts")
-    }
   }
 
   // ---- view binding: only the tables a SQL text names --------------------

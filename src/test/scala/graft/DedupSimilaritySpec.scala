@@ -1017,18 +1017,18 @@ class DedupSimilaritySpec extends SparkSpec {
     out.foreach(r => assert(r.getDouble(r.fieldIndex("sim")) > 0.999))
   }
 
-  test("kNN join: plan reduces through the bounded distinct top-k " +
-      "aggregate (map-side partial split), no window repartition-and-sort") {
-    // the r18 rewrite's contract (w5 assert pattern): candidates reduce
-    // through partial_topk_dpairs_3 — ≤ k rows per (query, map partition)
-    // reach the one exchange — and no corpus-sized WindowExec remains
+  test("kNN join: plan limits each query to k distinct pairs before the " +
+      "one q_id exchange, and the pair dedup adds no exchange") {
+    // ≤ k distinct pairs per (query, map partition) reach the one q_id
+    // exchange through a partial WindowGroupLimit; the distinct then
+    // runs in the window's stage, with no exchange of its own
     val emb = Tables.embeddings(spark, Sf0001)
-    val plan = SimilarityOps.knnJoin(emb, 3)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("partial_topk_dpairs_3"),
-      "no partial topk_dpairs aggregate in the plan:\n" + plan.take(2000))
-    assert(!plan.contains("WindowExec"),
-      "knnJoin must not fall back to a window")
+    val df = SimilarityOps.knnJoin(emb, 3)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(PlanChecks.groupLimitedExchanges(df, "q_id") === Seq(true),
+      "no partial WindowGroupLimit under the q_id exchange:\n" + plan.take(3000))
+    assert(PlanChecks.groupLimitedExchanges(df, df.columns.toSeq: _*).isEmpty,
+      "the pair dedup must not add an exchange:\n" + plan.take(3000))
   }
 
   test("kNN join: auto bits resolve to the explicit 2-bit fixture shape") {

@@ -185,4 +185,40 @@ class FooterSchemaSpec extends SparkSpec {
       sc.removeSparkListener(l)
     }
   }
+
+  test("64 explicit paths are listed once, as by Spark's own read") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val listings = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+            .exists(_.startsWith("Listing leaf files")))
+          listings.incrementAndGet()
+    }
+    def listingsOf[A](f: => A): (A, Int) = {
+      listings.set(0)
+      val a = f
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      (a, listings.get)
+    }
+    Artifacts.withScratchDir("graft_footer_64") { dir =>
+      val out = dir.resolve("t").toString
+      spark.range(640).select($"id", ($"id" % 7).as("k"))
+        .repartition(64).write.parquet(out)
+      val paths = Files.list(dir.resolve("t")).toArray.map(_.toString)
+        .filter(_.endsWith(".parquet")).sorted.toSeq
+      assert(paths.size === 64)
+      sc.addSparkListener(l)
+      try {
+        val (mine, mineListings) = listingsOf(Artifacts.parquet(spark, paths: _*))
+        val (theirs, theirListings) = listingsOf(spark.read.parquet(paths: _*))
+        assert(theirListings === 1, "Spark's own read lists 64 paths in one job")
+        assert(mineListings === 1, "the footer's file index is the read's index")
+        assert(mine.schema === theirs.schema)
+        assert(mine.orderBy("id").collect().toSeq === theirs.orderBy("id").collect().toSeq)
+      } finally sc.removeSparkListener(l)
+    }
+  }
 }

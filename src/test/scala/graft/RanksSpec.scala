@@ -144,4 +144,66 @@ class RanksSpec extends SparkSpec {
       .select("id", "rn").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === want)
   }
+
+  // ---- topK: the one per-group top-k -----------------------------------
+
+  private def topK(df: org.apache.spark.sql.DataFrame, k: Int) =
+    Ranks.topK(df, Seq(col("g")), Seq(col("cents").desc, col("ok")), lit(k), "rn")
+      .select("g", "rn", "ok").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+
+  // planted ties: equal cents resolve by the smaller ok
+  private val tied = Seq((1L, 100L, 7L), (1L, 100L, 3L), (1L, 100L, 5L),
+    (1L, 90L, 1L), (2L, 50L, 9L))
+
+  test("topK breaks ties by the order columns, over 1 and 7 partitions") {
+    for (parts <- Seq(1, 7))
+      assert(topK(tied.toDF("g", "cents", "ok").repartition(parts), 3) ===
+        Set((1L, 1, 3L), (1L, 2, 5L), (1L, 3, 7L), (2L, 1, 9L)), s"parts=$parts")
+  }
+
+  test("topK with k at or past the group size keeps the whole group") {
+    val all = Set((1L, 1, 3L), (1L, 2, 5L), (1L, 3, 7L), (1L, 4, 1L), (2L, 1, 9L))
+    for (k <- Seq(4, 100)) assert(topK(tied.toDF("g", "cents", "ok"), k) === all)
+  }
+
+  test("topK with a per-row k column keeps each group's own count") {
+    val got = Ranks.topK(tied.toDF("g", "cents", "ok")
+        .withColumn("q", when(col("g") === 1L, 2).otherwise(0)),
+        Seq(col("g")), Seq(col("cents").desc, col("ok")), col("q"), "rn")
+      .select("ok").as[Long].collect().toSet
+    assert(got === Set(3L, 5L))
+  }
+
+  // 300 queries × 20 candidates, every pair seen 3 times (a multi-table
+  // LSH sighting), with sim ties broken by c_id
+  private def sightings = (0 until 3).flatMap(_ =>
+    for (q <- 0L until 300L; c <- 0L until 20L)
+      yield (q, c, ((q * 7 + c * 13) % 9).toDouble / 9)
+  ).toDF("q_id", "c_id", "sim").repartition(5)
+
+  test("dense_rank topK + dropDuplicates over repeated pairs equals " +
+      "distinct + row_number topK") {
+    val order = Seq(col("sim").desc, col("c_id"))
+    val dense = Ranks.topK(sightings, Seq(col("q_id")), order, lit(5), "rank",
+      dense_rank())
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("q_id", "c_id", "sim", "rank").collect().toSeq
+    val want = rows(Ranks.topK(sightings.distinct(), Seq(col("q_id")), order,
+      lit(5), "rank"))
+    assert(want.size === 1500)
+    // knnJoin's full-row distinct, and the (q_id, c_id) dropDuplicates
+    for (got <- Seq(dense.distinct(), dense.dropDuplicates("q_id", "c_id"))) {
+      val g = rows(got)
+      assert(g.size === 1500 && g.toSet === want.toSet)
+    }
+  }
+
+  test("topK plans a partial WindowGroupLimit below the exchange and a " +
+      "final one above it") {
+    val df = Ranks.topK(sightings, Seq(col("q_id")),
+      Seq(col("sim").desc, col("c_id")), lit(5), "rank")
+    assert(PlanChecks.groupLimitedExchanges(df, "q_id") === Seq(true),
+      df.queryExecution.executedPlan.toString)
+  }
 }
