@@ -145,8 +145,7 @@ class CoreOpsSpec extends SparkSpec {
       "topk_pairs aggregate disagrees with row_number")
   }
 
-  test("w5: plan limits each group to k rows before the one hash exchange " +
-      "(map-side partial WindowGroupLimit)") {
+  test("w5: a partial WindowGroupLimit runs below the one hash exchange") {
     val df = SparkEntry.queries("w5_topk_agg")(spark, Sf001)
     assert(PlanChecks.groupLimitedExchanges(df, "o_custkey") === Seq(true),
       "no partial WindowGroupLimit under the o_custkey exchange:\n" +

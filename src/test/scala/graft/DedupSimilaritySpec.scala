@@ -1017,8 +1017,7 @@ class DedupSimilaritySpec extends SparkSpec {
     out.foreach(r => assert(r.getDouble(r.fieldIndex("sim")) > 0.999))
   }
 
-  test("kNN join: plan limits each query to k distinct pairs before the " +
-      "one q_id exchange, and the pair dedup adds no exchange") {
+  test("kNN join: partial WindowGroupLimit below the q_id exchange") {
     // ≤ k distinct pairs per (query, map partition) reach the one q_id
     // exchange through a partial WindowGroupLimit; the distinct then
     // runs in the window's stage, with no exchange of its own
