@@ -1,14 +1,19 @@
 #!/usr/bin/env python3
 """Local replica of the driver's DuckDB-oracle correctness gate.
 
-Usage: oracle_check.py <verify_out_dir> <sf_dir>
+Usage: oracle_check.py [--only name,...] [--timeout S] <verify_out_dir> <sf_dir>
 
 For each query in oracle_sql.json: run the SQL in DuckDB (views over the
 sfDir parquet tables), load the Spark parquet result, sort columns by name,
 and compare row counts, dtypes (loosely), and values (exact for
 ints/strings, bit-exact-or-tiny-tol reported separately for floats).
+
+--only checks just the named queries (e.g. the ones a change touched, at
+sf0.1, where a sweep of every query takes too long); a name that is in
+neither oracle_sql.json nor the output dir fails. --timeout interrupts a
+DuckDB oracle query after S seconds and counts it as a FAIL.
 """
-import json, sys, glob, os
+import argparse, json, sys, glob, os, threading
 import duckdb
 import pandas as pd
 import numpy as np
@@ -16,12 +21,32 @@ import numpy as np
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
-def main(out_dir, sf_dir):
+def run_oracle(con, sql, timeout):
+    """The oracle's rows, or None when it ran past `timeout` seconds."""
+    if timeout is None:
+        return con.sql(sql).df()
+    timer = threading.Timer(timeout, con.interrupt)
+    timer.start()
+    try:
+        return con.sql(sql).df()
+    except duckdb.InterruptException:
+        return None
+    finally:
+        timer.cancel()
+
+def main(out_dir, sf_dir, only=None, timeout=None):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
+    all_dirs = {os.path.basename(p) for p in glob.glob(os.path.join(out_dir, "*"))
+                if os.path.isdir(p)}
     n_pass = n_fail = 0
+    if only is not None:
+        for name in sorted(only - set(oracle) - all_dirs):
+            print(f"FAIL {name}: not in {out_dir}"); n_fail += 1
+        oracle = {k: v for k, v in oracle.items() if k in only}
+        all_dirs &= only
     for name in sorted(oracle):
         sql = oracle[name]
         spark_dir = os.path.join(out_dir, name)
@@ -29,9 +54,12 @@ def main(out_dir, sf_dir):
         if not files:
             print(f"FAIL {name}: no spark output");  n_fail += 1; continue
         try:
-            duck = con.sql(sql).df()
+            duck = run_oracle(con, sql, timeout)
         except Exception as e:
             print(f"FAIL {name}: duckdb error: {e}"); n_fail += 1; continue
+        if duck is None:
+            print(f"FAIL {name}: oracle timed out after {timeout:g} s")
+            n_fail += 1; continue
         spark = pd.read_parquet(spark_dir)
         duck = duck.reindex(sorted(duck.columns), axis=1)
         spark = spark.reindex(sorted(spark.columns), axis=1)
@@ -82,8 +110,6 @@ def main(out_dir, sf_dir):
         else:
             print(f"PASS {name} ({len(duck)} rows)"); n_pass += 1
     # queries without oracle: just check rows > 0
-    all_dirs = {os.path.basename(p) for p in glob.glob(os.path.join(out_dir, "*"))
-                if os.path.isdir(p)}
     for name in sorted(all_dirs - set(oracle)):
         spark = pd.read_parquet(os.path.join(out_dir, name))
         status = "PASS" if len(spark) > 0 else "FAIL"
@@ -94,4 +120,12 @@ def main(out_dir, sf_dir):
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    ap = argparse.ArgumentParser(description="DuckDB-oracle check of a Verify dump")
+    ap.add_argument("out_dir")
+    ap.add_argument("sf_dir")
+    ap.add_argument("--only", help="comma-separated query names to check")
+    ap.add_argument("--timeout", type=float,
+                    help="seconds before an oracle query is interrupted (a FAIL)")
+    a = ap.parse_args()
+    only = {n for n in a.only.split(",") if n} if a.only else None
+    sys.exit(main(a.out_dir, a.sf_dir, only, a.timeout))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
-import graft.util.Artifacts
+import graft.util.{Artifacts, CodegenCache}
 
 /** Deduplication operators for LLM training-data pipelines.
   *
@@ -1275,7 +1275,7 @@ object DedupOps {
       d15Incoming(s, d).repartition(3)
         .write.mode("overwrite").parquet(stage.toString)
       val schema = Artifacts.parquetSchema(s, stage.toString)
-      val q = s.readStream.schema(schema)
+      val q = CodegenCache.startStream(s)(s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(stage.toString)
         .writeStream
@@ -1285,7 +1285,7 @@ object DedupOps {
           neardupSearch(s, d, batch)
             .write.mode("overwrite").parquet(s"$dir/batch=$batchId")
         }
-        .start()
+        .start())
       q.awaitTermination()
       Artifacts.delete(stage)
       Artifacts.delete(ckpt)

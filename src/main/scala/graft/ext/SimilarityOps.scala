@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.functions.VecOps
-import graft.util.{Artifacts, Ranks}
+import graft.util.{Artifacts, CodegenCache, Ranks}
 
 /** Similarity search over the `embeddings` table (north-star extension).
   *
@@ -1522,7 +1522,7 @@ object SimilarityOps {
         f.setLastModified(System.currentTimeMillis() - 10000L + i * 1000L)
       }
     val schema = Artifacts.parquetSchema(s, stage.toString)
-    val q = s.readStream.schema(schema)
+    val q = CodegenCache.startStream(s)(s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(stage.toString)
       .writeStream
@@ -1532,7 +1532,7 @@ object SimilarityOps {
         graft.util.Landing.idempotentAppend(
           rows(batch).repartition(col(part)), dir, batchId, part)
       }
-      .start()
+      .start())
     q.awaitTermination()
     Artifacts.delete(stage)
     Artifacts.delete(ckpt)

@@ -177,11 +177,14 @@ object RangeBinRule extends Rule[LogicalPlan] with PredicateHelper {
   * on the context's Hadoop conf: extensions are applied after the
   * SparkContext starts and before the session's shared state caches a
   * FileSystem, so the first cached `file://` FileSystem is the new one.
+  * For the same reason it sizes Spark's generated-code cache
+  * ([[graft.util.CodegenCache]]): no query has compiled anything yet.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    graft.util.LocalFs.install(
-      org.apache.spark.SparkContext.getOrCreate().hadoopConfiguration)
+    val sc = org.apache.spark.SparkContext.getOrCreate()
+    graft.util.LocalFs.install(sc.hadoopConfiguration)
+    graft.util.CodegenCache.install(sc.getConf)
     ext.injectOptimizerRule(_ => RangeBinRule)
     val kernels = graft.functions.VecOps.kernels ++
       graft.functions.TextKernelFns.kernels

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
-import graft.util.{Artifacts, Ranks}
+import graft.util.{Artifacts, CodegenCache, Ranks}
 
 /** As-of join — "for each left row, the most recent right row at or
   * before its timestamp, per key". Spark has no native operator for this;
@@ -244,7 +244,7 @@ object AsOfJoin {
         .repartition(3)
         .write.mode("overwrite").parquet(stage.toString)
       val schema = Artifacts.parquetSchema(s, stage.toString)
-      val q = s.readStream.schema(schema)
+      val q = CodegenCache.startStream(s)(s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(stage.toString)
         .writeStream
@@ -254,7 +254,7 @@ object AsOfJoin {
           pitEnrich(s, d, batch)
             .write.mode("overwrite").parquet(s"$dir/batch=$batchId")
         }
-        .start()
+        .start())
       q.awaitTermination()
       Artifacts.delete(stage)
       Artifacts.delete(ckpt)

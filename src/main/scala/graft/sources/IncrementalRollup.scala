@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.{Q, Tables}
-import graft.util.Artifacts
+import graft.util.{Artifacts, CodegenCache}
 
 /** Incremental materialized-view maintenance (mv1): the 100 TB refresh
   * pattern — a daily rollup is NOT recomputed from the full fact table;
@@ -154,7 +154,7 @@ object IncrementalRollup {
           ev.filter(to_date(col("ts")) >= split).repartition(3)
             .write.mode("overwrite").parquet(stage.toString)
           val schema = Artifacts.parquetSchema(s, stage.toString)
-          val q = s.readStream.schema(schema)
+          val q = CodegenCache.startStream(s)(s.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(stage.toString)
             .writeStream
@@ -164,7 +164,7 @@ object IncrementalRollup {
               graft.util.Landing.idempotentAppend(
                 daily(Tables.normalizeTs(batch)), dir, batchId, "day")
             }
-            .start()
+            .start())
           q.awaitTermination()
         }
       }

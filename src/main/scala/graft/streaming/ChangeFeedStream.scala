@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.{Q, Tables}
 import graft.sources.Snapshots
-import graft.util.Artifacts
+import graft.util.{Artifacts, CodegenCache}
 
 /** MV4: the STREAMING change-feed consumer — the composition arc the
   * round-16 verdict named top priority: e28 produces transactional
@@ -149,7 +149,7 @@ object ChangeFeedStream {
         .option("pathGlobFilter", "manifest_*.txt")
         .option("maxFilesPerTrigger", 1)
         .load(feedDir)
-      val q = src.writeStream.outputMode("append")
+      val q = CodegenCache.startStream(s)(src.writeStream.outputMode("append")
         .foreachBatch { (b: DataFrame, _: Long) =>
           // bounded driver read: ≤ |manifests| file names per batch
           val names = b.select(input_file_name().as("f")).distinct()
@@ -160,7 +160,7 @@ object ChangeFeedStream {
         }
         .option("checkpointLocation", ckp)
         .trigger(Trigger.AvailableNow())
-        .start()
+        .start())
       q.awaitTermination()
     } finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }

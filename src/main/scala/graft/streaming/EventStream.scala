@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.Trigger
-import graft.util.{Artifacts, Ranks}
+import graft.util.{Artifacts, CodegenCache, Ranks}
 
 /** Structured Streaming surface over the events table.
   *
@@ -131,10 +131,10 @@ object EventStream {
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
       noDataBatches.toString)
     try {
-      val q = build.writeStream.outputMode(mode)
+      val q = CodegenCache.startStream(spark)(build.writeStream.outputMode(mode)
         .format("memory").queryName(queryName)
         .trigger(Trigger.AvailableNow())
-        .start()
+        .start())
       q.awaitTermination()
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -178,12 +178,12 @@ object EventStream {
         spark.readStream.schema(rawSchema(spark, srcDir))
           .option("maxFilesPerTrigger", maxFilesPerTrigger)
           .parquet(srcDir))
-      dedupStream(src).writeStream
+      CodegenCache.startStream(spark)(dedupStream(src).writeStream
         .format("parquet").option("path", outDir)
         .option("checkpointLocation", checkpointDir)
         .outputMode("append")
         .trigger(Trigger.AvailableNow())
-        .start()
+        .start())
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
@@ -379,12 +379,12 @@ object EventStream {
         if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
           compactUpsertLog(spark, target)
       }
-      val q = upsertRollup(src).writeStream
+      val q = CodegenCache.startStream(spark)(upsertRollup(src).writeStream
         .outputMode("update")
         .foreachBatch(mergeBatch)
         .option("checkpointLocation", ckp)
         .trigger(Trigger.AvailableNow())
-        .start()
+        .start())
       q.awaitTermination()
       // the log is landed in memory so neither directory outlives the call
       Artifacts.parquet(spark, target).localCheckpoint(true)
@@ -466,12 +466,13 @@ object EventStream {
             .parquet(staged))
         val commitBatch: (DataFrame, Long) => Unit =
           (b, id) => txnCommitBatch(out, b, id)
-        val q = src.select(col("event_id"), col("event_type"), col("value"))
-          .writeStream.outputMode("append")
-          .foreachBatch(commitBatch)
-          .option("checkpointLocation", ckp)
-          .trigger(Trigger.AvailableNow())
-          .start()
+        val q = CodegenCache.startStream(spark)(
+          src.select(col("event_id"), col("event_type"), col("value"))
+            .writeStream.outputMode("append")
+            .foreachBatch(commitBatch)
+            .option("checkpointLocation", ckp)
+            .trigger(Trigger.AvailableNow())
+            .start())
         q.awaitTermination()
       } finally {
         spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -736,10 +737,11 @@ object EventStream {
       val src = graft.Tables.normalizeTs(
         spark.readStream.schema(rawSchema(spark, staged))
           .option("maxFilesPerTrigger", 1).parquet(staged))
-      val query = dedupStream(src).writeStream.outputMode("append")
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
+      val query = CodegenCache.startStream(spark)(
+        dedupStream(src).writeStream.outputMode("append")
+          .format("memory").queryName(queryName)
+          .trigger(Trigger.AvailableNow())
+          .start())
       query.awaitTermination()
       query
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.{Q, Tables}
 import graft.sources.{Snapshots, Store}
-import graft.util.Artifacts
+import graft.util.{Artifacts, CodegenCache}
 
 /** E28: STREAMING CDC MERGE — the change-capture stream applied to the
   * lakehouse table transactionally, composing the round's pieces into
@@ -161,12 +161,13 @@ object StreamMerge {
           .schema(Artifacts.parquetSchema(spark, staged))
           .option("maxFilesPerTrigger", 1)
           .parquet(staged)
-        val q = src.writeStream.outputMode("append")
-          .foreachBatch((b: DataFrame, id: Long) =>
-            mergeBatch(spark, out, b, id))
-          .option("checkpointLocation", ckp)
-          .trigger(Trigger.AvailableNow())
-          .start()
+        val q = CodegenCache.startStream(spark)(
+          src.writeStream.outputMode("append")
+            .foreachBatch((b: DataFrame, id: Long) =>
+              mergeBatch(spark, out, b, id))
+            .option("checkpointLocation", ckp)
+            .trigger(Trigger.AvailableNow())
+            .start())
         q.awaitTermination()
       } finally {
         spark.conf.set("spark.sql.shuffle.partitions", prev)
